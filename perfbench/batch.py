@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import random
+import statistics
 import time
 
 import datagen
@@ -132,9 +133,13 @@ def closed_loop(workload, order, seconds, nominal_pass_s, traced, spark, op,
     workload's nominal pass time on the reference host, at least one.  A
     fixed count (rather than "until the clock runs out") keeps the
     number of latency samples, and so the percentile ``op_tail_s`` can
-    report, the same in every run.  Traced runs make as many plain passes
-    again, alternating, so that the run reports its own tracing overhead;
-    per-layer numbers come from the traced passes."""
+    report, the same in every run.
+
+    A traced run makes every operation twice, plain and traced back to
+    back, and alternates which of the two goes first, so that neither
+    gains from the other's warmth.  The traced pass minus the plain pass
+    is the run's tracing overhead; per-layer numbers come from the traced
+    operations."""
     tracer = Tracer() if traced else None
     py4j = Py4jCounter(spark) if traced else None
     probe = SparkProbe(spark) if traced else None
@@ -144,45 +149,52 @@ def closed_loop(workload, order, seconds, nominal_pass_s, traced, spark, op,
     attempted = failed = wrong = 0
     seq = 0
     t_start = time.perf_counter()
-    gc0 = None
     n_pass = max(1, round(seconds / nominal_pass_s))
-    for k in range(2 * n_pass if traced else n_pass):
-        on = traced and k % 2 == 1
-        bucket = tr if on else plain
-        if on:
-            gc0 = probe.gc_seconds()
-        pass_s = 0.0
+    for k in range(n_pass):
+        pass_s = {False: 0.0, True: 0.0}
         recs = []
-        for name in order:
-            attempted += 1
-            seq += 1
-            try:
-                if on:
-                    lat, table, rec = op(name, group=f"{workload}:{name}:{seq}",
-                                         tracer=tracer, py4j=py4j,
-                                         probe=probe)
-                    recs.append(rec)
-                    layers.high("jvm.heap_used_mb", probe.heap_used_mb())
-                else:
-                    lat, table, _ = op(name)
-            except Exception as e:  # noqa: BLE001 — a failed op is counted
-                failed += 1
-                print(f"op {name} failed: {e!r}"[:500], flush=True)
-                continue
-            pass_s += lat
-            bucket["lat"].append(lat)
-            if not check(name, table):
-                wrong += 1
-                print(f"op {name}: WRONG result", flush=True)
-        bucket["passes"].append(pass_s)
-        if on:
-            layers.add("jvm.gc_s", probe.gc_seconds() - gc0)
+        for i, name in enumerate(order):
+            modes = ((True, False) if (i + k) % 2 else (False, True)) \
+                if traced else (False,)
+            for on in modes:
+                attempted += 1
+                seq += 1
+                try:
+                    if on:
+                        gc0 = probe.gc_seconds()
+                        lat, table, rec = op(
+                            name, group=f"{workload}:{name}:{seq}",
+                            tracer=tracer, py4j=py4j, probe=probe)
+                        layers.add("jvm.gc_s", probe.gc_seconds() - gc0)
+                        layers.high("jvm.heap_used_mb", probe.heap_used_mb())
+                        recs.append(rec)
+                    else:
+                        lat, table, _ = op(name)
+                except Exception as e:  # noqa: BLE001 — a failed op is counted
+                    failed += 1
+                    print(f"op {name} failed: {e!r}"[:500], flush=True)
+                    continue
+                pass_s[on] += lat
+                (tr if on else plain)["lat"].append(lat)
+                if not check(name, table):
+                    wrong += 1
+                    print(f"op {name}: WRONG result", flush=True)
+        plain["passes"].append(pass_s[False])
+        if traced:
+            tr["passes"].append(pass_s[True])
             _drain(spark)
             for rec in recs:
                 absorb(layers, probe, rec)
-    if py4j is not None:
+    overhead = None
+    if traced:
         py4j.close()
-    return {"plain": plain, "traced": tr, "attempted": attempted,
+        if tr["lat"] and plain["lat"]:
+            overhead = {
+                "pass_s": statistics.median(tr["passes"])
+                - statistics.median(plain["passes"]),
+                "op_p50_s": statistics.median(tr["lat"])
+                - statistics.median(plain["lat"])}
+    return {"plain": plain, "overhead": overhead, "attempted": attempted,
             "failed": failed, "wrong": wrong, "t_first_op": t_start,
             "ops_per_s": len(plain["lat"]) / max(sum(plain["passes"]), 1e-9),
             "layers": layers, "units": len(tr["passes"]), "tracer": tracer}

@@ -13,7 +13,6 @@ import resource
 import shutil
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
@@ -181,18 +180,7 @@ def peak_rss_mb(pid: int) -> float:
     return (py_kb + jvm_kb) / 1024.0
 
 
-def cpu_probe_s() -> float:
-    """Seconds for a fixed single-threaded loop: a host-speed reading to
-    read beside the load average (shared hosts drift by tens of %)."""
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(1_000_000):
-        s += i * i
-    return time.perf_counter() - t0
-
-
-def run_context(spark, seed: int, load_start: float,
-                cpu_start: float) -> dict:
+def run_context(spark, seed: int, load_start: float) -> dict:
     conf = spark.conf
     return {
         "nproc": nproc(),
@@ -201,8 +189,6 @@ def run_context(spark, seed: int, load_start: float,
         "driver_memory": conf.get("spark.driver.memory", None),
         "load_avg_1m_start": round(load_start, 2),
         "load_avg_1m_end": round(os.getloadavg()[0], 2),
-        "cpu_probe_s_start": round(cpu_start, 4),
-        "cpu_probe_s_end": round(cpu_probe_s(), 4),
         "seed": seed,
         "spark_version": spark.version,
         "python_version": platform.python_version(),

@@ -43,14 +43,14 @@ def parse_args(argv=None):
     p.add_argument("--tiny", action="store_true",
                    help="sf0.001 tables and a small cube (self-test)")
     p.add_argument("--corrupt-digest", action="store_true",
-                   help="expect a wrong digest for every checked output")
+                   help="expect a wrong value for every checked output "
+                        "(batch digests, serve responses)")
     return p.parse_args(argv)
 
 
 def main(argv=None) -> int:
     args = parse_args(argv)
     load_start = os.getloadavg()[0]
-    cpu_start = common.cpu_probe_s()
     common.prepare_env()
     try:
         import xcube_spark  # noqa: F401
@@ -75,7 +75,7 @@ def main(argv=None) -> int:
     try:
         res = mod.run(args, spark, inputs)
         rss = common.peak_rss_mb(common.jvm_pid(spark))
-        ctx = common.run_context(spark, args.seed, load_start, cpu_start)
+        ctx = common.run_context(spark, args.seed, load_start)
         cores = spark.sparkContext.defaultParallelism
     finally:
         common.stop_session(spark)
@@ -92,6 +92,8 @@ def main(argv=None) -> int:
         "wrong_results": {"value": wrong, "unit": "count"},
         "failed_ratio": {"value": failed / max(attempted, 1),
                          "unit": "ratio"},
+        "op_p50_s": {"value": statistics.median(lat), "unit": "s"},
+        "op_tail_s": {"value": tail, "unit": "s"},
         "op_tail_percentile": {"value": pct, "unit": "%"},
         "op_samples": {"value": n, "unit": "count"},
         "input_gen_s": {"value": gen_s, "unit": "s"},
@@ -99,7 +101,6 @@ def main(argv=None) -> int:
     }
     report.update(res.get("report", {}))
     if args.trace:
-        tr = res["traced"]
         metrics = res["layers"].metrics(PER_LAYER, res["units"])
         metrics["session.start_s"] = {"value": session_s, "unit": "s"}
         op_wall = res["layers"].tot.get("spark.op_wall_s", 0.0)
@@ -107,13 +108,11 @@ def main(argv=None) -> int:
             "value": (res["layers"].tot.get("spark.task_s", 0.0)
                       / (op_wall * cores) if op_wall else 0.0),
             "unit": "ratio"}
-        metrics["trace.overhead_pass_s"] = {
-            "value": (statistics.median(tr["passes"])
-                      - statistics.median(res["plain"]["passes"])),
-            "unit": "s"}
-        metrics["trace.overhead_op_p50_s"] = {
-            "value": statistics.median(tr["lat"]) - statistics.median(lat),
-            "unit": "s"}
+        over = res["overhead"] or {"pass_s": 0.0, "op_p50_s": 0.0}
+        metrics["trace.overhead_pass_s"] = {"value": over["pass_s"],
+                                            "unit": "s"}
+        metrics["trace.overhead_op_p50_s"] = {"value": over["op_p50_s"],
+                                              "unit": "s"}
         span_path = common.WORK / f"spans-{args.workload}-{args.seed}.jsonl"
         res["tracer"].write(span_path)
         report["spans_file"] = {"value": str(span_path.relative_to(
@@ -124,8 +123,6 @@ def main(argv=None) -> int:
             "setup_s": {"value": setup_s, "unit": "s"},
             "pass_s": {"value": statistics.median(res["plain"]["passes"]),
                        "unit": "s"},
-            "op_p50_s": {"value": statistics.median(lat), "unit": "s"},
-            "op_tail_s": {"value": tail, "unit": "s"},
             "ops_per_s": {"value": res["ops_per_s"], "unit": "1/s"},
         }
         metrics = {k: metrics[k] for k in END_TO_END}

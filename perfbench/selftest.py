@@ -1,8 +1,9 @@
 """Self-test of the benchmark on tiny inputs (sf0.001 tables, a small
 cube): every workload runs once untraced and once traced, every metric
 named in BENCHMARK.json must be printed with its unit, every output must
-be correct, and a deliberately corrupted expected digest must be reported
-as a wrong result.
+be correct, and deliberately corrupted expectations (batch digests, the
+values of serve's tiles and statistics) must be reported as wrong
+results.
 
 Usage, from the checkout root: ``python3 perfbench/selftest.py``
 (a few minutes).  Runs every check, then exits non-zero if any failed."""
@@ -60,13 +61,15 @@ def main() -> int:
                    and res["attempted"] >= 1,
                    f"{w} trace={trace}: correct, nothing failed")
             expect(all(k in info["report"] for k in
-                       ("wrong_results", "failed_ratio", "peak_rss_mb")),
-                   f"{w} trace={trace}: wrong_results and failed_ratio "
-                   f"reported")
-    info, res = run("batch_cube", 0, "--corrupt-digest")
-    expect(not res["correct"]
-           and info["report"]["wrong_results"]["value"] == res["attempted"],
-           "corrupted expected digests are reported as wrong results")
+                       ("wrong_results", "failed_ratio", "peak_rss_mb",
+                        "op_p50_s", "op_tail_s")),
+                   f"{w} trace={trace}: wrong_results, failed_ratio and "
+                   f"latencies reported")
+    for w in ("batch_cube", "serve"):
+        info, res = run(w, 0, "--corrupt-digest")
+        expect(not res["correct"] and info["report"]["wrong_results"][
+            "value"] == res["attempted"], f"{w}: corrupted expectations "
+               f"are reported as wrong results")
     if FAILED:
         print(f"self-test FAILED: {len(FAILED)} check(s)")
         return 1

@@ -26,13 +26,17 @@ from common import WORK, nproc, tail
 from datagen import T0, CubeSpec
 from tracing import Layers, Py4jCounter, SparkProbe, Tracer
 
-#: offered rates (requests/s), each held for an equal share of the window
-RATES = (2.5, 3.5, 4.5)
+#: offered rates (requests/s); the window is split evenly over them
+RATES = (1.0, 1.25, 1.5)
 #: the latency limit on ``op_tail_s`` for ``max_rate_ops_per_s``
 LATENCY_LIMIT_S = 5.0
-#: request kinds and their share of the mix
-MIX = (("tile", 0.06), ("tile_auto", 0.04), ("timeseries", 0.25),
-       ("statistics_point", 0.35), ("statistics_time", 0.3))
+#: requests of each kind in a run (see README.md for why tiles are few);
+#: 40 in all, so that ``op_tail_s`` reaches p75, and an even count of
+#: each kind, so that a traced run splits every kind into equal traced
+#: and plain halves
+COUNTS = {"tile": 2, "tile_auto": 2, "timeseries": 12,
+          "statistics_point": 12, "statistics_time": 12}
+KINDS = tuple(COUNTS)
 SENDERS = nproc()
 WARMUP_ROUNDS = 2
 DRAIN_S = 30.0
@@ -65,26 +69,31 @@ def _zipf_keys(rng, keys: list, n: int, s: float = 1.5) -> list:
     return [keys[i] for i in idx]
 
 
-def make_requests(spec: CubeSpec, seed: int, n: int) -> list[dict]:
+def make_requests(spec: CubeSpec, seed: int, scale: int = 1) -> list[dict]:
+    """``COUNTS`` requests of each kind (divided by ``scale``), in seeded
+    order with the tiles at evenly spaced slots.  Within each kind a
+    seeded half is marked ``traced``, so a traced run's traced and plain
+    halves have the same mix."""
     rng = np.random.default_rng([seed, 11])
-    kinds = [k for k, _ in MIX]
-    # a fixed count of each kind (largest remainder), in seeded order
-    quota = [w * n for _, w in MIX]
-    counts = [int(q) for q in quota]
-    for i in sorted(range(len(MIX)), key=lambda i: counts[i] - quota[i])[
-            :n - sum(counts)]:
-        counts[i] += 1
-    # tiles (the slow requests) at evenly spaced slots, the rest in seeded
-    # order: how many requests overlap a tile render then does not
-    # depend on the seed
-    tile_k = [i for i, k in enumerate(kinds) if k.startswith("tile")]
+    counts = [max(2, c // scale) for c in COUNTS.values()]
+    n = sum(counts)
+    tile_k = [i for i, k in enumerate(KINDS) if k.startswith("tile")]
     tiles = rng.permutation(np.repeat(tile_k, [counts[i] for i in tile_k]))
     rest = rng.permutation(np.repeat(
-        [i for i in range(len(kinds)) if i not in tile_k],
-        [counts[i] for i in range(len(kinds)) if i not in tile_k]))
+        [i for i in range(len(KINDS)) if i not in tile_k],
+        [counts[i] for i in range(len(KINDS)) if i not in tile_k]))
+    # a tile render slows every request that overlaps it; evenly spaced
+    # tiles keep how many do from depending on the seed
     slots = {int((j + 0.5) * n / len(tiles)): t for j, t in enumerate(tiles)}
     it = iter(rest)
     picks = [slots[i] if i in slots else next(it) for i in range(n)]
+    halves = {k: set(rng.permutation(counts[k])[:counts[k] // 2].tolist())
+              for k in range(len(KINDS))}
+    seen = dict.fromkeys(range(len(KINDS)), 0)
+    traced = []
+    for k in picks:
+        traced.append(seen[k] in halves[k])
+        seen[k] += 1
     # 160 tile keys (two zoom levels, the first two time steps, both
     # variables) under a steep Zipf law, so a run repeats some keys
     tile_keys = [(z, ty, tx, t, v)
@@ -95,8 +104,8 @@ def make_requests(spec: CubeSpec, seed: int, n: int) -> list[dict]:
     tiles = iter(_zipf_keys(rng, tile_keys, n))
     g = spec.grid()
     out = []
-    for k in picks:
-        kind = kinds[k]
+    for k, on in zip(picks, traced):
+        kind = KINDS[k]
         var = ("A", "B")[int(rng.integers(0, 2))]
         t_i = int(rng.integers(0, spec.time_periods))
         if kind in ("tile", "tile_auto"):
@@ -131,7 +140,7 @@ def make_requests(spec: CubeSpec, seed: int, n: int) -> list[dict]:
             path = f"/statistics/cube/{var}"
             key = (kind, var, t_i)
         out.append({"kind": kind, "url": f"{path}?{urlencode(params)}",
-                    "key": key})
+                    "key": key, "traced": on})
     return out
 
 
@@ -181,19 +190,51 @@ def _png_rgba(data: bytes) -> np.ndarray:
     return out.reshape(h, w, 4)
 
 
-def _tile_cover(spec: CubeSpec, z: int, ty: int, tx: int) -> int:
-    """Pixels of tile (z, ty, tx) whose centre falls on a cube cell."""
+def expected_tile(spec: CubeSpec, kind: str, z: int, ty: int, tx: int,
+                  t_i: int, var: str) -> np.ndarray:
+    """The RGBA tile (z, ty, tx) of the geographic 256-px scheme, in numpy:
+    each pixel centre takes the value of the cell it falls in (cells whose
+    centre lies outside the tile are not drawn), normalised to the fixed
+    range (``tile``) or to mean +- 2 sigma of the drawn pixels
+    (``tile_auto``), clamped and coloured with the default colour map;
+    undrawn pixels are transparent black."""
+    from xcube_spark.operators.tiles import get_colormap
+
     size = 256
-    w = 360.0 / (2 << z)
-    h = 180.0 / (1 << z)
-    x1, y2 = -180.0 + tx * w, 90.0 - ty * h
-    res = w / size
-    c = (np.arange(size) + 0.5) * res
     g = spec.grid()
-    xs, ys = x1 + c, y2 - c
-    nx = np.count_nonzero((xs >= g.x_start) & (xs < g.x_end))
-    ny = np.count_nonzero((ys >= g.y_start) & (ys < g.y_end))
-    return int(nx * ny)
+    # the tiling scheme's arithmetic, in its operation order
+    w, h = 360.0 / (2 << z), 180.0 / (1 << z)
+    res = 360.0 / ((2 << z) * size)
+    x1, y2 = -180.0 + tx * w, 90.0 - ty * h
+    x2, y1 = x1 + w, y2 - h
+    px = np.arange(size, dtype=np.float64)
+    xs = x1 + (px + 0.5) * res
+    ys = y2 - (px + 0.5) * res
+    x_i = np.floor((xs - g.x_start) / g.x_res).astype(np.int64)
+    y_i = np.floor((ys - g.y_start) / g.y_res).astype(np.int64)
+    cx = g.x_start + (x_i + 0.5) * g.x_res
+    cy = g.y_start + (y_i + 0.5) * g.y_res
+    ok_x = (xs >= g.x_start) & (xs < g.x_end) & (cx >= x1) & (cx < x2)
+    ok_y = (ys >= g.y_start) & (ys < g.y_end) & (cy >= y1) & (cy < y2)
+    drawn = ok_y[:, None] & ok_x[None, :]  # [py, px]
+    v = spec.values(var, t_i, y_i[:, None], x_i[None, :])
+    if kind == "tile":
+        lo, hi = spec.value_range(var)
+    else:
+        mean, std = v[drawn].mean(), v[drawn].std()
+        lo, hi = mean - 2 * std, mean + 2 * std
+    norm = np.clip((v - lo) / (hi - lo), 0.0, 1.0)
+    out = np.zeros((size, size, 4), np.int32)
+    stops = get_colormap("default")
+    for c in range(3):
+        chan = np.full(norm.shape, float(stops[0][1][c]))
+        for (p0, c0), (p1, c1) in zip(stops, stops[1:]):
+            seg = c0[c] + (norm - p0) / (p1 - p0) * (c1[c] - c0[c])
+            chan = np.where(norm >= p0, seg, chan)
+        out[..., c] = np.floor(chan + 0.5)
+    out[..., 3] = 255
+    out[~drawn] = 0
+    return out
 
 
 def _close(a, b) -> bool:
@@ -211,11 +252,13 @@ def check(spec: CubeSpec, req: dict, body: bytes) -> bool:
 def _check(spec: CubeSpec, req: dict, body: bytes) -> bool:
     kind, key = req["kind"], req["key"]
     if kind in ("tile", "tile_auto"):
-        _, z, ty, tx, _, _ = key
         rgba = _png_rgba(body)
-        return (rgba.shape == (256, 256, 4)
-                and int(np.count_nonzero(rgba[..., 3])) ==
-                _tile_cover(spec, z, ty, tx))
+        want = expected_tile(spec, *key)
+        # colours within one step of 255: the stretch of an auto tile is
+        # a float sum whose order differs between Spark and numpy
+        return (rgba.shape == want.shape
+                and (rgba[..., 3] == want[..., 3]).all()
+                and int(np.abs(rgba - want).max()) <= 1)
     res = json.loads(body)["result"]
     t = np.arange(spec.time_periods)
     if kind == "timeseries":
@@ -385,28 +428,32 @@ def run(args, spark, spec: CubeSpec) -> dict:
     try:
         # warmup: WARMUP_ROUNDS of every request kind, sequentially, so
         # that codegen and the JIT have settled before the first due time
-        warm = make_requests(spec, args.seed + 10_000, 200)
-        for kind, _ in MIX * WARMUP_ROUNDS:
+        warm = make_requests(spec, args.seed + 10_000)
+        for kind in KINDS * WARMUP_ROUNDS:
             r = next(q for q in warm if q["kind"] == kind)
             warm.remove(r)
             _send(port, r["url"], {})
 
-        per_rate = max(1.0, args.seconds / len(RATES))
-        n_total = sum(round(per_rate * r) for r in RATES)
-        reqs = make_requests(spec, args.seed, n_total)
+        # a fixed request count, whatever --seconds (see README.md); the
+        # window is split evenly in time over the rates
+        reqs = make_requests(spec, args.seed, 6 if args.tiny else 1)
+        n = len(reqs)
+        per_rate = n / sum(RATES)
+        counts = [round(per_rate * r) for r in RATES[:-1]]
+        counts.append(n - sum(counts))
         t_first = time.perf_counter() + 0.2
         schedule, t, k = [], t_first, 0
-        for rate in RATES:
-            for j in range(round(per_rate * rate)):
-                r = dict(reqs[k], due=t + j / rate, rate=rate,
-                         group=f"serve:{reqs[k]['kind']}:{k}",
-                         traced=k % 2 == 1)
-                schedule.append(r)
+        for rate, count in zip(RATES, counts):
+            for j in range(count):
+                schedule.append(dict(reqs[k], due=t + j / rate, rate=rate,
+                                     group=f"serve:{reqs[k]['kind']}:{k}"))
                 k += 1
             t += per_rate
         open_loop(port, schedule, traced)
     finally:
         server.stop()
+    if args.corrupt_digest:  # self-test: expect the cube of another seed
+        spec = CubeSpec(spec.width, spec.time_periods, spec.seed + 1)
     return _results(spec, schedule, t_first, gen_s, hooks)
 
 
@@ -414,7 +461,7 @@ def _results(spec, schedule, t_first, gen_s, hooks) -> dict:
     attempted = len(schedule)
     failed = wrong = 0
     plain = {"passes": [], "lat": []}
-    tr = {"passes": [], "lat": []}
+    tr = {"lat": []}
     by_rate: dict[float, list] = {}
     status = {"4xx": 0, "5xx": 0}
     seen, repeats, n_tiles = set(), 0, 0
@@ -444,8 +491,14 @@ def _results(spec, schedule, t_first, gen_s, hooks) -> dict:
             print(f"request {r['url']}: WRONG result", flush=True)
     end = max((r["done"] for r in schedule if "done" in r), default=t_first)
     plain["passes"].append(end - t_first)
-    tr["passes"].append(end - t_first)
     completed = len(plain["lat"]) + len(tr["lat"])
+    overhead = None
+    if hooks is not None and tr["lat"] and plain["lat"]:
+        # the traced and plain halves share the window and the mix, so
+        # the overhead on a pass is the difference in their summed latency
+        overhead = {"pass_s": sum(tr["lat"]) - sum(plain["lat"]),
+                    "op_p50_s": float(np.median(tr["lat"])
+                                      - np.median(plain["lat"]))}
 
     report = {"repeat_share": {"value": repeats / max(n_tiles, 1),
                                "unit": "ratio"}}
@@ -463,7 +516,7 @@ def _results(spec, schedule, t_first, gen_s, hooks) -> dict:
         report[f"op_tail_s.rate{rate:g}"] = {"value": p_tail, "unit": "s"}
         if ok:
             max_rate = max(max_rate, rate)
-    for kind, _ in MIX:
+    for kind in KINDS:
         lats = [r["done"] - r["due"] for r in schedule
                 if r["kind"] == kind and "done" in r]
         if lats:
@@ -511,7 +564,7 @@ def _results(spec, schedule, t_first, gen_s, hooks) -> dict:
             (hooks.probe.gc_seconds() - hooks.gc0) / max(attempted, 1))
         layers.high("jvm.heap_used_mb", hooks.probe.heap_used_mb())
         hooks.close()
-    return {"plain": plain, "traced": tr, "attempted": attempted,
+    return {"plain": plain, "overhead": overhead, "attempted": attempted,
             "failed": failed, "wrong": wrong, "t_first_op": t_first,
             "input_gen_s": gen_s,
             "ops_per_s": completed / max(end - t_first, 1e-9),
