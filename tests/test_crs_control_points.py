@@ -16,7 +16,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from xcube_spark.operators.resampling.reproject import (
     apply_transform_df,
@@ -42,7 +41,7 @@ def test_anchor_forward_matches_registry_constants(spark):
         df = spark.createDataFrame(
             [(a["lon"], a["lat"]) for a in anchors],
             "lon double, lat double")
-        out = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+        out = apply_transform_df(df, fwd, "lon", "lat",
                                  "px", "py")
         got = {(r.lon, r.lat): (r.px, r.py) for r in out.collect()}
         for a in anchors:
@@ -62,9 +61,9 @@ def test_roundtrip_under_1e6_deg(spark):
         pts = [(float(lon), float(lat))
                for lon in grid["lons"] for lat in grid["lats"]]
         df = spark.createDataFrame(pts, "lon double, lat double")
-        d = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+        d = apply_transform_df(df, fwd, "lon", "lat",
                                "px", "py")
-        d = apply_transform_df(d, inv, F.col("px"), F.col("py"),
+        d = apply_transform_df(d, inv, "px", "py",
                                "rlon", "rlat")
         for r in d.collect():
             assert abs(r.rlat - r.lat) < 1e-6, (crs, r)
@@ -94,7 +93,7 @@ def test_pyproj_fallback_transports_table_numerics(spark, monkeypatch):
     pts = [(float(lon), float(lat))
            for lon in grid["lons"] for lat in grid["lats"]]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    for r in apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    for r in apply_transform_df(df, fwd, "lon", "lat",
                                 "px", "py").collect():
         table[(r.lon, r.lat)] = (r.px, r.py)
 
@@ -121,9 +120,8 @@ def test_pyproj_fallback_transports_table_numerics(spark, monkeypatch):
     tf = rp.get_transform("EPSG:4326", "ESRI:99999")  # not in registry
     all_pts = sorted(table)
     pdf = spark.createDataFrame(list(all_pts), "lon double, lat double")
-    ox, oy = tf(F.col("lon"), F.col("lat"))
-    rows = pdf.select("lon", "lat", ox.alias("px"),
-                      oy.alias("py")).collect()
+    rows = rp.apply_transform_df(pdf, tf, "lon", "lat", "px",
+                                 "py").collect()
     assert len(rows) == len(table)
     for r in rows:
         ex, ey = table[(r.lon, r.lat)]

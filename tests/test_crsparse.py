@@ -33,7 +33,7 @@ _PTS = [(-6.5, 41.2), (3.0, 46.5), (12.25, 55.75), (24.0, 62.0),
 def _fwd_points(spark, crs, pts=_PTS):
     fwd = get_transform("EPSG:4326", crs)
     df = spark.createDataFrame(pts, "lon double, lat double")
-    out = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    out = apply_transform_df(df, fwd, "lon", "lat",
                              "px", "py")
     return sorted((r.lon, r.lat, r.px, r.py) for r in out.collect())
 
@@ -142,9 +142,9 @@ def test_proj4_arbitrary_tmerc_roundtrips(spark):
     inv = get_transform(key, "EPSG:4326")
     pts = [(99.0, -35.0), (101.25, -37.5), (103.9, -40.2)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    df = apply_transform_df(df, fwd, "lon", "lat",
                             "px", "py")
-    df = apply_transform_df(df, inv, F.col("px"), F.col("py"),
+    df = apply_transform_df(df, inv, "px", "py",
                             "lon2", "lat2")
     for r in df.collect():
         assert abs(r.lon2 - r.lon) < 1e-7
@@ -238,9 +238,9 @@ def test_get_transform_accepts_proj4_and_cf(spark):
          "inverse_flattening": 298.257222101})
     ref = get_transform("EPSG:4326", "EPSG:2193")
     df = spark.createDataFrame([(173.7, -41.3)], "lon double, lat double")
-    a = apply_transform_df(df, tr, F.col("lon"), F.col("lat"),
+    a = apply_transform_df(df, tr, "lon", "lat",
                            "px", "py").collect()[0]
-    b = apply_transform_df(df, ref, F.col("lon"), F.col("lat"),
+    b = apply_transform_df(df, ref, "lon", "lat",
                            "px", "py").collect()[0]
     assert (a.px, a.py) == (b.px, b.py)
 
@@ -315,9 +315,9 @@ def test_ellipsoidal_mercator_epsg3395(spark):
     inv = get_transform("EPSG:3395", "EPSG:4326")
     pts = [(0.0, 0.0), (3.0, 53.5), (-60.0, -30.0), (179.0, 71.0)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    df = apply_transform_df(df, fwd, "lon", "lat",
                             "px", "py")
-    df = apply_transform_df(df, inv, F.col("px"), F.col("py"),
+    df = apply_transform_df(df, inv, "px", "py",
                             "lon2", "lat2")
     a, e = 6378137.0, math.sqrt(1.0 / 298.257223563 *
                                 (2.0 - 1.0 / 298.257223563))
@@ -380,7 +380,7 @@ def test_geos_goesr_published_fixed_grid_point(spark):
     inv = get_transform(key, "EPSG:4326")
     df = spark.createDataFrame(
         [(-0.024052 * h, 0.095340 * h)], "px double, py double")
-    out = apply_transform_df(df, inv, F.col("px"), F.col("py"),
+    out = apply_transform_df(df, inv, "px", "py",
                              "lon", "lat").collect()[0]
     assert abs(out.lon - -84.690932) < 5e-4
     assert abs(out.lat - 33.846162) < 5e-4
@@ -388,7 +388,7 @@ def test_geos_goesr_published_fixed_grid_point(spark):
     fwd = get_transform("EPSG:4326", key)
     df2 = spark.createDataFrame(
         [(-84.690932, 33.846162)], "lon double, lat double")
-    o2 = apply_transform_df(df2, fwd, F.col("lon"), F.col("lat"),
+    o2 = apply_transform_df(df2, fwd, "lon", "lat",
                             "px", "py").collect()[0]
     assert abs(o2.px / h - -0.024052) < 2e-6
     assert abs(o2.py / h - 0.095340) < 2e-6
@@ -406,9 +406,9 @@ def test_geos_roundtrip_and_disk_edge(spark):
     pts = [(0.0, 0.0), (10.0, 45.0), (-40.0, -55.0), (60.0, 20.0),
            (140.0, 0.0)]  # last: far beyond the visible disk
     df = spark.createDataFrame(pts, "lon double, lat double")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    df = apply_transform_df(df, fwd, "lon", "lat",
                             "px", "py")
-    df = apply_transform_df(df, inv, F.col("px"), F.col("py"),
+    df = apply_transform_df(df, inv, "px", "py",
                             "lon2", "lat2")
     rows = {(r.lon, r.lat): r for r in df.collect()}
     r0 = rows[(0.0, 0.0)]
@@ -526,12 +526,14 @@ def test_rotated_pole_eur11_control_point_and_roundtrip(spark):
     assert abs(rx - -5.132644799516186) < 1e-9
     assert abs(ry - -0.4724280878272969) < 1e-9
 
-    import pyspark.sql.functions as F
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df)
+
     inv = get_transform(k, "EPSG:4326")
     df = spark.createDataFrame(
         [(rx, ry)], "x double, y double")
-    lon, lat = inv(F.col("x"), F.col("y"))
-    (blon, blat), = [(r[0], r[1]) for r in df.select(lon, lat).collect()]
+    (blon, blat), = [(r.lon, r.lat) for r in apply_transform_df(
+        df, inv, "x", "y", "lon", "lat").collect()]
     assert abs(blon - 10.0) < 1e-9 and abs(blat - 50.0) < 1e-9
 
 
@@ -629,9 +631,9 @@ def test_sterea_roundtrip(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", "EPSG:28992")
     inv = get_transform("EPSG:28992", "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    df = apply_transform_df(df, fwd, "lon", "lat",
                             "E", "N")
-    df = apply_transform_df(df, inv, F.col("E"), F.col("N"),
+    df = apply_transform_df(df, inv, "E", "N",
                             "blon", "blat")
     for r in df.collect():
         assert abs(r.blon - r.lon) < 1e-9 and abs(r.blat - r.lat) < 1e-9
@@ -734,8 +736,8 @@ def test_cea_roundtrip_and_proj4_cf(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", "EPSG:6933")
     inv = get_transform("EPSG:6933", "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    df = apply_transform_df(df, inv, F.col("x"), F.col("y"), "rlon", "rlat")
+    df = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    df = apply_transform_df(df, inv, "x", "y", "rlon", "rlat")
     for r in df.collect():
         assert abs(r.rlon - r.lon) < 1e-7 and abs(r.rlat - r.lat) < 1e-7
 
@@ -771,8 +773,8 @@ def test_lcc_1sp_tangent_cone(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", k1)
     inv = get_transform(k1, "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    df = apply_transform_df(df, inv, F.col("x"), F.col("y"), "rlon", "rlat")
+    df = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    df = apply_transform_df(df, inv, "x", "y", "rlon", "rlat")
     for r in df.collect():
         assert abs(r.rlon - r.lon) < 1e-9 and abs(r.rlat - r.lat) < 1e-9
 
@@ -840,8 +842,8 @@ def test_aeqd_center_distance_true(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", k)
     inv = get_transform(k, "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    df = apply_transform_df(df, inv, F.col("x"), F.col("y"),
+    df = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    df = apply_transform_df(df, inv, "x", "y",
                             "rlon", "rlat")
     got = {(r.lon, r.lat): r for r in df.collect()}
     r0 = got[(11.6, 48.3)]
@@ -875,8 +877,8 @@ def test_ortho_visibility_and_roundtrip(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", k)
     inv = get_transform(k, "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    df = apply_transform_df(df, inv, F.col("x"), F.col("y"),
+    df = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    df = apply_transform_df(df, inv, "x", "y",
                             "rlon", "rlat")
     got = {(r.lon, r.lat): r for r in df.collect()}
     assert math.isnan(got[(80.0, -30.0)].x)
@@ -971,8 +973,8 @@ def test_eqc_ellipsoidal_meridian_arc(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", "EPSG:4087")
     inv = get_transform("EPSG:4087", "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    df = apply_transform_df(df, inv, F.col("x"), F.col("y"),
+    df = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    df = apply_transform_df(df, inv, "x", "y",
                             "rlon", "rlat")
     for r in df.collect():
         # 3rd-order Krueger truncation: ~1.5e-9 deg (sub-mm)
@@ -1023,8 +1025,8 @@ def test_stereg_spherical_any_aspect(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", k)
     inv = get_transform(k, "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    df = apply_transform_df(df, inv, F.col("x"), F.col("y"),
+    df = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    df = apply_transform_df(df, inv, "x", "y",
                             "rlon", "rlat")
     got = {(r.lon, r.lat): r for r in df.collect()}
     assert abs(got[(-30.0, 40.0)].x) < 1e-6
@@ -1068,8 +1070,8 @@ def test_omerc_epsg_worked_example(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", "EPSG:29873")
     inv = get_transform("EPSG:29873", "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    df = apply_transform_df(df, inv, F.col("x"), F.col("y"),
+    df = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    df = apply_transform_df(df, inv, "x", "y",
                             "rlon", "rlat")
     for r in df.collect():
         assert abs(r.rlon - r.lon) < 1e-9 and abs(r.rlat - r.lat) < 1e-9
@@ -1164,9 +1166,9 @@ def test_conics_on_non_grs80_ellipsoids(spark):
         df = spark.createDataFrame(pts, "lon double, lat double")
         fwd = get_transform("EPSG:4326", key)
         inv = get_transform(key, "EPSG:4326")
-        df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+        df = apply_transform_df(df, fwd, "lon", "lat",
                                 "x", "y")
-        df = apply_transform_df(df, inv, F.col("x"), F.col("y"),
+        df = apply_transform_df(df, inv, "x", "y",
                                 "rlon", "rlat")
         for r in df.collect():
             # beta/chi series are 3rd/4th-order in e^2: Clarke 1866's
@@ -1221,8 +1223,8 @@ def test_nsper_vertical_perspective(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", k)
     inv = get_transform(k, "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    df = apply_transform_df(df, inv, F.col("x"), F.col("y"),
+    df = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    df = apply_transform_df(df, inv, "x", "y",
                             "rlon", "rlat")
     got = {(r.lon, r.lat): r for r in df.collect()}
     assert got[(-60.0, 0.0)].x == 0.0 and got[(-60.0, 0.0)].y == 0.0
@@ -1287,9 +1289,9 @@ def test_somerc_roundtrip(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", "EPSG:2056")
     inv = get_transform("EPSG:2056", "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    df = apply_transform_df(df, fwd, "lon", "lat",
                             "E", "N")
-    df = apply_transform_df(df, inv, F.col("E"), F.col("N"),
+    df = apply_transform_df(df, inv, "E", "N",
                             "blon", "blat")
     for r in df.collect():
         assert abs(r.blon - r.lon) < 2e-8 and abs(r.blat - r.lat) < 2e-8
@@ -1410,9 +1412,9 @@ def test_krovak_roundtrip_and_proj4_cf(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     fwd = get_transform("EPSG:4326", "EPSG:5514")
     inv = get_transform("EPSG:5514", "EPSG:4326")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    df = apply_transform_df(df, fwd, "lon", "lat",
                             "E", "N")
-    df = apply_transform_df(df, inv, F.col("E"), F.col("N"),
+    df = apply_transform_df(df, inv, "E", "N",
                             "blon", "blat")
     for r in df.collect():
         assert r.E < 0 and r.N < 0  # East-North axes are negative
@@ -1510,7 +1512,7 @@ def test_eqearth_equal_area_and_proj4_cf(spark):
     import pyspark.sql.functions as F
     from xcube_spark.operators.resampling.reproject import (
         apply_transform_df)
-    out = apply_transform_df(df, fwd, F.lit(10.0), F.col("lat"),
+    out = apply_transform_df(df, fwd, "10.0D", "lat",
                              "x", "y")
     rows = sorted(out.collect(), key=lambda r: r.lat)
     xs = np.array([r.x for r in rows])
@@ -1630,7 +1632,7 @@ def test_cass_query_grid_edge_margins():
     xs = _TRIN.x_start + (np.arange(_TRIN.width) + 0.5) * _TRIN.x_res
     ys = _TRIN.y_start + (np.arange(_TRIN.height) + 0.5) * _TRIN.y_res
     X, Y = np.meshgrid(xs, ys)
-    mu = (c["m0"] + (Y - c["fn"])) / (a * c["m_c0"])
+    mu = (c["m0"] + (Y - c["fn"])) / (a * c["c0"])
     phi1 = mu + c["f1_2"] * np.sin(2 * mu) + c["f1_4"] * np.sin(4 * mu) \
         + c["f1_6"] * np.sin(6 * mu)
     t1 = np.tan(phi1) ** 2
@@ -1669,9 +1671,9 @@ def test_poly_snyder_worked_example_and_equator_guard(spark):
     inv = get_transform("EPSG:29101", "EPSG:4326")
     df = spark.createDataFrame([(-54.0, 0.0), (-50.0, 0.0)],
                                "lon double, lat double")
-    df = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    df = apply_transform_df(df, fwd, "lon", "lat",
                             "E", "N")
-    df = apply_transform_df(df, inv, F.col("E"), F.col("N"),
+    df = apply_transform_df(df, inv, "E", "N",
                             "blon", "blat")
     got = {r.lon: r for r in df.collect()}
     assert abs(got[-54.0].E - 5_000_000.0) < 1e-6
@@ -1842,7 +1844,7 @@ def test_eck4_equal_area_and_proj4_cf(spark):
     lats = np.linspace(10.0, 50.0, 2001)
     df = spark.createDataFrame([(float(v),) for v in lats],
                                "lat double")
-    out = apply_transform_df(df, fwd, F.lit(10.0), F.col("lat"),
+    out = apply_transform_df(df, fwd, "10.0D", "lat",
                              "x", "y")
     rows = sorted(out.collect(), key=lambda r: r.lat)
     xs = np.array([r.x for r in rows])
@@ -2064,9 +2066,9 @@ def test_natearth_polynomial_and_proj4_cf(spark):
     fwd = get_transform("EPSG:4326", "PROJ:NATEARTH")
     inv = get_transform("PROJ:NATEARTH", "EPSG:4326")
     df = spark.createDataFrame(pts, "lon double, lat double")
-    d = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    d = apply_transform_df(df, fwd, "lon", "lat",
                            "px", "py")
-    d = apply_transform_df(d, inv, F.col("px"), F.col("py"),
+    d = apply_transform_df(d, inv, "px", "py",
                            "rlon", "rlat")
     for r in d.collect():
         assert abs(r.rlon - r.lon) < 1e-9
@@ -2181,9 +2183,9 @@ def test_gnomonic_great_circles_are_straight(spark):
     fwd = get_transform("EPSG:4326", key)
     inv = get_transform(key, "EPSG:4326")
     df = spark.createDataFrame(pts, "lon double, lat double")
-    d = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    d = apply_transform_df(df, fwd, "lon", "lat",
                            "px", "py")
-    d = apply_transform_df(d, inv, F.col("px"), F.col("py"),
+    d = apply_transform_df(d, inv, "px", "py",
                            "rlon", "rlat")
     for r in d.collect():
         assert abs(r.rlon - r.lon) < 1e-9
@@ -2229,31 +2231,28 @@ def test_gnomonic_query_grid_edge_margins():
 def test_new_family_gate_grid_margins_via_oracle_sql():
     """Gate-grid floor-boundary guard for the round-8 batch-2 families
     (3395/eqc/stereg/sinu/ortho/nsper), evaluated through the exact
-    inverse-SQL twin strings the oracles use (DuckDB), so this also
-    smoke-checks the twins themselves: finite everywhere on the grid,
-    every center clear of the 1-degree source-cell edges."""
+    lon/lat CTEs the oracles use (DuckDB): finite everywhere on the
+    grid, every center clear of the 1-degree source-cell edges."""
     import duckdb
 
     from xcube_spark.queries import resampling_ops as q
 
     cases = [
-        ("3395", q._M3395, q._M3395_LON, q._M3395_LAT, 4e-4),
-        ("eqc", q._EQC, q._EQC_LON, q._EQC_LAT, 4e-3),
-        ("stereg", q._STEREG, q._STEREG_LON, q._STEREG_LAT, 1e-3),
-        ("sinu", q._SINU, q._SINU_LON, q._SINU_LAT, 4e-4),
-        ("ortho", q._ORTHO, q._ORTHO_LON, q._ORTHO_LAT, 4e-4),
-        ("nsper", q._NSPER, q._NSPER_LON, q._NSPER_LAT, 5e-4),
+        ("3395", q._M3395, q._M3395_LL, 4e-4),
+        ("eqc", q._EQC, q._EQC_LL, 4e-3),
+        ("stereg", q._STEREG, q._STEREG_LL, 1e-3),
+        ("sinu", q._SINU, q._SINU_LL, 4e-4),
+        ("ortho", q._ORTHO, q._ORTHO_LL, 4e-4),
+        ("nsper", q._NSPER, q._NSPER_LL, 5e-4),
     ]
     con = duckdb.connect()
-    for name, grid, lon_sql, lat_sql, floor in cases:
+    for name, grid, ll, floor in cases:
         mx, my, bad = con.execute(f"""
             WITH tgt AS (
                 SELECT CAST(range // {grid.width} AS INT) AS y_i,
                        CAST(range % {grid.width} AS INT) AS x_i
                 FROM range({grid.width * grid.height})
-            ), ll AS (
-                SELECT {lon_sql} AS lon, {lat_sql} AS lat FROM tgt
-            )
+            ), {ll}
             SELECT min(least((lon + 180.0) % 1.0,
                              1.0 - (lon + 180.0) % 1.0)),
                    min(least((lat + 90.0) % 1.0,
@@ -2276,7 +2275,7 @@ def test_eqdc_roundtrip_properties_and_cf(spark):
     import duckdb
 
     from xcube_spark.operators.resampling.reproject import (
-        eqdc_inverse_sql, get_transform)
+        apply_transform_df, get_transform, lonlat_sql)
     from xcube_spark.queries.resampling_ops import _EQDC, _EQDC_CRS
     from xcube_spark.sources.zarrio import (cf_grid_mapping_attrs,
                                             crs_from_grid_mapping)
@@ -2290,11 +2289,9 @@ def test_eqdc_roundtrip_properties_and_cf(spark):
         fwd = get_transform("EPSG:4326", crs)
         inv = get_transform(crs, "EPSG:4326")
         df = spark.createDataFrame(pts, "lon double, lat double")
-        x, y = fwd(F.col("lon"), F.col("lat"))
-        st = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-        lon2, lat2 = inv(F.col("x"), F.col("y"))
-        for r in st.select("lon", "lat", lon2.alias("lon2"),
-                           lat2.alias("lat2")).collect():
+        st = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+        for r in apply_transform_df(st, inv, "x", "y", "lon2",
+                                    "lat2").collect():
             assert abs(r.lon2 - r.lon) < 5e-8
             assert abs(r.lat2 - r.lat) < 5e-8
 
@@ -2303,8 +2300,8 @@ def test_eqdc_roundtrip_properties_and_cf(spark):
     fwd = get_transform("EPSG:4326", _EQDC_CRS)
     df = spark.createDataFrame(
         [(-100.0, 40.0), (-100.0, 40.001)], "lon double, lat double")
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    ys = [r.y for r in df.select(y.alias("y")).collect()]
+    ys = [r.y for r in apply_transform_df(df, fwd, "lon", "lat", "x",
+                                          "y").collect()]
     a, rf = 6378137.0, 298.257222101
     f = 1.0 / rf
     e2 = f * (2.0 - f)
@@ -2319,16 +2316,14 @@ def test_eqdc_roundtrip_properties_and_cf(spark):
     attrs.pop("epsg_code")
     assert crs_from_grid_mapping(attrs) == _EQDC_CRS
 
-    # gate-grid margin via the exact oracle twin
-    lon_sql, lat_sql = eqdc_inverse_sql(
-        "CAST((-2724013.0 + (x_i + 0.5) * 140017.0) AS DOUBLE)",
-        "CAST((-2326011.0 + (y_i + 0.5) * 120013.0) AS DOUBLE)",
-        _EQDC_CRS)
+    # gate-grid margin via the exact oracle SQL
+    ll = lonlat_sql(_EQDC_CRS, "-2724013.0 + (x_i + 0.5) * 140017.0",
+                    "-2326011.0 + (y_i + 0.5) * 120013.0")
     mx, my = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_EQDC.width} AS INT) AS y_i,
                             CAST(range % {_EQDC.width} AS INT) AS x_i
                      FROM range({_EQDC.width * _EQDC.height})),
-        ll AS (SELECT {lon_sql} AS lon, {lat_sql} AS lat FROM tgt)
+        {ll}
         SELECT min(least((lon+180.0)%1.0, 1.0-(lon+180.0)%1.0)),
                min(least((lat+90.0)%1.0, 1.0-(lat+90.0)%1.0)) FROM ll
     """).fetchone()
@@ -2355,7 +2350,7 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
     import duckdb
 
     from xcube_spark.operators.resampling.reproject import (
-        _ROBIN_X, _ROBIN_Y, get_transform, robin_inverse_sql_ctes)
+        _ROBIN_X, _ROBIN_Y, apply_transform_df, get_transform, lonlat_sql)
     from xcube_spark.queries.resampling_ops import _ROBIN
     from xcube_spark.sources.zarrio import (cf_grid_mapping_attrs,
                                             crs_from_grid_mapping)
@@ -2366,9 +2361,9 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
     pts = [(-120.0, 35.2), (30.0, -47.6), (179.0, 84.3), (45.0, 52.5),
            (0.0, 0.0), (-180.0, 25.0)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    st = fwd.apply_df(df, F.col("lon"), F.col("lat"), "x", "y")
-    st2 = inv.apply_df(st.select("lon", "lat", "x", "y"),
-                       F.col("x"), F.col("y"), "lon2", "lat2")
+    st = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    st2 = apply_transform_df(st.select("lon", "lat", "x", "y"), inv,
+                             "x", "y", "lon2", "lat2")
     for r2 in st2.select("lon", "lat", "lon2", "lat2").collect():
         assert abs(r2.lon2 - r2.lon) < 1e-10
         assert abs(r2.lat2 - r2.lat) < 1e-10
@@ -2377,7 +2372,7 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
     # published (X, Y) table values
     nodes = [(0.0, 5.0 * k) for k in range(0, 19, 3)]
     dfn = spark.createDataFrame(nodes, "lon double, lat double")
-    stn = fwd.apply_df(dfn, F.col("lon"), F.col("lat"), "x", "y")
+    stn = apply_transform_df(dfn, fwd, "lon", "lat", "x", "y")
     for r3 in stn.select("lat", "y").collect():
         k = int(r3.lat / 5.0)
         # the pole sits on the clamped last interval edge (s is
@@ -2387,7 +2382,7 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
         assert abs(r3.y - 1.3523 * r * _ROBIN_Y[k]) < tol
     # outline: x(180, 0) = 0.8487*R*pi (X(0) = 1)
     dfe = spark.createDataFrame([(180.0, 0.0)], "lon double, lat double")
-    xe = fwd.apply_df(dfe, F.col("lon"), F.col("lat"), "x", "y") \
+    xe = apply_transform_df(dfe, fwd, "lon", "lat", "x", "y") \
         .collect()[0].x
     assert abs(xe - 0.8487 * r * math.pi) < 1e-6
     assert _ROBIN_X[0] == 1.0
@@ -2400,10 +2395,8 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
     assert resolve_proj4("+proj=robin +a=6378137") == "ESRI:54030"
 
     # gate-grid margins via the exact oracle CTEs
-    ctes = robin_inverse_sql_ctes(
-        "CAST((-10866011.0 + (x_i + 0.5) * 540017.0) AS DOUBLE)",
-        "CAST((-7808013.0 + (y_i + 0.5) * 390013.0) AS DOUBLE)",
-        "ESRI:54030")
+    ctes = lonlat_sql("ESRI:54030", "-10866011.0 + (x_i + 0.5) * 540017.0",
+                      "-7808013.0 + (y_i + 0.5) * 390013.0")
     mx, my, bad = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_ROBIN.width} AS INT) AS y_i,
                             CAST(range % {_ROBIN.width} AS INT) AS x_i
@@ -2412,7 +2405,7 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
         SELECT min(least((lon+180.0)%1.0, 1.0-(lon+180.0)%1.0)),
                min(least((lat+90.0)%1.0, 1.0-(lat+90.0)%1.0)),
                count(*) FILTER (lon < -180 OR lon > 180 OR isnan(lon))
-        FROM robin_ll
+        FROM ll
     """).fetchone()
     assert bad == 0
     assert mx > 1e-3 and my > 1e-3
@@ -2439,7 +2432,7 @@ def test_hammer_roundtrip_equal_area_cf_and_margins(spark):
     import duckdb
 
     from xcube_spark.operators.resampling.reproject import (
-        get_transform, hammer_inverse_sql)
+        apply_transform_df, get_transform, lonlat_sql)
     from xcube_spark.queries.resampling_ops import _HAMMER
 
     r = 6378137.0
@@ -2448,11 +2441,9 @@ def test_hammer_roundtrip_equal_area_cf_and_margins(spark):
            for lat in (-80.0, -33.0, 0.5, 41.0, 86.0)]
     inv = get_transform("PROJ:HAMMER", "EPSG:4326")
     df = spark.createDataFrame(pts, "lon double, lat double")
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    st = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    for r2 in st.select("lon", "lat", lon2.alias("lon2"),
-                        lat2.alias("lat2")).collect():
+    st = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    for r2 in apply_transform_df(st, inv, "x", "y", "lon2",
+                                 "lat2").collect():
         assert abs(r2.lon2 - r2.lon) < 1e-9
         assert abs(r2.lat2 - r2.lat) < 1e-9
 
@@ -2462,8 +2453,8 @@ def test_hammer_roundtrip_equal_area_cf_and_margins(spark):
         quad = [(lon0, lat0), (lon0 + d, lat0),
                 (lon0 + d, lat0 + d), (lon0, lat0 + d)]
         dfq = spark.createDataFrame(quad, "lon double, lat double")
-        xq, yq = fwd(F.col("lon"), F.col("lat"))
-        rows = dfq.select(xq.alias("x"), yq.alias("y")).collect()
+        rows = apply_transform_df(dfq, fwd, "lon", "lat", "x",
+                                  "y").collect()
         ps = [(row.x, row.y) for row in rows]
         s = 0.0
         for i in range(4):
@@ -2479,8 +2470,8 @@ def test_hammer_roundtrip_equal_area_cf_and_margins(spark):
     # outline: x(180, 0) = 2*sqrt(2)*R, y(0, 90) = sqrt(2)*R
     dfe = spark.createDataFrame([(180.0, 0.0), (0.0, 90.0)],
                                 "lon double, lat double")
-    xe, ye = fwd(F.col("lon"), F.col("lat"))
-    rows = dfe.select("lon", xe.alias("x"), ye.alias("y")).collect()
+    rows = apply_transform_df(dfe, fwd, "lon", "lat", "x",
+                              "y").collect()
     for r3 in rows:
         if r3.lon == 180.0:
             assert abs(r3.x - 2.0 * math.sqrt(2.0) * r) < 1e-6
@@ -2498,15 +2489,14 @@ def test_hammer_roundtrip_equal_area_cf_and_margins(spark):
     attrs.pop("epsg_code")
     assert crs_from_grid_mapping(attrs) == "PROJ:HAMMER"
 
-    # gate-grid margins via the exact oracle twin
-    lon_sql, lat_sql = hammer_inverse_sql(
-        "(-10500011.0 + (x_i + 0.5) * 540017.0)",
-        "(-7020013.0 + (y_i + 0.5) * 360013.0)", "PROJ:HAMMER")
+    # gate-grid margins via the exact oracle SQL
+    ll = lonlat_sql("PROJ:HAMMER", "-10500011.0 + (x_i + 0.5) * 540017.0",
+                    "-7020013.0 + (y_i + 0.5) * 360013.0")
     mx, my, bad = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_HAMMER.width} AS INT) AS y_i,
                             CAST(range % {_HAMMER.width} AS INT) AS x_i
                      FROM range({_HAMMER.width * _HAMMER.height})),
-        ll AS (SELECT {lon_sql} AS lon, {lat_sql} AS lat FROM tgt)
+        {ll}
         SELECT min(least((lon+180.0)%1.0, 1.0-(lon+180.0)%1.0)),
                min(least((lat+90.0)%1.0, 1.0-(lat+90.0)%1.0)),
                count(*) FILTER (lon < -180 OR lon > 180
@@ -2529,7 +2519,7 @@ def test_wintri_roundtrip_anchors_cf_and_margins(spark):
     import duckdb
 
     from xcube_spark.operators.resampling.reproject import (
-        get_transform, wintri_inverse_sql_ctes)
+        apply_transform_df, get_transform, lonlat_sql)
     from xcube_spark.queries.resampling_ops import _WINTRI
     from xcube_spark.sources.zarrio import (cf_grid_mapping_attrs,
                                             crs_from_grid_mapping)
@@ -2541,10 +2531,8 @@ def test_wintri_roundtrip_anchors_cf_and_margins(spark):
     pts = [(-120.0, 35.2), (30.0, -47.6), (179.0, 84.3), (45.0, 52.5),
            (0.5, 0.5), (-179.5, 25.0), (120.0, -89.0), (0.0, 89.5)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    st = df.select("lon", "lat",
-                   *(c.alias(n) for c, n in
-                     zip(fwd(F.col("lon"), F.col("lat")), ("x", "y"))))
-    st2 = inv.apply_df(st, F.col("x"), F.col("y"), "lon2", "lat2")
+    st = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    st2 = apply_transform_df(st, inv, "x", "y", "lon2", "lat2")
     for r2 in st2.select("lon", "lat", "lon2", "lat2").collect():
         assert abs(r2.lon2 - r2.lon) < 1e-10
         assert abs(r2.lat2 - r2.lat) < 1e-10
@@ -2553,10 +2541,8 @@ def test_wintri_roundtrip_anchors_cf_and_margins(spark):
     anchors = spark.createDataFrame(
         [(90.0, 0.0), (180.0, 0.0), (0.0, 90.0)],
         "lon double, lat double")
-    got = {(a.lon, a.lat): (a.x, a.y) for a in anchors.select(
-        "lon", "lat",
-        *(c.alias(n) for c, n in
-          zip(fwd(F.col("lon"), F.col("lat")), ("x", "y")))).collect()}
+    got = {(a.lon, a.lat): (a.x, a.y) for a in apply_transform_df(
+        anchors, fwd, "lon", "lat", "x", "y").collect()}
     lam = math.pi / 2
     alpha = math.acos(math.cos(lam / 2))
     t = alpha / math.sin(alpha)
@@ -2579,10 +2565,8 @@ def test_wintri_roundtrip_anchors_cf_and_margins(spark):
     assert resolve_proj4("+proj=wintri +a=6378137") == "ESRI:54042"
 
     # gate-grid margins via the exact oracle CTEs
-    ctes = wintri_inverse_sql_ctes(
-        "CAST((-10869011.0 + (x_i + 0.5) * 540017.0) AS DOUBLE)",
-        "CAST((-7799013.0 + (y_i + 0.5) * 390313.0) AS DOUBLE)",
-        "ESRI:54042")
+    ctes = lonlat_sql("ESRI:54042", "-10869011.0 + (x_i + 0.5) * 540017.0",
+                      "-7799013.0 + (y_i + 0.5) * 390313.0")
     mx, my, bad = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_WINTRI.width} AS INT) AS y_i,
                             CAST(range % {_WINTRI.width} AS INT) AS x_i
@@ -2591,10 +2575,41 @@ def test_wintri_roundtrip_anchors_cf_and_margins(spark):
         SELECT min(least((lon+180.0)%1.0, 1.0-(lon+180.0)%1.0)),
                min(least((lat+90.0)%1.0, 1.0-(lat+90.0)%1.0)),
                count(*) FILTER (lon < -180 OR lon > 180 OR isnan(lon))
-        FROM wintri_ll
+        FROM ll
     """).fetchone()
     assert bad == 0
     assert mx > 8e-4 and my > 1e-3
+
+
+def test_goode_inverse_clamps_out_of_domain(spark):
+    """The interrupted-Goode inverse computed asin((|y|/R + dy)/sqrt(2))
+    which NaNs for |y| beyond the native range; out-of-domain pixels
+    must be explicitly NULL, not silent NaN — in Spark and in the
+    DuckDB rendering alike."""
+    import duckdb
+
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df, get_transform, lonlat_sql)
+
+    inv = get_transform("PROJ:IGH", "EPSG:4326")
+    r = 6378137.0
+    pts = [(0.0, 0.0),               # in-domain: origin
+           (0.0, r * 1.6),           # above the map (native |y| max ~1.36*R)
+           (0.0, -r * 1.6)]          # below the map
+    rows = apply_transform_df(
+        spark.createDataFrame(pts, "x double, y double"), inv, "x", "y",
+        "lon", "lat").collect()
+    values = ", ".join(f"({k}, {x!r}, {y!r})" for k, (x, y) in enumerate(pts))
+    duck = duckdb.connect().execute(f"""
+        WITH tgt AS (SELECT * FROM (VALUES {values}) t(k, x, y)),
+        {lonlat_sql("PROJ:IGH", "x", "y")}
+        SELECT lon, lat FROM ll ORDER BY k""").fetchall()
+    for got in ([(row.lon, row.lat) for row in rows], duck):
+        assert got[0][0] == pytest.approx(0.0, abs=1e-6)
+        assert got[0][1] == pytest.approx(0.0, abs=1e-6)
+        for lon, lat in got[1:]:
+            # NULL, not NaN: deterministic on both Spark and DuckDB
+            assert lat is None and lon is None, (lon, lat)
 
 
 def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
@@ -2611,8 +2626,7 @@ def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
     import duckdb
 
     from xcube_spark.operators.resampling.reproject import (
-        _IGH_DY, _IGH_PHIB, apply_transform_df, get_transform,
-        igh_inverse_sql)
+        _IGH_DY, _IGH_PHIB, apply_transform_df, get_transform, lonlat_sql)
     from xcube_spark.queries.resampling_ops import _IGH
     from xcube_spark.sources.zarrio import (cf_grid_mapping_attrs,
                                             crs_from_grid_mapping)
@@ -2628,8 +2642,8 @@ def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
            (-101.0, -30.0), (-99.0, -30.0), (70.0, -70.0),
            (100.0, -44.0), (-39.0, 41.0), (-41.0, 41.0)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    st = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"), "x", "y")
-    st2 = apply_transform_df(st, inv, F.col("x"), F.col("y"),
+    st = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    st2 = apply_transform_df(st, inv, "x", "y",
                              "lon2", "lat2")
     rows = st2.select("lon", "lat", "x", "y", "lon2", "lat2").collect()
     for r2 in rows:
@@ -2647,7 +2661,7 @@ def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
     bpts = spark.createDataFrame(
         [(30.0, phib_deg - eps), (30.0, phib_deg + eps)],
         "lon double, lat double")
-    bxy = apply_transform_df(bpts, fwd, F.col("lon"), F.col("lat"),
+    bxy = apply_transform_df(bpts, fwd, "lon", "lat",
                              "x", "y").select("lat", "x", "y").collect()
     assert abs(bxy[0].y - bxy[1].y) < 1e-3   # < 1 mm per 1e-9 deg
     assert abs(bxy[0].x - bxy[1].x) < 1e-3
@@ -2658,7 +2672,7 @@ def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
         [(30.0, 20.0), (-100.0, 20.0), (-160.0, -20.0), (140.0, -20.0)],
         "lon double, lat double")
     got = {(a.lon, a.lat): (a.x, a.y) for a in apply_transform_df(
-        anchors, fwd, F.col("lon"), F.col("lat"), "x", "y")
+        anchors, fwd, "lon", "lat", "x", "y")
         .select("lon", "lat", "x", "y").collect()}
     for lonc in (30.0, -100.0):
         assert abs(got[(lonc, 20.0)][0] - r * math.radians(lonc)) < 1e-6
@@ -2675,21 +2689,19 @@ def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
 
     # gate-grid margins via the exact oracle SQL (the grid also stays
     # inside the Mollweide asin domain and off the zone boundaries)
-    lon_sql, lat_sql = igh_inverse_sql(
-        "(-19947013.0 + (x_i + 0.5) * 997313.0)",
-        "(-8579013.0 + (y_i + 0.5) * 429313.0)", "PROJ:IGH")
+    ll = lonlat_sql("PROJ:IGH", "-19947013.0 + (x_i + 0.5) * 997313.0",
+                    "-8579013.0 + (y_i + 0.5) * 429313.0")
     mx, my, nn, zb = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_IGH.width} AS INT) AS y_i,
                             CAST(range % {_IGH.width} AS INT) AS x_i
                      FROM range({_IGH.width * _IGH.height})),
-        ll AS (SELECT y_i, x_i,
-                      (-8579013.0 + (y_i + 0.5) * 429313.0) / {r!r} AS yn,
-                      {lon_sql} AS lon, {lat_sql} AS lat FROM tgt)
+        {ll}
         SELECT min(least((lon+180.0)%1.0, 1.0-(lon+180.0)%1.0))
                    FILTER (lon >= -180 AND lon <= 180),
                min(least((lat+90.0)%1.0, 1.0-(lat+90.0)%1.0)),
                count(*) FILTER (isnan(lon) OR isnan(lat)),
-               min(abs(abs(yn) - {_IGH_PHIB!r}))
+               min(abs(abs((-8579013.0 + (y_i + 0.5) * 429313.0) / {r!r})
+                       - {_IGH_PHIB!r}))
         FROM ll
     """).fetchone()
     assert nn == 0

@@ -984,6 +984,42 @@ def test_class_rebalance_balances_and_is_stable(spark):
     assert sum(1 for r in capped if r["kept"]) == 3 + 3
 
 
+
+def test_class_rebalance_keeps_null_label_documents(spark):
+    """NULL labels form a class of their own: every document is
+    reported and the NULL class is capped like any other (the label
+    join is NULL-safe, matching the oracle's cross join)."""
+    from xcube_spark.pipeline.curation import class_rebalance
+
+    docs = spark.createDataFrame(
+        [(i, "a") for i in range(6)] + [(10 + i, "b") for i in range(4)]
+        + [(20 + i, None) for i in range(3)],
+        "doc_id long, lang string")
+    out = class_rebalance(docs, label_col="lang").collect()
+    assert len(out) == 13
+    kept = {}
+    for r in out:
+        kept[r.label] = kept.get(r.label, 0) + r.kept
+    assert kept == {"a": 3, "b": 3, None: 3}  # min class is the NULL one
+
+
+def test_probe_fit_predict_zero_row_state_gives_null_coefficients(spark):
+    """A zero-row moment state is the no-data case: predictions are
+    NULL (like the NULL sums of an empty input), not an IndexError."""
+    from pyspark.sql import functions as F
+
+    from xcube_spark.pipeline.curation import (probe_fit_predict,
+                                               probe_moments)
+
+    docs = spark.createDataFrame(
+        [(i, i % 3, i % 5, i) for i in range(10)],
+        "doc_id long, x1 long, x2 long, y long")
+    empty_state = probe_moments(docs, "y", "x1", "x2").where(F.lit(False))
+    out = probe_fit_predict(empty_state, docs, "y", "x1", "x2").collect()
+    assert len(out) == 10
+    assert all(r.y_hat is None and r.resid is None for r in out)
+
+
 # ---- n-gram novelty (round-10 third-session addition) --------------------
 
 

@@ -27,7 +27,6 @@ pyproj = pytest.importorskip("pyproj")
 
 pytestmark = pytest.mark.pyproj
 
-from pyspark.sql import functions as F  # noqa: E402
 
 #: engine CRS key -> pyproj-resolvable definition, for the families
 #: registered under engine-local PROJ:* keys (no authority code
@@ -97,7 +96,8 @@ def test_pyproj_fallback_udf_numerics(spark):
     through the pandas_udf fallback; its results must equal a direct
     pyproj.Transformer call bit-for-bit (same library, Arrow round
     trip must not perturb doubles)."""
-    from xcube_spark.operators.resampling.reproject import get_transform
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df, get_transform)
 
     tf_engine = get_transform("EPSG:4326", "ESRI:54052")
     tf_direct = pyproj.Transformer.from_crs(
@@ -107,8 +107,8 @@ def test_pyproj_fallback_udf_numerics(spark):
            for lat in range(-80, 81, 10)]
     df = spark.createDataFrame(
         [(float(a), float(b)) for a, b in pts], "lon double, lat double")
-    ox, oy = tf_engine(F.col("lon"), F.col("lat"))
-    rows = df.select("lon", "lat", ox.alias("x"), oy.alias("y")).collect()
+    rows = apply_transform_df(df, tf_engine, "lon", "lat", "x",
+                              "y").collect()
     for r in rows:
         ex, ey = tf_direct.transform(r.lon, r.lat)
         assert r.x == pytest.approx(ex, abs=1e-6)
@@ -141,7 +141,7 @@ def test_closed_form_families_match_pyproj(spark):
         pts = _centers(grid)
         df = spark.createDataFrame(pts, "px double, py double")
         got = apply_transform_df(
-            df, inv, F.col("px"), F.col("py"), "lon", "lat"
+            df, inv, "px", "py", "lon", "lat"
         ).select("px", "py", "lon", "lat").collect()
         exp = {}
         for px, py in pts:

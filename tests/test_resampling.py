@@ -19,8 +19,8 @@ from xcube_spark.operators.resampling import (
     resample_in_space,
 )
 from xcube_spark.operators.resampling.reproject import (
-    _lonlat_to_mercator,
-    _mercator_to_lonlat,
+    apply_transform_df,
+    get_transform,
 )
 from xcube_spark.operators.resampling.spatial import _integer_factor
 
@@ -126,10 +126,10 @@ def test_mercator_roundtrip(spark):
         [(l, p) for l in (-170.0, 0.0, 45.0) for p in (-60.0, 0.0, 70.0)],
         "lon double, lat double",
     )
-    mx, my = _lonlat_to_mercator(F.col("lon"), F.col("lat"))
-    lon2, lat2 = _mercator_to_lonlat(mx, my)
-    rows = df.select(F.col("lon"), F.col("lat"),
-                     lon2.alias("lon2"), lat2.alias("lat2")).collect()
+    d = apply_transform_df(df, get_transform("EPSG:4326", "EPSG:3857"),
+                           "lon", "lat", "mx", "my")
+    rows = apply_transform_df(d, get_transform("EPSG:3857", "EPSG:4326"),
+                              "mx", "my", "lon2", "lat2").collect()
     for r in rows:
         assert r["lon2"] == pytest.approx(r["lon"], abs=1e-9)
         assert r["lat2"] == pytest.approx(r["lat"], abs=1e-9)
@@ -254,23 +254,21 @@ def test_utm_roundtrip_and_anchors(spark):
     northing 0; northing at 45N equals k0 x meridian arc (published
     geodesy value 4982950.4 m)."""
     from xcube_spark.operators.resampling.reproject import (
-        _lonlat_to_utm_fn, _utm_to_lonlat_fn, get_transform, parse_utm_crs,
-        utm_crs)
+        apply_transform_df, get_transform, parse_utm_crs, utm_crs)
 
     assert utm_crs(33) == "EPSG:32633" and utm_crs(19, south=True) == "EPSG:32719"
     assert parse_utm_crs("EPSG:32719") == (19, True)
     assert parse_utm_crs("EPSG:4326") is None
     assert get_transform("EPSG:32633", "EPSG:4326") is not None
 
-    fwd, inv = _lonlat_to_utm_fn(33, False), _utm_to_lonlat_fn(33, False)
+    fwd = get_transform("EPSG:4326", "EPSG:32633")
+    inv = get_transform("EPSG:32633", "EPSG:4326")
     pts = spark.createDataFrame(
         [(15.0, 0.0), (15.0, 45.0), (12.5, 41.9), (17.9, -36.1)],
         ["lon", "lat"])
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    proj = pts.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    rows = proj.select("lon", "lat", "x", "y", lon2.alias("lon2"),
-                       lat2.alias("lat2")).collect()
+    proj = apply_transform_df(pts, fwd, "lon", "lat", "x", "y")
+    rows = apply_transform_df(proj, inv, "x", "y", "lon2",
+                              "lat2").collect()
     for r in rows:
         assert r["lon2"] == pytest.approx(r["lon"], abs=1e-7)
         assert r["lat2"] == pytest.approx(r["lat"], abs=1e-7)
@@ -283,18 +281,17 @@ def test_utm_roundtrip_and_anchors(spark):
 
 
 def test_polar_stereographic_roundtrip_and_known_values(spark):
-    from pyspark.sql import functions as F
-    from xcube_spark.operators.resampling.reproject import get_transform
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df, get_transform)
 
     pts = spark.createDataFrame(
         [(-45.0, 70.0), (10.0, 75.0), (-100.0, 62.0)],
         "lon double, lat double")
     fwd = get_transform("EPSG:4326", "EPSG:3413")
     inv = get_transform("EPSG:3413", "EPSG:4326")
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    lon2, lat2 = inv(x.alias("x"), y.alias("y"))
-    rows = pts.select("lon", "lat", x.alias("x"), y.alias("y"),
-                      lon2.alias("lon2"), lat2.alias("lat2")).collect()
+    proj = apply_transform_df(pts, fwd, "lon", "lat", "x", "y")
+    rows = apply_transform_df(proj, inv, "x", "y", "lon2",
+                              "lat2").collect()
     for r in rows:
         assert abs(r.lon2 - r.lon) < 1e-6 and abs(r.lat2 - r.lat) < 1e-6
     # published behavior: the standard parallel on the central meridian
@@ -303,29 +300,25 @@ def test_polar_stereographic_roundtrip_and_known_values(spark):
     assert abs(origin.x) < 1e-6 and origin.y < -2_000_000
 
     sfwd = get_transform("EPSG:4326", "EPSG:3031")
-    sx, sy = sfwd(F.col("lon"), F.col("lat"))
-    s = spark.createDataFrame([(45.0, -80.0)], "lon double, lat double") \
-        .select(sx.alias("x"), sy.alias("y")).collect()[0]
+    s = apply_transform_df(
+        spark.createDataFrame([(45.0, -80.0)], "lon double, lat double"),
+        sfwd, "lon", "lat", "x", "y").collect()[0]
     # EPSG:3031 at (45E, 80S): x == y == ~770166.18 m (Snyder south aspect)
     assert abs(s.x - 770166.179) < 0.01 and abs(s.y - 770166.179) < 0.01
 
 
 def test_get_transform_chains_through_lonlat(spark):
-    from pyspark.sql import functions as F
-    from xcube_spark.operators.resampling.reproject import get_transform
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df, get_transform)
 
     # mercator -> polar chains via the 4326 hop
     chain = get_transform("EPSG:3857", "EPSG:3413")
     direct = get_transform("EPSG:4326", "EPSG:3413")
     pts = spark.createDataFrame([(10.0, 75.0)], "lon double, lat double")
-    mx = F.col("lon") * 6378137.0 * 3.141592653589793 / 180.0
-    import math
-    my = (F.log(F.tan(F.lit(math.pi / 4) + F.radians(F.col("lat")) / 2))
-          * 6378137.0)
-    cx, cy = chain(mx, my)
-    dx, dy = direct(F.col("lon"), F.col("lat"))
-    r = pts.select(cx.alias("cx"), cy.alias("cy"),
-                   dx.alias("dx"), dy.alias("dy")).collect()[0]
+    mx = "lon * 6378137.0D * 3.141592653589793D / 180.0D"
+    my = "ln(tan(pi() / 4.0D + radians(lat) / 2.0D)) * 6378137.0D"
+    d = apply_transform_df(pts, chain, mx, my, "cx", "cy")
+    r = apply_transform_df(d, direct, "lon", "lat", "dx", "dy").collect()[0]
     assert abs(r.cx - r.dx) < 1e-4 and abs(r.cy - r.dy) < 1e-4
 
 
@@ -333,18 +326,17 @@ def test_laea_3035_known_points_and_roundtrip(spark):
     """ETRS89-LAEA (EPSG:3035): the projection center maps exactly to
     the false origin; (5E, 50N) matches the published sample
     coordinate; forward->inverse round-trips below 1e-7 degrees."""
-    from xcube_spark.operators.resampling.reproject import get_transform
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df, get_transform)
 
     fwd = get_transform("EPSG:4326", "EPSG:3035")
     inv = get_transform("EPSG:3035", "EPSG:4326")
     pts = spark.createDataFrame(
         [(10.0, 52.0), (5.0, 50.0), (25.0, 60.0), (-5.0, 40.0)],
         "lon double, lat double")
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    proj = pts.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    rows = proj.select("lon", "lat", "x", "y",
-                       lon2.alias("lon2"), lat2.alias("lat2")).collect()
+    proj = apply_transform_df(pts, fwd, "lon", "lat", "x", "y")
+    rows = apply_transform_df(proj, inv, "x", "y", "lon2",
+                              "lat2").collect()
     by_lon = {r.lon: r for r in rows}
     assert abs(by_lon[10.0].x - 4_321_000.0) < 1e-6
     assert abs(by_lon[10.0].y - 3_210_000.0) < 1e-6
@@ -353,28 +345,6 @@ def test_laea_3035_known_points_and_roundtrip(spark):
     assert abs(by_lon[5.0].y - 2_999_718.853) < 0.01
     for r in rows:
         assert abs(r.lon2 - r.lon) < 1e-7 and abs(r.lat2 - r.lat) < 1e-7
-
-
-def test_laea_inverse_sql_twin_matches_column_inverse(spark):
-    """laea_inverse_sql restates the Column inverse exactly (DuckDB)."""
-    import duckdb
-
-    from xcube_spark.operators.resampling.reproject import (
-        get_transform, laea_inverse_sql)
-
-    inv = get_transform("EPSG:3035", "EPSG:4326")
-    pts = [(4_000_000.0, 2_800_000.0), (4_500_000.0, 3_500_000.0),
-           (3_300_000.0, 2_300_000.0)]
-    df = spark.createDataFrame(pts, "x double, y double")
-    lon, lat = inv(F.col("x"), F.col("y"))
-    got = df.select(lon.alias("lon"), lat.alias("lat")).collect()
-    lon_sql, lat_sql = laea_inverse_sql("x", "y", "EPSG:3035")
-    con = duckdb.connect()
-    for (px, py), r in zip(pts, got):
-        o = con.execute(
-            f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, ? AS y)",
-            [px, py]).fetchone()
-        assert abs(o[0] - r.lon) < 1e-10 and abs(o[1] - r.lat) < 1e-10
 
 
 # ---- OSGB National Grid (EPSG:27700) ----------------------------------
@@ -447,14 +417,16 @@ def test_osgb_tm_core_os_worked_example(spark):
     E 651409.903, N 313177.270) to better than a millimetre."""
     import math as m
 
-    from xcube_spark.operators.resampling.reproject import _osgb_tm_fwd
+    from xcube_spark.operators.resampling.reproject import (
+        _osgb_tm_fwd, apply_transform_df, single)
 
     lat = 52 + 39 / 60 + 27.2531 / 3600
     lon = 1 + 43 / 60 + 4.5177 / 3600
     df = spark.range(1).select(
         F.lit(m.radians(lon)).alias("lam"), F.lit(m.radians(lat)).alias("phi"))
-    x, y = _osgb_tm_fwd(F.col("lam"), F.col("phi"))
-    r = df.select(x.alias("E"), y.alias("N")).collect()[0]
+    # the Airy-TM core alone (no datum hop), fed OSGB36 radians
+    r = apply_transform_df(df, single(_osgb_tm_fwd), "lam", "phi",
+                           "E", "N").collect()[0]
     assert abs(r.E - 651_409.903) < 1e-3
     assert abs(r.N - 313_177.270) < 1e-3
 
@@ -467,15 +439,15 @@ def test_osgb_full_chain_vs_independent_redfearn(spark):
     off-ellipsoid Bowring, both ~mm).  Materialized between stages —
     a single composed expression tree is the documented codegen
     blowup."""
-    from xcube_spark.operators.resampling.reproject import get_transform
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df, get_transform)
 
     pts = [(float(lo), float(la))
            for lo in (-7.0, -5.0, -2.0, 0.5, 1.8)
            for la in (50.0, 53.5, 57.0, 60.5)]
     fwd = get_transform("EPSG:4326", "EPSG:27700")
     df = spark.createDataFrame(pts, "lon double, lat double")
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    got = df.select("lon", "lat", x.alias("E"), y.alias("N")).collect()
+    got = apply_transform_df(df, fwd, "lon", "lat", "E", "N").collect()
     for r in got:
         eref, nref = _osgb_redfearn_ref(r.lon, r.lat)
         assert abs(r.E - eref) < 5e-3, (r.lon, r.lat)
@@ -485,44 +457,18 @@ def test_osgb_full_chain_vs_independent_redfearn(spark):
     back = spark.createDataFrame(
         [(r.E, r.N, r.lon, r.lat) for r in got],
         "E double, N double, lon double, lat double")
-    lon2, lat2 = inv(F.col("E"), F.col("N"))
-    for r in back.select("lon", "lat",
-                         lon2.alias("l2"), lat2.alias("p2")).collect():
+    for r in apply_transform_df(back, inv, "E", "N", "l2",
+                                "p2").collect():
         assert abs(r.l2 - r.lon) < 1e-6
         assert abs(r.p2 - r.lat) < 1e-6
 
 
-def test_osgb_inverse_sql_twin_matches_column_inverse(spark):
-    """osgb_inverse_sql restates the Column inverse exactly (DuckDB)."""
-    import duckdb
-
-    from xcube_spark.operators.resampling.reproject import (
-        get_transform, osgb_inverse_sql)
-
-    inv = get_transform("EPSG:27700", "EPSG:4326")
-    pts = [(400_000.0, 300_000.0), (137_500.0, 23_400.0),
-           (651_409.903, 313_177.270), (529_090.0, 181_680.0)]
-    df = spark.createDataFrame(pts, "x double, y double")
-    lon, lat = inv(F.col("x"), F.col("y"))
-    got = df.select(lon.alias("lon"), lat.alias("lat")).collect()
-    lon_sql, lat_sql = osgb_inverse_sql("x", "y")
-    con = duckdb.connect()
-    for (px, py), r in zip(pts, got):
-        o = con.execute(
-            f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, ? AS y)",
-            [px, py]).fetchone()
-        assert abs(o[0] - r.lon) < 1e-10 and abs(o[1] - r.lat) < 1e-10
-
-
-def test_tm_registry_roundtrip_and_sql_twin(spark):
+def test_tm_registry_roundtrip(spark):
     """Generic national-TM registry (NZTM/TM35FIN/ETRS89-UTM): exact
-    round-trips, GRS80-vs-WGS84 distinction (EPSG:25832 differs from
-    EPSG:32632 by the ellipsoid, sub-mm but nonzero), and the DuckDB
-    SQL twin matches the Column inverse to 1e-10."""
-    import duckdb
-
-    from xcube_spark.operators.resampling.reproject import (get_transform,
-                                                            tm_inverse_sql)
+    round-trips and the GRS80-vs-WGS84 distinction (EPSG:25832 differs
+    from EPSG:32632 by the ellipsoid, sub-mm but nonzero)."""
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df, get_transform)
 
     cases = {"EPSG:2193": [(173.0, -41.0), (168.5, -46.2), (178.2, -37.8)],
              "EPSG:3067": [(27.0, 64.0), (21.5, 60.2), (30.9, 69.5)],
@@ -531,35 +477,27 @@ def test_tm_registry_roundtrip_and_sql_twin(spark):
         fwd = get_transform("EPSG:4326", crs)
         inv = get_transform(crs, "EPSG:4326")
         df = spark.createDataFrame(pts, "lon double, lat double")
-        x, y = fwd(F.col("lon"), F.col("lat"))
-        proj = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-        lon2, lat2 = inv(F.col("x"), F.col("y"))
-        rows = proj.select("lon", "lat", "x", "y", lon2.alias("l2"),
-                           lat2.alias("p2")).collect()
+        proj = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+        rows = apply_transform_df(proj, inv, "x", "y", "l2",
+                                  "p2").collect()
         for r in rows:
             # 3rd-order Krueger truncation: ~1e-4 m, like the UTM path
             assert abs(r.l2 - r.lon) < 1e-8 and abs(r.p2 - r.lat) < 1e-8
-        lon_sql, lat_sql = tm_inverse_sql("x", "y", crs)
-        con = duckdb.connect()
-        for r in rows:
-            o = con.execute(
-                f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, "
-                "? AS y)", [r.x, r.y]).fetchone()
-            assert abs(o[0] - r.l2) < 1e-10 and abs(o[1] - r.p2) < 1e-10
 
     # NZTM natural origin: (173E, 0N) -> the false origin exactly
     fwd = get_transform("EPSG:4326", "EPSG:2193")
-    x, y = fwd(F.lit(173.0), F.lit(0.0))
-    r = spark.range(1).select(x.alias("x"), y.alias("y")).collect()[0]
+    r = apply_transform_df(spark.range(1), fwd, "173.0D", "0.0D",
+                           "x", "y").collect()[0]
     assert abs(r.x - 1_600_000.0) < 1e-6
     assert abs(r.y - 10_000_000.0) < 1e-6
 
     # GRS80 != WGS84: same parameters, different flattening
     e25832 = get_transform("EPSG:4326", "EPSG:25832")
     e32632 = get_transform("EPSG:4326", "EPSG:32632")
-    a = spark.range(1).select(
-        e25832(F.lit(9.5), F.lit(50.0))[1].alias("n1"),
-        e32632(F.lit(9.5), F.lit(50.0))[1].alias("n2")).collect()[0]
+    d = apply_transform_df(spark.range(1), e25832, "9.5D", "50.0D",
+                           "x1", "n1")
+    a = apply_transform_df(d, e32632, "9.5D", "50.0D", "x2",
+                           "n2").collect()[0]
     assert 0.0 < abs(a.n1 - a.n2) < 0.005
 
 
@@ -669,7 +607,7 @@ def test_lcc_2154_invariants_and_roundtrip(spark):
     import math
 
     from xcube_spark.operators.resampling.reproject import (
-        _E2_G, _R, get_transform)
+        _E2_G, _R, apply_transform_df, get_transform)
 
     fwd = get_transform("EPSG:4326", "EPSG:2154")
     inv = get_transform("EPSG:2154", "EPSG:4326")
@@ -677,11 +615,9 @@ def test_lcc_2154_invariants_and_roundtrip(spark):
     pts = [(3.0, 46.5), (2.3488, 48.8534), (-1.55, 47.2), (7.75, 48.58),
            (3.0, 44.0), (3.0 + d, 44.0), (3.0, 49.0), (3.0 + d, 49.0)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    proj = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    rows = proj.select("lon", "lat", "x", "y", lon2.alias("lon2"),
-                       lat2.alias("lat2")).collect()
+    proj = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    rows = apply_transform_df(proj, inv, "x", "y", "lon2",
+                              "lat2").collect()
     by = {(r.lon, r.lat): r for r in rows}
     c = by[(3.0, 46.5)]
     assert abs(c.x - 700_000.0) < 1e-6 and abs(c.y - 6_600_000.0) < 1e-6
@@ -704,7 +640,7 @@ def test_albers_5070_equal_area_and_roundtrip(spark):
     import math
 
     from xcube_spark.operators.resampling.reproject import (
-        _E2_G, _R, get_transform)
+        _E2_G, _R, apply_transform_df, get_transform)
 
     fwd = get_transform("EPSG:4326", "EPSG:5070")
     inv = get_transform("EPSG:5070", "EPSG:4326")
@@ -714,11 +650,9 @@ def test_albers_5070_equal_area_and_roundtrip(spark):
     for lon, lat in base:
         pts += [(lon, lat), (lon + d, lat), (lon, lat + d)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    proj = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    rows = proj.select("lon", "lat", "x", "y", lon2.alias("lon2"),
-                       lat2.alias("lat2")).collect()
+    proj = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    rows = apply_transform_df(proj, inv, "x", "y", "lon2",
+                              "lat2").collect()
     by = {(r.lon, r.lat): r for r in rows}
     c = by[(-96.0, 23.0)]
     assert abs(c.x) < 1e-6 and abs(c.y) < 1e-6
@@ -740,50 +674,21 @@ def test_sinusoidal_modis_analytic(spark):
     checked against the literal closed form and round-tripped."""
     import math
 
-    from xcube_spark.operators.resampling.reproject import get_transform
+    from xcube_spark.operators.resampling.reproject import (
+        apply_transform_df, get_transform)
 
     R = 6_371_007.181
     fwd = get_transform("EPSG:4326", "ESRI:54008")
     inv = get_transform("ESRI:54008", "EPSG:4326")
     pts = [(90.0, 45.0), (10.0, -30.0), (-120.0, 60.0)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    x, y = fwd(F.col("lon"), F.col("lat"))
-    proj = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    for r in proj.select("*", lon2.alias("lon2"),
-                         lat2.alias("lat2")).collect():
+    proj = apply_transform_df(df, fwd, "lon", "lat", "x", "y")
+    for r in apply_transform_df(proj, inv, "x", "y", "lon2",
+                                "lat2").collect():
         ex = R * math.radians(r.lon) * math.cos(math.radians(r.lat))
         ey = R * math.radians(r.lat)
         assert abs(r.x - ex) < 1e-6 and abs(r.y - ey) < 1e-6
         assert abs(r.lon2 - r.lon) < 1e-12 and abs(r.lat2 - r.lat) < 1e-12
-
-
-def test_lcc_aea_inverse_sql_twins_match_column_inverse(spark):
-    """lcc_inverse_sql / aea_inverse_sql restate the Column inverses
-    exactly (DuckDB vs Spark below 1e-10 degrees)."""
-    import duckdb
-
-    from xcube_spark.operators.resampling.reproject import (
-        aea_inverse_sql, get_transform, lcc_inverse_sql)
-
-    con = duckdb.connect()
-    for crs, sql_fn, pts in [
-            ("EPSG:2154", lcc_inverse_sql,
-             [(700_000.0, 6_600_000.0), (350_000.0, 6_300_000.0),
-              (1_050_000.0, 6_900_000.0)]),
-            ("EPSG:5070", aea_inverse_sql,
-             [(0.0, 1_000_000.0), (-1_500_000.0, 2_000_000.0),
-              (1_200_000.0, 400_000.0)])]:
-        inv = get_transform(crs, "EPSG:4326")
-        df = spark.createDataFrame(pts, "x double, y double")
-        lon, lat = inv(F.col("x"), F.col("y"))
-        got = df.select(lon.alias("lon"), lat.alias("lat")).collect()
-        lon_sql, lat_sql = sql_fn("x", "y", crs)
-        for (px, py), r in zip(pts, got):
-            o = con.execute(
-                f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, ? AS y)",
-                [px, py]).fetchone()
-            assert abs(o[0] - r.lon) < 1e-10 and abs(o[1] - r.lat) < 1e-10
 
 
 # ---- true B-spline orders 2/4/5 (resampling/bspline.py) ----------------
@@ -1028,8 +933,7 @@ def test_pyproj_fallback_seam_with_stub(spark, monkeypatch):
     assert calls["crs"] == ("ESRI:54009", "ESRI:54052")
     df = spark.createDataFrame(
         [(float(i), float(i) * 3.0) for i in range(50)], "px double, py double")
-    ox, oy = tf(F.col("px"), F.col("py"))
-    rows = df.select("px", "py", ox.alias("ox"), oy.alias("oy")).collect()
+    rows = rp.apply_transform_df(df, tf, "px", "py", "ox", "oy").collect()
     for r in rows:
         assert r.ox == r.px * 2.0 + 10.0
         assert r.oy == r.py * -0.5
@@ -1063,21 +967,18 @@ def test_mollweide_forward_inverse_roundtrip(spark):
     x(+-180, 0) = 2 sqrt(2) R)."""
     import math
 
-    from pyspark.sql import functions as F
-
     from xcube_spark.operators.resampling.reproject import (
-        _MollForward, _moll_to_lonlat_fn, apply_transform_df)
+        apply_transform_df, get_transform)
 
-    fwd = _MollForward("ESRI:54009")
-    inv = _moll_to_lonlat_fn("ESRI:54009")
+    fwd = get_transform("EPSG:4326", "ESRI:54009")
+    inv = get_transform("ESRI:54009", "EPSG:4326")
     pts = [(float(lon), float(lat))
            for lon in range(-170, 171, 20) for lat in range(-85, 86, 10)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    d = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
+    d = apply_transform_df(df, fwd, "lon", "lat",
                            "mx", "my")
-    lx, ly = inv(F.col("mx"), F.col("my"))
-    rows = d.select("lon", "lat", "mx", "my",
-                    lx.alias("rlon"), ly.alias("rlat")).collect()
+    rows = apply_transform_df(d, inv, "mx", "my", "rlon",
+                              "rlat").collect()
     for r in rows:
         assert abs(r.rlon - r.lon) < 1e-10
         assert abs(r.rlat - r.lat) < 1e-10
@@ -1085,7 +986,7 @@ def test_mollweide_forward_inverse_roundtrip(spark):
     anchors = spark.createDataFrame(
         [(0.0, 90.0), (0.0, -90.0), (180.0, 0.0)],
         "lon double, lat double")
-    a = apply_transform_df(anchors, fwd, F.col("lon"), F.col("lat"),
+    a = apply_transform_df(anchors, fwd, "lon", "lat",
                            "mx", "my").collect()
     by = {(r.lon, r.lat): r for r in a}
     assert by[(0.0, 90.0)].my == pytest.approx(math.sqrt(2) * R, rel=1e-9)

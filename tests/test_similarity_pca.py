@@ -5,6 +5,7 @@ one-pass moment accumulation)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from xcube_spark.pipeline.similarity import (
     pca_moments,
@@ -207,3 +208,47 @@ def test_knn_ivfpq_rerank_orders_by_exact_distance(spark):
         # exact d2 recomputed in numpy must be non-decreasing in rank
         d2s = [float(((vecs[v] - vecs[qid]) ** 2).sum()) for v in ids]
         assert all(a <= b + 1e-9 for a, b in zip(d2s, d2s[1:])), d2s
+
+
+@pytest.mark.parametrize("kernel", ["bruteforce", "lsh", "ivf"])
+def test_zero_norm_vectors_have_null_cosine_and_rank_last(spark, kernel):
+    """Zero-norm contract: a zero-norm query or corpus vector has a
+    NULL cosine, stays a candidate, and ranks after every non-NULL
+    score, ties by id ascending — whatever the batch layout (a NaN
+    cosine used to drop every candidate of a zero query once a batch
+    held more than k of them)."""
+    from xcube_spark.pipeline.similarity import (knn_bruteforce, knn_ivf,
+                                                 knn_lsh)
+
+    rows = [(i, [1.0 + i, 2.0 * (i % 3)]) for i in range(1, 12)]
+    rows += [(20, [0.0, 0.0]), (21, [0.0, 0.0])]
+    corpus = spark.createDataFrame(rows,
+                                   "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.5]), (101, [0.0, 0.0])],
+        "query_id long, embedding array<double>")
+    cents = corpus.where("vec_id IN (1, 5)")
+    run = {
+        "bruteforce": lambda c, k: knn_bruteforce(c, queries, k=k),
+        # one plane probed at radius 1: both buckets, every candidate
+        "lsh": lambda c, k: knn_lsh(c, queries, k=k, n_planes=1, dim=2,
+                                    probe_radius=1),
+        "ivf": lambda c, k: knn_ivf(c, queries, cents, k=k, n_probe=2),
+    }[kernel]
+    for k in (4, 13):
+        layouts = [[(r.query_id, r.vec_id, r.cosine, r.rank) for r in
+                    run(corpus.repartition(parts), k)
+                    .orderBy("query_id", "rank").collect()]
+                   for parts in (1, 3)]
+        assert layouts[0] == layouts[1], k
+        q100 = [r for r in layouts[0] if r[0] == 100]
+        q101 = [r for r in layouts[0] if r[0] == 101]
+        assert len(q100) == len(q101) == k
+        # the zero query: every score NULL, ranked by id
+        assert all(r[2] is None for r in q101)
+        assert [r[1] for r in q101] == sorted(v for v, _ in rows)[:k]
+        # a real query: the zero vectors come last, NULL, by id
+        scored = [r for r in q100 if r[2] is not None]
+        assert len(scored) == min(k, 11)
+        assert [r[1] for r in q100[len(scored):]] == [20, 21][:k - 11]
+        assert all(r[2] is None for r in q100[len(scored):])

@@ -773,6 +773,33 @@ def test_zarr_v3_uncompressed_float(spark, tmp_path):
         back.select("t_i", "y_i", "x_i", "A")).count() == 0
 
 
+def test_cube_layout_bands_do_not_depend_on_session_history(spark,
+                                                            tmp_path):
+    """The y-band files are the same exact bands whatever ran before:
+    the range sampler's seed follows the RDD id counter, so a layout
+    cut from sampled bounds moved a band edge by a row depending on
+    session history (the order-dependent footer-stats failure)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from xcube_spark.sources.layout import write_cube_layout
+
+    grid = CubeGrid(width=32, height=32, time_periods=4, x_res=11.25,
+                    y_res=5.625, chunks=(2, 8, 8))
+    for shift in range(4):
+        spark.sparkContext.parallelize(range(3), 1).count()  # new RDD ids
+        path = str(tmp_path / f"layout{shift}")
+        write_cube_layout(new_cube(spark, grid, {"v": 1.0}), path, grid,
+                          files_per_partition=4)
+        bands = set()
+        for f in glob.glob(f"{path}/t_part=*/part-*.parquet"):
+            col = pq.read_table(f, columns=["y_i"]).column("y_i")
+            bands.add((f.split("t_part=")[1][0],
+                       min(col.to_pylist()), max(col.to_pylist())))
+        assert sorted(bands) == [("0", 0, 15), ("0", 16, 31),
+                                 ("1", 0, 15), ("1", 16, 31)], shift
+
 def test_zorder_layout_prunes_square_bboxes_better(spark, tmp_path):
     """Z-order files bound BOTH x and y extents, so a compact bbox
     intersects fewer files than with the y-band layout (whose files

@@ -3,64 +3,135 @@
 ``reproject_dataset``: resample a regular-grid cube in CRS A onto a
 regular grid in CRS B.  The reference transforms, per target block, the
 target cell centers into the source CRS with pyproj, then gathers the
-nearest source pixel (reproject.py:360-430).
+nearest source pixel (reproject.py:360-430).  Spark mapping: the same
+**target-driven gather join** as affine — synthesize the target cell
+table (``spark.range``), transform its centers into the source CRS,
+compute source indices and equi-join the source cells.  The target
+table is bounded by the requested output size and is broadcast, so
+the source never shuffles.
 
-Spark mapping: the same **target-driven gather join** as affine, with
-the coordinate transform factored out as a pluggable function:
+**Transforms are data.**  Each projection family writes each direction
+(to lon/lat, from lon/lat) ONCE, as a :class:`Transform`: a list of
+named stages over the tiny expression type of :mod:`.sqlexpr` (its
+constructors mirror ``pyspark.sql.functions``; imported here as
+``X``).  A closed-form family is one stage (:func:`single`); a family
+with a fixed-count iterative solve or a datum hop is several
+(:func:`staged`) — one aliased column per intermediate, because
+re-inlining a deep subtree per reference grows the expression
+exponentially.  A pair of
+CRSs chains through EPSG:4326 by concatenating the two stage lists
+(:meth:`Transform.then`).
 
-1. synthesize the target cell table (narrow ``spark.range`` projection);
-2. transform target (x, y) -> source CRS — either
-   - a *pure Column* transform (identity, lon/lat <-> scaled meters
-     approximations) that stays inside whole-stage codegen, or
-   - a **pandas_udf transform** (Arrow-batched) when real projection
-     math is needed.  ``pyproj`` is not installed in this container, so
-     the UDF path is gated behind an import-try and ships with
-     deterministic pure-numpy transforms for the common cases
-     (EPSG:4326 <-> EPSG:3857 Web-Mercator — closed-form math,
-     no library needed);
-3. compute source indices from the transformed coords (Column math) and
-   equi-join the source cells — identical physical shape to affine, so
-   the same layout/broadcast reasoning applies.
+The same stages render to two dialects:
 
-Scale: the transform is applied to the *target* table (bounded by the
-requested output size, usually << source); the join shuffles on source
-cell indices which are co-located with the cells-table layout.
+* Spark SQL — :func:`apply_transform_df`, the one way to run a
+  transform: one ``withColumns`` of ``F.expr`` strings per stage (one
+  server-side parse instead of hundreds of Column-API py4j calls);
+* DuckDB SQL — :func:`lonlat_sql`, the CTE chain the oracles of the
+  ``cube_reproject_*`` queries select their lon/lat from.
+
+**The persist barrier.**  ``reproject_dataset`` persists the target
+table exactly when the transform is ``deep`` (built by
+:func:`staged`, or chained with such a leg): Dynamic Partition
+Pruning's alias-lineage walk goes exponential on long alias chains,
+and the persisted table is a leaf it stops at.  Closed-form
+transforms (and chains of them) get no barrier; a single-stage one
+runs as one projection with the inputs inlined.
+
+**Adding a family.**  Register its parameters in a ``*_PARAMS`` table
+(and in :mod:`.crsparse` for PROJ.4/CF spellings), write
+``_lonlat_to_<fam>_fn(crs)`` and ``_<fam>_to_lonlat_fn(crs)``
+returning :func:`single` or :func:`staged` transforms, add that
+triple to ``_FAMILIES``, and give the family a ``cube_reproject_*``
+gate query: the dialect-parity test samples every family on its gate
+grid in both engines.  CRS pairs no family covers fall back to pyproj
+inside a ``pandas_udf`` when pyproj is installed.
 """
 
 from __future__ import annotations
 
 import math
 import re
+from dataclasses import dataclass
 from typing import Callable, Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xcube_spark.cube.grid import CubeGrid
+from xcube_spark.operators.resampling import sqlexpr as X
+from xcube_spark.operators.resampling.sqlexpr import E
 
-#: (x, y) -> (x', y') as Column expressions
-ColumnTransform = Callable[[Column, Column], tuple[Column, Column]]
+#: a stage: new column name -> expression over earlier names
+Stage = dict[str, E]
+
+@dataclass(frozen=True)
+class Transform:
+    """(x, y) -> (x', y') as named stages; see the module docstring.
+    ``deep`` marks a staged transform (iterative solve or datum hop),
+    which ``reproject_dataset`` materializes behind a persist barrier."""
+
+    stages: tuple[Stage, ...]
+    deep: bool = False
+    #: pyproj ``pandas_udf`` (-> struct<x, y>) for a CRS pair no family
+    #: covers; such a transform has no stages
+    udf: Callable | None = None
+
+    def then(self, other: "Transform") -> "Transform":
+        """This transform followed by ``other`` (the 4326 hop): the two
+        stage lists concatenated, this one's outputs renamed to
+        ``__mid_x``/``__mid_y`` and ``other``'s inputs read from them."""
+        *head, last = self.stages
+        mid = {"__out_x": "__mid_x", "__out_y": "__mid_y"}
+        ins = {"__in_x": X.col("__mid_x"), "__in_y": X.col("__mid_y")}
+        return Transform(
+            (*head, {mid.get(n, n): e for n, e in last.items()},
+             *({n: e.subst(ins) for n, e in st.items()}
+               for st in other.stages)),
+            self.deep or other.deep)
+
+
+def single(fn: Callable[[E, E], tuple[E, E]]) -> Transform:
+    """A closed-form transform: ``fn(x, y) -> (x', y')`` as ONE stage."""
+    x, y = fn(X.col("__in_x"), X.col("__in_y"))
+    return Transform(({"__out_x": x, "__out_y": y},))
+
+
+def staged(stages: list[dict[str, Callable[[dict], E]]]) -> Transform:
+    """A multi-stage transform; each stage maps a name to ``fn(env)``,
+    ``env`` giving the columns of earlier stages by name."""
+    env = _Refs()
+    *head, last = ({n: fn(env) for n, fn in st.items()} for st in stages)
+    assert set(last) == {"__out_x", "__out_y"}
+    assert not any({"__out_x", "__out_y"} & set(st) for st in head)
+    return Transform((*head, last), deep=True)
+
+
+class _Refs(dict):
+    def __missing__(self, name: str) -> E:
+        return X.col(name)
+
 
 _R = 6378137.0  # WGS84 spherical radius used by EPSG:3857
 
+_IDENTITY = single(lambda x, y: (x, y))
 
-def _lonlat_to_mercator(x: Column, y: Column) -> tuple[Column, Column]:
-    """EPSG:4326 -> EPSG:3857, closed-form (no pyproj needed)."""
-    mx = x * F.lit(math.pi * _R / 180.0)
-    lat = F.when(y > 89.9999, 89.9999).when(y < -89.9999, -89.9999).otherwise(y)
-    my = F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(lat) / 2)) * F.lit(_R)
+
+def _lonlat_to_mercator(x: E, y: E) -> tuple[E, E]:
+    """EPSG:4326 -> EPSG:3857, closed-form."""
+    mx = x * X.lit(math.pi * _R / 180.0)
+    lat = X.when(y > 89.9999, 89.9999).when(y < -89.9999, -89.9999) \
+        .otherwise(y)
+    my = X.log(X.tan(X.lit(math.pi / 4.0) + X.radians(lat) / 2)) \
+        * X.lit(_R)
     return mx, my
 
 
-def _mercator_to_lonlat(x: Column, y: Column) -> tuple[Column, Column]:
+def _mercator_to_lonlat(x: E, y: E) -> tuple[E, E]:
     """EPSG:3857 -> EPSG:4326, closed-form inverse."""
-    lon = x / F.lit(math.pi * _R / 180.0)
-    lat = F.degrees(F.atan(F.sinh(y / F.lit(_R))))
+    lon = x / X.lit(math.pi * _R / 180.0)
+    lat = X.degrees(X.atan(X.sinh(y / X.lit(_R))))
     return lon, lat
-
-
-def _identity(x: Column, y: Column) -> tuple[Column, Column]:
-    return x, y
 
 
 # ---- transverse Mercator / UTM (closed-form Krueger series) -----------
@@ -70,8 +141,8 @@ def _identity(x: Column, y: Column) -> tuple[Column, Column]:
 # is not in this container, so the ellipsoidal transverse-Mercator
 # forward/inverse is implemented directly from the published
 # Krueger/Karney series (public math; 3rd order in n — truncation error
-# ~1e-4 m over the UTM domain, far below any satellite pixel).  Pure
-# Column expressions: the whole transform stays inside whole-stage
+# ~1e-4 m over the UTM domain, far below any satellite pixel).  One
+# closed-form stage: the whole transform stays inside whole-stage
 # codegen, no UDF, no library.
 
 _F_WGS84 = 1.0 / 298.257223563
@@ -115,124 +186,57 @@ def utm_crs(zone: int, south: bool = False) -> str:
     return f"EPSG:32{7 if south else 6}{zone:02d}"
 
 
-def _utm_lon0(zone: int) -> float:
-    return float(zone * 6 - 183)
+def _lat_series(x: E, coeffs) -> E:
+    """``x + sum_j c_j sin(2 j x)``: an auxiliary latitude (conformal,
+    authalic or rectifying) -> geodetic latitude series."""
+    out = x
+    for j, cj in enumerate(coeffs, start=1):
+        out = out + X.lit(cj) * X.sin(X.lit(2.0 * j) * x)
+    return out
 
 
-def _lonlat_to_utm_fn(zone: int, south: bool) -> ColumnTransform:
-    lon0 = _utm_lon0(zone)
-    fn = 10_000_000.0 if south else 0.0
-
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam = F.radians(lon - F.lit(lon0))
-        phi = F.radians(lat)
-        sphi = F.sin(phi)
-        t = F.sinh(F.atanh(sphi) - F.lit(_E_WGS84)
-                   * F.atanh(F.lit(_E_WGS84) * sphi))
-        clam = F.cos(lam)
-        xip = F.atan2(t, clam)
-        etap = F.asinh(F.sin(lam) / F.sqrt(t * t + clam * clam))
-        xi, eta = xip, etap
-        for j, a in enumerate(_ALPHA, start=1):
-            xi = xi + F.lit(a) * F.sin(F.lit(2.0 * j) * xip) \
-                * F.cosh(F.lit(2.0 * j) * etap)
-            eta = eta + F.lit(a) * F.cos(F.lit(2.0 * j) * xip) \
-                * F.sinh(F.lit(2.0 * j) * etap)
-        x = F.lit(_K0 * _A_RECT) * eta + F.lit(500_000.0)
-        y = F.lit(_K0 * _A_RECT) * xi + F.lit(fn)
-        return x, y
-
-    return fwd
+def _tm_fwd(lam: E, phi: E, c: dict) -> tuple[E, E]:
+    """Krueger TM forward, shared by UTM, the national TM grids and
+    OSGB: radians (``lam`` from the central meridian, ``phi``) ->
+    (easting, northing) for the constants ``c`` (:func:`_tm_consts`)."""
+    sphi = X.sin(phi)
+    t = X.sinh(X.atanh(sphi) - X.lit(c["e"])
+               * X.atanh(X.lit(c["e"]) * sphi))
+    clam = X.cos(lam)
+    xip = X.atan2(t, clam)
+    etap = X.asinh(X.sin(lam) / X.sqrt(t * t + clam * clam))
+    xi, eta = xip, etap
+    for j, a in enumerate(c["alpha"], start=1):
+        xi = xi + X.lit(a) * X.sin(X.lit(2.0 * j) * xip) \
+            * X.cosh(X.lit(2.0 * j) * etap)
+        eta = eta + X.lit(a) * X.cos(X.lit(2.0 * j) * xip) \
+            * X.sinh(X.lit(2.0 * j) * etap)
+    return (X.lit(c["k"]) * eta + X.lit(c["fe"]),
+            X.lit(c["k"]) * xi + X.lit(c["y0"]))
 
 
-def _utm_inverse_spark_sql(x: str, y: str, zone: int,
-                           south: bool) -> tuple[str, str]:
-    """The inverse series as ONE Spark-SQL string per output — the
-    op-for-op twin of ``_utm_to_lonlat_fn``'s Column tree (same
-    sinh/cosh built-ins, same literal folds, same association), so the
-    parsed expression is IDENTICAL and so are the doubles.  One
-    server-side parse replaces ~400 Column-API py4j round trips per
-    plan build (r12 optimization round; ema_smooth precedent)."""
-    lon0 = _utm_lon0(zone)
-    fn = 10_000_000.0 if south else 0.0
-    k = f"{_K0 * _A_RECT!r}D"
-    xi = f"((({y}) - {fn!r}D) / {k})"
-    eta = f"((({x}) - 500000.0D) / {k})"
+def _tm_inv(x: E, y: E, c: dict) -> tuple[E, E]:
+    """Krueger TM inverse: (easting, northing) -> radians (``lam`` from
+    the central meridian, ``phi``)."""
+    xi = (y - X.lit(c["y0"])) / X.lit(c["k"])
+    eta = (x - X.lit(c["fe"])) / X.lit(c["k"])
     xip, etap = xi, eta
-    for j, b in enumerate(_BETA, start=1):
-        xip = (f"({xip} - {b!r}D * sin({2.0 * j!r}D * {xi}) "
-               f"* cosh({2.0 * j!r}D * {eta}))")
-        etap = (f"({etap} - {b!r}D * cos({2.0 * j!r}D * {xi}) "
-                f"* sinh({2.0 * j!r}D * {eta}))")
-    chi = f"asin(sin({xip}) / cosh({etap}))"
-    phi = chi
-    for j, d in enumerate(_DELTA, start=1):
-        phi = f"({phi} + {d!r}D * sin({2.0 * j!r}D * {chi}))"
-    lam = f"atan2(sinh({etap}), cos({xip}))"
-    return f"({lon0!r}D + degrees({lam}))", f"degrees({phi})"
-
-
-def _utm_to_lonlat_fn(zone: int, south: bool) -> ColumnTransform:
-    lon0 = _utm_lon0(zone)
-    fn = 10_000_000.0 if south else 0.0
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xi = (y - F.lit(fn)) / F.lit(_K0 * _A_RECT)
-        eta = (x - F.lit(500_000.0)) / F.lit(_K0 * _A_RECT)
-        xip, etap = xi, eta
-        for j, b in enumerate(_BETA, start=1):
-            xip = xip - F.lit(b) * F.sin(F.lit(2.0 * j) * xi) \
-                * F.cosh(F.lit(2.0 * j) * eta)
-            etap = etap - F.lit(b) * F.cos(F.lit(2.0 * j) * xi) \
-                * F.sinh(F.lit(2.0 * j) * eta)
-        chi = F.asin(F.sin(xip) / F.cosh(etap))
-        phi = chi
-        for j, d in enumerate(_DELTA, start=1):
-            phi = phi + F.lit(d) * F.sin(F.lit(2.0 * j) * chi)
-        lam = F.atan2(F.sinh(etap), F.cos(xip))
-        return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
-
-    inv.sql_fn = lambda xs, ys: _utm_inverse_spark_sql(xs, ys, zone, south)
-    return inv
-
-
-def utm_inverse_sql(x_expr: str, y_expr: str, zone: int,
-                    south: bool = False) -> tuple[str, str]:
-    """The SAME inverse series as SQL strings (for DuckDB oracles):
-    sinh/cosh written as exp-halves, asin/atan2 as built-ins.  Returns
-    (lon_sql, lat_sql)."""
-    lon0 = _utm_lon0(zone)
-    fn = 10_000_000.0 if south else 0.0
-    k = repr(_K0 * _A_RECT)
-    xi = f"(({y_expr}) - {fn!r}) / {k}"
-    eta = f"(({x_expr}) - 500000.0) / {k}"
-
-    def sinh(z):
-        return f"((exp({z}) - exp(-({z}))) / 2)"
-
-    def cosh(z):
-        return f"((exp({z}) + exp(-({z}))) / 2)"
-
-    xip, etap = xi, eta
-    for j, b in enumerate(_BETA, start=1):
-        xip = f"({xip} - {b!r} * sin(2.0 * {j} * ({xi})) " \
-              f"* {cosh(f'2.0 * {j} * ({eta})')})"
-        etap = f"({etap} - {b!r} * cos(2.0 * {j} * ({xi})) " \
-               f"* {sinh(f'2.0 * {j} * ({eta})')})"
-    chi = f"asin(sin({xip}) / {cosh(etap)})"
-    phi = chi
-    for j, d in enumerate(_DELTA, start=1):
-        phi = f"({phi} + {d!r} * sin(2.0 * {j} * ({chi})))"
-    lam = f"atan2({sinh(etap)}, cos({xip}))"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+    for j, b in enumerate(c["beta"], start=1):
+        xip = xip - X.lit(b) * X.sin(X.lit(2.0 * j) * xi) \
+            * X.cosh(X.lit(2.0 * j) * eta)
+        etap = etap - X.lit(b) * X.cos(X.lit(2.0 * j) * xi) \
+            * X.sinh(X.lit(2.0 * j) * eta)
+    chi = X.asin(X.sin(xip) / X.cosh(etap))
+    phi = _lat_series(chi, c["delta"])
+    return X.atan2(X.sinh(etap), X.cos(xip)), phi
 
 
 # ---- OSGB National Grid (EPSG:27700) ----------------------------------
 #
 # The British national CRS the reference reaches through pyproj: a
 # transverse Mercator with false origin on the AIRY 1830 ellipsoid in
-# the OSGB36 datum.  Two public-math pieces compose it, both as pure
-# Column arithmetic:
+# the OSGB36 datum.  Two public-math pieces compose it, both as
+# stages of plain arithmetic:
 #   * the same Krueger/Karney TM series as UTM above, re-derived for
 #     Airy's third flattening (the series coefficients are functions
 #     of n only — `_tm_series`), with the EPSG:27700 natural origin
@@ -311,402 +315,52 @@ _OSGB_Y0 = _OSGB_FN - _OSGB_K0 * _AIRY_AR * _tm_xi_scalar(
     math.radians(_OSGB_LAT0), _AIRY_E, _AIRY_ALPHA)
 
 
-def _osgb_tm_fwd(lam_a: Column, phi_a: Column) -> tuple[Column, Column]:
-    """Airy-TM forward: OSGB36 geodetic radians -> (easting, northing).
-    Exposed separately so tests can pin the OS worked example without
-    the datum hop."""
-    lam = lam_a - F.lit(math.radians(_OSGB_LON0))
-    sphi = F.sin(phi_a)
-    t = F.sinh(F.atanh(sphi) - F.lit(_AIRY_E)
-               * F.atanh(F.lit(_AIRY_E) * sphi))
-    clam = F.cos(lam)
-    xip = F.atan2(t, clam)
-    etap = F.asinh(F.sin(lam) / F.sqrt(t * t + clam * clam))
-    xi, eta = xip, etap
-    for j, a in enumerate(_AIRY_ALPHA, start=1):
-        xi = xi + F.lit(a) * F.sin(F.lit(2.0 * j) * xip) \
-            * F.cosh(F.lit(2.0 * j) * etap)
-        eta = eta + F.lit(a) * F.cos(F.lit(2.0 * j) * xip) \
-            * F.sinh(F.lit(2.0 * j) * etap)
-    x = F.lit(_OSGB_K0 * _AIRY_AR) * eta + F.lit(_OSGB_FE)
-    y = F.lit(_OSGB_K0 * _AIRY_AR) * xi + F.lit(_OSGB_Y0)
-    return x, y
-
-
-def _geodetic_to_xyz(lam: Column, phi: Column, a: float,
-                     e2: float) -> tuple[Column, Column, Column]:
-    sp, cp = F.sin(phi), F.cos(phi)
-    nu = F.lit(a) / F.sqrt(F.lit(1.0) - F.lit(e2) * sp * sp)
-    return (nu * cp * F.cos(lam), nu * cp * F.sin(lam),
-            nu * F.lit(1.0 - e2) * sp)
-
-
-def _xyz_to_geodetic(x: Column, y: Column, z: Column, a: float, b: float,
-                     e2: float, ep2: float) -> tuple[Column, Column]:
-    """Bowring's closed-form (single-shot, mm-accurate near the
-    surface): returns (lam, phi) in radians."""
-    p = F.sqrt(x * x + y * y)
-    th = F.atan2(z * F.lit(a), p * F.lit(b))
-    phi = F.atan2(z + F.lit(ep2 * b) * F.pow(F.sin(th), F.lit(3.0)),
-                  p - F.lit(e2 * a) * F.pow(F.cos(th), F.lit(3.0)))
-    return F.atan2(y, x), phi
-
-
-def _helmert(x: Column, y: Column, z: Column,
-             params: tuple) -> tuple[Column, Column, Column]:
+def _helmert(x: E, y: E, z: E,
+             params: tuple) -> tuple[E, E, E]:
     tx, ty, tz, rx, ry, rz, s = params
     m = 1.0 + s
     return (
-        F.lit(tx) + F.lit(m) * x - F.lit(rz) * y + F.lit(ry) * z,
-        F.lit(ty) + F.lit(rz) * x + F.lit(m) * y - F.lit(rx) * z,
-        F.lit(tz) - F.lit(ry) * x + F.lit(rx) * y + F.lit(m) * z,
+        X.lit(tx) + X.lit(m) * x - X.lit(rz) * y + X.lit(ry) * z,
+        X.lit(ty) + X.lit(rz) * x + X.lit(m) * y - X.lit(rx) * z,
+        X.lit(tz) - X.lit(ry) * x + X.lit(rx) * y + X.lit(m) * z,
     )
 
 
 _OSGB_HELM_INV = tuple(-v for v in _OSGB_HELM)
 
 
-class StagedTransform:
-    """A CRS transform evaluated in NAMED stages.
-
-    Deeply-composed transforms (datum hop + Bowring + TM series) blow
-    up exponentially when written as one Column tree: every reuse of a
-    subexpression copies its whole subtree, and a 2-of-them-deep chain
-    reaches megabyte plans (tens of seconds of Catalyst/codegen per
-    query — measured on EPSG:27700).  Staging materializes each
-    intermediate as an aliased projection column instead; Catalyst's
-    CollapseProject keeps multiply-referenced non-trivial aliases as
-    separate projections, so the plan stays linear in the number of
-    stage expressions.
-
-    ``stages``: list of dicts ``name -> fn(env)`` where ``env`` maps
-    previously-defined names (plus ``__in_x``/``__in_y``) to Columns.
-    The last stage must define ``__out_x`` and ``__out_y``.
-
-    Calling the transform like a plain ``ColumnTransform`` still
-    composes the full inline tree (fine for a handful of rows in
-    tests); ``apply_df`` is the production path.
-    """
-
-    def __init__(self, stages: list[dict]):
-        self.stages = stages
-
-    def __call__(self, x: Column, y: Column) -> tuple[Column, Column]:
-        env = {"__in_x": x, "__in_y": y}
-        for stage in self.stages:
-            env.update({n: fn(env) for n, fn in stage.items()})
-        return env["__out_x"], env["__out_y"]
-
-    def apply_df(self, df, x_expr: Column, y_expr: Column,
-                 out_x: str, out_y: str):
-        names = ["__in_x", "__in_y"]
-        df = df.withColumns({"__in_x": x_expr, "__in_y": y_expr})
-        for stage in self.stages:
-            env = {n: F.col(n) for n in names}
-            df = df.withColumns({n: fn(env) for n, fn in stage.items()})
-            names += list(stage)
-        df = df.withColumns({out_x: F.col("__out_x"),
-                             out_y: F.col("__out_y")})
-        return df.drop(*names)
+#: EPSG:27700's Airy-TM constants in the :func:`_tm_fwd` layout
+_OSGB_TM = dict(e=_AIRY_E, alpha=_AIRY_ALPHA, beta=_AIRY_BETA,
+                delta=_AIRY_DELTA, k=_OSGB_K0 * _AIRY_AR, fe=_OSGB_FE,
+                y0=_OSGB_Y0)
 
 
-def apply_transform_df(df, transform, x_expr: Column, y_expr: Column,
-                       out_x: str, out_y: str):
-    """Apply a transform onto a DataFrame, staged when it supports it."""
-    if hasattr(transform, "apply_df"):
-        return transform.apply_df(df, x_expr, y_expr, out_x, out_y)
-    sx, sy = transform(x_expr, y_expr)
-    return df.withColumns({out_x: sx, out_y: sy})
+def _osgb_tm_fwd(lam: E, phi: E) -> tuple[E, E]:
+    """Airy-TM forward: OSGB36 geodetic radians -> (easting, northing),
+    without the datum hop (tests pin the OS worked example on it)."""
+    return _tm_fwd(lam - X.lit(math.radians(_OSGB_LON0)), phi, _OSGB_TM)
 
 
-class _ChainedTransform:
-    """4326-hop composition where at least one leg is staged."""
-
-    def __init__(self, to_ll, from_ll):
-        self.to_ll, self.from_ll = to_ll, from_ll
-
-    def __call__(self, x: Column, y: Column) -> tuple[Column, Column]:
-        return self.from_ll(*self.to_ll(x, y))
-
-    def apply_df(self, df, x_expr, y_expr, out_x: str, out_y: str):
-        df = apply_transform_df(df, self.to_ll, x_expr, y_expr,
-                                "__mid_x", "__mid_y")
-        df = apply_transform_df(df, self.from_ll, F.col("__mid_x"),
-                                F.col("__mid_y"), out_x, out_y)
-        return df.drop("__mid_x", "__mid_y")
+def _lonlat_to_osgb_fn() -> Transform:
+    return staged(
+        [{"__lamw": lambda env: X.radians(env["__in_x"]),
+          "__phiw": lambda env: X.radians(env["__in_y"])}]
+        + _datum_hop_fwd_stages(_OSGB_HELM, _AIRY_A, _AIRY_E ** 2,
+                                _AIRY_B, _AIRY_EP2)
+        + [{"__out_x": lambda env: _osgb_tm_fwd(env["__lam"],
+                                                env["__phi"])[0],
+            "__out_y": lambda env: _osgb_tm_fwd(env["__lam"],
+                                                env["__phi"])[1]}])
 
 
-def _osgb_tm_fwd_stages() -> list[dict]:
-    """Airy-TM forward as stages: env __lam_a/__phi_a -> E/N."""
-    k = _OSGB_K0 * _AIRY_AR
+def _osgb_to_lonlat_fn() -> Transform:
+    def tm(env):
+        lam, phi = _tm_inv(env["__in_x"], env["__in_y"], _OSGB_TM)
+        return X.lit(math.radians(_OSGB_LON0)) + lam, phi
 
-    def s1(env):
-        return {
-            "__tlam": env["__lam_a"] - F.lit(math.radians(_OSGB_LON0)),
-            "__tsp": F.sin(env["__phi_a"]),
-        }
-
-    def s2(env):
-        return {"__tt": F.sinh(F.atanh(env["__tsp"]) - F.lit(_AIRY_E)
-                               * F.atanh(F.lit(_AIRY_E) * env["__tsp"])),
-                "__tcl": F.cos(env["__tlam"])}
-
-    def s3(env):
-        return {
-            "__txip": F.atan2(env["__tt"], env["__tcl"]),
-            "__tetap": F.asinh(F.sin(env["__tlam"]) / F.sqrt(
-                env["__tt"] * env["__tt"]
-                + env["__tcl"] * env["__tcl"])),
-        }
-
-    def s4(env):
-        xi, eta = env["__txip"], env["__tetap"]
-        for j, a in enumerate(_AIRY_ALPHA, start=1):
-            xi = xi + F.lit(a) * F.sin(F.lit(2.0 * j) * env["__txip"]) \
-                * F.cosh(F.lit(2.0 * j) * env["__tetap"])
-            eta = eta + F.lit(a) * F.cos(F.lit(2.0 * j) * env["__txip"]) \
-                * F.sinh(F.lit(2.0 * j) * env["__tetap"])
-        return {"__out_x": F.lit(k) * eta + F.lit(_OSGB_FE),
-                "__out_y": F.lit(k) * xi + F.lit(_OSGB_Y0)}
-
-    def pick(fn, name):
-        return lambda env: fn(env)[name]
-
-    return [
-        {"__tlam": pick(s1, "__tlam"), "__tsp": pick(s1, "__tsp")},
-        {"__tt": pick(s2, "__tt"), "__tcl": pick(s2, "__tcl")},
-        {"__txip": pick(s3, "__txip"), "__tetap": pick(s3, "__tetap")},
-        {"__out_x": pick(s4, "__out_x"), "__out_y": pick(s4, "__out_y")},
-    ]
-
-
-def _lonlat_to_osgb_fn() -> "StagedTransform":
-    h = _OSGB_HELM
-    e2a = _AIRY_E ** 2
-
-    stages = [
-        {"__lam": lambda env: F.radians(env["__in_x"]),
-         "__phi": lambda env: F.radians(env["__in_y"])},
-        {"__sp": lambda env: F.sin(env["__phi"]),
-         "__cp": lambda env: F.cos(env["__phi"])},
-        {"__nu": lambda env: F.lit(_WGS_A) / F.sqrt(
-            F.lit(1.0) - F.lit(_WGS_E2) * env["__sp"] * env["__sp"])},
-        {"__X": lambda env: env["__nu"] * env["__cp"]
-            * F.cos(env["__lam"]),
-         "__Y": lambda env: env["__nu"] * env["__cp"]
-            * F.sin(env["__lam"]),
-         "__Z": lambda env: env["__nu"] * F.lit(1.0 - _WGS_E2)
-            * env["__sp"]},
-        {"__Xo": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], h)[0],
-         "__Yo": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], h)[1],
-         "__Zo": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], h)[2]},
-        {"__p": lambda env: F.sqrt(
-            env["__Xo"] * env["__Xo"] + env["__Yo"] * env["__Yo"])},
-        {"__th": lambda env: F.atan2(env["__Zo"] * F.lit(_AIRY_A),
-                                     env["__p"] * F.lit(_AIRY_B))},
-        {"__phi_a": lambda env: F.atan2(
-            env["__Zo"] + F.lit(_AIRY_EP2 * _AIRY_B)
-            * F.pow(F.sin(env["__th"]), F.lit(3.0)),
-            env["__p"] - F.lit(e2a * _AIRY_A)
-            * F.pow(F.cos(env["__th"]), F.lit(3.0))),
-         "__lam_a": lambda env: F.atan2(env["__Yo"], env["__Xo"])},
-    ] + _osgb_tm_fwd_stages()
-    return StagedTransform(stages)
-
-
-def _osgb_to_lonlat_fn() -> "StagedTransform":
-    k = _OSGB_K0 * _AIRY_AR
-    e2a = _AIRY_E ** 2
-    hinv = _OSGB_HELM_INV
-
-    def series_xip(env):
-        xip = env["__xi"]
-        for j, b in enumerate(_AIRY_BETA, start=1):
-            xip = xip - F.lit(b) * F.sin(F.lit(2.0 * j) * env["__xi"]) \
-                * F.cosh(F.lit(2.0 * j) * env["__eta"])
-        return xip
-
-    def series_etap(env):
-        etap = env["__eta"]
-        for j, b in enumerate(_AIRY_BETA, start=1):
-            etap = etap - F.lit(b) * F.cos(F.lit(2.0 * j) * env["__xi"]) \
-                * F.sinh(F.lit(2.0 * j) * env["__eta"])
-        return etap
-
-    def series_phi(env):
-        phi_a = env["__chi"]
-        for j, d in enumerate(_AIRY_DELTA, start=1):
-            phi_a = phi_a + F.lit(d) * F.sin(F.lit(2.0 * j) * env["__chi"])
-        return phi_a
-
-    stages = [
-        {"__xi": lambda env: (env["__in_y"] - F.lit(_OSGB_Y0)) / F.lit(k),
-         "__eta": lambda env: (env["__in_x"] - F.lit(_OSGB_FE))
-            / F.lit(k)},
-        {"__xip": series_xip, "__etap": series_etap},
-        {"__chi": lambda env: F.asin(
-            F.sin(env["__xip"]) / F.cosh(env["__etap"]))},
-        {"__phi_a": series_phi,
-         "__lam_a": lambda env: F.lit(math.radians(_OSGB_LON0))
-            + F.atan2(F.sinh(env["__etap"]), F.cos(env["__xip"]))},
-        {"__sp": lambda env: F.sin(env["__phi_a"]),
-         "__cp": lambda env: F.cos(env["__phi_a"])},
-        {"__nu": lambda env: F.lit(_AIRY_A) / F.sqrt(
-            F.lit(1.0) - F.lit(e2a) * env["__sp"] * env["__sp"])},
-        {"__X": lambda env: env["__nu"] * env["__cp"]
-            * F.cos(env["__lam_a"]),
-         "__Y": lambda env: env["__nu"] * env["__cp"]
-            * F.sin(env["__lam_a"]),
-         "__Z": lambda env: env["__nu"] * F.lit(1.0 - e2a)
-            * env["__sp"]},
-        {"__Xw": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], hinv)[0],
-         "__Yw": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], hinv)[1],
-         "__Zw": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], hinv)[2]},
-        {"__p": lambda env: F.sqrt(
-            env["__Xw"] * env["__Xw"] + env["__Yw"] * env["__Yw"])},
-        {"__th": lambda env: F.atan2(env["__Zw"] * F.lit(_WGS_A),
-                                     env["__p"] * F.lit(_WGS_B))},
-        {"__out_x": lambda env: F.degrees(
-            F.atan2(env["__Yw"], env["__Xw"])),
-         "__out_y": lambda env: F.degrees(F.atan2(
-            env["__Zw"] + F.lit(_WGS_EP2 * _WGS_B)
-            * F.pow(F.sin(env["__th"]), F.lit(3.0)),
-            env["__p"] - F.lit(_WGS_E2 * _WGS_A)
-            * F.pow(F.cos(env["__th"]), F.lit(3.0))))},
-    ]
-    return StagedTransform(stages)
-
-
-def osgb_inverse_sql_ctes(x_expr: str, y_expr: str,
-                          src: str = "tgt") -> str:
-    """The EPSG:27700 inverse as a chain of CTEs over ``src`` —
-    identical arithmetic to the staged Column transform, one aliased
-    column per intermediate (the monolithic expression form is
-    megabytes of SQL and costs seconds of parse time per query).
-    Emits CTEs ``o1..o9`` and finally ``osgb_ll`` = ``src`` columns +
-    ``lon``/``lat``."""
-    k = repr(_OSGB_K0 * _AIRY_AR)
-
-    def sinh(z):
-        return f"((exp({z}) - exp(-({z}))) / 2)"
-
-    def cosh(z):
-        return f"((exp({z}) + exp(-({z}))) / 2)"
-
-    xip = "__xi"
-    etap = "__eta"
-    for j, b in enumerate(_AIRY_BETA, start=1):
-        xip = f"({xip} - {b!r} * sin(2.0 * {j} * __xi) " \
-              f"* {cosh(f'2.0 * {j} * __eta')})"
-        etap = f"({etap} - {b!r} * cos(2.0 * {j} * __xi) " \
-               f"* {sinh(f'2.0 * {j} * __eta')})"
-    phia = "__chi"
-    for j, d in enumerate(_AIRY_DELTA, start=1):
-        phia = f"({phia} + {d!r} * sin(2.0 * {j} * (__chi)))"
-    e2a = _AIRY_E ** 2
-    tx, ty, tz, rx, ry, rz, s = _OSGB_HELM_INV
-    m = repr(1.0 + s)
-    return f"""o1 AS (
-            SELECT *, ((({y_expr}) - {_OSGB_Y0!r}) / {k}) AS __xi,
-                      ((({x_expr}) - {_OSGB_FE!r}) / {k}) AS __eta
-            FROM {src}
-        ), o2 AS (
-            SELECT *, {xip} AS __xip, {etap} AS __etap FROM o1
-        ), o3 AS (
-            SELECT *, asin(sin(__xip) / {cosh('__etap')}) AS __chi
-            FROM o2
-        ), o4 AS (
-            SELECT *, {phia} AS __phia,
-                   ({math.radians(_OSGB_LON0)!r}
-                    + atan2({sinh('__etap')}, cos(__xip))) AS __lama
-            FROM o3
-        ), o5 AS (
-            SELECT *, sin(__phia) AS __sp, cos(__phia) AS __cp FROM o4
-        ), o6 AS (
-            SELECT *, ({_AIRY_A!r} / sqrt(1.0 - {e2a!r} * __sp * __sp))
-                      AS __nu
-            FROM o5
-        ), o7 AS (
-            SELECT *, (__nu * __cp * cos(__lama)) AS __X,
-                      (__nu * __cp * sin(__lama)) AS __Y,
-                      (__nu * {1.0 - e2a!r} * __sp) AS __Z
-            FROM o6
-        ), o8 AS (
-            SELECT *, ({tx!r} + {m} * __X - {rz!r} * __Y + {ry!r} * __Z)
-                      AS __Xw,
-                      ({ty!r} + {rz!r} * __X + {m} * __Y - {rx!r} * __Z)
-                      AS __Yw,
-                      ({tz!r} - {ry!r} * __X + {rx!r} * __Y + {m} * __Z)
-                      AS __Zw
-            FROM o7
-        ), o9 AS (
-            SELECT *, sqrt(__Xw * __Xw + __Yw * __Yw) AS __p FROM o8
-        ), o10 AS (
-            SELECT *, atan2(__Zw * {_WGS_A!r}, __p * {_WGS_B!r}) AS __th
-            FROM o9
-        ), osgb_ll AS (
-            SELECT * EXCLUDE (__xi, __eta, __xip, __etap, __chi,
-                              __phia, __lama, __sp, __cp, __nu,
-                              __X, __Y, __Z, __Xw, __Yw, __Zw,
-                              __p, __th),
-                   degrees(atan2(__Yw, __Xw)) AS lon,
-                   degrees(atan2(
-                       __Zw + {_WGS_EP2 * _WGS_B!r} * pow(sin(__th), 3),
-                       __p - {_WGS_E2 * _WGS_A!r} * pow(cos(__th), 3)))
-                   AS lat
-            FROM o10
-        )"""
-
-
-def osgb_inverse_sql(x_expr: str, y_expr: str) -> tuple[str, str]:
-    """The SAME EPSG:27700 inverse as SQL strings (for DuckDB
-    oracles): TM-inverse series on Airy, geodetic -> XYZ, inverse
-    Helmert, Bowring back to WGS84.  Returns (lon_sql, lat_sql)."""
-    k = repr(_OSGB_K0 * _AIRY_AR)
-    xi = f"((({y_expr}) - {_OSGB_Y0!r}) / {k})"
-    eta = f"((({x_expr}) - {_OSGB_FE!r}) / {k})"
-
-    def sinh(z):
-        return f"((exp({z}) - exp(-({z}))) / 2)"
-
-    def cosh(z):
-        return f"((exp({z}) + exp(-({z}))) / 2)"
-
-    xip, etap = xi, eta
-    for j, b in enumerate(_AIRY_BETA, start=1):
-        xip = f"({xip} - {b!r} * sin(2.0 * {j} * {xi}) " \
-              f"* {cosh(f'2.0 * {j} * {eta}')})"
-        etap = f"({etap} - {b!r} * cos(2.0 * {j} * {xi}) " \
-               f"* {sinh(f'2.0 * {j} * {eta}')})"
-    chi = f"asin(sin({xip}) / {cosh(etap)})"
-    phi_a = chi
-    for j, d in enumerate(_AIRY_DELTA, start=1):
-        phi_a = f"({phi_a} + {d!r} * sin(2.0 * {j} * ({chi})))"
-    lam_a = f"({math.radians(_OSGB_LON0)!r} " \
-            f"+ atan2({sinh(etap)}, cos({xip})))"
-    # Airy geodetic -> XYZ
-    e2a = _AIRY_E ** 2
-    nu = f"({_AIRY_A!r} / sqrt(1.0 - {e2a!r} * sin({phi_a}) " \
-         f"* sin({phi_a})))"
-    X = f"({nu} * cos({phi_a}) * cos({lam_a}))"
-    Y = f"({nu} * cos({phi_a}) * sin({lam_a}))"
-    Z = f"({nu} * {1.0 - e2a!r} * sin({phi_a}))"
-    tx, ty, tz, rx, ry, rz, s = _OSGB_HELM_INV
-    m = repr(1.0 + s)
-    Xw = f"({tx!r} + {m} * {X} - {rz!r} * {Y} + {ry!r} * {Z})"
-    Yw = f"({ty!r} + {rz!r} * {X} + {m} * {Y} - {rx!r} * {Z})"
-    Zw = f"({tz!r} + (-({ry!r})) * {X} + {rx!r} * {Y} + {m} * {Z})"
-    p = f"sqrt({Xw} * {Xw} + {Yw} * {Yw})"
-    th = f"atan2({Zw} * {_WGS_A!r}, {p} * {_WGS_B!r})"
-    phi = f"atan2({Zw} + {_WGS_EP2 * _WGS_B!r} * pow(sin({th}), 3), " \
-          f"{p} - {_WGS_E2 * _WGS_A!r} * pow(cos({th}), 3))"
-    return f"degrees(atan2({Yw}, {Xw}))", f"degrees({phi})"
+    return staged(
+        [{"__lam": lambda env: tm(env)[0], "__phi": lambda env: tm(env)[1]}]
+        + _datum_hop_inv_stages(_OSGB_HELM_INV, _AIRY_A, _AIRY_E ** 2))
 
 
 # ---- generic national transverse-Mercator grids -----------------------
@@ -737,6 +391,12 @@ TM_PARAMS: dict[str, tuple] = {
 
 
 def _tm_consts(crs: str) -> dict:
+    utm = parse_utm_crs(crs)
+    if utm:  # WGS84: the module constants, in their own op order
+        zone, south = utm
+        return dict(e=_E_WGS84, alpha=_ALPHA, beta=_BETA, delta=_DELTA,
+                    k=_K0 * _A_RECT, lon0=float(zone * 6 - 183),
+                    fe=500_000.0, y0=10_000_000.0 if south else 0.0)
     a, f, lat0, lon0, k0, fe, fn = TM_PARAMS[crs.upper()]
     e = math.sqrt(f * (2.0 - f))
     alpha, beta, delta, ar = _tm_series(f)
@@ -746,86 +406,28 @@ def _tm_consts(crs: str) -> dict:
                 lon0=lon0, fe=fe, y0=y0)
 
 
-def _lonlat_to_tm_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_tm_fn(crs: str) -> Transform:
+    c = _tm_consts(crs)
+    return single(lambda lon, lat: _tm_fwd(
+        X.radians(lon - X.lit(c["lon0"])), X.radians(lat), c))
+
+
+def _tm_to_lonlat_fn(crs: str) -> Transform:
     c = _tm_consts(crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam = F.radians(lon - F.lit(c["lon0"]))
-        phi = F.radians(lat)
-        sphi = F.sin(phi)
-        t = F.sinh(F.atanh(sphi) - F.lit(c["e"])
-                   * F.atanh(F.lit(c["e"]) * sphi))
-        clam = F.cos(lam)
-        xip = F.atan2(t, clam)
-        etap = F.asinh(F.sin(lam) / F.sqrt(t * t + clam * clam))
-        xi, eta = xip, etap
-        for j, a in enumerate(c["alpha"], start=1):
-            xi = xi + F.lit(a) * F.sin(F.lit(2.0 * j) * xip) \
-                * F.cosh(F.lit(2.0 * j) * etap)
-            eta = eta + F.lit(a) * F.cos(F.lit(2.0 * j) * xip) \
-                * F.sinh(F.lit(2.0 * j) * etap)
-        return (F.lit(c["k"]) * eta + F.lit(c["fe"]),
-                F.lit(c["k"]) * xi + F.lit(c["y0"]))
+    def inv(x: E, y: E) -> tuple[E, E]:
+        lam, phi = _tm_inv(x, y, c)
+        return X.lit(c["lon0"]) + X.degrees(lam), X.degrees(phi)
 
-    return fwd
-
-
-def _tm_to_lonlat_fn(crs: str) -> ColumnTransform:
-    c = _tm_consts(crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xi = (y - F.lit(c["y0"])) / F.lit(c["k"])
-        eta = (x - F.lit(c["fe"])) / F.lit(c["k"])
-        xip, etap = xi, eta
-        for j, b in enumerate(c["beta"], start=1):
-            xip = xip - F.lit(b) * F.sin(F.lit(2.0 * j) * xi) \
-                * F.cosh(F.lit(2.0 * j) * eta)
-            etap = etap - F.lit(b) * F.cos(F.lit(2.0 * j) * xi) \
-                * F.sinh(F.lit(2.0 * j) * eta)
-        chi = F.asin(F.sin(xip) / F.cosh(etap))
-        phi = chi
-        for j, d in enumerate(c["delta"], start=1):
-            phi = phi + F.lit(d) * F.sin(F.lit(2.0 * j) * chi)
-        lam = F.atan2(F.sinh(etap), F.cos(xip))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def tm_inverse_sql(x_expr: str, y_expr: str,
-                   crs: str) -> tuple[str, str]:
-    """The SAME generic-TM inverse as SQL strings (DuckDB oracles)."""
-    c = _tm_consts(crs)
-    k = repr(c["k"])
-    xi = f"((({y_expr}) - {c['y0']!r}) / {k})"
-    eta = f"((({x_expr}) - {c['fe']!r}) / {k})"
-
-    def sinh(z):
-        return f"((exp({z}) - exp(-({z}))) / 2)"
-
-    def cosh(z):
-        return f"((exp({z}) + exp(-({z}))) / 2)"
-
-    xip, etap = xi, eta
-    for j, b in enumerate(c["beta"], start=1):
-        xip = f"({xip} - {b!r} * sin(2.0 * {j} * {xi}) " \
-              f"* {cosh(f'2.0 * {j} * {eta}')})"
-        etap = f"({etap} - {b!r} * cos(2.0 * {j} * {xi}) " \
-               f"* {sinh(f'2.0 * {j} * {eta}')})"
-    chi = f"asin(sin({xip}) / {cosh(etap)})"
-    phi = chi
-    for j, d in enumerate(c["delta"], start=1):
-        phi = f"({phi} + {d!r} * sin(2.0 * {j} * ({chi})))"
-    lam = f"atan2({sinh(etap)}, cos({xip}))"
-    return f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})"
+    return single(inv)
 
 
 # ---- polar stereographic (EPSG:3413 / EPSG:3031) ----------------------
 #
 # The polar satellite CRSs (NSIDC Sea Ice stereographics) — ellipsoidal
 # polar stereographic from Snyder 1987 (public math, eqs. 21-33..41 and
-# the 3-5 chi->phi series).  Same design as UTM above: pure Column
-# forward/inverse plus an identical-arithmetic SQL twin for oracles.
+# the 3-5 chi->phi series).  Same design as UTM above: one closed-form
+# stage each way.
 
 _E2 = _E_WGS84 ** 2
 #: chi -> phi series coefficients (Snyder eq. 3-5, 4th order in e^2)
@@ -895,23 +497,23 @@ def _merc_ak(lat_ts: float) -> float:
     return _R * math.cos(phi) / math.sqrt(1.0 - _E2 * s * s)
 
 
-def _lonlat_to_merc_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_merc_fn(crs: str) -> Transform:
     lat_ts, lon0, fe, fn = MERC_PARAMS[crs.upper()]
     ak = _merc_ak(lat_ts)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam = F.radians(lon - F.lit(lon0))
-        latc = F.when(lat > 89.9999, 89.9999) \
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        lam = X.radians(lon - X.lit(lon0))
+        latc = X.when(lat > 89.9999, 89.9999) \
             .when(lat < -89.9999, -89.9999).otherwise(lat)
-        phi = F.radians(latc)
-        s = F.lit(_E_WGS84) * F.sin(phi)
-        y = F.lit(ak) * F.log(
-            F.tan(F.lit(math.pi / 4.0) + phi / 2) * F.pow(
-                (F.lit(1.0) - s) / (F.lit(1.0) + s),
-                F.lit(_E_WGS84 / 2.0)))
-        return F.lit(fe) + F.lit(ak) * lam, F.lit(fn) + y
+        phi = X.radians(latc)
+        s = X.lit(_E_WGS84) * X.sin(phi)
+        y = X.lit(ak) * X.log(
+            X.tan(X.lit(math.pi / 4.0) + phi / 2) * X.pow(
+                (X.lit(1.0) - s) / (X.lit(1.0) + s),
+                X.lit(_E_WGS84 / 2.0)))
+        return X.lit(fe) + X.lit(ak) * lam, X.lit(fn) + y
 
-    return fwd
+    return single(fwd)
 
 
 # ---- geostationary satellite view (+proj=geos; CF "geostationary") ------
@@ -939,96 +541,67 @@ def _geos_consts(crs: str) -> dict:
     )
 
 
-def _lonlat_to_geos_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_geos_fn(crs: str) -> Transform:
     c = _geos_consts(crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam = F.radians(lon - F.lit(c["lon0"]))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        lam = X.radians(lon - X.lit(c["lon0"]))
         # geodetic -> geocentric latitude on the normalized ellipsoid
-        phi = F.atan(F.lit(c["radius_p2"]) * F.tan(F.radians(lat)))
-        # explicit sqrt(u*u + v*v), not hypot: the SQL oracle twin
-        # states the same ops so both engines round identically
-        u = F.lit(c["radius_p"]) * F.cos(phi)
-        v = F.sin(phi)
-        r = F.lit(c["radius_p"]) / F.sqrt(u * u + v * v)
-        vx = r * F.cos(lam) * F.cos(phi)
-        vy = r * F.sin(lam) * F.cos(phi)
-        vz = r * F.sin(phi)
-        tmp = F.lit(c["radius_g"]) - vx
-        visible = ((F.lit(c["radius_g"]) - vx) * vx - vy * vy
-                   - vz * vz * F.lit(c["radius_p_inv2"])) >= 0.0
+        phi = X.atan(X.lit(c["radius_p2"]) * X.tan(X.radians(lat)))
+        # explicit sqrt(u*u + v*v), not hypot: DuckDB renders the same
+        # ops, so both engines round identically
+        u = X.lit(c["radius_p"]) * X.cos(phi)
+        v = X.sin(phi)
+        r = X.lit(c["radius_p"]) / X.sqrt(u * u + v * v)
+        vx = r * X.cos(lam) * X.cos(phi)
+        vy = r * X.sin(lam) * X.cos(phi)
+        vz = r * X.sin(phi)
+        tmp = X.lit(c["radius_g"]) - vx
+        visible = ((X.lit(c["radius_g"]) - vx) * vx - vy * vy
+                   - vz * vz * X.lit(c["radius_p_inv2"])) >= 0.0
         if c["sweep_x"]:
-            x = F.lit(c["radius_g_1"]) * F.atan(
-                vy / F.sqrt(vz * vz + tmp * tmp))
-            y = F.lit(c["radius_g_1"]) * F.atan(vz / tmp)
+            x = X.lit(c["radius_g_1"]) * X.atan(
+                vy / X.sqrt(vz * vz + tmp * tmp))
+            y = X.lit(c["radius_g_1"]) * X.atan(vz / tmp)
         else:
-            x = F.lit(c["radius_g_1"]) * F.atan(vy / tmp)
-            y = F.lit(c["radius_g_1"]) * F.atan(
-                vz / F.sqrt(vy * vy + tmp * tmp))
-        nan = F.lit(float("nan"))
-        return (F.when(visible, F.lit(c["a"]) * x).otherwise(nan),
-                F.when(visible, F.lit(c["a"]) * y).otherwise(nan))
+            x = X.lit(c["radius_g_1"]) * X.atan(vy / tmp)
+            y = X.lit(c["radius_g_1"]) * X.atan(
+                vz / X.sqrt(vy * vy + tmp * tmp))
+        nan = X.lit(float("nan"))
+        return (X.when(visible, X.lit(c["a"]) * x).otherwise(nan),
+                X.when(visible, X.lit(c["a"]) * y).otherwise(nan))
 
-    return fwd
+    return single(fwd)
 
 
-def _geos_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _geos_to_lonlat_fn(crs: str) -> Transform:
     c = _geos_consts(crs)
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xn = x / F.lit(c["a"] * c["radius_g_1"])
-        yn = y / F.lit(c["a"] * c["radius_g_1"])
+    def inv(x: E, y: E) -> tuple[E, E]:
+        xn = x / X.lit(c["a"] * c["radius_g_1"])
+        yn = y / X.lit(c["a"] * c["radius_g_1"])
         if c["sweep_x"]:
-            vz = F.tan(yn)
-            vy = F.tan(xn) * F.sqrt(F.lit(1.0) + vz * vz)
+            vz = X.tan(yn)
+            vy = X.tan(xn) * X.sqrt(X.lit(1.0) + vz * vz)
         else:
-            vy = F.tan(xn)
-            vz = F.tan(yn) * F.sqrt(F.lit(1.0) + vy * vy)
+            vy = X.tan(xn)
+            vz = X.tan(yn) * X.sqrt(X.lit(1.0) + vy * vy)
         # view line p = (radius_g,0,0) + k*(-1, vy, vz); intersect the
         # normalized ellipsoid: quadratic in k (off-disk -> sqrt(neg)
         # -> NaN, the documented not-visible signal)
-        vzp = vz / F.lit(c["radius_p"])
-        qa = vy * vy + vzp * vzp + F.lit(1.0)
-        qb = F.lit(2.0 * c["radius_g"]) * F.lit(-1.0)
-        k = (-qb - F.sqrt(qb * qb - 4.0 * qa * F.lit(c["C"]))) / (2.0 * qa)
-        px = F.lit(c["radius_g"]) - k
+        vzp = vz / X.lit(c["radius_p"])
+        qa = vy * vy + vzp * vzp + X.lit(1.0)
+        qb = X.lit(2.0 * c["radius_g"]) * X.lit(-1.0)
+        k = (-qb - X.sqrt(qb * qb - 4.0 * qa * X.lit(c["C"]))) / (2.0 * qa)
+        px = X.lit(c["radius_g"]) - k
         py = vy * k
         pz = vz * k
-        lam = F.atan2(py, px)
-        phi = F.atan(pz * F.cos(lam) / px)
-        phi = F.atan(F.lit(c["radius_p_inv2"]) * F.tan(phi))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
+        lam = X.atan2(py, px)
+        phi = X.atan(pz * X.cos(lam) / px)
+        phi = X.atan(X.lit(c["radius_p_inv2"]) * X.tan(phi))
+        return X.lit(c["lon0"]) + X.degrees(lam), X.degrees(phi)
 
-    return inv
-
-
-def geos_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME geostationary inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_geos_to_lonlat_fn`, so
-    both engines produce bit-identical doubles.  Returns
-    (lon_sql, lat_sql)."""
-    c = _geos_consts(crs)
-    xn = f"(({x_expr}) / {c['a'] * c['radius_g_1']!r})"
-    yn = f"(({y_expr}) / {c['a'] * c['radius_g_1']!r})"
-    if c["sweep_x"]:
-        vz = f"TAN({yn})"
-        vy = f"(TAN({xn}) * SQRT(1.0 + {vz} * {vz}))"
-    else:
-        vy = f"TAN({xn})"
-        vz = f"(TAN({yn}) * SQRT(1.0 + {vy} * {vy}))"
-    vzp = f"({vz} / {c['radius_p']!r})"
-    qa = f"({vy} * {vy} + {vzp} * {vzp} + 1.0)"
-    qb = repr(2.0 * c["radius_g"] * -1.0)
-    k = f"((-({qb}) - SQRT({qb} * {qb} - 4.0 * {qa} * {c['C']!r}))" \
-        f" / (2.0 * {qa}))"
-    px = f"({c['radius_g']!r} - {k})"
-    py = f"({vy} * {k})"
-    pz = f"({vz} * {k})"
-    lam = f"ATAN2({py}, {px})"
-    phi = f"ATAN({c['radius_p_inv2']!r} * TAN(ATAN({pz} * COS({lam})" \
-          f" / {px})))"
-    return (f"({c['lon0']!r} + DEGREES({lam}))", f"DEGREES({phi})")
+    return single(inv)
 
 
 #: CF `rotated_latitude_longitude` / PROJ `+proj=ob_tran
@@ -1052,7 +625,7 @@ def _rotpole_consts(crs: str) -> dict:
     )
 
 
-def _lonlat_to_rotpole_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_rotpole_fn(crs: str) -> Transform:
     """True lon/lat (deg) -> rotated lon/lat (deg).  Derivation:
     v = unit vector; rotate Rz(-lambda_p) then Ry(theta_p - 90) so the
     grid pole lands on +z; the true north pole then sits at rotated
@@ -1060,68 +633,48 @@ def _lonlat_to_rotpole_fn(crs: str) -> ColumnTransform:
     rotated longitude by (phi0 - 180)."""
     c = _rotpole_consts(crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam = F.radians(lon - F.lit(c["lambda_p"]))
-        phi = F.radians(lat)
-        cphi = F.cos(phi)
-        sphi = F.sin(phi)
-        clam = F.cos(lam)
-        z2 = sphi * F.lit(c["sp"]) + cphi * F.lit(c["cp"]) * clam
-        y2 = cphi * F.sin(lam)
-        x2 = cphi * clam * F.lit(c["sp"]) - sphi * F.lit(c["cp"])
-        rlat = F.degrees(F.asin(z2))
-        rlon = (F.degrees(F.atan2(y2, x2)) - F.lit(180.0)
-                + F.lit(c["phi0"]))
-        rlon = (F.when(rlon < -180.0, rlon + F.lit(360.0))
-                .when(rlon > 180.0, rlon - F.lit(360.0))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        lam = X.radians(lon - X.lit(c["lambda_p"]))
+        phi = X.radians(lat)
+        cphi = X.cos(phi)
+        sphi = X.sin(phi)
+        clam = X.cos(lam)
+        z2 = sphi * X.lit(c["sp"]) + cphi * X.lit(c["cp"]) * clam
+        y2 = cphi * X.sin(lam)
+        x2 = cphi * clam * X.lit(c["sp"]) - sphi * X.lit(c["cp"])
+        rlat = X.degrees(X.asin(z2))
+        rlon = (X.degrees(X.atan2(y2, x2)) - X.lit(180.0)
+                + X.lit(c["phi0"]))
+        rlon = (X.when(rlon < -180.0, rlon + X.lit(360.0))
+                .when(rlon > 180.0, rlon - X.lit(360.0))
                 .otherwise(rlon))
         return rlon, rlat
 
-    return fwd
+    return single(fwd)
 
 
-def _rotpole_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _rotpole_to_lonlat_fn(crs: str) -> Transform:
     """Rotated lon/lat (deg) -> true lon/lat (deg): the transpose
     rotation of :func:`_lonlat_to_rotpole_fn`."""
     c = _rotpole_consts(crs)
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lam0 = F.radians(x - F.lit(c["phi0"]) + F.lit(180.0))
-        phi = F.radians(y)
-        cphi = F.cos(phi)
-        x2 = cphi * F.cos(lam0)
-        y2 = cphi * F.sin(lam0)
-        z2 = F.sin(phi)
-        lat = F.degrees(F.asin(
-            z2 * F.lit(c["sp"]) - x2 * F.lit(c["cp"])))
-        x1 = x2 * F.lit(c["sp"]) + z2 * F.lit(c["cp"])
-        lon = F.lit(c["lambda_p"]) + F.degrees(F.atan2(y2, x1))
-        lon = (F.when(lon < -180.0, lon + F.lit(360.0))
-               .when(lon > 180.0, lon - F.lit(360.0))
+    def inv(x: E, y: E) -> tuple[E, E]:
+        lam0 = X.radians(x - X.lit(c["phi0"]) + X.lit(180.0))
+        phi = X.radians(y)
+        cphi = X.cos(phi)
+        x2 = cphi * X.cos(lam0)
+        y2 = cphi * X.sin(lam0)
+        z2 = X.sin(phi)
+        lat = X.degrees(X.asin(
+            z2 * X.lit(c["sp"]) - x2 * X.lit(c["cp"])))
+        x1 = x2 * X.lit(c["sp"]) + z2 * X.lit(c["cp"])
+        lon = X.lit(c["lambda_p"]) + X.degrees(X.atan2(y2, x1))
+        lon = (X.when(lon < -180.0, lon + X.lit(360.0))
+               .when(lon > 180.0, lon - X.lit(360.0))
                .otherwise(lon))
         return lon, lat
 
-    return inv
-
-
-def rotpole_inverse_sql(x_expr: str, y_expr: str,
-                        crs: str) -> tuple[str, str]:
-    """The SAME rotated-pole inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_rotpole_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _rotpole_consts(crs)
-    lam0 = f"RADIANS(({x_expr}) - {c['phi0']!r} + 180.0)"
-    phi = f"RADIANS({y_expr})"
-    cphi = f"COS({phi})"
-    x2 = f"({cphi} * COS({lam0}))"
-    y2 = f"({cphi} * SIN({lam0}))"
-    z2 = f"SIN({phi})"
-    lat = f"DEGREES(ASIN({z2} * {c['sp']!r} - {x2} * {c['cp']!r}))"
-    x1 = f"({x2} * {c['sp']!r} + {z2} * {c['cp']!r})"
-    lon = f"({c['lambda_p']!r} + DEGREES(ATAN2({y2}, {x1})))"
-    lon = (f"(CASE WHEN {lon} < -180.0 THEN {lon} + 360.0 "
-           f"WHEN {lon} > 180.0 THEN {lon} - 360.0 ELSE {lon} END)")
-    return lon, lat
+    return single(inv)
 
 
 # ---- oblique (double) stereographic — EPSG method 9809 ------------------
@@ -1179,47 +732,47 @@ def _sterea_consts(crs: str) -> dict:
     )
 
 
-def _lonlat_to_sterea_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_sterea_fn(crs: str) -> Transform:
     """lon/lat (deg) -> oblique-stereographic E/N (EPSG 9809
     forward); staged so the w/chi intermediates are not re-expanded."""
     c = _sterea_consts(crs)
     e, n = c["e"], c["n"]
 
     def s1(env):
-        return F.sin(F.radians(env["__in_y"]))
+        return X.sin(X.radians(env["__in_y"]))
 
     def s2(env):
         sphi = env["__sphi"]
-        sa = (F.lit(1.0) + sphi) / (F.lit(1.0) - sphi)
-        sb = (F.lit(1.0) - F.lit(e) * sphi) / \
-            (F.lit(1.0) + F.lit(e) * sphi)
-        return F.lit(c["c"]) * F.pow(sa * F.pow(sb, F.lit(e)), F.lit(n))
+        sa = (X.lit(1.0) + sphi) / (X.lit(1.0) - sphi)
+        sb = (X.lit(1.0) - X.lit(e) * sphi) / \
+            (X.lit(1.0) + X.lit(e) * sphi)
+        return X.lit(c["c"]) * X.pow(sa * X.pow(sb, X.lit(e)), X.lit(n))
 
     def s3(env):
-        return (env["__w"] - F.lit(1.0)) / (env["__w"] + F.lit(1.0))
+        return (env["__w"] - X.lit(1.0)) / (env["__w"] + X.lit(1.0))
 
     def s4(env):
         schi = env["__schi"]
-        return F.sqrt(F.lit(1.0) - schi * schi)
+        return X.sqrt(X.lit(1.0) - schi * schi)
 
     def s5(env):
-        return F.lit(n) * (F.radians(env["__in_x"]) - F.lit(c["lam0"]))
+        return X.lit(n) * (X.radians(env["__in_x"]) - X.lit(c["lam0"]))
 
     def s6(env):
-        return (F.lit(1.0) + env["__schi"] * F.lit(c["schi0"])
-                + env["__cchi"] * F.lit(c["cchi0"]) * F.cos(env["__dl"]))
+        return (X.lit(1.0) + env["__schi"] * X.lit(c["schi0"])
+                + env["__cchi"] * X.lit(c["cchi0"]) * X.cos(env["__dl"]))
 
     def out_x(env):
-        return (F.lit(c["fe"]) + F.lit(c["rk2"]) * env["__cchi"]
-                * F.sin(env["__dl"]) / env["__b"])
+        return (X.lit(c["fe"]) + X.lit(c["rk2"]) * env["__cchi"]
+                * X.sin(env["__dl"]) / env["__b"])
 
     def out_y(env):
-        return (F.lit(c["fn"]) + F.lit(c["rk2"])
-                * (env["__schi"] * F.lit(c["cchi0"])
-                   - env["__cchi"] * F.lit(c["schi0"])
-                   * F.cos(env["__dl"])) / env["__b"])
+        return (X.lit(c["fn"]) + X.lit(c["rk2"])
+                * (env["__schi"] * X.lit(c["cchi0"])
+                   - env["__cchi"] * X.lit(c["schi0"])
+                   * X.cos(env["__dl"])) / env["__b"])
 
-    return StagedTransform([
+    return staged([
         {"__sphi": s1},
         {"__w": s2},
         {"__schi": s3},
@@ -1229,7 +782,7 @@ def _lonlat_to_sterea_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _sterea_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _sterea_to_lonlat_fn(crs: str) -> Transform:
     """E/N -> lon/lat (EPSG 9809 inverse): stereographic un-projection
     on the conformal sphere, then the fixed-count iterative
     conformal->geodetic latitude solve, one stage per iteration."""
@@ -1237,141 +790,75 @@ def _sterea_to_lonlat_fn(crs: str) -> "StagedTransform":
     e, es, n = c["e"], c["es"], c["n"]
 
     def sub(env):
-        return env["__in_x"] - F.lit(c["fe"])
+        return env["__in_x"] - X.lit(c["fe"])
 
     def subn(env):
-        return env["__in_y"] - F.lit(c["fn"])
+        return env["__in_y"] - X.lit(c["fn"])
 
     def c_i(env):
-        return F.atan2(env["__ep"], F.lit(c["h"]) + env["__np"])
+        return X.atan2(env["__ep"], X.lit(c["h"]) + env["__np"])
 
     def c_j(env):
-        return F.atan2(env["__ep"],
-                       F.lit(c["g"]) - env["__np"]) - env["__i"]
+        return X.atan2(env["__ep"],
+                       X.lit(c["g"]) - env["__np"]) - env["__i"]
 
     def c_chi(env):
-        return F.lit(c["chi0"]) + F.lit(2.0) * F.atan(
-            (env["__np"] - env["__ep"] * F.tan(env["__j"] / F.lit(2.0)))
-            / F.lit(c["rk2"]))
+        return X.lit(c["chi0"]) + X.lit(2.0) * X.atan(
+            (env["__np"] - env["__ep"] * X.tan(env["__j"] / X.lit(2.0)))
+            / X.lit(c["rk2"]))
 
     def c_lon(env):
-        lam = env["__j"] + F.lit(2.0) * env["__i"] + F.lit(c["lam0"])
-        return (F.degrees((lam - F.lit(c["lam0"])) / F.lit(n))
-                + F.lit(c["lon0"]))
+        lam = env["__j"] + X.lit(2.0) * env["__i"] + X.lit(c["lam0"])
+        return (X.degrees((lam - X.lit(c["lam0"])) / X.lit(n))
+                + X.lit(c["lon0"]))
 
     def c_psi(env):
-        schi = F.sin(env["__chi"])
-        return F.log((F.lit(1.0) + schi)
-                     / (F.lit(c["c"]) * (F.lit(1.0) - schi))) \
-            / F.lit(2.0 * n)
+        schi = X.sin(env["__chi"])
+        return X.log((X.lit(1.0) + schi)
+                     / (X.lit(c["c"]) * (X.lit(1.0) - schi))) \
+            / X.lit(2.0 * n)
 
     def c_phi0(env):
-        return (F.lit(2.0) * F.atan(F.exp(env["__psi"]))
-                - F.lit(math.pi / 2.0))
+        return (X.lit(2.0) * X.atan(X.exp(env["__psi"]))
+                - X.lit(math.pi / 2.0))
 
     def step(env):
         phi = env["__phi"]
-        sphi = F.sin(phi)
-        psii = F.log(
-            F.tan(phi / F.lit(2.0) + F.lit(math.pi / 4.0))
-            * F.pow((F.lit(1.0) - F.lit(e) * sphi)
-                    / (F.lit(1.0) + F.lit(e) * sphi),
-                    F.lit(e / 2.0)))
-        return phi - (psii - env["__psi"]) * F.cos(phi) \
-            * (F.lit(1.0) - F.lit(es) * sphi * sphi) / F.lit(1.0 - es)
+        sphi = X.sin(phi)
+        psii = X.log(
+            X.tan(phi / X.lit(2.0) + X.lit(math.pi / 4.0))
+            * X.pow((X.lit(1.0) - X.lit(e) * sphi)
+                    / (X.lit(1.0) + X.lit(e) * sphi),
+                    X.lit(e / 2.0)))
+        return phi - (psii - env["__psi"]) * X.cos(phi) \
+            * (X.lit(1.0) - X.lit(es) * sphi * sphi) / X.lit(1.0 - es)
 
     stages = [
         {"__ep": sub, "__np": subn},
         {"__i": c_i},
         {"__j": c_j},
-        {"__chi": c_chi, "__out_x": c_lon},
+        {"__chi": c_chi},
         {"__psi": c_psi},
         {"__phi": c_phi0},
     ]
     stages += [{"__phi": step} for _ in range(_STEREA_ITERS)]
-    stages.append({"__out_y": lambda env: F.degrees(env["__phi"])})
-    return StagedTransform(stages)
+    stages.append({"__out_x": c_lon,
+                   "__out_y": lambda env: X.degrees(env["__phi"])})
+    return staged(stages)
 
 
-def sterea_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                            src: str = "tgt") -> str:
-    """The SAME oblique-stereographic inverse as a chain of CTEs over
-    ``src`` (for DuckDB oracles) — identical arithmetic and iteration
-    count to :func:`_sterea_to_lonlat_fn`.  Emits CTEs ``st1..`` and
-    finally ``sterea_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _sterea_consts(crs)
-    e, es, n = c["e"], c["es"], c["n"]
-    iters = "".join(f"""), st{7 + k} AS (
-            SELECT * EXCLUDE (__phi), (__phi - (ln(tan(__phi / 2.0
-                + {math.pi / 4.0!r}) * pow((1.0 - {e!r} * sin(__phi))
-                / (1.0 + {e!r} * sin(__phi)), {e / 2.0!r})) - __psi)
-                * cos(__phi) * (1.0 - {es!r} * sin(__phi) * sin(__phi))
-                / {1.0 - es!r}) AS __phi
-            FROM st{6 + k}""" for k in range(_STEREA_ITERS))
-    return f"""st1 AS (
-            SELECT *, (({x_expr}) - {c['fe']!r}) AS __ep,
-                      (({y_expr}) - {c['fn']!r}) AS __np
-            FROM {src}
-        ), st2 AS (
-            SELECT *, atan2(__ep, {c['h']!r} + __np) AS __i FROM st1
-        ), st3 AS (
-            SELECT *, (atan2(__ep, {c['g']!r} - __np) - __i) AS __j
-            FROM st2
-        ), st4 AS (
-            SELECT *, ({c['chi0']!r} + 2.0 * atan((__np - __ep
-                       * tan(__j / 2.0)) / {c['rk2']!r})) AS __chi,
-                   (degrees(((__j + 2.0 * __i + {c['lam0']!r})
-                             - {c['lam0']!r}) / {n!r})
-                    + {c['lon0']!r}) AS lon
-            FROM st3
-        ), st5 AS (
-            SELECT *, (ln((1.0 + sin(__chi))
-                          / ({c['c']!r} * (1.0 - sin(__chi))))
-                       / {2.0 * n!r}) AS __psi
-            FROM st4
-        ), st6 AS (
-            SELECT *, (2.0 * atan(exp(__psi)) - {math.pi / 2.0!r})
-                      AS __phi
-            FROM st5
-        {iters}), sterea_ll AS (
-            SELECT * EXCLUDE (__ep, __np, __i, __j, __chi, __psi,
-                              __phi),
-                   degrees(__phi) AS lat
-            FROM st{6 + _STEREA_ITERS}
-        )"""
-
-
-def _merc_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _merc_to_lonlat_fn(crs: str) -> Transform:
     lat_ts, lon0, fe, fn = MERC_PARAMS[crs.upper()]
     ak = _merc_ak(lat_ts)
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lam = (x - F.lit(fe)) / F.lit(ak)
-        t = F.exp((F.lit(fn) - y) / F.lit(ak))  # Snyder 7-10
-        chi = F.lit(math.pi / 2.0) - 2 * F.atan(t)
-        phi = chi
-        for j, c in enumerate(_PS_SERIES, start=1):
-            phi = phi + F.lit(c) * F.sin(F.lit(2.0 * j) * chi)
-        return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
+    def inv(x: E, y: E) -> tuple[E, E]:
+        lam = (x - X.lit(fe)) / X.lit(ak)
+        t = X.exp((X.lit(fn) - y) / X.lit(ak))  # Snyder 7-10
+        chi = X.lit(math.pi / 2.0) - 2 * X.atan(t)
+        phi = _lat_series(chi, _PS_SERIES)
+        return X.lit(lon0) + X.degrees(lam), X.degrees(phi)
 
-    return inv
-
-
-def merc_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME ellipsoidal-Mercator inverse as SQL strings (for
-    DuckDB oracles) — identical op order to
-    :func:`_merc_to_lonlat_fn` (Snyder 7-10 + the chi->phi series).
-    Returns (lon_sql, lat_sql)."""
-    lat_ts, lon0, fe, fn = MERC_PARAMS[crs.upper()]
-    ak = _merc_ak(lat_ts)
-    lam = f"((({x_expr}) - {fe!r}) / {ak!r})"
-    t = f"exp(({fn!r} - ({y_expr})) / {ak!r})"
-    chi = f"({math.pi / 2.0!r} - 2 * atan({t}))"
-    phi = chi
-    for j, cj in enumerate(_PS_SERIES, start=1):
-        phi = f"({phi} + {cj!r} * sin(2.0 * {j} * ({chi})))"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+    return single(inv)
 
 
 def _ps_consts(lat_ts: float) -> tuple[float, float]:
@@ -1385,82 +872,55 @@ def _ps_consts(lat_ts: float) -> tuple[float, float]:
     return m_ts, t_ts
 
 
-def _lonlat_to_ps_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_ps_fn(crs: str) -> Transform:
     c = _ps_unpack(crs)
     south, lon0 = c["south"], c["lon0"]
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam = F.radians(lon - F.lit(lon0))
-        phi = F.radians(F.lit(-1.0) * lat if south else lat)
-        s = F.lit(_E_WGS84) * F.sin(phi)
-        t = F.tan(F.lit(math.pi / 4.0) - phi / 2) * F.pow(
-            (F.lit(1.0) + s) / (F.lit(1.0) - s), F.lit(_E_WGS84 / 2.0)
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        lam = X.radians(lon - X.lit(lon0))
+        phi = X.radians(X.lit(-1.0) * lat if south else lat)
+        s = X.lit(_E_WGS84) * X.sin(phi)
+        t = X.tan(X.lit(math.pi / 4.0) - phi / 2) * X.pow(
+            (X.lit(1.0) + s) / (X.lit(1.0) - s), X.lit(_E_WGS84 / 2.0)
         )
-        rho = F.lit(c["K"]) * t
+        rho = X.lit(c["K"]) * t
         # north: pole at origin, y negative along lon0 (Snyder 21-30/31)
         # south aspect: y positive along lon0 (Snyder 21-26/27 mirrored)
-        xo = rho * F.sin(lam)
-        yo = rho * F.cos(lam) if south \
-            else rho * F.cos(lam) * F.lit(-1.0)
+        xo = rho * X.sin(lam)
+        yo = rho * X.cos(lam) if south \
+            else rho * X.cos(lam) * X.lit(-1.0)
         # false origin only when nonzero: 3-tuple keys keep their
         # historical expression tree bit-exactly
         if c["fe"]:
-            xo = F.lit(c["fe"]) + xo
+            xo = X.lit(c["fe"]) + xo
         if c["fn"]:
-            yo = F.lit(c["fn"]) + yo
+            yo = X.lit(c["fn"]) + yo
         return xo, yo
 
-    return fwd
+    return single(fwd)
 
 
-def _ps_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _ps_to_lonlat_fn(crs: str) -> Transform:
     c = _ps_unpack(crs)
     south, lon0 = c["south"], c["lon0"]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
+    def inv(x: E, y: E) -> tuple[E, E]:
         if c["fe"]:
-            x = x - F.lit(c["fe"])
+            x = x - X.lit(c["fe"])
         if c["fn"]:
-            y = y - F.lit(c["fn"])
-        rho = F.sqrt(x * x + y * y)
-        t = rho * F.lit(c["Kinv"])
-        chi = F.lit(math.pi / 2.0) - 2 * F.atan(t)
-        phi = chi
-        for j, cj in enumerate(_PS_SERIES, start=1):
-            phi = phi + F.lit(cj) * F.sin(F.lit(2.0 * j) * chi)
-        lam = F.atan2(x, y if south else y * F.lit(-1.0))
-        lat = F.degrees(phi)
+            y = y - X.lit(c["fn"])
+        rho = X.sqrt(x * x + y * y)
+        t = rho * X.lit(c["Kinv"])
+        chi = X.lit(math.pi / 2.0) - 2 * X.atan(t)
+        phi = _lat_series(chi, _PS_SERIES)
+        lam = X.atan2(x, y if south else y * X.lit(-1.0))
+        lat = X.degrees(phi)
         return (
-            F.lit(lon0) + F.degrees(lam),
-            lat * F.lit(-1.0) if south else lat,
+            X.lit(lon0) + X.degrees(lam),
+            lat * X.lit(-1.0) if south else lat,
         )
 
-    return inv
-
-
-def ps_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME polar-stereographic inverse as SQL strings (for DuckDB
-    oracles).  Returns (lon_sql, lat_sql)."""
-    c = _ps_unpack(crs)
-    south, lon0 = c["south"], c["lon0"]
-    x = f"({x_expr})"
-    y = f"({y_expr})"
-    if c["fe"]:
-        x = f"({x} - {c['fe']!r})"
-    if c["fn"]:
-        y = f"({y} - {c['fn']!r})"
-    rho = f"sqrt({x} * {x} + {y} * {y})"
-    t = f"({rho} * {c['Kinv']!r})"
-    chi = f"({math.pi / 2.0!r} - 2 * atan({t}))"
-    phi = chi
-    for j, cj in enumerate(_PS_SERIES, start=1):
-        phi = f"({phi} + {cj!r} * sin(2.0 * {j} * ({chi})))"
-    lam = f"atan2({x}, {y if south else f'({y} * -1.0)'})"
-    lat = f"degrees({phi})"
-    return (
-        f"({lon0!r} + degrees({lam}))",
-        f"({lat} * -1.0)" if south else lat,
-    )
+    return single(inv)
 
 
 # ---- spherical azimuthal equidistant / orthographic / equidistant
@@ -1498,190 +958,119 @@ def _azi_consts(table: dict, crs: str) -> dict:
                 sp0=math.sin(phi0), cp0=math.cos(phi0))
 
 
-def _lonlat_to_aeqd_fn(crs: str) -> ColumnTransform:
+def _azi_cosc(c: dict, phi: E, dl: E) -> E:
+    """cos of the angular distance from the projection center."""
+    return (X.lit(c["sp0"]) * X.sin(phi)
+            + X.lit(c["cp0"]) * X.cos(phi) * X.cos(dl))
+
+
+def _azi_xy(c: dict, k: E, phi: E, dl: E) -> tuple[E, E]:
+    """Planar (x, y) of a spherical azimuthal at radial scale ``k``."""
+    return (X.lit(c["fe"]) + X.lit(c["r"]) * k * X.cos(phi) * X.sin(dl),
+            X.lit(c["fn"]) + X.lit(c["r"]) * k * (
+                X.lit(c["cp0"]) * X.sin(phi)
+                - X.lit(c["sp0"]) * X.cos(phi) * X.cos(dl)))
+
+
+def _azi_inv(x: E, y: E, c: dict,
+             angle: Callable[[E], E]) -> tuple[E, E]:
+    """The spherical azimuthal inverse (Snyder 20-14..20-18) shared by
+    aeqd, ortho, gnomonic, nsper and stereographic: planar (x, y) ->
+    lon/lat, given the family's angular distance ``angle(rho)``."""
+    xe = x - X.lit(c["fe"])
+    yn = y - X.lit(c["fn"])
+    rho = X.sqrt(xe * xe + yn * yn)
+    cang = angle(rho)
+    phi = X.when(rho == 0.0, X.asin(X.lit(c["sp0"]))).otherwise(
+        X.asin(X.cos(cang) * X.lit(c["sp0"])
+               + yn * X.sin(cang) * X.lit(c["cp0"]) / rho))
+    lam = X.when(rho == 0.0, X.lit(0.0)).otherwise(
+        X.atan2(xe * X.sin(cang),
+                rho * X.lit(c["cp0"]) * X.cos(cang)
+                - yn * X.lit(c["sp0"]) * X.sin(cang)))
+    return X.lit(c["lon0"]) + X.degrees(lam), X.degrees(phi)
+
+
+def _lonlat_to_aeqd_fn(crs: str) -> Transform:
     c = _azi_consts(AEQD_PARAMS, crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        dl = F.radians(lon - F.lit(c["lon0"]))
-        phi = F.radians(lat)
-        cosc = (F.lit(c["sp0"]) * F.sin(phi)
-                + F.lit(c["cp0"]) * F.cos(phi) * F.cos(dl))
-        cang = F.acos(F.greatest(F.lit(-1.0), F.least(F.lit(1.0), cosc)))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        dl = X.radians(lon - X.lit(c["lon0"]))
+        phi = X.radians(lat)
+        cosc = _azi_cosc(c, phi, dl)
+        cang = X.acos(X.greatest(X.lit(-1.0), X.least(X.lit(1.0), cosc)))
         # k' = c/sin c, 1 at the center (Snyder 25-2)
-        kp = F.when(F.sin(cang) == 0.0, F.lit(1.0)) \
-            .otherwise(cang / F.sin(cang))
-        x = F.lit(c["fe"]) + F.lit(c["r"]) * kp * F.cos(phi) * F.sin(dl)
-        y = F.lit(c["fn"]) + F.lit(c["r"]) * kp * (
-            F.lit(c["cp0"]) * F.sin(phi)
-            - F.lit(c["sp0"]) * F.cos(phi) * F.cos(dl))
-        return x, y
+        kp = X.when(X.sin(cang) == 0.0, X.lit(1.0)) \
+            .otherwise(cang / X.sin(cang))
+        return _azi_xy(c, kp, phi, dl)
 
-    return fwd
+    return single(fwd)
 
 
-def _aeqd_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _aeqd_to_lonlat_fn(crs: str) -> Transform:
     c = _azi_consts(AEQD_PARAMS, crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
-        cang = rho / F.lit(c["r"])
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
+    return single(lambda x, y: _azi_inv(
+        x, y, c, lambda rho: rho / X.lit(c["r"])))
 
 
-def aeqd_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME spherical azimuthal-equidistant inverse as SQL strings
-    (for DuckDB oracles) — identical op order to
-    :func:`_aeqd_to_lonlat_fn`.  Returns (lon_sql, lat_sql)."""
-    c = _azi_consts(AEQD_PARAMS, crs)
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yn = f"(({y_expr}) - {c['fn']!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    cang = f"({rho} / {c['r']!r})"
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({c['sp0']!r}) ELSE "
-           f"asin(cos({cang}) * {c['sp0']!r} + {yn} * sin({cang})"
-           f" * {c['cp0']!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {c['cp0']!r}"
-           f" * cos({cang}) - {yn} * {c['sp0']!r} * sin({cang})) END)")
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
-
-
-def _lonlat_to_ortho_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_ortho_fn(crs: str) -> Transform:
     c = _azi_consts(ORTHO_PARAMS, crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        dl = F.radians(lon - F.lit(c["lon0"]))
-        phi = F.radians(lat)
-        cosc = (F.lit(c["sp0"]) * F.sin(phi)
-                + F.lit(c["cp0"]) * F.cos(phi) * F.cos(dl))
-        nan = F.lit(float("nan"))
-        x = F.lit(c["fe"]) + F.lit(c["r"]) * F.cos(phi) * F.sin(dl)
-        y = F.lit(c["fn"]) + F.lit(c["r"]) * (
-            F.lit(c["cp0"]) * F.sin(phi)
-            - F.lit(c["sp0"]) * F.cos(phi) * F.cos(dl))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        dl = X.radians(lon - X.lit(c["lon0"]))
+        phi = X.radians(lat)
+        cosc = _azi_cosc(c, phi, dl)
+        nan = X.lit(float("nan"))
+        x = X.lit(c["fe"]) + X.lit(c["r"]) * X.cos(phi) * X.sin(dl)
+        y = X.lit(c["fn"]) + X.lit(c["r"]) * (
+            X.lit(c["cp0"]) * X.sin(phi)
+            - X.lit(c["sp0"]) * X.cos(phi) * X.cos(dl))
         vis = cosc >= 0.0  # far hemisphere is not on the map
-        return F.when(vis, x).otherwise(nan), \
-            F.when(vis, y).otherwise(nan)
+        return X.when(vis, x).otherwise(nan), \
+            X.when(vis, y).otherwise(nan)
 
-    return fwd
+    return single(fwd)
 
 
-def _ortho_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _ortho_to_lonlat_fn(crs: str) -> Transform:
     c = _azi_consts(ORTHO_PARAMS, crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
-        # off-disk: asin(>1) -> NaN, the documented not-visible signal
-        cang = F.asin(rho / F.lit(c["r"]))
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def ortho_inverse_sql(x_expr: str, y_expr: str,
-                      crs: str) -> tuple[str, str]:
-    """The SAME spherical orthographic inverse as SQL strings (for
-    DuckDB oracles) — identical op order to
-    :func:`_ortho_to_lonlat_fn` (Snyder ch. 20: c = asin(rho/R))."""
-    c = _azi_consts(ORTHO_PARAMS, crs)
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yn = f"(({y_expr}) - {c['fn']!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    cang = f"asin({rho} / {c['r']!r})"
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({c['sp0']!r}) ELSE "
-           f"asin(cos({cang}) * {c['sp0']!r} + {yn} * sin({cang})"
-           f" * {c['cp0']!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {c['cp0']!r}"
-           f" * cos({cang}) - {yn} * {c['sp0']!r} * sin({cang})) END)")
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+    # off-disk: asin(>1) -> NaN, the documented not-visible signal
+    return single(lambda x, y: _azi_inv(
+        x, y, c, lambda rho: X.asin(rho / X.lit(c["r"]))))
 
 
 #: crs -> (R, lat0, lon0, false easting, false northing)
 GNOM_PARAMS: dict[str, tuple] = {}
 
 
-def _lonlat_to_gnom_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_gnom_fn(crs: str) -> Transform:
     """Spherical gnomonic forward (Snyder ch. 22): k' = 1 / cos c —
     every great circle maps to a straight line (the defining
     property, pinned by tests); the far hemisphere and the horizon
     circle (cos c <= 0) are not on the map (NaN)."""
     c = _azi_consts(GNOM_PARAMS, crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        dl = F.radians(lon - F.lit(c["lon0"]))
-        phi = F.radians(lat)
-        cosc = (F.lit(c["sp0"]) * F.sin(phi)
-                + F.lit(c["cp0"]) * F.cos(phi) * F.cos(dl))
-        nan = F.lit(float("nan"))
-        x = F.lit(c["fe"]) + F.lit(c["r"]) * F.cos(phi) * F.sin(dl) / cosc
-        y = F.lit(c["fn"]) + F.lit(c["r"]) * (
-            F.lit(c["cp0"]) * F.sin(phi)
-            - F.lit(c["sp0"]) * F.cos(phi) * F.cos(dl)) / cosc
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        dl = X.radians(lon - X.lit(c["lon0"]))
+        phi = X.radians(lat)
+        cosc = _azi_cosc(c, phi, dl)
+        nan = X.lit(float("nan"))
+        x = X.lit(c["fe"]) + X.lit(c["r"]) * X.cos(phi) * X.sin(dl) / cosc
+        y = X.lit(c["fn"]) + X.lit(c["r"]) * (
+            X.lit(c["cp0"]) * X.sin(phi)
+            - X.lit(c["sp0"]) * X.cos(phi) * X.cos(dl)) / cosc
         vis = cosc > 0.0
-        return F.when(vis, x).otherwise(nan), \
-            F.when(vis, y).otherwise(nan)
+        return X.when(vis, x).otherwise(nan), \
+            X.when(vis, y).otherwise(nan)
 
-    return fwd
+    return single(fwd)
 
 
-def _gnom_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _gnom_to_lonlat_fn(crs: str) -> Transform:
     c = _azi_consts(GNOM_PARAMS, crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
-        cang = F.atan(rho / F.lit(c["r"]))  # c = atan(rho/R), 22-16
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def gnom_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME spherical gnomonic inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_gnom_to_lonlat_fn`."""
-    c = _azi_consts(GNOM_PARAMS, crs)
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yn = f"(({y_expr}) - {c['fn']!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    cang = f"atan({rho} / {c['r']!r})"
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({c['sp0']!r}) ELSE "
-           f"asin(cos({cang}) * {c['sp0']!r} + {yn} * sin({cang})"
-           f" * {c['cp0']!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {c['cp0']!r}"
-           f" * cos({cang}) - {yn} * {c['sp0']!r} * sin({cang})) END)")
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+    # c = atan(rho/R), Snyder 22-16
+    return single(lambda x, y: _azi_inv(
+        x, y, c, lambda rho: X.atan(rho / X.lit(c["r"]))))
 
 
 def _eqc_consts(crs: str) -> dict:
@@ -1756,53 +1145,53 @@ def _omerc_consts(crs: str) -> dict:
                 ec=ec, nc=nc, series=ser)
 
 
-def _lonlat_to_omerc_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_omerc_fn(crs: str) -> Transform:
     """lon/lat (deg) -> Hotine E/N (EPSG 9815 forward, staged)."""
     c = _omerc_consts(crs)
     e, b, big_a = c["e"], c["b"], c["big_a"]
 
     def s_t(env):
-        s = F.sin(F.radians(env["__in_y"]))
-        return (F.tan(F.lit(math.pi / 4.0)
-                      - F.radians(env["__in_y"]) / F.lit(2.0))
-                / F.pow((F.lit(1.0) - F.lit(e) * s)
-                        / (F.lit(1.0) + F.lit(e) * s), F.lit(e / 2.0)))
+        s = X.sin(X.radians(env["__in_y"]))
+        return (X.tan(X.lit(math.pi / 4.0)
+                      - X.radians(env["__in_y"]) / X.lit(2.0))
+                / X.pow((X.lit(1.0) - X.lit(e) * s)
+                        / (X.lit(1.0) + X.lit(e) * s), X.lit(e / 2.0)))
 
     def s_q(env):
-        return F.lit(c["h"]) / F.pow(env["__t"], F.lit(b))
+        return X.lit(c["h"]) / X.pow(env["__t"], X.lit(b))
 
     def s_sv(env):
         q = env["__q"]
-        return (q - F.lit(1.0) / q) / F.lit(2.0)
+        return (q - X.lit(1.0) / q) / X.lit(2.0)
 
     def s_tv(env):
         q = env["__q"]
-        return (q + F.lit(1.0) / q) / F.lit(2.0)
+        return (q + X.lit(1.0) / q) / X.lit(2.0)
 
     def s_dl(env):
-        return F.lit(b) * (F.radians(env["__in_x"]) - F.lit(c["lam0"]))
+        return X.lit(b) * (X.radians(env["__in_x"]) - X.lit(c["lam0"]))
 
     def s_u(env):
-        return F.lit(big_a) * F.atan2(
-            env["__s"] * F.lit(c["cg0"])
-            + F.sin(env["__dl"]) * F.lit(c["sg0"]),
-            F.cos(env["__dl"])) / F.lit(b) - F.lit(c["uoff"])
+        return X.lit(big_a) * X.atan2(
+            env["__s"] * X.lit(c["cg0"])
+            + X.sin(env["__dl"]) * X.lit(c["sg0"]),
+            X.cos(env["__dl"])) / X.lit(b) - X.lit(c["uoff"])
 
     def s_v(env):
-        u_ = (F.sin(env["__dl"]) * F.lit(-1.0) * F.lit(c["cg0"])
-              + env["__s"] * F.lit(c["sg0"])) / env["__tv"]
-        return F.lit(big_a) * F.log(
-            (F.lit(1.0) - u_) / (F.lit(1.0) + u_)) / F.lit(2.0 * b)
+        u_ = (X.sin(env["__dl"]) * X.lit(-1.0) * X.lit(c["cg0"])
+              + env["__s"] * X.lit(c["sg0"])) / env["__tv"]
+        return X.lit(big_a) * X.log(
+            (X.lit(1.0) - u_) / (X.lit(1.0) + u_)) / X.lit(2.0 * b)
 
     def out_x(env):
-        return (env["__v"] * F.lit(c["cg"])
-                + env["__u"] * F.lit(c["sg"]) + F.lit(c["ec"]))
+        return (env["__v"] * X.lit(c["cg"])
+                + env["__u"] * X.lit(c["sg"]) + X.lit(c["ec"]))
 
     def out_y(env):
-        return (env["__u"] * F.lit(c["cg"])
-                - env["__v"] * F.lit(c["sg"]) + F.lit(c["nc"]))
+        return (env["__u"] * X.lit(c["cg"])
+                - env["__v"] * X.lit(c["sg"]) + X.lit(c["nc"]))
 
-    return StagedTransform([
+    return staged([
         {"__t": s_t},
         {"__q": s_q},
         {"__s": s_sv, "__tv": s_tv, "__dl": s_dl},
@@ -1811,60 +1200,58 @@ def _lonlat_to_omerc_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _omerc_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _omerc_to_lonlat_fn(crs: str) -> Transform:
     """Hotine E/N -> lon/lat (EPSG 9815 reverse, staged)."""
     c = _omerc_consts(crs)
     b, big_a = c["b"], c["big_a"]
 
     def s_v(env):
-        return ((env["__in_x"] - F.lit(c["ec"])) * F.lit(c["cg"])
-                - (env["__in_y"] - F.lit(c["nc"])) * F.lit(c["sg"]))
+        return ((env["__in_x"] - X.lit(c["ec"])) * X.lit(c["cg"])
+                - (env["__in_y"] - X.lit(c["nc"])) * X.lit(c["sg"]))
 
     def s_u(env):
-        return ((env["__in_y"] - F.lit(c["nc"])) * F.lit(c["cg"])
-                + (env["__in_x"] - F.lit(c["ec"])) * F.lit(c["sg"])
-                + F.lit(c["uoff"]))
+        return ((env["__in_y"] - X.lit(c["nc"])) * X.lit(c["cg"])
+                + (env["__in_x"] - X.lit(c["ec"])) * X.lit(c["sg"])
+                + X.lit(c["uoff"]))
 
     def s_q(env):
-        return F.exp(F.lit(-b) * env["__v"] / F.lit(big_a))
+        return X.exp(X.lit(-b) * env["__v"] / X.lit(big_a))
 
     def s_sv(env):
         q = env["__q"]
-        return (q - F.lit(1.0) / q) / F.lit(2.0)
+        return (q - X.lit(1.0) / q) / X.lit(2.0)
 
     def s_tv(env):
         q = env["__q"]
-        return (q + F.lit(1.0) / q) / F.lit(2.0)
+        return (q + X.lit(1.0) / q) / X.lit(2.0)
 
     def s_bu(env):
-        return F.lit(b) * env["__u"] / F.lit(big_a)
+        return X.lit(b) * env["__u"] / X.lit(big_a)
 
     def s_uu(env):
-        return (F.sin(env["__bu"]) * F.lit(c["cg0"])
-                + env["__s"] * F.lit(c["sg0"])) / env["__tv"]
+        return (X.sin(env["__bu"]) * X.lit(c["cg0"])
+                + env["__s"] * X.lit(c["sg0"])) / env["__tv"]
 
     def s_chi(env):
-        t = F.pow(
-            F.lit(c["h"]) / F.sqrt((F.lit(1.0) + env["__uu"])
-                                   / (F.lit(1.0) - env["__uu"])),
-            F.lit(1.0 / b))
-        return F.lit(math.pi / 2.0) - F.lit(2.0) * F.atan(t)
+        t = X.pow(
+            X.lit(c["h"]) / X.sqrt((X.lit(1.0) + env["__uu"])
+                                   / (X.lit(1.0) - env["__uu"])),
+            X.lit(1.0 / b))
+        return X.lit(math.pi / 2.0) - X.lit(2.0) * X.atan(t)
 
     def out_y(env):
         chi = env["__chi"]
-        phi = chi
-        for j, cf in enumerate(c["series"], start=1):
-            phi = phi + F.lit(cf) * F.sin(F.lit(2.0 * j) * chi)
-        return F.degrees(phi)
+        phi = _lat_series(chi, c["series"])
+        return X.degrees(phi)
 
     def out_x(env):
-        lam = F.lit(c["lam0"]) - F.atan2(
-            env["__s"] * F.lit(c["cg0"])
-            - F.sin(env["__bu"]) * F.lit(c["sg0"]),
-            F.cos(env["__bu"])) / F.lit(b)
-        return F.degrees(lam)
+        lam = X.lit(c["lam0"]) - X.atan2(
+            env["__s"] * X.lit(c["cg0"])
+            - X.sin(env["__bu"]) * X.lit(c["sg0"]),
+            X.cos(env["__bu"])) / X.lit(b)
+        return X.degrees(lam)
 
-    return StagedTransform([
+    return staged([
         {"__v": s_v, "__u": s_u},
         {"__q": s_q, "__bu": s_bu},
         {"__s": s_sv, "__tv": s_tv},
@@ -1872,59 +1259,6 @@ def _omerc_to_lonlat_fn(crs: str) -> "StagedTransform":
         {"__chi": s_chi},
         {"__out_x": out_x, "__out_y": out_y},
     ])
-
-
-def omerc_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                           src: str = "tgt") -> str:
-    """The SAME Hotine inverse as a chain of CTEs over ``src`` (for
-    DuckDB oracles) — identical arithmetic to
-    :func:`_omerc_to_lonlat_fn`.  Emits CTEs ``om1..om6`` and finally
-    ``omerc_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _omerc_consts(crs)
-    b, big_a = c["b"], c["big_a"]
-    chi = "__chi"
-    phi = chi
-    for j, cf in enumerate(c["series"], start=1):
-        phi = f"({phi} + {cf!r} * sin(2.0 * {j} * (__chi)))"
-    # CAST the inputs to DOUBLE up front: DuckDB types numeric
-    # literals as DECIMAL, and the skew-rotation's long constant
-    # literals overflow DECIMAL(18) multiplication otherwise
-    x_expr = f"CAST(({x_expr}) AS DOUBLE)"
-    y_expr = f"CAST(({y_expr}) AS DOUBLE)"
-    return f"""om1 AS (
-            SELECT *, ((({x_expr}) - {c['ec']!r}) * {c['cg']!r}
-                       - (({y_expr}) - {c['nc']!r}) * {c['sg']!r})
-                      AS __v,
-                      ((({y_expr}) - {c['nc']!r}) * {c['cg']!r}
-                       + (({x_expr}) - {c['ec']!r}) * {c['sg']!r}
-                       + {c['uoff']!r}) AS __u
-            FROM {src}
-        ), om2 AS (
-            SELECT *, exp({-b!r} * __v / {big_a!r}) AS __q,
-                      ({b!r} * __u / {big_a!r}) AS __bu
-            FROM om1
-        ), om3 AS (
-            SELECT *, ((__q - 1.0 / __q) / 2.0) AS __s,
-                      ((__q + 1.0 / __q) / 2.0) AS __tv
-            FROM om2
-        ), om4 AS (
-            SELECT *, ((sin(__bu) * {c['cg0']!r}
-                        + __s * {c['sg0']!r}) / __tv) AS __uu
-            FROM om3
-        ), om5 AS (
-            SELECT *, ({math.pi / 2.0!r} - 2.0 * atan(pow({c['h']!r}
-                       / sqrt((1.0 + __uu) / (1.0 - __uu)),
-                       {1.0 / b!r}))) AS __chi
-            FROM om4
-        ), omerc_ll AS (
-            SELECT * EXCLUDE (__v, __u, __q, __bu, __s, __tv, __uu,
-                              __chi),
-                   degrees({c['lam0']!r} - atan2(__s * {c['cg0']!r}
-                       - sin(__bu) * {c['sg0']!r}, cos(__bu))
-                       / {b!r}) AS lon,
-                   degrees({phi}) AS lat
-            FROM om5
-        )"""
 
 
 #: spherical near-sided (vertical) perspective — Snyder ch. 23 /
@@ -1941,76 +1275,37 @@ def _nsper_consts(crs: str) -> dict:
                 sp0=math.sin(phi0), cp0=math.cos(phi0))
 
 
-def _lonlat_to_nsper_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_nsper_fn(crs: str) -> Transform:
     c = _nsper_consts(crs)
     p = c["p"]
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        dl = F.radians(lon - F.lit(c["lon0"]))
-        phi = F.radians(lat)
-        cosc = (F.lit(c["sp0"]) * F.sin(phi)
-                + F.lit(c["cp0"]) * F.cos(phi) * F.cos(dl))
-        kp = F.lit(p - 1.0) / (F.lit(p) - cosc)  # Snyder 23-3
-        nan = F.lit(float("nan"))
-        x = F.lit(c["fe"]) + F.lit(c["r"]) * kp * F.cos(phi) * F.sin(dl)
-        y = F.lit(c["fn"]) + F.lit(c["r"]) * kp * (
-            F.lit(c["cp0"]) * F.sin(phi)
-            - F.lit(c["sp0"]) * F.cos(phi) * F.cos(dl))
-        vis = cosc >= F.lit(1.0 / p)  # beyond the horizon circle
-        return F.when(vis, x).otherwise(nan), \
-            F.when(vis, y).otherwise(nan)
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        dl = X.radians(lon - X.lit(c["lon0"]))
+        phi = X.radians(lat)
+        cosc = _azi_cosc(c, phi, dl)
+        kp = X.lit(p - 1.0) / (X.lit(p) - cosc)  # Snyder 23-3
+        nan = X.lit(float("nan"))
+        x, y = _azi_xy(c, kp, phi, dl)
+        vis = cosc >= X.lit(1.0 / p)  # beyond the horizon circle
+        return X.when(vis, x).otherwise(nan), \
+            X.when(vis, y).otherwise(nan)
 
-    return fwd
+    return single(fwd)
 
 
-def _nsper_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _nsper_to_lonlat_fn(crs: str) -> Transform:
     c = _nsper_consts(crs)
     p, r = c["p"], c["r"]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
+    def angle(rho: E) -> E:
         # Snyder 23-19/20: off-disk -> sqrt(negative) -> NaN
-        root = F.sqrt(F.lit(1.0) - rho * rho * F.lit(
+        root = X.sqrt(X.lit(1.0) - rho * rho * X.lit(
             (p + 1.0) / (r * r * (p - 1.0))))
-        cang = F.asin((F.lit(p) - root)
-                      / (F.lit(r * (p - 1.0)) / rho
-                         + rho / F.lit(r * (p - 1.0))))
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
+        return X.asin((X.lit(p) - root)
+                      / (X.lit(r * (p - 1.0)) / rho
+                         + rho / X.lit(r * (p - 1.0))))
 
-    return inv
-
-
-def nsper_inverse_sql(x_expr: str, y_expr: str,
-                      crs: str) -> tuple[str, str]:
-    """The SAME near-sided-vertical-perspective inverse as SQL
-    strings (for DuckDB oracles) — identical op order to
-    :func:`_nsper_to_lonlat_fn` (Snyder 23-19/20)."""
-    c = _nsper_consts(crs)
-    p, r = c["p"], c["r"]
-    rp1 = r * (p - 1.0)
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yn = f"(({y_expr}) - {c['fn']!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    root = (f"sqrt(1.0 - {rho} * {rho}"
-            f" * {(p + 1.0) / (r * r * (p - 1.0))!r})")
-    cang = (f"asin(({p!r} - {root}) / ({rp1!r} / {rho}"
-            f" + {rho} / {rp1!r}))")
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({c['sp0']!r}) ELSE "
-           f"asin(cos({cang}) * {c['sp0']!r} + {yn} * sin({cang})"
-           f" * {c['cp0']!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {c['cp0']!r}"
-           f" * cos({cang}) - {yn} * {c['sp0']!r} * sin({cang})) END)")
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+    return single(lambda x, y: _azi_inv(x, y, c, angle))
 
 
 #: spherical stereographic, ANY aspect (Snyder 21-2..21-4 / 20-14..
@@ -2027,127 +1322,77 @@ def _stereg_azi_consts(crs: str) -> dict:
     return _azi_consts({crs.upper(): (r0, lat0, lon0, fe, fn)}, crs)
 
 
-def _lonlat_to_stereg_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_stereg_fn(crs: str) -> Transform:
     c = _stereg_azi_consts(crs)
     k0 = STEREG_PARAMS[crs.upper()][1]
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        dl = F.radians(lon - F.lit(c["lon0"]))
-        phi = F.radians(lat)
-        den = (F.lit(1.0) + F.lit(c["sp0"]) * F.sin(phi)
-               + F.lit(c["cp0"]) * F.cos(phi) * F.cos(dl))
-        k = F.lit(2.0 * k0) / den  # antipode: den -> 0, k -> inf
-        x = F.lit(c["fe"]) + F.lit(c["r"]) * k * F.cos(phi) * F.sin(dl)
-        y = F.lit(c["fn"]) + F.lit(c["r"]) * k * (
-            F.lit(c["cp0"]) * F.sin(phi)
-            - F.lit(c["sp0"]) * F.cos(phi) * F.cos(dl))
-        return x, y
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        dl = X.radians(lon - X.lit(c["lon0"]))
+        phi = X.radians(lat)
+        den = (X.lit(1.0) + X.lit(c["sp0"]) * X.sin(phi)
+               + X.lit(c["cp0"]) * X.cos(phi) * X.cos(dl))
+        k = X.lit(2.0 * k0) / den  # antipode: den -> 0, k -> inf
+        return _azi_xy(c, k, phi, dl)
 
-    return fwd
+    return single(fwd)
 
 
-def _stereg_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _stereg_to_lonlat_fn(crs: str) -> Transform:
     c = _stereg_azi_consts(crs)
     k0 = STEREG_PARAMS[crs.upper()][1]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
-        cang = F.lit(2.0) * F.atan(rho / F.lit(2.0 * c["r"] * k0))
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
+    return single(lambda x, y: _azi_inv(
+        x, y, c,
+        lambda rho: X.lit(2.0) * X.atan(rho / X.lit(2.0 * c["r"] * k0))))
 
 
-def stereg_inverse_sql(x_expr: str, y_expr: str,
-                       crs: str) -> tuple[str, str]:
-    """The SAME spherical-stereographic inverse as SQL strings (for
-    DuckDB oracles).  Returns (lon_sql, lat_sql)."""
-    r0, k0, lat0, lon0, fe, fn = STEREG_PARAMS[crs.upper()]
-    sp0 = math.sin(math.radians(lat0))
-    cp0 = math.cos(math.radians(lat0))
-    xe = f"(({x_expr}) - {fe!r})"
-    yn = f"(({y_expr}) - {fn!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    cang = f"(2.0 * atan({rho} / {2.0 * r0 * k0!r}))"
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({sp0!r}) ELSE "
-           f"asin(cos({cang}) * {sp0!r} + {yn} * sin({cang})"
-           f" * {cp0!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {cp0!r}"
-           f" * cos({cang}) - {yn} * {sp0!r} * sin({cang})) END)")
-    return (f"({lon0!r} + degrees({lam}))", f"degrees({phi})")
+def _meridian_xi(phi: E, c: dict) -> E:
+    """Rectifying latitude of ``phi``: the Krueger series at the
+    central meridian (the meridian arc is ``a * ar * xi``)."""
+    sphi = X.sin(phi)
+    t = X.sinh(X.atanh(sphi)
+               - X.lit(c["e"]) * X.atanh(X.lit(c["e"]) * sphi))
+    xip = X.atan(t)
+    xi = xip
+    for j, aj in enumerate(c["alpha"], start=1):
+        xi = xi + X.lit(aj) * X.sin(X.lit(2.0 * j) * xip)
+    return xi
 
 
-def _lonlat_to_eqc_fn(crs: str) -> ColumnTransform:
-    c = _eqc_consts(crs)
-
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        x = (F.lit(c["fe"])
-             + F.lit(c["rc"]) * F.radians(lon - F.lit(c["lon0"])))
-        phi = F.radians(lat)
-        if c["sphere"]:
-            return x, F.lit(c["fn"]) + F.lit(c["ry"]) * phi
-        # meridian arc M(phi) = a*ar*xi (Krueger rectifying series at
-        # the central meridian, the TM family's machinery)
-        sphi = F.sin(phi)
-        t = F.sinh(F.atanh(sphi)
-                   - F.lit(c["e"]) * F.atanh(F.lit(c["e"]) * sphi))
-        xip = F.atan(t)
-        xi = xip
-        for j, aj in enumerate(c["alpha"], start=1):
-            xi = xi + F.lit(aj) * F.sin(F.lit(2.0 * j) * xip)
-        return x, F.lit(c["fn"]) + F.lit(c["ary"]) * xi
-
-    return fwd
-
-
-def _eqc_to_lonlat_fn(crs: str) -> ColumnTransform:
-    c = _eqc_consts(crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lon = (F.lit(c["lon0"])
-               + F.degrees((x - F.lit(c["fe"])) / F.lit(c["rc"])))
-        if c["sphere"]:
-            return lon, F.degrees((y - F.lit(c["fn"])) / F.lit(c["ry"]))
-        mu = (y - F.lit(c["fn"])) / F.lit(c["ary"])
-        chi = mu
-        for j, bj in enumerate(c["beta"], start=1):
-            chi = chi - F.lit(bj) * F.sin(F.lit(2.0 * j) * mu)
-        phi = chi
-        for j, dj in enumerate(c["delta"], start=1):
-            phi = phi + F.lit(dj) * F.sin(F.lit(2.0 * j) * chi)
-        return lon, F.degrees(phi)
-
-    return inv
-
-
-def eqc_inverse_sql(x_expr: str, y_expr: str,
-                    crs: str) -> tuple[str, str]:
-    """The SAME equidistant-cylindrical inverse as SQL strings (for
-    DuckDB oracles) — identical op order to :func:`_eqc_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _eqc_consts(crs)
-    lon = (f"({c['lon0']!r} + degrees((({x_expr}) - {c['fe']!r})"
-           f" / {c['rc']!r}))")
-    if c["sphere"]:
-        return lon, f"degrees((({y_expr}) - {c['fn']!r}) / {c['ry']!r})"
-    mu = f"((({y_expr}) - {c['fn']!r}) / {c['ary']!r})"
+def _rectifying_phi(mu: E, c: dict) -> E:
+    """Inverse of :func:`_meridian_xi`: rectifying latitude -> phi."""
     chi = mu
     for j, bj in enumerate(c["beta"], start=1):
-        chi = f"({chi} - {bj!r} * sin(2.0 * {j} * {mu}))"
-    phi = chi
-    for j, dj in enumerate(c["delta"], start=1):
-        phi = f"({phi} + {dj!r} * sin(2.0 * {j} * ({chi})))"
-    return lon, f"degrees({phi})"
+        chi = chi - X.lit(bj) * X.sin(X.lit(2.0 * j) * mu)
+    phi = _lat_series(chi, c["delta"])
+    return phi
+
+
+def _lonlat_to_eqc_fn(crs: str) -> Transform:
+    c = _eqc_consts(crs)
+
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        x = (X.lit(c["fe"])
+             + X.lit(c["rc"]) * X.radians(lon - X.lit(c["lon0"])))
+        phi = X.radians(lat)
+        if c["sphere"]:
+            return x, X.lit(c["fn"]) + X.lit(c["ry"]) * phi
+        return x, X.lit(c["fn"]) + X.lit(c["ary"]) * _meridian_xi(phi, c)
+
+    return single(fwd)
+
+
+def _eqc_to_lonlat_fn(crs: str) -> Transform:
+    c = _eqc_consts(crs)
+
+    def inv(x: E, y: E) -> tuple[E, E]:
+        lon = (X.lit(c["lon0"])
+               + X.degrees((x - X.lit(c["fe"])) / X.lit(c["rc"])))
+        if c["sphere"]:
+            return lon, X.degrees((y - X.lit(c["fn"])) / X.lit(c["ry"]))
+        mu = (y - X.lit(c["fn"])) / X.lit(c["ary"])
+        return lon, X.degrees(_rectifying_phi(mu, c))
+
+    return single(inv)
 
 
 # ---- equidistant conic (+proj=eqdc; Snyder ch. 16) ----------------------
@@ -2196,77 +1441,41 @@ def _eqdc_consts(crs: str) -> dict:
                 rho0=a * g - big_m(p0), lon0=lon0, fe=fe, fn=fn)
 
 
-def _lonlat_to_eqdc_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_eqdc_fn(crs: str) -> Transform:
     c = _eqdc_consts(crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        th = F.lit(c["n"]) * F.radians(lon - F.lit(c["lon0"]))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        th = X.lit(c["n"]) * X.radians(lon - X.lit(c["lon0"]))
         if c["sphere"]:
-            rho = F.lit(c["ag"]) - F.lit(c["a"]) * F.radians(lat)
+            rho = X.lit(c["ag"]) - X.lit(c["a"]) * X.radians(lat)
         else:
-            phi = F.radians(lat)
-            sphi = F.sin(phi)
-            t = F.sinh(F.atanh(sphi) - F.lit(c["e"])
-                       * F.atanh(F.lit(c["e"]) * sphi))
-            xip = F.atan(t)
-            xi = xip
-            for j, aj in enumerate(c["alpha"], start=1):
-                xi = xi + F.lit(aj) * F.sin(F.lit(2.0 * j) * xip)
-            rho = F.lit(c["ag"]) - F.lit(c["ary"]) * xi
-        x = F.lit(c["fe"]) + rho * F.sin(th)
-        y = F.lit(c["fn"]) + F.lit(c["rho0"]) - rho * F.cos(th)
+            rho = X.lit(c["ag"]) - X.lit(c["ary"]) * _meridian_xi(
+                X.radians(lat), c)
+        x = X.lit(c["fe"]) + rho * X.sin(th)
+        y = X.lit(c["fn"]) + X.lit(c["rho0"]) - rho * X.cos(th)
         return x, y
 
-    return fwd
+    return single(fwd)
 
 
-def _eqdc_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _eqdc_to_lonlat_fn(crs: str) -> Transform:
     c = _eqdc_consts(crs)
     sgn = 1.0 if c["n"] >= 0.0 else -1.0
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yr = F.lit(c["rho0"]) - (y - F.lit(c["fn"]))
-        rho = F.lit(sgn) * F.sqrt(xe * xe + yr * yr)
-        th = F.atan2(F.lit(sgn) * xe, F.lit(sgn) * yr)
-        lam = th / F.lit(c["n"])
+    def inv(x: E, y: E) -> tuple[E, E]:
+        xe = x - X.lit(c["fe"])
+        yr = X.lit(c["rho0"]) - (y - X.lit(c["fn"]))
+        rho = X.lit(sgn) * X.sqrt(xe * xe + yr * yr)
+        th = X.atan2(X.lit(sgn) * xe, X.lit(sgn) * yr)
+        lam = th / X.lit(c["n"])
         if c["sphere"]:
-            phi = (F.lit(c["ag"]) - rho) / F.lit(c["a"])
+            phi = (X.lit(c["ag"]) - rho) / X.lit(c["a"])
         else:
-            mu = (F.lit(c["ag"]) - rho) / F.lit(c["ary"])
-            chi = mu
-            for j, bj in enumerate(c["beta"], start=1):
-                chi = chi - F.lit(bj) * F.sin(F.lit(2.0 * j) * mu)
-            phi = chi
-            for j, dj in enumerate(c["delta"], start=1):
-                phi = phi + F.lit(dj) * F.sin(F.lit(2.0 * j) * chi)
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
+            phi = _rectifying_phi(
+                (X.lit(c["ag"]) - rho) / X.lit(c["ary"]), c)
+        return X.lit(c["lon0"]) + X.degrees(lam), X.degrees(phi)
 
-    return inv
-
-
-def eqdc_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME equidistant-conic inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_eqdc_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _eqdc_consts(crs)
-    sgn = 1.0 if c["n"] >= 0.0 else -1.0
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yr = f"({c['rho0']!r} - (({y_expr}) - {c['fn']!r}))"
-    rho = f"({sgn!r} * sqrt({xe} * {xe} + {yr} * {yr}))"
-    lam = f"(atan2({sgn!r} * {xe}, {sgn!r} * {yr}) / {c['n']!r})"
-    if c["sphere"]:
-        phi = f"(({c['ag']!r} - {rho}) / {c['a']!r})"
-    else:
-        mu = f"(({c['ag']!r} - {rho}) / {c['ary']!r})"
-        chi = mu
-        for j, bj in enumerate(c["beta"], start=1):
-            chi = f"({chi} - {bj!r} * sin(2.0 * {j} * {mu}))"
-        phi = chi
-        for j, dj in enumerate(c["delta"], start=1):
-            phi = f"({phi} + {dj!r} * sin(2.0 * {j} * ({chi})))"
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+    return single(inv)
 
 
 # ---- Swiss oblique Mercator (+proj=somerc) ----------------------------
@@ -2332,21 +1541,20 @@ def _datum_hop_fwd_stages(helm_fwd: tuple, a_l: float, es_l: float,
                           b_l: float, ep2_l: float) -> list[dict]:
     """WGS84 geodetic radians (``__lamw``/``__phiw``) -> local-datum
     geodetic radians (``__lam``/``__phi``) as FINE stages (one small
-    expression per alias), mirroring _lonlat_to_osgb_fn: coarse
-    stages that re-inline the whole geodetic->XYZ tree per output
-    column send the optimizer into a multi-minute substitution
-    blowup once the gather join is added."""
+    expression per alias): coarse stages that re-inline the whole
+    geodetic->XYZ tree per output column send the optimizer into a
+    multi-minute substitution blowup once the gather join is added."""
     return [
-        {"__spw": lambda env: F.sin(env["__phiw"]),
-         "__cpw": lambda env: F.cos(env["__phiw"])},
-        {"__nuw": lambda env: F.lit(_WGS_A) / F.sqrt(
-            F.lit(1.0) - F.lit(_WGS_E2)
+        {"__spw": lambda env: X.sin(env["__phiw"]),
+         "__cpw": lambda env: X.cos(env["__phiw"])},
+        {"__nuw": lambda env: X.lit(_WGS_A) / X.sqrt(
+            X.lit(1.0) - X.lit(_WGS_E2)
             * env["__spw"] * env["__spw"])},
         {"__Xw": lambda env: env["__nuw"] * env["__cpw"]
-            * F.cos(env["__lamw"]),
+            * X.cos(env["__lamw"]),
          "__Yw": lambda env: env["__nuw"] * env["__cpw"]
-            * F.sin(env["__lamw"]),
-         "__Zw": lambda env: env["__nuw"] * F.lit(1.0 - _WGS_E2)
+            * X.sin(env["__lamw"]),
+         "__Zw": lambda env: env["__nuw"] * X.lit(1.0 - _WGS_E2)
             * env["__spw"]},
         {"__Xl": lambda env: _helmert(
             env["__Xw"], env["__Yw"], env["__Zw"], helm_fwd)[0],
@@ -2354,17 +1562,32 @@ def _datum_hop_fwd_stages(helm_fwd: tuple, a_l: float, es_l: float,
             env["__Xw"], env["__Yw"], env["__Zw"], helm_fwd)[1],
          "__Zl": lambda env: _helmert(
             env["__Xw"], env["__Yw"], env["__Zw"], helm_fwd)[2]},
-        {"__pl": lambda env: F.sqrt(env["__Xl"] * env["__Xl"]
+        {"__pl": lambda env: X.sqrt(env["__Xl"] * env["__Xl"]
                                     + env["__Yl"] * env["__Yl"])},
-        {"__thl": lambda env: F.atan2(env["__Zl"] * F.lit(a_l),
-                                      env["__pl"] * F.lit(b_l))},
-        {"__lam": lambda env: F.atan2(env["__Yl"], env["__Xl"]),
-         "__phi": lambda env: F.atan2(
-            env["__Zl"] + F.lit(ep2_l * b_l)
-            * F.pow(F.sin(env["__thl"]), F.lit(3.0)),
-            env["__pl"] - F.lit(es_l * a_l)
-            * F.pow(F.cos(env["__thl"]), F.lit(3.0)))},
+        {"__thl": lambda env: X.atan2(env["__Zl"] * X.lit(a_l),
+                                      env["__pl"] * X.lit(b_l))},
+        {"__lam": lambda env: X.atan2(env["__Yl"], env["__Xl"]),
+         "__phi": lambda env: X.atan2(
+            env["__Zl"] + X.lit(ep2_l * b_l)
+            * X.pow(X.sin(env["__thl"]), X.lit(3.0)),
+            env["__pl"] - X.lit(es_l * a_l)
+            * X.pow(X.cos(env["__thl"]), X.lit(3.0)))},
     ]
+
+
+def _wgs84_to_local(c: dict) -> list[dict]:
+    """Stages from WGS84 lon/lat inputs to the CRS's local geodetic
+    radians ``__lam``/``__phi``: the datum hop when the CRS carries a
+    towgs84 (``c["helm_fwd"]``), else a rename."""
+    stages: list[dict] = [
+        {"__lamw": lambda env: X.radians(env["__in_x"]),
+         "__phiw": lambda env: X.radians(env["__in_y"])},
+    ]
+    if c["helm_fwd"] is None:
+        return stages + [{"__lam": lambda env: env["__lamw"],
+                          "__phi": lambda env: env["__phiw"]}]
+    return stages + _datum_hop_fwd_stages(
+        c["helm_fwd"], c["a"], c["es"], c["b_ell"], c["ep2"])
 
 
 def _datum_hop_inv_stages(towgs84: tuple, a_l: float,
@@ -2372,15 +1595,15 @@ def _datum_hop_inv_stages(towgs84: tuple, a_l: float,
     """Local-datum geodetic radians (``__lam``/``__phi``) -> WGS84
     degrees (``__out_x``/``__out_y``), same fine staging."""
     return [
-        {"__sp": lambda env: F.sin(env["__phi"]),
-         "__cp": lambda env: F.cos(env["__phi"])},
-        {"__nu": lambda env: F.lit(a_l) / F.sqrt(
-            F.lit(1.0) - F.lit(es_l) * env["__sp"] * env["__sp"])},
+        {"__sp": lambda env: X.sin(env["__phi"]),
+         "__cp": lambda env: X.cos(env["__phi"])},
+        {"__nu": lambda env: X.lit(a_l) / X.sqrt(
+            X.lit(1.0) - X.lit(es_l) * env["__sp"] * env["__sp"])},
         {"__Xl": lambda env: env["__nu"] * env["__cp"]
-            * F.cos(env["__lam"]),
+            * X.cos(env["__lam"]),
          "__Yl": lambda env: env["__nu"] * env["__cp"]
-            * F.sin(env["__lam"]),
-         "__Zl": lambda env: env["__nu"] * F.lit(1.0 - es_l)
+            * X.sin(env["__lam"]),
+         "__Zl": lambda env: env["__nu"] * X.lit(1.0 - es_l)
             * env["__sp"]},
         {"__Xw": lambda env: _helmert(
             env["__Xl"], env["__Yl"], env["__Zl"], towgs84)[0],
@@ -2388,113 +1611,58 @@ def _datum_hop_inv_stages(towgs84: tuple, a_l: float,
             env["__Xl"], env["__Yl"], env["__Zl"], towgs84)[1],
          "__Zw": lambda env: _helmert(
             env["__Xl"], env["__Yl"], env["__Zl"], towgs84)[2]},
-        {"__p": lambda env: F.sqrt(env["__Xw"] * env["__Xw"]
+        {"__p": lambda env: X.sqrt(env["__Xw"] * env["__Xw"]
                                    + env["__Yw"] * env["__Yw"])},
-        {"__th": lambda env: F.atan2(env["__Zw"] * F.lit(_WGS_A),
-                                     env["__p"] * F.lit(_WGS_B))},
-        {"__out_x": lambda env: F.degrees(
-            F.atan2(env["__Yw"], env["__Xw"])),
-         "__out_y": lambda env: F.degrees(F.atan2(
-            env["__Zw"] + F.lit(_WGS_EP2 * _WGS_B)
-            * F.pow(F.sin(env["__th"]), F.lit(3.0)),
-            env["__p"] - F.lit(_WGS_E2 * _WGS_A)
-            * F.pow(F.cos(env["__th"]), F.lit(3.0))))},
+        {"__th": lambda env: X.atan2(env["__Zw"] * X.lit(_WGS_A),
+                                     env["__p"] * X.lit(_WGS_B))},
+        {"__out_x": lambda env: X.degrees(
+            X.atan2(env["__Yw"], env["__Xw"])),
+         "__out_y": lambda env: X.degrees(X.atan2(
+            env["__Zw"] + X.lit(_WGS_EP2 * _WGS_B)
+            * X.pow(X.sin(env["__th"]), X.lit(3.0)),
+            env["__p"] - X.lit(_WGS_E2 * _WGS_A)
+            * X.pow(X.cos(env["__th"]), X.lit(3.0))))},
     ]
 
 
-def datum_hop_inv_sql_ctes(prefix: str, n_start: int, towgs84: tuple,
-                           a_l: float, es_l: float,
-                           final_name: str, exclude: str) -> str:
-    """The SAME local->WGS84 hop as SQL CTEs (for DuckDB oracles),
-    identical op order to :func:`_datum_hop_inv_stages`.  Continues a
-    chain whose CTE ``{prefix}{n_start}`` holds ``__lam``/``__phi``;
-    emits ``{prefix}{n_start+1}..`` and finally ``{final_name}`` =
-    source columns (minus ``exclude``) + ``lon``/``lat``."""
-    tx, ty, tz, rx, ry, rz, s = towgs84
-    m = repr(1.0 + s)
-    return f""", {prefix}{n_start + 1} AS (
-            SELECT *, ({a_l!r} / sqrt(1.0 - {es_l!r} * sin(__phi)
-                       * sin(__phi))) AS __nu
-            FROM {prefix}{n_start}
-        ), {prefix}{n_start + 2} AS (
-            SELECT *, (__nu * cos(__phi) * cos(__lam)) AS __Xl,
-                      (__nu * cos(__phi) * sin(__lam)) AS __Yl,
-                      (__nu * {1.0 - es_l!r} * sin(__phi)) AS __Zl
-            FROM {prefix}{n_start + 1}
-        ), {prefix}{n_start + 3} AS (
-            SELECT *, ({tx!r} + {m} * __Xl - {rz!r} * __Yl
-                       + {ry!r} * __Zl) AS __Xw,
-                      ({ty!r} + {rz!r} * __Xl + {m} * __Yl
-                       - {rx!r} * __Zl) AS __Yw,
-                      ({tz!r} - {ry!r} * __Xl + {rx!r} * __Yl
-                       + {m} * __Zl) AS __Zw
-            FROM {prefix}{n_start + 2}
-        ), {prefix}{n_start + 4} AS (
-            SELECT *, sqrt(__Xw * __Xw + __Yw * __Yw) AS __p
-            FROM {prefix}{n_start + 3}
-        ), {prefix}{n_start + 5} AS (
-            SELECT *, atan2(__Zw * {_WGS_A!r}, __p * {_WGS_B!r})
-                      AS __th
-            FROM {prefix}{n_start + 4}
-        ), {final_name} AS (
-            SELECT * EXCLUDE ({exclude}, __nu, __Xl, __Yl, __Zl,
-                              __Xw, __Yw, __Zw, __p, __th),
-                   degrees(atan2(__Yw, __Xw)) AS lon,
-                   degrees(atan2(
-                       __Zw + {_WGS_EP2 * _WGS_B!r} * pow(sin(__th), 3),
-                       __p - {_WGS_E2 * _WGS_A!r} * pow(cos(__th), 3)))
-                   AS lat
-            FROM {prefix}{n_start + 5}
-        )"""
-
-
-def _lonlat_to_somerc_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_somerc_fn(crs: str) -> Transform:
     """lon/lat (deg; WGS84 when the CRS carries a towgs84, else the
     projection ellipsoid's own datum) -> Swiss-Mercator E/N."""
     c = _somerc_consts(crs)
-    e, es, alpha = c["e"], c["es"], c["alpha"]
+    e, alpha = c["e"], c["alpha"]
 
-    stages: list[dict] = [
-        {"__lamw": lambda env: F.radians(env["__in_x"]),
-         "__phiw": lambda env: F.radians(env["__in_y"])},
-    ]
-    if c["helm_fwd"] is not None:
-        stages += _datum_hop_fwd_stages(
-            c["helm_fwd"], c["a"], es, c["b_ell"], c["ep2"])
-    else:
-        stages.append({"__lam": lambda env: env["__lamw"],
-                       "__phi": lambda env: env["__phiw"]})
+    stages = _wgs84_to_local(c)
 
     def s_psi(env):
-        s = F.sin(env["__phi"])
-        return (F.log(F.tan(F.lit(math.pi / 4.0) + env["__phi"]
-                            / F.lit(2.0)))
-                - F.lit(e / 2.0) * F.log((F.lit(1.0) + F.lit(e) * s)
-                                         / (F.lit(1.0) - F.lit(e) * s)))
+        s = X.sin(env["__phi"])
+        return (X.log(X.tan(X.lit(math.pi / 4.0) + env["__phi"]
+                            / X.lit(2.0)))
+                - X.lit(e / 2.0) * X.log((X.lit(1.0) + X.lit(e) * s)
+                                         / (X.lit(1.0) - X.lit(e) * s)))
 
     def s_b(env):
-        return (F.lit(2.0) * F.atan(F.exp(
-            F.lit(alpha) * env["__psi"] + F.lit(c["k"])))
-            - F.lit(math.pi / 2.0))
+        return (X.lit(2.0) * X.atan(X.exp(
+            X.lit(alpha) * env["__psi"] + X.lit(c["k"])))
+            - X.lit(math.pi / 2.0))
 
     def s_l(env):
-        return F.lit(alpha) * (env["__lam"] - F.lit(c["lam0"]))
+        return X.lit(alpha) * (env["__lam"] - X.lit(c["lam0"]))
 
     def s_sbb(env):
-        return (F.lit(c["cb0"]) * F.sin(env["__b"])
-                - F.lit(c["sb0"]) * F.cos(env["__b"])
-                * F.cos(env["__l"]))
+        return (X.lit(c["cb0"]) * X.sin(env["__b"])
+                - X.lit(c["sb0"]) * X.cos(env["__b"])
+                * X.cos(env["__l"]))
 
     def out_x(env):
-        xp = (F.lit(c["cb0"]) * F.cos(env["__b"]) * F.cos(env["__l"])
-              + F.lit(c["sb0"]) * F.sin(env["__b"]))
-        yp = F.cos(env["__b"]) * F.sin(env["__l"])
-        return F.lit(c["fe"]) + F.lit(c["big_r"]) * F.atan2(yp, xp)
+        xp = (X.lit(c["cb0"]) * X.cos(env["__b"]) * X.cos(env["__l"])
+              + X.lit(c["sb0"]) * X.sin(env["__b"]))
+        yp = X.cos(env["__b"]) * X.sin(env["__l"])
+        return X.lit(c["fe"]) + X.lit(c["big_r"]) * X.atan2(yp, xp)
 
     def out_y(env):
         sbb = env["__sbb"]
-        return (F.lit(c["fn"]) + F.lit(c["big_r"]) / F.lit(2.0)
-                * F.log((F.lit(1.0) + sbb) / (F.lit(1.0) - sbb)))
+        return (X.lit(c["fn"]) + X.lit(c["big_r"]) / X.lit(2.0)
+                * X.log((X.lit(1.0) + sbb) / (X.lit(1.0) - sbb)))
 
     stages += [
         {"__psi": s_psi},
@@ -2502,10 +1670,10 @@ def _lonlat_to_somerc_fn(crs: str) -> "StagedTransform":
         {"__sbb": s_sbb},
         {"__out_x": out_x, "__out_y": out_y},
     ]
-    return StagedTransform(stages)
+    return staged(stages)
 
 
-def _somerc_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _somerc_to_lonlat_fn(crs: str) -> Transform:
     """E/N -> lon/lat: spherical Mercator inverse, un-rotate, then the
     fixed-count isometric->geodetic solve; a Bessel->WGS84 datum hop
     when the CRS carries a towgs84."""
@@ -2513,42 +1681,42 @@ def _somerc_to_lonlat_fn(crs: str) -> "StagedTransform":
     e, es, alpha = c["e"], c["es"], c["alpha"]
 
     def s_lbar(env):
-        return (env["__in_x"] - F.lit(c["fe"])) / F.lit(c["big_r"])
+        return (env["__in_x"] - X.lit(c["fe"])) / X.lit(c["big_r"])
 
     def s_bbar(env):
-        return (F.lit(2.0) * F.atan(F.exp(
-            (env["__in_y"] - F.lit(c["fn"])) / F.lit(c["big_r"])))
-            - F.lit(math.pi / 2.0))
+        return (X.lit(2.0) * X.atan(X.exp(
+            (env["__in_y"] - X.lit(c["fn"])) / X.lit(c["big_r"])))
+            - X.lit(math.pi / 2.0))
 
     def s_b(env):
-        return F.asin(F.lit(c["cb0"]) * F.sin(env["__bb"])
-                      + F.lit(c["sb0"]) * F.cos(env["__bb"])
-                      * F.cos(env["__lb"]))
+        return X.asin(X.lit(c["cb0"]) * X.sin(env["__bb"])
+                      + X.lit(c["sb0"]) * X.cos(env["__bb"])
+                      * X.cos(env["__lb"]))
 
     def s_lam(env):
-        return F.lit(c["lam0"]) + F.atan2(
-            F.cos(env["__bb"]) * F.sin(env["__lb"]),
-            F.lit(c["cb0"]) * F.cos(env["__bb"]) * F.cos(env["__lb"])
-            - F.lit(c["sb0"]) * F.sin(env["__bb"])) / F.lit(alpha)
+        return X.lit(c["lam0"]) + X.atan2(
+            X.cos(env["__bb"]) * X.sin(env["__lb"]),
+            X.lit(c["cb0"]) * X.cos(env["__bb"]) * X.cos(env["__lb"])
+            - X.lit(c["sb0"]) * X.sin(env["__bb"])) / X.lit(alpha)
 
     def s_psit(env):
-        return (F.log(F.tan(F.lit(math.pi / 4.0) + env["__b"]
-                            / F.lit(2.0)))
-                - F.lit(c["k"])) / F.lit(alpha)
+        return (X.log(X.tan(X.lit(math.pi / 4.0) + env["__b"]
+                            / X.lit(2.0)))
+                - X.lit(c["k"])) / X.lit(alpha)
 
     def s_phi0(env):
-        return (F.lit(2.0) * F.atan(F.exp(env["__psit"]))
-                - F.lit(math.pi / 2.0))
+        return (X.lit(2.0) * X.atan(X.exp(env["__psit"]))
+                - X.lit(math.pi / 2.0))
 
     def step(env):
         phi = env["__phi"]
-        sphi = F.sin(phi)
-        psii = (F.log(F.tan(phi / F.lit(2.0) + F.lit(math.pi / 4.0)))
-                - F.lit(e / 2.0)
-                * F.log((F.lit(1.0) + F.lit(e) * sphi)
-                        / (F.lit(1.0) - F.lit(e) * sphi)))
-        return phi - (psii - env["__psit"]) * F.cos(phi) \
-            * (F.lit(1.0) - F.lit(es) * sphi * sphi) / F.lit(1.0 - es)
+        sphi = X.sin(phi)
+        psii = (X.log(X.tan(phi / X.lit(2.0) + X.lit(math.pi / 4.0)))
+                - X.lit(e / 2.0)
+                * X.log((X.lit(1.0) + X.lit(e) * sphi)
+                        / (X.lit(1.0) - X.lit(e) * sphi)))
+        return phi - (psii - env["__psit"]) * X.cos(phi) \
+            * (X.lit(1.0) - X.lit(es) * sphi * sphi) / X.lit(1.0 - es)
 
     stages: list[dict] = [
         {"__lb": s_lbar, "__bb": s_bbar},
@@ -2558,64 +1726,11 @@ def _somerc_to_lonlat_fn(crs: str) -> "StagedTransform":
     ]
     stages += [{"__phi": step} for _ in range(_SOMERC_ITERS)]
     if c["towgs84"] is None:
-        stages.append({"__out_x": lambda env: F.degrees(env["__lam"]),
-                       "__out_y": lambda env: F.degrees(env["__phi"])})
-        return StagedTransform(stages)
+        stages.append({"__out_x": lambda env: X.degrees(env["__lam"]),
+                       "__out_y": lambda env: X.degrees(env["__phi"])})
+        return staged(stages)
     stages += _datum_hop_inv_stages(c["towgs84"], c["a"], es)
-    return StagedTransform(stages)
-
-
-def somerc_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                            src: str = "tgt") -> str:
-    """The SAME Swiss-Mercator inverse as a chain of CTEs over ``src``
-    (for DuckDB oracles) — identical arithmetic and iteration count to
-    :func:`_somerc_to_lonlat_fn`, incl. the Bessel->WGS84 Helmert hop
-    for the EPSG codes.  Emits CTEs ``sw1..`` and finally
-    ``somerc_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _somerc_consts(crs)
-    e, es, alpha = c["e"], c["es"], c["alpha"]
-    iters = "".join(f"""), sw{5 + k} AS (
-            SELECT * EXCLUDE (__phi), (__phi - ((ln(tan(__phi / 2.0
-                + {math.pi / 4.0!r})) - {e / 2.0!r}
-                * ln((1.0 + {e!r} * sin(__phi))
-                     / (1.0 - {e!r} * sin(__phi)))) - __psit)
-                * cos(__phi) * (1.0 - {es!r} * sin(__phi) * sin(__phi))
-                / {1.0 - es!r}) AS __phi
-            FROM sw{4 + k}""" for k in range(_SOMERC_ITERS))
-    n_last = 4 + _SOMERC_ITERS
-    head = f"""sw1 AS (
-            SELECT *, ((({x_expr}) - {c['fe']!r}) / {c['big_r']!r})
-                      AS __lb,
-                   (2.0 * atan(exp(((({y_expr}) - {c['fn']!r})
-                       / {c['big_r']!r}))) - {math.pi / 2.0!r}) AS __bb
-            FROM {src}
-        ), sw2 AS (
-            SELECT *, asin({c['cb0']!r} * sin(__bb)
-                           + {c['sb0']!r} * cos(__bb) * cos(__lb))
-                      AS __b
-            FROM sw1
-        ), sw3 AS (
-            SELECT *, ({c['lam0']!r} + atan2(cos(__bb) * sin(__lb),
-                           {c['cb0']!r} * cos(__bb) * cos(__lb)
-                           - {c['sb0']!r} * sin(__bb)) / {alpha!r})
-                      AS __lam,
-                   ((ln(tan({math.pi / 4.0!r} + __b / 2.0))
-                     - {c['k']!r}) / {alpha!r}) AS __psit
-            FROM sw2
-        ), sw4 AS (
-            SELECT *, (2.0 * atan(exp(__psit)) - {math.pi / 2.0!r})
-                      AS __phi
-            FROM sw3
-        {iters})"""
-    if c["towgs84"] is None:
-        return head + f""", somerc_ll AS (
-            SELECT * EXCLUDE (__lb, __bb, __b, __lam, __psit, __phi),
-                   degrees(__lam) AS lon, degrees(__phi) AS lat
-            FROM sw{n_last}
-        )"""
-    return head + datum_hop_inv_sql_ctes(
-        "sw", n_last, c["towgs84"], c["a"], es, "somerc_ll",
-        "__lb, __bb, __b, __lam, __psit, __phi")
+    return staged(stages)
 
 
 # ---- Krovak (+proj=krovak, S-JTSK) ------------------------------------
@@ -2677,57 +1792,48 @@ def _krovak_consts(crs: str) -> dict:
     )
 
 
-def _lonlat_to_krovak_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_krovak_fn(crs: str) -> Transform:
     """lon/lat (deg; WGS84 when the CRS carries a towgs84) -> Krovak
     E/N (EPSG 9819 forward, staged)."""
     c = _krovak_consts(crs)
-    e, es, b = c["e"], c["es"], c["b"]
+    e, b = c["e"], c["b"]
 
-    stages: list[dict] = [
-        {"__lamw": lambda env: F.radians(env["__in_x"]),
-         "__phiw": lambda env: F.radians(env["__in_y"])},
-    ]
-    if c["helm_fwd"] is not None:
-        stages += _datum_hop_fwd_stages(
-            c["helm_fwd"], c["a"], es, c["b_ell"], c["ep2"])
-    else:
-        stages.append({"__lam": lambda env: env["__lamw"],
-                       "__phi": lambda env: env["__phiw"]})
+    stages = _wgs84_to_local(c)
 
     def s_u(env):
-        s = F.sin(env["__phi"])
-        return F.lit(2.0) * (F.atan(
-            F.lit(c["t0"])
-            * F.pow(F.tan(env["__phi"] / F.lit(2.0)
-                          + F.lit(math.pi / 4.0)), F.lit(b))
-            / F.pow((F.lit(1.0) + F.lit(e) * s)
-                    / (F.lit(1.0) - F.lit(e) * s), F.lit(e * b / 2.0)))
-            - F.lit(math.pi / 4.0))
+        s = X.sin(env["__phi"])
+        return X.lit(2.0) * (X.atan(
+            X.lit(c["t0"])
+            * X.pow(X.tan(env["__phi"] / X.lit(2.0)
+                          + X.lit(math.pi / 4.0)), X.lit(b))
+            / X.pow((X.lit(1.0) + X.lit(e) * s)
+                    / (X.lit(1.0) - X.lit(e) * s), X.lit(e * b / 2.0)))
+            - X.lit(math.pi / 4.0))
 
     def s_v(env):
-        return F.lit(b) * (F.lit(c["lam0"]) - env["__lam"])
+        return X.lit(b) * (X.lit(c["lam0"]) - env["__lam"])
 
     def s_t(env):
-        return F.asin(F.lit(c["ca"]) * F.sin(env["__U"])
-                      + F.lit(c["sa"]) * F.cos(env["__U"])
-                      * F.cos(env["__V"]))
+        return X.asin(X.lit(c["ca"]) * X.sin(env["__U"])
+                      + X.lit(c["sa"]) * X.cos(env["__U"])
+                      * X.cos(env["__V"]))
 
     def s_d(env):
-        return F.asin(F.cos(env["__U"]) * F.sin(env["__V"])
-                      / F.cos(env["__T"]))
+        return X.asin(X.cos(env["__U"]) * X.sin(env["__V"])
+                      / X.cos(env["__T"]))
 
     def s_r(env):
-        return (F.lit(c["r0"]) * F.lit(c["tp"] ** c["n"])
-                / F.pow(F.tan(env["__T"] / F.lit(2.0)
-                              + F.lit(math.pi / 4.0)), F.lit(c["n"])))
+        return (X.lit(c["r0"]) * X.lit(c["tp"] ** c["n"])
+                / X.pow(X.tan(env["__T"] / X.lit(2.0)
+                              + X.lit(math.pi / 4.0)), X.lit(c["n"])))
 
     def out_x(env):  # easting = sgn * westing + x_0
-        return (F.lit(c["sgn"]) * env["__r"]
-                * F.sin(F.lit(c["n"]) * env["__D"]) + F.lit(c["x0"]))
+        return (X.lit(c["sgn"]) * env["__r"]
+                * X.sin(X.lit(c["n"]) * env["__D"]) + X.lit(c["x0"]))
 
     def out_y(env):  # northing = sgn * southing + y_0
-        return (F.lit(c["sgn"]) * env["__r"]
-                * F.cos(F.lit(c["n"]) * env["__D"]) + F.lit(c["y0"]))
+        return (X.lit(c["sgn"]) * env["__r"]
+                * X.cos(X.lit(c["n"]) * env["__D"]) + X.lit(c["y0"]))
 
     stages += [
         {"__U": s_u, "__V": s_v},
@@ -2735,10 +1841,10 @@ def _lonlat_to_krovak_fn(crs: str) -> "StagedTransform":
         {"__D": s_d, "__r": s_r},
         {"__out_x": out_x, "__out_y": out_y},
     ]
-    return StagedTransform(stages)
+    return staged(stages)
 
 
-def _krovak_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _krovak_to_lonlat_fn(crs: str) -> Transform:
     """Krovak E/N -> lon/lat (EPSG 9819 inverse): un-cone, un-rotate,
     then the fixed-count conformal->geodetic solve; a Bessel->WGS84
     hop when the CRS carries a towgs84."""
@@ -2746,45 +1852,45 @@ def _krovak_to_lonlat_fn(crs: str) -> "StagedTransform":
     e, es, b = c["e"], c["es"], c["b"]
 
     def s_xs(env):  # southing
-        return F.lit(c["sgn"]) * (env["__in_y"] - F.lit(c["y0"]))
+        return X.lit(c["sgn"]) * (env["__in_y"] - X.lit(c["y0"]))
 
     def s_yw(env):  # westing
-        return F.lit(c["sgn"]) * (env["__in_x"] - F.lit(c["x0"]))
+        return X.lit(c["sgn"]) * (env["__in_x"] - X.lit(c["x0"]))
 
     def s_r(env):
-        return F.sqrt(env["__sth"] * env["__sth"]
+        return X.sqrt(env["__sth"] * env["__sth"]
                       + env["__wst"] * env["__wst"])
 
     def s_d(env):
-        return F.atan2(env["__wst"], env["__sth"]) / F.lit(c["n"])
+        return X.atan2(env["__wst"], env["__sth"]) / X.lit(c["n"])
 
     def s_t(env):
-        return F.lit(2.0) * (F.atan(
-            F.pow(F.lit(c["r0"]) / env["__r"], F.lit(1.0 / c["n"]))
-            * F.lit(c["tp"])) - F.lit(math.pi / 4.0))
+        return X.lit(2.0) * (X.atan(
+            X.pow(X.lit(c["r0"]) / env["__r"], X.lit(1.0 / c["n"]))
+            * X.lit(c["tp"])) - X.lit(math.pi / 4.0))
 
     def s_u(env):
-        return F.asin(F.lit(c["ca"]) * F.sin(env["__T"])
-                      - F.lit(c["sa"]) * F.cos(env["__T"])
-                      * F.cos(env["__D"]))
+        return X.asin(X.lit(c["ca"]) * X.sin(env["__T"])
+                      - X.lit(c["sa"]) * X.cos(env["__T"])
+                      * X.cos(env["__D"]))
 
     def s_lam(env):
-        return F.lit(c["lam0"]) - F.asin(
-            F.cos(env["__T"]) * F.sin(env["__D"])
-            / F.cos(env["__U"])) / F.lit(b)
+        return X.lit(c["lam0"]) - X.asin(
+            X.cos(env["__T"]) * X.sin(env["__D"])
+            / X.cos(env["__U"])) / X.lit(b)
 
     def s_phi0(env):
         return env["__U"]
 
     def step(env):
-        s = F.sin(env["__phi"])
-        return F.lit(2.0) * (F.atan(
-            F.lit(c["t0"] ** (-1.0 / b))
-            * F.pow(F.tan(env["__U"] / F.lit(2.0)
-                          + F.lit(math.pi / 4.0)), F.lit(1.0 / b))
-            * F.pow((F.lit(1.0) + F.lit(e) * s)
-                    / (F.lit(1.0) - F.lit(e) * s), F.lit(e / 2.0)))
-            - F.lit(math.pi / 4.0))
+        s = X.sin(env["__phi"])
+        return X.lit(2.0) * (X.atan(
+            X.lit(c["t0"] ** (-1.0 / b))
+            * X.pow(X.tan(env["__U"] / X.lit(2.0)
+                          + X.lit(math.pi / 4.0)), X.lit(1.0 / b))
+            * X.pow((X.lit(1.0) + X.lit(e) * s)
+                    / (X.lit(1.0) - X.lit(e) * s), X.lit(e / 2.0)))
+            - X.lit(math.pi / 4.0))
 
     stages: list[dict] = [
         {"__sth": s_xs, "__wst": s_yw},
@@ -2795,65 +1901,11 @@ def _krovak_to_lonlat_fn(crs: str) -> "StagedTransform":
     ]
     stages += [{"__phi": step} for _ in range(_KROVAK_ITERS)]
     if c["towgs84"] is None:
-        stages.append({"__out_x": lambda env: F.degrees(env["__lam"]),
-                       "__out_y": lambda env: F.degrees(env["__phi"])})
-        return StagedTransform(stages)
+        stages.append({"__out_x": lambda env: X.degrees(env["__lam"]),
+                       "__out_y": lambda env: X.degrees(env["__phi"])})
+        return staged(stages)
     stages += _datum_hop_inv_stages(c["towgs84"], c["a"], es)
-    return StagedTransform(stages)
-
-
-def krovak_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                            src: str = "tgt") -> str:
-    """The SAME Krovak inverse as a chain of CTEs over ``src`` (for
-    DuckDB oracles) — identical arithmetic and iteration count to
-    :func:`_krovak_to_lonlat_fn`, incl. the datum hop.  Emits CTEs
-    ``kv1..`` and finally ``krovak_ll`` = ``src`` columns +
-    ``lon``/``lat``."""
-    c = _krovak_consts(crs)
-    e, es, b = c["e"], c["es"], c["b"]
-    iters = "".join(f"""), kv{6 + k} AS (
-            SELECT * EXCLUDE (__phi), (2.0 * (atan({c['t0'] ** (-1.0 / b)!r}
-                * pow(tan(__U / 2.0 + {math.pi / 4.0!r}), {1.0 / b!r})
-                * pow((1.0 + {e!r} * sin(__phi))
-                      / (1.0 - {e!r} * sin(__phi)), {e / 2.0!r}))
-                - {math.pi / 4.0!r})) AS __phi
-            FROM kv{5 + k}""" for k in range(_KROVAK_ITERS))
-    n_last = 5 + _KROVAK_ITERS
-    head = f"""kv1 AS (
-            SELECT *, ({c['sgn']!r} * (({y_expr}) - {c['y0']!r}))
-                      AS __sth,
-                      ({c['sgn']!r} * (({x_expr}) - {c['x0']!r}))
-                      AS __wst
-            FROM {src}
-        ), kv2 AS (
-            SELECT *, sqrt(__sth * __sth + __wst * __wst) AS __r FROM kv1
-        ), kv3 AS (
-            SELECT *, (atan2(__wst, __sth) / {c['n']!r}) AS __D,
-                   (2.0 * (atan(pow({c['r0']!r} / __r, {1.0 / c['n']!r})
-                                * {c['tp']!r}) - {math.pi / 4.0!r}))
-                   AS __T
-            FROM kv2
-        ), kv4 AS (
-            SELECT *, asin({c['ca']!r} * sin(__T)
-                           - {c['sa']!r} * cos(__T) * cos(__D)) AS __U
-            FROM kv3
-        ), kv5 AS (
-            SELECT *, ({c['lam0']!r} - asin(cos(__T) * sin(__D)
-                                            / cos(__U)) / {b!r})
-                      AS __lam,
-                   __U AS __phi
-            FROM kv4
-        {iters})"""
-    if c["towgs84"] is None:
-        return head + f""", krovak_ll AS (
-            SELECT * EXCLUDE (__sth, __wst, __r, __D, __T, __U, __lam,
-                              __phi),
-                   degrees(__lam) AS lon, degrees(__phi) AS lat
-            FROM kv{n_last}
-        )"""
-    return head + datum_hop_inv_sql_ctes(
-        "kv", n_last, c["towgs84"], c["a"], es, "krovak_ll",
-        "__sth, __wst, __r, __D, __T, __U, __lam, __phi")
+    return staged(stages)
 
 
 # ---- Equal Earth (+proj=eqearth, EPSG:8857) ---------------------------
@@ -2903,140 +1955,89 @@ def _eqearth_consts(crs: str) -> dict:
 
 
 def _eqe_h(t):
-    """h(theta) as a Column expression (op order shared with the SQL
-    twin)."""
-    return (t * (F.lit(_EQE_A1) + F.lit(_EQE_A2) * t * t)
-            + F.pow(t, F.lit(7.0)) * (F.lit(_EQE_A3)
-                                      + F.lit(_EQE_A4) * t * t))
+    """h(theta), the published Equal Earth polynomial."""
+    return (t * (X.lit(_EQE_A1) + X.lit(_EQE_A2) * t * t)
+            + X.pow(t, X.lit(7.0)) * (X.lit(_EQE_A3)
+                                      + X.lit(_EQE_A4) * t * t))
 
 
 def _eqe_hp(t):
-    return (F.lit(_EQE_A1) + F.lit(3.0 * _EQE_A2) * t * t
-            + F.pow(t, F.lit(6.0)) * (F.lit(7.0 * _EQE_A3)
-                                      + F.lit(9.0 * _EQE_A4) * t * t))
+    return (X.lit(_EQE_A1) + X.lit(3.0 * _EQE_A2) * t * t
+            + X.pow(t, X.lit(6.0)) * (X.lit(7.0 * _EQE_A3)
+                                      + X.lit(9.0 * _EQE_A4) * t * t))
 
 
-def _lonlat_to_eqearth_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_eqearth_fn(crs: str) -> Transform:
     """lon/lat (deg) -> Equal Earth E/N (staged)."""
     c = _eqearth_consts(crs)
     e, es = c["e"], c["es"]
 
     def s_beta(env):
-        phi = F.radians(env["__in_y"])
+        phi = X.radians(env["__in_y"])
         if c["sphere"]:
             return phi
-        s = F.sin(phi)
-        q = F.lit(1.0 - es) * (
-            s / (F.lit(1.0) - F.lit(es) * s * s)
-            - F.lit(1.0 / (2.0 * e))
-            * F.log((F.lit(1.0) - F.lit(e) * s)
-                    / (F.lit(1.0) + F.lit(e) * s)))
-        return F.asin(q / F.lit(c["qp"]))
+        s = X.sin(phi)
+        q = X.lit(1.0 - es) * (
+            s / (X.lit(1.0) - X.lit(es) * s * s)
+            - X.lit(1.0 / (2.0 * e))
+            * X.log((X.lit(1.0) - X.lit(e) * s)
+                    / (X.lit(1.0) + X.lit(e) * s)))
+        return X.asin(q / X.lit(c["qp"]))
 
     def s_th(env):
-        return F.asin(F.lit(_EQE_M) * F.sin(env["__beta"]))
+        return X.asin(X.lit(_EQE_M) * X.sin(env["__beta"]))
 
     def out_x(env):
         th = env["__th"]
-        return (F.lit(c["fe"]) + F.lit(c["rq"])
-                * F.radians(env["__in_x"] - F.lit(c["lon0"]))
-                * F.cos(th) / (F.lit(_EQE_M) * _eqe_hp(th)))
+        return (X.lit(c["fe"]) + X.lit(c["rq"])
+                * X.radians(env["__in_x"] - X.lit(c["lon0"]))
+                * X.cos(th) / (X.lit(_EQE_M) * _eqe_hp(th)))
 
     def out_y(env):
-        return F.lit(c["fn"]) + F.lit(c["rq"]) * _eqe_h(env["__th"])
+        return X.lit(c["fn"]) + X.lit(c["rq"]) * _eqe_h(env["__th"])
 
-    return StagedTransform([
+    return staged([
         {"__beta": s_beta},
         {"__th": s_th},
         {"__out_x": out_x, "__out_y": out_y},
     ])
 
 
-def _eqearth_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _eqearth_to_lonlat_fn(crs: str) -> Transform:
     """Equal Earth E/N -> lon/lat: fixed-count Newton theta solve,
     then the authalic->geodetic series."""
     c = _eqearth_consts(crs)
 
     def s_yn(env):
-        return (env["__in_y"] - F.lit(c["fn"])) / F.lit(c["rq"])
+        return (env["__in_y"] - X.lit(c["fn"])) / X.lit(c["rq"])
 
     def s_th0(env):
-        return env["__yn"] / F.lit(_EQE_A1)
+        return env["__yn"] / X.lit(_EQE_A1)
 
     def step(env):
         th = env["__th"]
         return th - (_eqe_h(th) - env["__yn"]) / _eqe_hp(th)
 
     def s_beta(env):
-        return F.asin(F.sin(env["__th"]) / F.lit(_EQE_M))
+        return X.asin(X.sin(env["__th"]) / X.lit(_EQE_M))
 
     def out_x(env):
         th = env["__th"]
-        return F.lit(c["lon0"]) + F.degrees(
-            (env["__in_x"] - F.lit(c["fe"])) * _eqe_hp(th)
-            * F.lit(_EQE_M) / (F.lit(c["rq"]) * F.cos(th)))
+        return X.lit(c["lon0"]) + X.degrees(
+            (env["__in_x"] - X.lit(c["fe"])) * _eqe_hp(th)
+            * X.lit(_EQE_M) / (X.lit(c["rq"]) * X.cos(th)))
 
     def out_y(env):
         b = env["__beta"]
         if c["sphere"]:
-            return F.degrees(b)
-        return F.degrees(
-            b + F.lit(c["c2"]) * F.sin(F.lit(2.0) * b)
-            + F.lit(c["c4"]) * F.sin(F.lit(4.0) * b)
-            + F.lit(c["c6"]) * F.sin(F.lit(6.0) * b))
+            return X.degrees(b)
+        return X.degrees(_lat_series(b, (c["c2"], c["c4"], c["c6"])))
 
     stages: list[dict] = [{"__yn": s_yn}, {"__th": s_th0}]
     stages += [{"__th": step} for _ in range(_EQE_ITERS)]
     stages += [{"__beta": s_beta},
                {"__out_x": out_x, "__out_y": out_y}]
-    return StagedTransform(stages)
-
-
-def eqearth_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                             src: str = "tgt") -> str:
-    """The SAME Equal Earth inverse as a chain of CTEs over ``src``
-    (for DuckDB oracles) — identical arithmetic and iteration count
-    to :func:`_eqearth_to_lonlat_fn`.  Emits CTEs ``ee1..`` and
-    finally ``eqearth_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _eqearth_consts(crs)
-
-    def h(t):
-        return (f"({t} * ({_EQE_A1!r} + {_EQE_A2!r} * {t} * {t}) "
-                f"+ pow({t}, 7.0) * ({_EQE_A3!r} + {_EQE_A4!r} "
-                f"* {t} * {t}))")
-
-    def hp(t):
-        return (f"({_EQE_A1!r} + {3.0 * _EQE_A2!r} * {t} * {t} "
-                f"+ pow({t}, 6.0) * ({7.0 * _EQE_A3!r} "
-                f"+ {9.0 * _EQE_A4!r} * {t} * {t}))")
-
-    iters = "".join(f"""), ee{3 + k} AS (
-            SELECT * EXCLUDE (__th),
-                   (__th - ({h('__th')} - __yn) / {hp('__th')}) AS __th
-            FROM ee{2 + k}""" for k in range(_EQE_ITERS))
-    n_last = 2 + _EQE_ITERS
-    lat_sql = ("degrees(__beta)" if c["sphere"] else
-               f"""degrees(__beta + {c['c2']!r} * sin(2.0 * __beta)
-                   + {c['c4']!r} * sin(4.0 * __beta)
-                   + {c['c6']!r} * sin(6.0 * __beta))""")
-    return f"""ee1 AS (
-            SELECT *, ((({y_expr}) - {c['fn']!r}) / {c['rq']!r})
-                      AS __yn,
-                   (({x_expr}) - {c['fe']!r}) AS __xe
-            FROM {src}
-        ), ee2 AS (
-            SELECT *, (__yn / {_EQE_A1!r}) AS __th FROM ee1
-        {iters}), ee{n_last + 1} AS (
-            SELECT *, asin(sin(__th) / {_EQE_M!r}) AS __beta
-            FROM ee{n_last}
-        ), eqearth_ll AS (
-            SELECT * EXCLUDE (__yn, __xe, __th, __beta),
-                   ({c['lon0']!r} + degrees(__xe * {hp('__th')}
-                       * {_EQE_M!r} / ({c['rq']!r} * cos(__th))))
-                   AS lon,
-                   {lat_sql} AS lat
-            FROM ee{n_last + 1}
-        )"""
+    return staged(stages)
 
 
 # ---- Cassini-Soldner (+proj=cass) -------------------------------------
@@ -3072,61 +2073,56 @@ def _cass_consts(crs: str) -> dict:
     e1 = (1.0 - math.sqrt(1.0 - es)) / (1.0 + math.sqrt(1.0 - es))
     return dict(
         a=a, es=es, fe=fe, fn=fn, lam0=math.radians(lon0), lon0=lon0,
-        m0=m0, m_c0=m_c0, m_c2=m_c2, m_c4=m_c4, m_c6=m_c6,
+        m0=m0, c0=m_c0, c2=m_c2, c4=m_c4, c6=m_c6,
         f1_2=3.0 * e1 / 2.0 - 27.0 * e1 ** 3 / 32.0,
         f1_4=21.0 * e1 * e1 / 16.0 - 55.0 * e1 ** 4 / 32.0,
         f1_6=151.0 * e1 ** 3 / 96.0,
     )
 
 
-def _lonlat_to_cass_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_cass_fn(crs: str) -> Transform:
     """lon/lat (deg) -> Cassini-Soldner E/N (EPSG 9806 forward)."""
     c = _cass_consts(crs)
     a, es = c["a"], c["es"]
 
     def s_trig(env):
-        return F.radians(env["__in_y"])
+        return X.radians(env["__in_y"])
 
     def s_t(env):
-        t = F.tan(env["__phi"])
+        t = X.tan(env["__phi"])
         return t * t
 
     def s_aa(env):
-        return ((F.radians(env["__in_x"]) - F.lit(c["lam0"]))
-                * F.cos(env["__phi"]))
+        return ((X.radians(env["__in_x"]) - X.lit(c["lam0"]))
+                * X.cos(env["__phi"]))
 
     def s_c(env):
-        cp = F.cos(env["__phi"])
-        return F.lit(es) * cp * cp / F.lit(1.0 - es)
+        cp = X.cos(env["__phi"])
+        return X.lit(es) * cp * cp / X.lit(1.0 - es)
 
     def s_nu(env):
-        s = F.sin(env["__phi"])
-        return F.lit(a) / F.sqrt(F.lit(1.0) - F.lit(es) * s * s)
+        s = X.sin(env["__phi"])
+        return X.lit(a) / X.sqrt(X.lit(1.0) - X.lit(es) * s * s)
 
     def s_m(env):
-        phi = env["__phi"]
-        return F.lit(a) * (
-            F.lit(c["m_c0"]) * phi
-            - F.lit(c["m_c2"]) * F.sin(F.lit(2.0) * phi)
-            + F.lit(c["m_c4"]) * F.sin(F.lit(4.0) * phi)
-            - F.lit(c["m_c6"]) * F.sin(F.lit(6.0) * phi))
+        return _meridian_arc(env["__phi"], c)
 
     def out_x(env):
         aa, t = env["__A"], env["__T"]
-        return F.lit(c["fe"]) + env["__nu"] * (
-            aa - t * F.pow(aa, F.lit(3.0)) / F.lit(6.0)
-            - (F.lit(8.0) - t + F.lit(8.0) * env["__C"]) * t
-            * F.pow(aa, F.lit(5.0)) / F.lit(120.0))
+        return X.lit(c["fe"]) + env["__nu"] * (
+            aa - t * X.pow(aa, X.lit(3.0)) / X.lit(6.0)
+            - (X.lit(8.0) - t + X.lit(8.0) * env["__C"]) * t
+            * X.pow(aa, X.lit(5.0)) / X.lit(120.0))
 
     def out_y(env):
         aa, t = env["__A"], env["__T"]
-        return (F.lit(c["fn"]) + env["__M"] - F.lit(c["m0"])
-                + env["__nu"] * F.tan(env["__phi"]) * (
-                    aa * aa / F.lit(2.0)
-                    + (F.lit(5.0) - t + F.lit(6.0) * env["__C"])
-                    * F.pow(aa, F.lit(4.0)) / F.lit(24.0)))
+        return (X.lit(c["fn"]) + env["__M"] - X.lit(c["m0"])
+                + env["__nu"] * X.tan(env["__phi"]) * (
+                    aa * aa / X.lit(2.0)
+                    + (X.lit(5.0) - t + X.lit(6.0) * env["__C"])
+                    * X.pow(aa, X.lit(4.0)) / X.lit(24.0)))
 
-    return StagedTransform([
+    return staged([
         {"__phi": s_trig},
         {"__T": s_t, "__A": s_aa, "__C": s_c, "__nu": s_nu,
          "__M": s_m},
@@ -3134,88 +2130,59 @@ def _lonlat_to_cass_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _cass_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _cass_to_lonlat_fn(crs: str) -> Transform:
     """Cassini-Soldner E/N -> lon/lat (EPSG 9806 inverse: rectifying
     latitude series, then the transverse D-expansion)."""
     c = _cass_consts(crs)
     a, es = c["a"], c["es"]
 
     def s_mu(env):
-        return ((F.lit(c["m0"]) + (env["__in_y"] - F.lit(c["fn"])))
-                / F.lit(a * c["m_c0"]))
+        return ((X.lit(c["m0"]) + (env["__in_y"] - X.lit(c["fn"])))
+                / X.lit(a * c["c0"]))
 
     def s_phi1(env):
-        mu = env["__mu"]
-        return (mu + F.lit(c["f1_2"]) * F.sin(F.lit(2.0) * mu)
-                + F.lit(c["f1_4"]) * F.sin(F.lit(4.0) * mu)
-                + F.lit(c["f1_6"]) * F.sin(F.lit(6.0) * mu))
+        return _lat_series(env["__mu"], (c["f1_2"], c["f1_4"], c["f1_6"]))
 
     def s_t1(env):
-        t = F.tan(env["__phi1"])
+        t = X.tan(env["__phi1"])
         return t * t
 
     def s_nu1(env):
-        s = F.sin(env["__phi1"])
-        return F.lit(a) / F.sqrt(F.lit(1.0) - F.lit(es) * s * s)
+        s = X.sin(env["__phi1"])
+        return X.lit(a) / X.sqrt(X.lit(1.0) - X.lit(es) * s * s)
 
     def s_rho1(env):
-        s = F.sin(env["__phi1"])
-        return (F.lit(a * (1.0 - es))
-                / F.pow(F.lit(1.0) - F.lit(es) * s * s, F.lit(1.5)))
+        s = X.sin(env["__phi1"])
+        return (X.lit(a * (1.0 - es))
+                / X.pow(X.lit(1.0) - X.lit(es) * s * s, X.lit(1.5)))
 
     def s_d(env):
-        return (env["__in_x"] - F.lit(c["fe"])) / env["__nu1"]
+        return (env["__in_x"] - X.lit(c["fe"])) / env["__nu1"]
 
     def out_y(env):
         d, t1 = env["__D"], env["__T1"]
-        return F.degrees(
-            env["__phi1"] - (env["__nu1"] * F.tan(env["__phi1"])
+        return X.degrees(
+            env["__phi1"] - (env["__nu1"] * X.tan(env["__phi1"])
                              / env["__rho1"])
-            * (d * d / F.lit(2.0) - (F.lit(1.0) + F.lit(3.0) * t1)
-               * F.pow(d, F.lit(4.0)) / F.lit(24.0)))
+            * (d * d / X.lit(2.0) - (X.lit(1.0) + X.lit(3.0) * t1)
+               * X.pow(d, X.lit(4.0)) / X.lit(24.0)))
 
     def out_x(env):
         d, t1 = env["__D"], env["__T1"]
-        return F.degrees(
-            F.lit(c["lam0"])
-            + (d - t1 * F.pow(d, F.lit(3.0)) / F.lit(3.0)
-               + (F.lit(1.0) + F.lit(3.0) * t1) * t1
-               * F.pow(d, F.lit(5.0)) / F.lit(15.0))
-            / F.cos(env["__phi1"]))
+        return X.degrees(
+            X.lit(c["lam0"])
+            + (d - t1 * X.pow(d, X.lit(3.0)) / X.lit(3.0)
+               + (X.lit(1.0) + X.lit(3.0) * t1) * t1
+               * X.pow(d, X.lit(5.0)) / X.lit(15.0))
+            / X.cos(env["__phi1"]))
 
-    return StagedTransform([
+    return staged([
         {"__mu": s_mu},
         {"__phi1": s_phi1},
         {"__T1": s_t1, "__nu1": s_nu1, "__rho1": s_rho1},
         {"__D": s_d},
         {"__out_x": out_x, "__out_y": out_y},
     ])
-
-
-def cass_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME Cassini-Soldner inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_cass_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _cass_consts(crs)
-    a, es = c["a"], c["es"]
-    mu = f"(({c['m0']!r} + (({y_expr}) - {c['fn']!r})) " \
-         f"/ {a * c['m_c0']!r})"
-    phi1 = f"({mu} + {c['f1_2']!r} * sin(2.0 * {mu}) " \
-           f"+ {c['f1_4']!r} * sin(4.0 * {mu}) " \
-           f"+ {c['f1_6']!r} * sin(6.0 * {mu}))"
-    t1 = f"(tan({phi1}) * tan({phi1}))"
-    nu1 = f"({a!r} / sqrt(1.0 - {es!r} * sin({phi1}) * sin({phi1})))"
-    rho1 = f"({a * (1.0 - es)!r} / pow(1.0 - {es!r} * sin({phi1}) " \
-           f"* sin({phi1}), 1.5))"
-    d = f"((({x_expr}) - {c['fe']!r}) / {nu1})"
-    lat = f"degrees({phi1} - ({nu1} * tan({phi1}) / {rho1}) " \
-          f"* ({d} * {d} / 2.0 - (1.0 + 3.0 * {t1}) " \
-          f"* pow({d}, 4.0) / 24.0))"
-    lon = f"degrees({c['lam0']!r} + ({d} - {t1} * pow({d}, 3.0) " \
-          f"/ 3.0 + (1.0 + 3.0 * {t1}) * {t1} * pow({d}, 5.0) " \
-          f"/ 15.0) / cos({phi1}))"
-    return lon, lat
 
 
 # ---- American Polyconic (+proj=poly) ----------------------------------
@@ -3262,72 +2229,64 @@ def _poly_consts(crs: str) -> dict:
     )
 
 
-def _poly_m_col(phi, c):
-    return F.lit(c["a"]) * (
-        F.lit(c["c0"]) * phi
-        - F.lit(c["c2"]) * F.sin(F.lit(2.0) * phi)
-        + F.lit(c["c4"]) * F.sin(F.lit(4.0) * phi)
-        - F.lit(c["c6"]) * F.sin(F.lit(6.0) * phi))
+def _meridian_arc(phi: E, c: dict) -> E:
+    """Meridian arc M(phi), Snyder 3-21 (cass and poly constants)."""
+    return X.lit(c["a"]) * (
+        X.lit(c["c0"]) * phi
+        - X.lit(c["c2"]) * X.sin(X.lit(2.0) * phi)
+        + X.lit(c["c4"]) * X.sin(X.lit(4.0) * phi)
+        - X.lit(c["c6"]) * X.sin(X.lit(6.0) * phi))
 
 
-def _lonlat_to_poly_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_poly_fn(crs: str) -> Transform:
     """lon/lat (deg) -> polyconic E/N (Snyder 18-12..15, staged; the
     equator row takes the tangent-cylinder closed form)."""
     c = _poly_consts(crs)
     es = c["es"]
 
-    stages: list[dict] = [
-        {"__lamw": lambda env: F.radians(env["__in_x"]),
-         "__phiw": lambda env: F.radians(env["__in_y"])},
-    ]
-    if c["helm_fwd"] is not None:
-        stages += _datum_hop_fwd_stages(
-            c["helm_fwd"], c["a"], es, c["b_ell"], c["ep2"])
-    else:
-        stages.append({"__lam": lambda env: env["__lamw"],
-                       "__phi": lambda env: env["__phiw"]})
+    stages = _wgs84_to_local(c)
 
     def s_e(env):
-        return (env["__lam"] - F.lit(c["lam0"])) * F.sin(env["__phi"])
+        return (env["__lam"] - X.lit(c["lam0"])) * X.sin(env["__phi"])
 
     def s_ncot(env):
-        s = F.sin(env["__phi"])
-        return (F.lit(c["a"]) / F.sqrt(F.lit(1.0) - F.lit(es) * s * s)
-                / F.tan(env["__phi"]))
+        s = X.sin(env["__phi"])
+        return (X.lit(c["a"]) / X.sqrt(X.lit(1.0) - X.lit(es) * s * s)
+                / X.tan(env["__phi"]))
 
     def out_x(env):
-        return F.lit(c["fe"]) + F.when(
-            F.abs(env["__phi"]) < F.lit(1e-12),
-            F.lit(c["a"]) * (env["__lam"] - F.lit(c["lam0"]))
-        ).otherwise(env["__ncot"] * F.sin(env["__E"]))
+        return X.lit(c["fe"]) + X.when(
+            X.abs(env["__phi"]) < X.lit(1e-12),
+            X.lit(c["a"]) * (env["__lam"] - X.lit(c["lam0"]))
+        ).otherwise(env["__ncot"] * X.sin(env["__E"]))
 
     def out_y(env):
-        return F.lit(c["fn"]) + F.when(
-            F.abs(env["__phi"]) < F.lit(1e-12),
-            F.lit(-c["m0"])
+        return X.lit(c["fn"]) + X.when(
+            X.abs(env["__phi"]) < X.lit(1e-12),
+            X.lit(-c["m0"])
         ).otherwise(
-            _poly_m_col(env["__phi"], c) - F.lit(c["m0"])
-            + env["__ncot"] * (F.lit(1.0) - F.cos(env["__E"])))
+            _meridian_arc(env["__phi"], c) - X.lit(c["m0"])
+            + env["__ncot"] * (X.lit(1.0) - X.cos(env["__E"])))
 
     stages += [
         {"__E": s_e, "__ncot": s_ncot},
         {"__out_x": out_x, "__out_y": out_y},
     ]
-    return StagedTransform(stages)
+    return staged(stages)
 
 
-def _poly_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _poly_to_lonlat_fn(crs: str) -> Transform:
     """Polyconic E/N -> lon/lat (Snyder 18-18 fixed-count Newton on
     the meridian-arc identity)."""
     c = _poly_consts(crs)
     a, es = c["a"], c["es"]
 
     def s_ab(env):
-        return (F.lit(c["m0"]) + (env["__in_y"] - F.lit(c["fn"]))) \
-            / F.lit(a)
+        return (X.lit(c["m0"]) + (env["__in_y"] - X.lit(c["fn"]))) \
+            / X.lit(a)
 
     def s_xa(env):
-        return (env["__in_x"] - F.lit(c["fe"])) / F.lit(a)
+        return (env["__in_x"] - X.lit(c["fe"])) / X.lit(a)
 
     def s_b(env):
         return env["__A"] * env["__A"] + env["__xa"] * env["__xa"]
@@ -3336,49 +2295,49 @@ def _poly_to_lonlat_fn(crs: str) -> "StagedTransform":
         return env["__A"]
 
     def s_s2(env):
-        return F.sin(F.lit(2.0) * env["__phi"])
+        return X.sin(X.lit(2.0) * env["__phi"])
 
     def s_c(env):
-        s = F.sin(env["__phi"])
-        return (F.sqrt(F.lit(1.0) - F.lit(es) * s * s)
-                * F.tan(env["__phi"]))
+        s = X.sin(env["__phi"])
+        return (X.sqrt(X.lit(1.0) - X.lit(es) * s * s)
+                * X.tan(env["__phi"]))
 
     def s_ma(env):
-        return _poly_m_col(env["__phi"], c) / F.lit(a)
+        return _meridian_arc(env["__phi"], c) / X.lit(a)
 
     def s_mp(env):
         phi = env["__phi"]
-        return (F.lit(c["c0"])
-                - F.lit(2.0 * c["c2"]) * F.cos(F.lit(2.0) * phi)
-                + F.lit(4.0 * c["c4"]) * F.cos(F.lit(4.0) * phi)
-                - F.lit(6.0 * c["c6"]) * F.cos(F.lit(6.0) * phi))
+        return (X.lit(c["c0"])
+                - X.lit(2.0 * c["c2"]) * X.cos(X.lit(2.0) * phi)
+                + X.lit(4.0 * c["c4"]) * X.cos(X.lit(4.0) * phi)
+                - X.lit(6.0 * c["c6"]) * X.cos(X.lit(6.0) * phi))
 
     def s_step(env):
         aa, bb = env["__A"], env["__B"]
         cc, ma, mp = env["__C"], env["__Ma"], env["__Mp"]
-        num = (aa * (cc * ma + F.lit(1.0)) - ma
-               - F.lit(0.5) * cc * (ma * ma + bb))
-        den = (F.lit(es) * env["__s2"] * (ma * ma + bb
-                                          - F.lit(2.0) * aa * ma)
-               / (F.lit(4.0) * cc)
-               + (aa - ma) * (cc * mp - F.lit(2.0) / env["__s2"])
+        num = (aa * (cc * ma + X.lit(1.0)) - ma
+               - X.lit(0.5) * cc * (ma * ma + bb))
+        den = (X.lit(es) * env["__s2"] * (ma * ma + bb
+                                          - X.lit(2.0) * aa * ma)
+               / (X.lit(4.0) * cc)
+               + (aa - ma) * (cc * mp - X.lit(2.0) / env["__s2"])
                - mp)
         return env["__phi"] - num / den
 
     def out_y(env):
-        return F.when(F.abs(env["__A"]) < F.lit(1e-12), F.lit(0.0)) \
-            .otherwise(F.degrees(env["__phi"]))
+        return X.when(X.abs(env["__A"]) < X.lit(1e-12), X.lit(0.0)) \
+            .otherwise(X.degrees(env["__phi"]))
 
     def out_x(env):
-        s = F.sin(env["__phi"])
-        lam = F.when(
-            F.abs(env["__A"]) < F.lit(1e-12),
-            F.lit(c["lam0"]) + env["__xa"]
+        s = X.sin(env["__phi"])
+        lam = X.when(
+            X.abs(env["__A"]) < X.lit(1e-12),
+            X.lit(c["lam0"]) + env["__xa"]
         ).otherwise(
-            F.lit(c["lam0"]) + F.asin(
-                env["__xa"] * F.sqrt(F.lit(1.0) - F.lit(es) * s * s)
-                * F.tan(env["__phi"])) / s)
-        return F.degrees(lam)
+            X.lit(c["lam0"]) + X.asin(
+                env["__xa"] * X.sqrt(X.lit(1.0) - X.lit(es) * s * s)
+                * X.tan(env["__phi"])) / s)
+        return X.degrees(lam)
 
     stages: list[dict] = [
         {"__A": s_ab, "__xa": s_xa},
@@ -3390,66 +2349,7 @@ def _poly_to_lonlat_fn(crs: str) -> "StagedTransform":
                        "__Mp": s_mp})
         stages.append({"__phi": s_step})
     stages.append({"__out_x": out_x, "__out_y": out_y})
-    return StagedTransform(stages)
-
-
-def poly_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                          src: str = "tgt") -> str:
-    """The SAME polyconic inverse as a chain of CTEs over ``src``
-    (for DuckDB oracles) — identical arithmetic and iteration count
-    to :func:`_poly_to_lonlat_fn`.  Emits CTEs ``py1..`` and finally
-    ``poly_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _poly_consts(crs)
-    a, es = c["a"], c["es"]
-    m_sql = (f"({a!r} * ({c['c0']!r} * __phi "
-             f"- {c['c2']!r} * sin(2.0 * __phi) "
-             f"+ {c['c4']!r} * sin(4.0 * __phi) "
-             f"- {c['c6']!r} * sin(6.0 * __phi)))")
-    mp_sql = (f"({c['c0']!r} - {2.0 * c['c2']!r} * cos(2.0 * __phi) "
-              f"+ {4.0 * c['c4']!r} * cos(4.0 * __phi) "
-              f"- {6.0 * c['c6']!r} * cos(6.0 * __phi))")
-    iters = "".join(f"""), py{3 + 2 * k} AS (
-            SELECT *, sin(2.0 * __phi) AS __s2,
-                   (sqrt(1.0 - {es!r} * sin(__phi) * sin(__phi))
-                    * tan(__phi)) AS __C,
-                   ({m_sql} / {a!r}) AS __Ma,
-                   {mp_sql} AS __Mp
-            FROM py{2 + 2 * k}
-        ), py{4 + 2 * k} AS (
-            SELECT * EXCLUDE (__phi, __s2, __C, __Ma, __Mp),
-                   (__phi - ((__A * (__C * __Ma + 1.0) - __Ma
-                              - 0.5 * __C * (__Ma * __Ma + __B))
-                             / ({es!r} * __s2 * (__Ma * __Ma + __B
-                                                 - 2.0 * __A * __Ma)
-                                / (4.0 * __C)
-                                + (__A - __Ma) * (__C * __Mp
-                                                  - 2.0 / __s2)
-                                - __Mp))) AS __phi
-            FROM py{3 + 2 * k}""" for k in range(_POLY_ITERS))
-    n_last = 2 + 2 * _POLY_ITERS
-    return f"""py1 AS (
-            SELECT *, (({c['m0']!r} + (({y_expr}) - {c['fn']!r}))
-                       / {a!r}) AS __A,
-                   ((({x_expr}) - {c['fe']!r}) / {a!r}) AS __xa
-            FROM {src}
-        ), py2 AS (
-            SELECT *, (__A * __A + __xa * __xa) AS __B,
-                   __A AS __phi
-            FROM py1
-        {iters}), poly_ll AS (
-            SELECT * EXCLUDE (__A, __xa, __B, __phi),
-                   CASE WHEN abs(__A) < 1e-12
-                        THEN degrees({c['lam0']!r} + __xa)
-                        ELSE degrees({c['lam0']!r}
-                            + asin(__xa * sqrt(1.0 - {es!r}
-                                   * sin(__phi) * sin(__phi))
-                                   * tan(__phi)) / sin(__phi))
-                   END AS lon,
-                   CASE WHEN abs(__A) < 1e-12 THEN 0.0
-                        ELSE degrees(__phi)
-                   END AS lat
-            FROM py{n_last}
-        )"""
+    return staged(stages)
 
 
 # ---- Lambert cylindrical equal-area (EASE-Grid 2.0 and kin) -----------
@@ -3493,57 +2393,40 @@ def _cea_consts(crs: str) -> dict:
                 qp=q_of(1.0), series=series)
 
 
-def _lonlat_to_cea_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_cea_fn(crs: str) -> Transform:
     c = _cea_consts(crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        x = (F.lit(c["fe"])
-             + F.lit(c["a"] * c["k0"]) * F.radians(lon - F.lit(c["lon0"])))
-        s = F.sin(F.radians(lat))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        x = (X.lit(c["fe"])
+             + X.lit(c["a"] * c["k0"]) * X.radians(lon - X.lit(c["lon0"])))
+        s = X.sin(X.radians(lat))
         if c["es"] == 0.0:
-            q = F.lit(2.0) * s
+            q = X.lit(2.0) * s
         else:
             es, e = c["es"], c["e"]
-            q = F.lit(1.0 - es) * (
-                s / (F.lit(1.0) - F.lit(es) * s * s)
-                - F.lit(1.0 / (2.0 * e))
-                * F.log((F.lit(1.0) - F.lit(e) * s)
-                        / (F.lit(1.0) + F.lit(e) * s)))
-        y = F.lit(c["fn"]) + F.lit(c["a"]) * q / F.lit(2.0 * c["k0"])
+            q = X.lit(1.0 - es) * (
+                s / (X.lit(1.0) - X.lit(es) * s * s)
+                - X.lit(1.0 / (2.0 * e))
+                * X.log((X.lit(1.0) - X.lit(e) * s)
+                        / (X.lit(1.0) + X.lit(e) * s)))
+        y = X.lit(c["fn"]) + X.lit(c["a"]) * q / X.lit(2.0 * c["k0"])
         return x, y
 
-    return fwd
+    return single(fwd)
 
 
-def _cea_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _cea_to_lonlat_fn(crs: str) -> Transform:
     c = _cea_consts(crs)
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lon = (F.lit(c["lon0"])
-               + F.degrees((x - F.lit(c["fe"])) / F.lit(c["a"] * c["k0"])))
-        beta = F.asin((y - F.lit(c["fn"]))
-                      * F.lit(2.0 * c["k0"] / c["a"]) / F.lit(c["qp"]))
-        phi = beta
-        for j, cf in enumerate(c["series"], start=1):
-            phi = phi + F.lit(cf) * F.sin(F.lit(2.0 * j) * beta)
-        return lon, F.degrees(phi)
+    def inv(x: E, y: E) -> tuple[E, E]:
+        lon = (X.lit(c["lon0"])
+               + X.degrees((x - X.lit(c["fe"])) / X.lit(c["a"] * c["k0"])))
+        beta = X.asin((y - X.lit(c["fn"]))
+                      * X.lit(2.0 * c["k0"] / c["a"]) / X.lit(c["qp"]))
+        phi = _lat_series(beta, c["series"])
+        return lon, X.degrees(phi)
 
-    return inv
-
-
-def cea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME cylindrical-equal-area inverse as SQL strings (for
-    DuckDB oracles) — identical op order to :func:`_cea_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _cea_consts(crs)
-    lon = (f"({c['lon0']!r} + degrees((({x_expr}) - {c['fe']!r})"
-           f" / {c['a'] * c['k0']!r}))")
-    beta = (f"asin((({y_expr}) - {c['fn']!r})"
-            f" * {2.0 * c['k0'] / c['a']!r} / {c['qp']!r})")
-    phi = beta
-    for j, cf in enumerate(c["series"], start=1):
-        phi = f"({phi} + {cf!r} * sin(2.0 * {j} * {beta}))"
-    return lon, f"degrees({phi})"
+    return single(inv)
 
 
 # ---- Lambert azimuthal equal-area (EPSG:3035 and kin) -----------------
@@ -3552,8 +2435,7 @@ def cea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
 # through pyproj (core/gridmapping/transform.py).  Ellipsoidal LAEA from
 # Snyder 1987 (public math: eqs. 3-12 authalic latitude, 24-2..24-31 for
 # the oblique aspect, 3-18 for the beta -> phi series).  Same design as
-# UTM/polar above: pure Column forward/inverse + identical-arithmetic
-# SQL twin for oracles.
+# UTM/polar above: one closed-form stage each way.
 
 #: GRS80 ellipsoid (ETRS89 datum): negligibly different from WGS84, but
 #: stated precisely so both engines run the same constants
@@ -3595,101 +2477,71 @@ def _laea_consts(crs: str) -> dict:
                 series=_beta_series(e2))
 
 
-def _lonlat_to_laea_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_laea_fn(crs: str) -> Transform:
     lat0, lon0, fe, fn = LAEA_PARAMS[crs.upper()][:4]
     k = _laea_consts(crs)
     q_p, beta1, r_q, d = k["q_p"], k["beta1"], k["r_q"], k["d"]
     e2, e = k["e2"], k["e"]
     sb1, cb1 = math.sin(beta1), math.cos(beta1)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam = F.radians(lon - F.lit(lon0))
-        s = F.sin(F.radians(lat))
-        q = F.lit(1.0 - e2) * (
-            s / (F.lit(1.0) - F.lit(e2) * s * s)
-            - F.lit(1.0 / (2.0 * e))
-            * F.log((F.lit(1.0) - F.lit(e) * s)
-                    / (F.lit(1.0) + F.lit(e) * s))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        lam = X.radians(lon - X.lit(lon0))
+        s = X.sin(X.radians(lat))
+        q = X.lit(1.0 - e2) * (
+            s / (X.lit(1.0) - X.lit(e2) * s * s)
+            - X.lit(1.0 / (2.0 * e))
+            * X.log((X.lit(1.0) - X.lit(e) * s)
+                    / (X.lit(1.0) + X.lit(e) * s))
         )
-        beta = F.asin(F.least(F.greatest(q / F.lit(q_p), F.lit(-1.0)),
-                              F.lit(1.0)))
-        cb, sb = F.cos(beta), F.sin(beta)
-        b = F.lit(r_q) * F.sqrt(
-            F.lit(2.0) / (F.lit(1.0) + F.lit(sb1) * sb
-                          + F.lit(cb1) * cb * F.cos(lam))
+        beta = X.asin(X.least(X.greatest(q / X.lit(q_p), X.lit(-1.0)),
+                              X.lit(1.0)))
+        cb, sb = X.cos(beta), X.sin(beta)
+        b = X.lit(r_q) * X.sqrt(
+            X.lit(2.0) / (X.lit(1.0) + X.lit(sb1) * sb
+                          + X.lit(cb1) * cb * X.cos(lam))
         )
-        x = F.lit(fe) + b * F.lit(d) * cb * F.sin(lam)
-        y = F.lit(fn) + (b / F.lit(d)) * (
-            F.lit(cb1) * sb - F.lit(sb1) * cb * F.cos(lam)
+        x = X.lit(fe) + b * X.lit(d) * cb * X.sin(lam)
+        y = X.lit(fn) + (b / X.lit(d)) * (
+            X.lit(cb1) * sb - X.lit(sb1) * cb * X.cos(lam)
         )
         return x, y
 
-    return fwd
+    return single(fwd)
 
 
-def _laea_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _laea_to_lonlat_fn(crs: str) -> Transform:
     lat0, lon0, fe, fn = LAEA_PARAMS[crs.upper()][:4]
     k = _laea_consts(crs)
     q_p, beta1, r_q, d = k["q_p"], k["beta1"], k["r_q"], k["d"]
     sb1, cb1 = math.sin(beta1), math.cos(beta1)
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xd = (x - F.lit(fe)) / F.lit(d)
-        yd = F.lit(d) * (y - F.lit(fn))
-        rho = F.sqrt(xd * xd + yd * yd)
-        ce = F.lit(2.0) * F.asin(
-            F.least(rho / F.lit(2.0 * r_q), F.lit(1.0)))
+    def inv(x: E, y: E) -> tuple[E, E]:
+        xd = (x - X.lit(fe)) / X.lit(d)
+        yd = X.lit(d) * (y - X.lit(fn))
+        rho = X.sqrt(xd * xd + yd * yd)
+        ce = X.lit(2.0) * X.asin(
+            X.least(rho / X.lit(2.0 * r_q), X.lit(1.0)))
         # rho == 0 -> projection center (guarded: sin(ce)/rho is 0/0)
-        qv = F.lit(q_p) * (
-            F.cos(ce) * F.lit(sb1)
-            + F.when(rho == 0.0, F.lit(0.0))
-            .otherwise(yd * F.sin(ce) * F.lit(cb1) / rho)
+        qv = X.lit(q_p) * (
+            X.cos(ce) * X.lit(sb1)
+            + X.when(rho == 0.0, X.lit(0.0))
+            .otherwise(yd * X.sin(ce) * X.lit(cb1) / rho)
         )
-        beta = F.asin(F.least(F.greatest(qv / F.lit(q_p), F.lit(-1.0)),
-                              F.lit(1.0)))
-        phi = beta
-        for j, c in enumerate(k["series"], start=1):
-            phi = phi + F.lit(c) * F.sin(F.lit(2.0 * j) * beta)
-        lam = F.atan2(
-            (x - F.lit(fe)) * F.sin(ce),
-            F.lit(d) * rho * F.cos(ce) * F.lit(cb1)
-            - F.lit(d) * yd * F.sin(ce) * F.lit(sb1),
+        beta = X.asin(X.least(X.greatest(qv / X.lit(q_p), X.lit(-1.0)),
+                              X.lit(1.0)))
+        phi = _lat_series(beta, k["series"])
+        lam = X.atan2(
+            (x - X.lit(fe)) * X.sin(ce),
+            X.lit(d) * rho * X.cos(ce) * X.lit(cb1)
+            - X.lit(d) * yd * X.sin(ce) * X.lit(sb1),
         )
-        lon = F.lit(lon0) + F.degrees(
-            F.when(rho == 0.0, F.lit(0.0)).otherwise(lam))
-        lat = F.degrees(
-            F.when(rho == 0.0, F.lit(math.radians(lat0))).otherwise(phi))
+        lon = X.lit(lon0) + X.degrees(
+            X.when(rho == 0.0, X.lit(0.0)).otherwise(lam))
+        lat = X.degrees(
+            X.when(rho == 0.0, X.lit(math.radians(lat0))).otherwise(phi))
         return lon, lat
 
-    return inv
-
-
-def laea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME LAEA inverse as SQL strings (for DuckDB oracles).
-    Returns (lon_sql, lat_sql).  No rho == 0 guard: oracle grids never
-    place a cell center exactly on the projection center."""
-    lat0, lon0, fe, fn = LAEA_PARAMS[crs.upper()][:4]
-    k = _laea_consts(crs)
-    q_p, beta1, r_q, d = k["q_p"], k["beta1"], k["r_q"], k["d"]
-    sb1, cb1 = math.sin(beta1), math.cos(beta1)
-    # DOUBLE casts: DuckDB types numeric literals as DECIMAL, and the
-    # rho**2 products overflow DECIMAL(38) without them
-    x_expr = f"CAST({x_expr} AS DOUBLE)"
-    y_expr = f"CAST({y_expr} AS DOUBLE)"
-    xd = f"((({x_expr}) - {fe!r}) / {d!r})"
-    yd = f"({d!r} * (({y_expr}) - {fn!r}))"
-    rho = f"sqrt({xd} * {xd} + {yd} * {yd})"
-    ce = f"(2.0 * asin(least({rho} / {2.0 * r_q!r}, 1.0)))"
-    qv = f"({q_p!r} * (cos({ce}) * {sb1!r} " \
-         f"+ {yd} * sin({ce}) * {cb1!r} / {rho}))"
-    beta = f"asin(least(greatest({qv} / {q_p!r}, -1.0), 1.0))"
-    phi = beta
-    for j, c in enumerate(k["series"], start=1):
-        phi = f"({phi} + {c!r} * sin(2.0 * {j} * ({beta})))"
-    lam = f"atan2((({x_expr}) - {fe!r}) * sin({ce}), " \
-          f"{d!r} * {rho} * cos({ce}) * {cb1!r} " \
-          f"- {d!r} * {yd} * sin({ce}) * {sb1!r})"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+    return single(inv)
 
 
 # ---- Lambert conformal conic 2SP (EPSG:2154 / 3034 and kin) -----------
@@ -3697,7 +2549,7 @@ def laea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
 # National grids (France RGF93-LCC, ETRS89-LCC Europe) the reference
 # reaches through pyproj.  Ellipsoidal LCC-2SP from Snyder 1987
 # (public math: eqs. 14-15 m, 15-9 t, 15-1..15-11 forward/inverse, 3-5
-# chi -> phi series).  Pure Column + identical-arithmetic SQL twin.
+# chi -> phi series).  One closed-form stage each way.
 
 #: crs -> (lat1, lat2, lat0, lon0, false easting, false northing)
 #: [6-tuple: GRS80] or + (a, rf) [8-tuple: any ellipsoid, round 8]
@@ -3774,55 +2626,38 @@ def _lcc_consts(crs: str) -> tuple:
     return n, af, rho0, lon0, fe, fn, e, _chi_series(e2)
 
 
-def _lonlat_to_lcc_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_lcc_fn(crs: str) -> Transform:
     n, af, rho0, lon0, fe, fn, e, _ = _lcc_consts(crs)
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        phi = F.radians(lat)
-        s = F.lit(e) * F.sin(phi)
-        t = F.tan(F.lit(math.pi / 4.0) - phi / 2) * F.pow(
-            (F.lit(1.0) + s) / (F.lit(1.0) - s), F.lit(e / 2.0))
-        rho = F.lit(af) * F.pow(t, F.lit(n))
-        th = F.lit(n) * F.radians(lon - F.lit(lon0))
-        return (F.lit(fe) + rho * F.sin(th),
-                F.lit(fn) + F.lit(rho0) - rho * F.cos(th))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        phi = X.radians(lat)
+        s = X.lit(e) * X.sin(phi)
+        t = X.tan(X.lit(math.pi / 4.0) - phi / 2) * X.pow(
+            (X.lit(1.0) + s) / (X.lit(1.0) - s), X.lit(e / 2.0))
+        rho = X.lit(af) * X.pow(t, X.lit(n))
+        th = X.lit(n) * X.radians(lon - X.lit(lon0))
+        return (X.lit(fe) + rho * X.sin(th),
+                X.lit(fn) + X.lit(rho0) - rho * X.cos(th))
 
-    return fwd
+    return single(fwd)
 
 
-def _lcc_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _lcc_to_lonlat_fn(crs: str) -> Transform:
     n, af, rho0, lon0, fe, fn, e, series = _lcc_consts(crs)
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xd = x - F.lit(fe)
-        yd = F.lit(rho0) - (y - F.lit(fn))
+    def inv(x: E, y: E) -> tuple[E, E]:
+        xd = x - X.lit(fe)
+        yd = X.lit(rho0) - (y - X.lit(fn))
         # northern-cone registrations have n > 0: rho' carries n's
         # sign directly
-        rho = F.sqrt(xd * xd + yd * yd)
-        t = F.pow(rho / F.lit(af), F.lit(1.0 / n))
-        chi = F.lit(math.pi / 2.0) - 2 * F.atan(t)
-        phi = chi
-        for j, c in enumerate(series, start=1):
-            phi = phi + F.lit(c) * F.sin(F.lit(2.0 * j) * chi)
-        lam = F.atan2(xd, yd) / F.lit(n)
-        return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
+        rho = X.sqrt(xd * xd + yd * yd)
+        t = X.pow(rho / X.lit(af), X.lit(1.0 / n))
+        chi = X.lit(math.pi / 2.0) - 2 * X.atan(t)
+        phi = _lat_series(chi, series)
+        lam = X.atan2(xd, yd) / X.lit(n)
+        return X.lit(lon0) + X.degrees(lam), X.degrees(phi)
 
-    return inv
-
-
-def lcc_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME LCC inverse as SQL strings (for DuckDB oracles)."""
-    n, af, rho0, lon0, fe, fn, e, series = _lcc_consts(crs)
-    xd = f"(CAST({x_expr} AS DOUBLE) - {fe!r})"
-    yd = f"({rho0!r} - (CAST({y_expr} AS DOUBLE) - {fn!r}))"
-    rho = f"sqrt({xd} * {xd} + {yd} * {yd})"
-    t = f"pow({rho} / {af!r}, {1.0 / n!r})"
-    chi = f"({math.pi / 2.0!r} - 2 * atan({t}))"
-    phi = chi
-    for j, c in enumerate(series, start=1):
-        phi = f"({phi} + {c!r} * sin(2.0 * {j} * ({chi})))"
-    lam = f"(atan2({xd}, {yd}) / {n!r})"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+    return single(inv)
 
 
 # ---- Albers equal-area conic (EPSG:5070 CONUS) ------------------------
@@ -3854,65 +2689,46 @@ def _aea_consts(crs: str) -> dict:
                 q_p=_q_auth(1.0, e2, e), series=_beta_series(e2))
 
 
-def _lonlat_to_aea_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_aea_fn(crs: str) -> Transform:
     k = _aea_consts(crs)
     n, c, rho0, lon0, fe, fn = (k["n"], k["c"], k["rho0"], k["lon0"],
                                 k["fe"], k["fn"])
     e2, e = k["e2"], k["e"]
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        s = F.sin(F.radians(lat))
-        q = F.lit(1.0 - e2) * (
-            s / (F.lit(1.0) - F.lit(e2) * s * s)
-            - F.lit(1.0 / (2.0 * e))
-            * F.log((F.lit(1.0) - F.lit(e) * s)
-                    / (F.lit(1.0) + F.lit(e) * s)))
-        rho = F.lit(k["a"]) * F.sqrt(F.lit(c) - F.lit(n) * q) / F.lit(n)
-        th = F.lit(n) * F.radians(lon - F.lit(lon0))
-        return (F.lit(fe) + rho * F.sin(th),
-                F.lit(fn) + F.lit(rho0) - rho * F.cos(th))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        s = X.sin(X.radians(lat))
+        q = X.lit(1.0 - e2) * (
+            s / (X.lit(1.0) - X.lit(e2) * s * s)
+            - X.lit(1.0 / (2.0 * e))
+            * X.log((X.lit(1.0) - X.lit(e) * s)
+                    / (X.lit(1.0) + X.lit(e) * s)))
+        rho = X.lit(k["a"]) * X.sqrt(X.lit(c) - X.lit(n) * q) / X.lit(n)
+        th = X.lit(n) * X.radians(lon - X.lit(lon0))
+        return (X.lit(fe) + rho * X.sin(th),
+                X.lit(fn) + X.lit(rho0) - rho * X.cos(th))
 
-    return fwd
+    return single(fwd)
 
 
-def _aea_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _aea_to_lonlat_fn(crs: str) -> Transform:
     k = _aea_consts(crs)
     n, c, rho0, lon0, fe, fn = (k["n"], k["c"], k["rho0"], k["lon0"],
                                 k["fe"], k["fn"])
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xd = x - F.lit(fe)
-        yd = F.lit(rho0) - (y - F.lit(fn))
-        rho = F.sqrt(xd * xd + yd * yd)
-        q = (F.lit(c) - rho * rho
-             * F.lit(n * n / (k["a"] * k["a"]))) / F.lit(n)
-        beta = F.asin(F.least(F.greatest(q / F.lit(k["q_p"]),
-                                         F.lit(-1.0)),
-                              F.lit(1.0)))
-        phi = beta
-        for j, cc in enumerate(k["series"], start=1):
-            phi = phi + F.lit(cc) * F.sin(F.lit(2.0 * j) * beta)
-        lam = F.atan2(xd, yd) / F.lit(n)
-        return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
+    def inv(x: E, y: E) -> tuple[E, E]:
+        xd = x - X.lit(fe)
+        yd = X.lit(rho0) - (y - X.lit(fn))
+        rho = X.sqrt(xd * xd + yd * yd)
+        q = (X.lit(c) - rho * rho
+             * X.lit(n * n / (k["a"] * k["a"]))) / X.lit(n)
+        beta = X.asin(X.least(X.greatest(q / X.lit(k["q_p"]),
+                                         X.lit(-1.0)),
+                              X.lit(1.0)))
+        phi = _lat_series(beta, k["series"])
+        lam = X.atan2(xd, yd) / X.lit(n)
+        return X.lit(lon0) + X.degrees(lam), X.degrees(phi)
 
-    return inv
-
-
-def aea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME Albers inverse as SQL strings (for DuckDB oracles)."""
-    k = _aea_consts(crs)
-    n, c, rho0, lon0, fe, fn = (k["n"], k["c"], k["rho0"], k["lon0"],
-                                k["fe"], k["fn"])
-    xd = f"(CAST({x_expr} AS DOUBLE) - {fe!r})"
-    yd = f"({rho0!r} - (CAST({y_expr} AS DOUBLE) - {fn!r}))"
-    rho2 = f"({xd} * {xd} + {yd} * {yd})"
-    q = f"(({c!r} - {rho2} * {n * n / (k['a'] * k['a'])!r}) / {n!r})"
-    beta = f"asin(least(greatest({q} / {k['q_p']!r}, -1.0), 1.0))"
-    phi = beta
-    for j, cc in enumerate(k["series"], start=1):
-        phi = f"({phi} + {cc!r} * sin(2.0 * {j} * ({beta})))"
-    lam = f"(atan2({xd}, {yd}) / {n!r})"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+    return single(inv)
 
 
 # ---- Mollweide (World_Mollweide, ESRI:54009) --------------------------
@@ -3930,75 +2746,48 @@ MOLL_PARAMS: dict[str, float] = {
 _SQRT2 = math.sqrt(2.0)
 
 
-class _MollForward:
-    """lon/lat -> Mollweide; the Newton solve for t is staged as
-    materialized columns (apply_df) so the iteration does not nest an
-    exponentially-growing expression tree."""
-
-    def __init__(self, crs: str, iterations: int = 8):
-        self.r = MOLL_PARAMS[crs.upper()]
-        self.iterations = iterations
-
-    def _step(self, t: Column, sinphi: Column) -> Column:
-        # Newton: t -= (2t + sin 2t - pi sin phi) / (2 + 2 cos 2t);
-        # at the poles the derivative vanishes and t is already phi
-        num = F.lit(2.0) * t + F.sin(F.lit(2.0) * t) \
-            - F.lit(math.pi) * sinphi
-        den = F.lit(2.0) + F.lit(2.0) * F.cos(F.lit(2.0) * t)
-        return F.when(F.abs(den) < 1e-12, t).otherwise(t - num / den)
-
-    def _xy(self, lon: Column, t: Column) -> tuple[Column, Column]:
-        x = F.lit(2.0 * _SQRT2 / math.pi * self.r) \
-            * F.radians(lon) * F.cos(t)
-        y = F.lit(_SQRT2 * self.r) * F.sin(t)
-        return x, y
-
-    def __call__(self, lon: Column, lat: Column) -> tuple[Column, Column]:
-        # nested form (tests / tiny tables); apply_df is the real path
-        t = F.radians(lat)
-        sinphi = F.sin(F.radians(lat))
-        for _ in range(self.iterations):
-            t = self._step(t, sinphi)
-        return self._xy(lon, t)
-
-    def apply_df(self, df, x_expr: Column, y_expr: Column,
-                 out_x: str, out_y: str):
-        df = df.withColumns({
-            "__mo_lam": x_expr,
-            "__mo_sph": F.sin(F.radians(y_expr)),
-            "__mo_t": F.radians(y_expr),
-        })
-        for _ in range(self.iterations):
-            df = df.withColumn(
-                "__mo_t", self._step(F.col("__mo_t"), F.col("__mo_sph")))
-        x, y = self._xy(F.col("__mo_lam"), F.col("__mo_t"))
-        return df.withColumns({out_x: x, out_y: y}) \
-            .drop("__mo_lam", "__mo_sph", "__mo_t")
+_MOLL_ITERS = 8
 
 
-def _moll_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _moll_step(t: E, sinphi: E) -> E:
+    """One Newton step of ``2t + sin 2t = pi sin(phi)`` (Mollweide's
+    auxiliary angle, also Goode's polar lobes); at the poles the
+    derivative vanishes and t is already phi."""
+    num = X.lit(2.0) * t + X.sin(X.lit(2.0) * t) \
+        - X.lit(math.pi) * sinphi
+    den = X.lit(2.0) + X.lit(2.0) * X.cos(X.lit(2.0) * t)
+    return X.when(X.abs(den) < 1e-12, t).otherwise(t - num / den)
+
+
+def _lonlat_to_moll_fn(crs: str) -> Transform:
+    """lon/lat -> Mollweide; the Newton solve for t is staged, one
+    column per iteration, so it does not nest an exponentially growing
+    expression."""
+    r = MOLL_PARAMS[crs.upper()]
+    stages = [{"__mo_sph": lambda env: X.sin(X.radians(env["__in_y"])),
+               "__mo_t": lambda env: X.radians(env["__in_y"])}]
+    stages += [{"__mo_t": lambda env: _moll_step(
+        env["__mo_t"], env["__mo_sph"])}] * _MOLL_ITERS
+    stages.append({
+        "__out_x": lambda env: X.lit(2.0 * _SQRT2 / math.pi * r)
+        * X.radians(env["__in_x"]) * X.cos(env["__mo_t"]),
+        "__out_y": lambda env: X.lit(_SQRT2 * r) * X.sin(env["__mo_t"]),
+    })
+    return staged(stages)
+
+
+def _moll_to_lonlat_fn(crs: str) -> Transform:
     r = MOLL_PARAMS[crs.upper()]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        t = F.asin(y / F.lit(_SQRT2 * r))
-        phi = F.asin(
-            (F.lit(2.0) * t + F.sin(F.lit(2.0) * t)) / F.lit(math.pi))
-        lon = F.degrees(
-            x * F.lit(math.pi) / (F.lit(2.0 * _SQRT2 * r) * F.cos(t)))
-        return lon, F.degrees(phi)
+    def inv(x: E, y: E) -> tuple[E, E]:
+        t = X.asin(y / X.lit(_SQRT2 * r))
+        phi = X.asin(
+            (X.lit(2.0) * t + X.sin(X.lit(2.0) * t)) / X.lit(math.pi))
+        lon = X.degrees(
+            x * X.lit(math.pi) / (X.lit(2.0 * _SQRT2 * r) * X.cos(t)))
+        return lon, X.degrees(phi)
 
-    return inv
-
-
-def moll_inverse_sql(x_expr: str, y_expr: str, crs: str) \
-        -> tuple[str, str]:
-    """The SAME Mollweide inverse as SQL strings (for DuckDB oracles)."""
-    r = MOLL_PARAMS[crs.upper()]
-    t = f"asin(CAST({y_expr} AS DOUBLE) / {_SQRT2 * r!r})"
-    phi = f"degrees(asin((2.0 * {t} + sin(2.0 * {t})) / pi()))"
-    lon = (f"degrees(CAST({x_expr} AS DOUBLE) * pi() / "
-           f"({2.0 * _SQRT2 * r!r} * cos({t})))")
-    return lon, phi
+    return single(inv)
 
 
 # ---- Hammer (-Aitoff) (+proj=hammer) -----------------------------------
@@ -4017,50 +2806,35 @@ HAMMER_PARAMS: dict[str, float] = {
 }
 
 
-def _lonlat_to_hammer_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_hammer_fn(crs: str) -> Transform:
     r = HAMMER_PARAMS[crs.upper()]
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam2 = F.radians(lon) / F.lit(2.0)
-        phi = F.radians(lat)
-        cphi = F.cos(phi)
-        den = F.sqrt(F.lit(1.0) + cphi * F.cos(lam2))
-        x = F.lit(2.0 * _SQRT2 * r) * cphi * F.sin(lam2) / den
-        y = F.lit(_SQRT2 * r) * F.sin(phi) / den
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        lam2 = X.radians(lon) / X.lit(2.0)
+        phi = X.radians(lat)
+        cphi = X.cos(phi)
+        den = X.sqrt(X.lit(1.0) + cphi * X.cos(lam2))
+        x = X.lit(2.0 * _SQRT2 * r) * cphi * X.sin(lam2) / den
+        y = X.lit(_SQRT2 * r) * X.sin(phi) / den
         return x, y
 
-    return fwd
+    return single(fwd)
 
 
-def _hammer_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _hammer_to_lonlat_fn(crs: str) -> Transform:
     r = HAMMER_PARAMS[crs.upper()]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xn = x / F.lit(r)
-        yn = y / F.lit(r)
-        z = F.sqrt(F.lit(1.0) - (xn / 4.0) * (xn / 4.0)
+    def inv(x: E, y: E) -> tuple[E, E]:
+        xn = x / X.lit(r)
+        yn = y / X.lit(r)
+        z = X.sqrt(X.lit(1.0) - (xn / 4.0) * (xn / 4.0)
                    - (yn / 2.0) * (yn / 2.0))
-        lon = F.degrees(F.lit(2.0) * F.atan2(
-            z * xn, F.lit(2.0) * (F.lit(2.0) * z * z - F.lit(1.0))))
-        lat = F.degrees(F.asin(z * yn))
+        lon = X.degrees(X.lit(2.0) * X.atan2(
+            z * xn, X.lit(2.0) * (X.lit(2.0) * z * z - X.lit(1.0))))
+        lat = X.degrees(X.asin(z * yn))
         return lon, lat
 
-    return inv
-
-
-def hammer_inverse_sql(x_expr: str, y_expr: str,
-                       crs: str) -> tuple[str, str]:
-    """The SAME Hammer inverse as SQL strings (for DuckDB oracles) —
-    identical op order to :func:`_hammer_to_lonlat_fn`."""
-    r = HAMMER_PARAMS[crs.upper()]
-    xn = f"(CAST({x_expr} AS DOUBLE) / {r!r})"
-    yn = f"(CAST({y_expr} AS DOUBLE) / {r!r})"
-    z = (f"sqrt(1.0 - ({xn} / 4.0) * ({xn} / 4.0)"
-         f" - ({yn} / 2.0) * ({yn} / 2.0))")
-    lon = (f"degrees(2.0 * atan2({z} * {xn},"
-           f" 2.0 * (2.0 * {z} * {z} - 1.0)))")
-    lat = f"degrees(asin({z} * {yn}))"
-    return lon, lat
+    return single(inv)
 
 
 # ---- Goode homolosine (interrupted; +proj=igh) --------------------------
@@ -4109,7 +2883,7 @@ _IGH_D80, _IGH_D100 = math.radians(80.0), math.radians(100.0)
 _IGH_D30, _IGH_D140, _IGH_D160 = (math.radians(d) for d in (30, 140, 160))
 
 
-def _igh_lamc(lam: Column, phi_or_y: Column) -> Column:
+def _igh_lamc(lam: E, phi_or_y: E) -> E:
     """Per-lobe central meridian (radians) from the signed latitude
     proxy (phi forward / yn inverse) and the longitude proxy (lam
     forward / xn inverse) — the GCTP/PROJ zone table: north splits at
@@ -4117,136 +2891,82 @@ def _igh_lamc(lam: Column, phi_or_y: Column) -> Column:
     80E into lobes centered 160W / 60W / 20E / 140E.  Both directions
     use the SAME selector (the inverse classifies by projected x
     against the interruption meridians, exact for in-lobe points and
-    deterministic for gap points — mirrored verbatim in the SQL
-    twin)."""
-    north = F.when(lam <= F.lit(-_IGH_D40), F.lit(-_IGH_D100)) \
-        .otherwise(F.lit(_IGH_D30))
-    south = F.when(lam <= F.lit(-_IGH_D100), F.lit(-_IGH_D160)) \
-        .when(lam <= F.lit(-_IGH_D20), F.lit(-_IGH_D60)) \
-        .when(lam <= F.lit(_IGH_D80), F.lit(_IGH_D20)) \
-        .otherwise(F.lit(_IGH_D140))
-    return F.when(phi_or_y >= F.lit(0.0), north).otherwise(south)
+    deterministic for gap points)."""
+    north = X.when(lam <= X.lit(-_IGH_D40), X.lit(-_IGH_D100)) \
+        .otherwise(X.lit(_IGH_D30))
+    south = X.when(lam <= X.lit(-_IGH_D100), X.lit(-_IGH_D160)) \
+        .when(lam <= X.lit(-_IGH_D20), X.lit(-_IGH_D60)) \
+        .when(lam <= X.lit(_IGH_D80), X.lit(_IGH_D20)) \
+        .otherwise(X.lit(_IGH_D140))
+    return X.when(phi_or_y >= X.lit(0.0), north).otherwise(south)
 
 
-class _IghForward:
+def _lonlat_to_igh_fn(crs: str) -> Transform:
     """lon/lat -> interrupted Goode homolosine; the Mollweide Newton
-    solve for the auxiliary angle is staged as materialized columns
-    (apply_df), Mollweide-style."""
+    solve for the auxiliary angle is staged, Mollweide-style."""
+    r = IGH_PARAMS[crs.upper()]
 
-    def __init__(self, crs: str, iterations: int = 8):
-        self.r = IGH_PARAMS[crs.upper()]
-        self.iterations = iterations
-
-    @staticmethod
-    def _step(t: Column, sinphi: Column) -> Column:
-        num = F.lit(2.0) * t + F.sin(F.lit(2.0) * t) \
-            - F.lit(math.pi) * sinphi
-        den = F.lit(2.0) + F.lit(2.0) * F.cos(F.lit(2.0) * t)
-        return F.when(F.abs(den) < 1e-12, t).otherwise(t - num / den)
-
-    def _xy(self, lam: Column, phi: Column, lamc: Column,
-            t: Column) -> tuple[Column, Column]:
-        moll = (phi >= F.lit(_IGH_PHIB)) | (phi < F.lit(-_IGH_PHIB))
-        x_sinu = lamc + (lam - lamc) * F.cos(phi)
+    def out(env):
+        lam, phi = env["__ig_lam"], env["__ig_phi"]
+        lamc, t = env["__ig_lamc"], env["__ig_t"]
+        moll = (phi >= X.lit(_IGH_PHIB)) | (phi < X.lit(-_IGH_PHIB))
+        x_sinu = lamc + (lam - lamc) * X.cos(phi)
         y_sinu = phi
-        x_moll = lamc + F.lit(2.0 * _SQRT2 / math.pi) \
-            * (lam - lamc) * F.cos(t)
-        y_moll = F.lit(_SQRT2) * F.sin(t) \
-            - F.when(phi >= F.lit(0.0), F.lit(_IGH_DY)) \
-            .otherwise(F.lit(-_IGH_DY))
-        x = F.lit(self.r) * F.when(moll, x_moll).otherwise(x_sinu)
-        y = F.lit(self.r) * F.when(moll, y_moll).otherwise(y_sinu)
-        return x, y
+        x_moll = lamc + X.lit(2.0 * _SQRT2 / math.pi) \
+            * (lam - lamc) * X.cos(t)
+        y_moll = X.lit(_SQRT2) * X.sin(t) \
+            - X.when(phi >= X.lit(0.0), X.lit(_IGH_DY)) \
+            .otherwise(X.lit(-_IGH_DY))
+        return (X.lit(r) * X.when(moll, x_moll).otherwise(x_sinu),
+                X.lit(r) * X.when(moll, y_moll).otherwise(y_sinu))
 
-    def __call__(self, lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam, phi = F.radians(lon), F.radians(lat)
-        t, sinphi = phi, F.sin(phi)
-        for _ in range(self.iterations):
-            t = self._step(t, sinphi)
-        return self._xy(lam, phi, _igh_lamc(lam, phi), t)
-
-    def apply_df(self, df, x_expr: Column, y_expr: Column,
-                 out_x: str, out_y: str):
-        df = df.withColumns({
-            "__ig_lam": F.radians(x_expr),
-            "__ig_phi": F.radians(y_expr),
-        }).withColumns({
-            "__ig_lamc": _igh_lamc(F.col("__ig_lam"), F.col("__ig_phi")),
-            "__ig_sph": F.sin(F.col("__ig_phi")),
-            "__ig_t": F.col("__ig_phi"),
-        })
-        for _ in range(self.iterations):
-            df = df.withColumn(
-                "__ig_t", self._step(F.col("__ig_t"), F.col("__ig_sph")))
-        x, y = self._xy(F.col("__ig_lam"), F.col("__ig_phi"),
-                        F.col("__ig_lamc"), F.col("__ig_t"))
-        return df.withColumns({out_x: x, out_y: y}) \
-            .drop("__ig_lam", "__ig_phi", "__ig_lamc", "__ig_sph", "__ig_t")
+    stages = [
+        {"__ig_lam": lambda env: X.radians(env["__in_x"]),
+         "__ig_phi": lambda env: X.radians(env["__in_y"])},
+        {"__ig_lamc": lambda env: _igh_lamc(env["__ig_lam"],
+                                            env["__ig_phi"]),
+         "__ig_sph": lambda env: X.sin(env["__ig_phi"]),
+         "__ig_t": lambda env: env["__ig_phi"]},
+    ]
+    stages += [{"__ig_t": lambda env: _moll_step(
+        env["__ig_t"], env["__ig_sph"])}] * _MOLL_ITERS
+    stages.append({"__out_x": lambda env: out(env)[0],
+                   "__out_y": lambda env: out(env)[1]})
+    return staged(stages)
 
 
-def _igh_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _igh_to_lonlat_fn(crs: str) -> Transform:
     """Closed-form inverse: classify moll-vs-sinu by |y| against the
     boundary parallel and the lobe by x against the interruption
     meridians (exactly PROJ's inverse zone test), then invert the
     zone's pseudocylindrical — Mollweide's inverse is closed form, so
-    the whole inverse is a single Column tree."""
+    the whole inverse is a single stage."""
     r = IGH_PARAMS[crs.upper()]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xn = x / F.lit(r)
-        yn = y / F.lit(r)
+    def inv(x: E, y: E) -> tuple[E, E]:
+        xn = x / X.lit(r)
+        yn = y / X.lit(r)
         lamc = _igh_lamc(xn, yn)
-        moll = (yn >= F.lit(_IGH_PHIB)) | (yn < F.lit(-_IGH_PHIB))
-        t = F.asin((F.abs(yn) + F.lit(_IGH_DY)) / F.lit(_SQRT2))
-        sgn = F.when(yn < F.lit(0.0), F.lit(-1.0)).otherwise(F.lit(1.0))
-        phi_m = sgn * F.asin(
-            (F.lit(2.0) * t + F.sin(F.lit(2.0) * t)) / F.lit(math.pi))
-        lam_m = lamc + (xn - lamc) * F.lit(math.pi) \
-            / (F.lit(2.0 * _SQRT2) * F.cos(t))
-        lam_s = lamc + (xn - lamc) / F.cos(yn)
+        moll = (yn >= X.lit(_IGH_PHIB)) | (yn < X.lit(-_IGH_PHIB))
+        t = X.asin((X.abs(yn) + X.lit(_IGH_DY)) / X.lit(_SQRT2))
+        sgn = X.when(yn < X.lit(0.0), X.lit(-1.0)).otherwise(X.lit(1.0))
+        phi_m = sgn * X.asin(
+            (X.lit(2.0) * t + X.sin(X.lit(2.0) * t)) / X.lit(math.pi))
+        lam_m = lamc + (xn - lamc) * X.lit(math.pi) \
+            / (X.lit(2.0 * _SQRT2) * X.cos(t))
+        lam_s = lamc + (xn - lamc) / X.cos(yn)
         # out-of-domain guard: |y|/R beyond sqrt(2)-dy puts the asin
         # argument past 1 and would silently NaN — corner pixels of a
         # rectangular target bbox land here.  Yield explicit NULL so
         # both engines fail deterministically (advice r9).
-        valid = F.abs(yn) <= F.lit(_SQRT2 - _IGH_DY)
-        lon = F.when(valid,
-                     F.degrees(F.when(moll, lam_m).otherwise(lam_s)))
-        lat = F.when(valid,
-                     F.degrees(F.when(moll, phi_m).otherwise(yn)))
+        valid = X.abs(yn) <= X.lit(_SQRT2 - _IGH_DY)
+        lon = X.when(valid,
+                     X.degrees(X.when(moll, lam_m).otherwise(lam_s)))
+        lat = X.when(valid,
+                     X.degrees(X.when(moll, phi_m).otherwise(yn)))
         return lon, lat
 
-    return inv
-
-
-def igh_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME interrupted-Goode inverse as SQL strings (for DuckDB
-    oracles) — identical zone tests and op order to
-    :func:`_igh_to_lonlat_fn`."""
-    r = IGH_PARAMS[crs.upper()]
-    xn = f"(CAST({x_expr} AS DOUBLE) / {r!r})"
-    yn = f"(CAST({y_expr} AS DOUBLE) / {r!r})"
-    lamc = (
-        f"(CASE WHEN {yn} >= 0.0 THEN "
-        f"(CASE WHEN {xn} <= {-_IGH_D40!r} THEN {-_IGH_D100!r} "
-        f"ELSE {_IGH_D30!r} END) "
-        f"ELSE (CASE WHEN {xn} <= {-_IGH_D100!r} THEN {-_IGH_D160!r} "
-        f"WHEN {xn} <= {-_IGH_D20!r} THEN {-_IGH_D60!r} "
-        f"WHEN {xn} <= {_IGH_D80!r} THEN {_IGH_D20!r} "
-        f"ELSE {_IGH_D140!r} END) END)")
-    moll = f"({yn} >= {_IGH_PHIB!r} OR {yn} < {-_IGH_PHIB!r})"
-    t = f"asin((abs({yn}) + {_IGH_DY!r}) / {_SQRT2!r})"
-    sgn = f"(CASE WHEN {yn} < 0.0 THEN -1.0 ELSE 1.0 END)"
-    phi_m = f"({sgn} * asin((2.0 * {t} + sin(2.0 * {t})) / pi()))"
-    lam_m = (f"({lamc} + ({xn} - {lamc}) * pi() "
-             f"/ ({2.0 * _SQRT2!r} * cos({t})))")
-    lam_s = f"({lamc} + ({xn} - {lamc}) / cos({yn}))"
-    # same out-of-domain NULL guard as the Column path
-    valid = f"(abs({yn}) <= {_SQRT2 - _IGH_DY!r})"
-    lon = (f"(CASE WHEN {valid} THEN "
-           f"degrees(CASE WHEN {moll} THEN {lam_m} ELSE {lam_s} END) END)")
-    lat = (f"(CASE WHEN {valid} THEN "
-           f"degrees(CASE WHEN {moll} THEN {phi_m} ELSE {yn} END) END)")
-    return lon, lat
+    return single(inv)
 
 
 # ---- Winkel Tripel (+proj=wintri; ESRI:54042) ---------------------------
@@ -4277,30 +2997,30 @@ _WINTRI_ITERS = 6
 _WT_EPS = 1e-8
 
 
-def _wt_T(alpha: Column, sa: Column) -> Column:
+def _wt_T(alpha: E, sa: E) -> E:
     """alpha / sin(alpha) with its alpha -> 0 series (1 + a^2/6)."""
-    return F.when(alpha < F.lit(_WT_EPS),
-                  F.lit(1.0) + alpha * alpha / F.lit(6.0)) \
+    return X.when(alpha < X.lit(_WT_EPS),
+                  X.lit(1.0) + alpha * alpha / X.lit(6.0)) \
         .otherwise(alpha / sa)
 
 
-def _lonlat_to_wintri_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_wintri_fn(crs: str) -> Transform:
     r, cp1 = WINTRI_PARAMS[crs.upper()]
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        lam = F.radians(lon)
-        phi = F.radians(lat)
-        lam2 = lam / F.lit(2.0)
-        cp, sp = F.cos(phi), F.sin(phi)
-        q = F.least(cp * F.cos(lam2), F.lit(1.0))
-        alpha = F.acos(q)
-        t = _wt_T(alpha, F.sin(alpha))
-        x = F.lit(0.5 * r) * (lam * F.lit(cp1)
-                              + F.lit(2.0) * cp * F.sin(lam2) * t)
-        y = F.lit(0.5 * r) * (phi + sp * t)
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        lam = X.radians(lon)
+        phi = X.radians(lat)
+        lam2 = lam / X.lit(2.0)
+        cp, sp = X.cos(phi), X.sin(phi)
+        q = X.least(cp * X.cos(lam2), X.lit(1.0))
+        alpha = X.acos(q)
+        t = _wt_T(alpha, X.sin(alpha))
+        x = X.lit(0.5 * r) * (lam * X.lit(cp1)
+                              + X.lit(2.0) * cp * X.sin(lam2) * t)
+        y = X.lit(0.5 * r) * (phi + sp * t)
         return x, y
 
-    return fwd
+    return single(fwd)
 
 
 def _wintri_newton_stage(cp1: float, it: int):
@@ -4311,37 +3031,37 @@ def _wintri_newton_stage(cp1: float, it: int):
     def step(env):
         lam, phi = env["__wl"], env["__wp"]
         xn, yn = env["__wxn"], env["__wyn"]
-        lam2 = lam / F.lit(2.0)
-        sl2, cl2 = F.sin(lam2), F.cos(lam2)
-        sp, cp = F.sin(phi), F.cos(phi)
-        q = F.least(cp * cl2, F.lit(1.0))
-        alpha = F.acos(q)
-        sa = F.sin(alpha)
+        lam2 = lam / X.lit(2.0)
+        sl2, cl2 = X.sin(lam2), X.cos(lam2)
+        sp, cp = X.sin(phi), X.cos(phi)
+        q = X.least(cp * cl2, X.lit(1.0))
+        alpha = X.acos(q)
+        sa = X.sin(alpha)
         t = _wt_T(alpha, sa)
         # dT/dalpha, with its alpha -> 0 limit alpha/3
-        dt = F.when(alpha < F.lit(_WT_EPS), alpha / F.lit(3.0)) \
-            .otherwise((sa - alpha * F.cos(alpha)) / (sa * sa))
+        dt = X.when(alpha < X.lit(_WT_EPS), alpha / X.lit(3.0)) \
+            .otherwise((sa - alpha * X.cos(alpha)) / (sa * sa))
         # dalpha/dlam, dalpha/dphi (0 at the alpha=0 singularity)
-        dal = F.when(sa < F.lit(_WT_EPS), F.lit(0.0)) \
-            .otherwise(cp * sl2 / (F.lit(2.0) * sa))
-        dap = F.when(sa < F.lit(_WT_EPS), F.lit(0.0)) \
+        dal = X.when(sa < X.lit(_WT_EPS), X.lit(0.0)) \
+            .otherwise(cp * sl2 / (X.lit(2.0) * sa))
+        dap = X.when(sa < X.lit(_WT_EPS), X.lit(0.0)) \
             .otherwise(sp * cl2 / sa)
-        f1 = F.lit(0.5) * (lam * F.lit(cp1)
-                           + F.lit(2.0) * cp * sl2 * t) - xn
-        f2 = F.lit(0.5) * (phi + sp * t) - yn
-        dxl = F.lit(0.5) * (F.lit(cp1) + F.lit(2.0) * cp
-                            * (F.lit(0.5) * cl2 * t + sl2 * dt * dal))
-        dxp = F.lit(0.5) * (F.lit(-2.0) * sp * sl2 * t
-                            + F.lit(2.0) * cp * sl2 * dt * dap)
-        dyl = F.lit(0.5) * (sp * dt * dal)
-        dyp = F.lit(0.5) * (F.lit(1.0) + cp * t + sp * dt * dap)
+        f1 = X.lit(0.5) * (lam * X.lit(cp1)
+                           + X.lit(2.0) * cp * sl2 * t) - xn
+        f2 = X.lit(0.5) * (phi + sp * t) - yn
+        dxl = X.lit(0.5) * (X.lit(cp1) + X.lit(2.0) * cp
+                            * (X.lit(0.5) * cl2 * t + sl2 * dt * dal))
+        dxp = X.lit(0.5) * (X.lit(-2.0) * sp * sl2 * t
+                            + X.lit(2.0) * cp * sl2 * dt * dap)
+        dyl = X.lit(0.5) * (sp * dt * dal)
+        dyp = X.lit(0.5) * (X.lit(1.0) + cp * t + sp * dt * dap)
         det = dxl * dyp - dxp * dyl
         new_lam = lam - (dyp * f1 - dxp * f2) / det
         new_phi = phi - (dxl * f2 - dyl * f1) / det
         return (
-            F.least(F.greatest(new_lam, F.lit(-math.pi)), F.lit(math.pi)),
-            F.least(F.greatest(new_phi, F.lit(-math.pi / 2)),
-                    F.lit(math.pi / 2)),
+            X.least(X.greatest(new_lam, X.lit(-math.pi)), X.lit(math.pi)),
+            X.least(X.greatest(new_phi, X.lit(-math.pi / 2)),
+                    X.lit(math.pi / 2)),
         )
 
     def c_lam(env, _s=step):
@@ -4352,35 +3072,35 @@ def _wintri_newton_stage(cp1: float, it: int):
 
     # one combined stage would re-evaluate step() twice; emit the pair
     # into a struct-free two-column stage instead (each fn builds its
-    # own tree — StagedTransform materializes both as columns, so the
+    # own tree — the stage materializes both as columns, so the
     # NEXT iteration references them without re-expansion)
     return {"__wl": c_lam, "__wp": c_phi}
 
 
-def _wintri_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _wintri_to_lonlat_fn(crs: str) -> Transform:
     r, cp1 = WINTRI_PARAMS[crs.upper()]
 
     def c_xn(env):
-        return env["__in_x"] / F.lit(r)
+        return env["__in_x"] / X.lit(r)
 
     def c_yn(env):
-        return env["__in_y"] / F.lit(r)
+        return env["__in_y"] / X.lit(r)
 
     def c_l0(env):
         # exact on the equator: x(lam, 0) = R/2 lam (cos phi1 + 1)
-        l0 = F.lit(2.0) * env["__wxn"] / F.lit(1.0 + cp1)
-        return F.least(F.greatest(l0, F.lit(-math.pi)), F.lit(math.pi))
+        l0 = X.lit(2.0) * env["__wxn"] / X.lit(1.0 + cp1)
+        return X.least(X.greatest(l0, X.lit(-math.pi)), X.lit(math.pi))
 
     def c_p0(env):
         # exact at the poles and to O(phi^3) near the equator
-        return F.least(F.greatest(env["__wyn"], F.lit(-math.pi / 2)),
-                       F.lit(math.pi / 2))
+        return X.least(X.greatest(env["__wyn"], X.lit(-math.pi / 2)),
+                       X.lit(math.pi / 2))
 
     def c_lon(env):
-        return F.degrees(env["__wl"])
+        return X.degrees(env["__wl"])
 
     def c_lat(env):
-        return F.degrees(env["__wp"])
+        return X.degrees(env["__wp"])
 
     stages = [
         {"__wxn": c_xn, "__wyn": c_yn},
@@ -4389,93 +3109,7 @@ def _wintri_to_lonlat_fn(crs: str) -> "StagedTransform":
     for it in range(_WINTRI_ITERS):
         stages.append(_wintri_newton_stage(cp1, it))
     stages.append({"__out_x": c_lon, "__out_y": c_lat})
-    return StagedTransform(stages)
-
-
-def wintri_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                            src: str = "tgt") -> str:
-    """The SAME Winkel-Tripel Newton inverse as a chain of CTEs over
-    ``src`` (for DuckDB oracles) — identical arithmetic, op order,
-    guards, and iteration count to :func:`_wintri_to_lonlat_fn`.
-    Emits CTEs ``wt0..`` and finally ``wintri_ll`` = ``src`` columns
-    + ``lon``/``lat``."""
-    r, cp1 = WINTRI_PARAMS[crs.upper()]
-    steps = []
-    for it in range(_WINTRI_ITERS):
-        lam, phi = f"__wl{it}", f"__wp{it}"
-        # per-iteration helper CTE (a/sa/t/dt/partials), then update
-        pre = f"""wt{2 * it + 1} AS (
-            SELECT *,
-                   sin({lam} / 2.0) AS __sl2, cos({lam} / 2.0) AS __cl2,
-                   sin({phi}) AS __sp, cos({phi}) AS __cp
-            FROM wt{2 * it}
-        ), wt{2 * it + 1}b AS (
-            SELECT *, acos(LEAST(__cp * __cl2, 1.0)) AS __a FROM wt{2 * it + 1}
-        ), wt{2 * it + 1}c AS (
-            SELECT *, sin(__a) AS __sa,
-                   CASE WHEN __a < {_WT_EPS!r}
-                        THEN 1.0 + __a * __a / 6.0
-                        ELSE __a / sin(__a) END AS __t,
-                   CASE WHEN __a < {_WT_EPS!r} THEN __a / 3.0
-                        ELSE (sin(__a) - __a * cos(__a))
-                             / (sin(__a) * sin(__a)) END AS __dt
-            FROM wt{2 * it + 1}b
-        ), wt{2 * it + 1}d AS (
-            SELECT *,
-                   CASE WHEN __sa < {_WT_EPS!r} THEN 0.0
-                        ELSE __cp * __sl2 / (2.0 * __sa) END AS __dal,
-                   CASE WHEN __sa < {_WT_EPS!r} THEN 0.0
-                        ELSE __sp * __cl2 / __sa END AS __dap,
-                   (0.5 * ({lam} * {cp1!r} + 2.0 * __cp * __sl2 * __t)
-                    - __wxn) AS __f1,
-                   (0.5 * ({phi} + __sp * __t) - __wyn) AS __f2
-            FROM wt{2 * it + 1}c
-        ), wt{2 * it + 1}e AS (
-            SELECT *,
-                   (0.5 * ({cp1!r} + 2.0 * __cp
-                    * (0.5 * __cl2 * __t + __sl2 * __dt * __dal)))
-                       AS __dxl,
-                   (0.5 * (-2.0 * __sp * __sl2 * __t
-                    + 2.0 * __cp * __sl2 * __dt * __dap)) AS __dxp,
-                   (0.5 * (__sp * __dt * __dal)) AS __dyl,
-                   (0.5 * (1.0 + __cp * __t + __sp * __dt * __dap))
-                       AS __dyp
-            FROM wt{2 * it + 1}d
-        ), wt{2 * it + 2} AS (
-            SELECT * EXCLUDE (__sl2, __cl2, __sp, __cp, __a, __sa, __t,
-                              __dt, __dal, __dap, __f1, __f2,
-                              __dxl, __dxp, __dyl, __dyp),
-                   LEAST(GREATEST({lam} - (__dyp * __f1 - __dxp * __f2)
-                                  / (__dxl * __dyp - __dxp * __dyl),
-                                  {-math.pi!r}), {math.pi!r})
-                       AS __wl{it + 1},
-                   LEAST(GREATEST({phi} - (__dxl * __f2 - __dyl * __f1)
-                                  / (__dxl * __dyp - __dxp * __dyl),
-                                  {-math.pi / 2!r}), {math.pi / 2!r})
-                       AS __wp{it + 1}
-            FROM wt{2 * it + 1}e
-        )"""
-        steps.append(pre)
-    last = _WINTRI_ITERS
-    drops = ", ".join(
-        f"__wl{t}, __wp{t}" for t in range(_WINTRI_ITERS + 1))
-    chain = ", ".join(steps)
-    return f"""wt0 AS (
-            SELECT *, (CAST({x_expr} AS DOUBLE) / {r!r}) AS __wxn,
-                   (CAST({y_expr} AS DOUBLE) / {r!r}) AS __wyn,
-                   LEAST(GREATEST(2.0 * (CAST({x_expr} AS DOUBLE)
-                                         / {r!r}) / {1.0 + cp1!r},
-                                  {-math.pi!r}), {math.pi!r}) AS __wl0,
-                   LEAST(GREATEST((CAST({y_expr} AS DOUBLE) / {r!r}),
-                                  {-math.pi / 2!r}), {math.pi / 2!r})
-                       AS __wp0
-            FROM {src}
-        ), {chain}, wintri_ll AS (
-            SELECT * EXCLUDE (__wxn, __wyn, {drops}),
-                   degrees(__wl{last}) AS lon,
-                   degrees(__wp{last}) AS lat
-            FROM wt{2 * _WINTRI_ITERS}
-        )"""
+    return staged(stages)
 
 
 # ---- Natural Earth (+proj=natearth) -----------------------------------
@@ -4508,48 +3142,48 @@ _NE_ITERS = 6
 
 
 def _ne_xfac(p2):
-    """x polynomial factor (Column), nested exactly as the SQL twin:
+    """x polynomial factor, nested as
     A0 + p2*(A1 + p2*(A2 + p2^3*(A3 + p2*A4)))."""
-    a0, a1, a2, a3, a4 = (F.lit(v) for v in _NE_A)
+    a0, a1, a2, a3, a4 = (X.lit(v) for v in _NE_A)
     return a0 + p2 * (a1 + p2 * (a2 + p2 * p2 * p2
                                  * (a3 + p2 * a4)))
 
 
 def _ne_yfac(p2):
-    b0, b1, b2, b3, b4 = (F.lit(v) for v in _NE_B)
+    b0, b1, b2, b3, b4 = (X.lit(v) for v in _NE_B)
     return b0 + p2 * (b1 + p2 * p2 * (b2 + b3 * p2 + b4 * p2 * p2))
 
 
 def _ne_dy(p2):
-    c0, c1, c2, c3, c4 = (F.lit(v) for v in _NE_C)
+    c0, c1, c2, c3, c4 = (X.lit(v) for v in _NE_C)
     return c0 + p2 * (c1 + p2 * p2 * (c2 + c3 * p2 + c4 * p2 * p2))
 
 
-def _lonlat_to_natearth_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_natearth_fn(crs: str) -> Transform:
     r = NATEARTH_PARAMS[crs.upper()]
 
     def s_phi(env):
-        return F.radians(env["__in_y"])
+        return X.radians(env["__in_y"])
 
     def out(env):
         phi = env["__phi"]
         p2 = phi * phi
-        x = F.lit(r) * F.radians(env["__in_x"]) * _ne_xfac(p2)
-        y = F.lit(r) * phi * _ne_yfac(p2)
+        x = X.lit(r) * X.radians(env["__in_x"]) * _ne_xfac(p2)
+        y = X.lit(r) * phi * _ne_yfac(p2)
         return x, y
 
-    return StagedTransform([
+    return staged([
         {"__phi": s_phi},
         {"__out_x": lambda env: out(env)[0],
          "__out_y": lambda env: out(env)[1]},
     ])
 
 
-def _natearth_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _natearth_to_lonlat_fn(crs: str) -> Transform:
     r = NATEARTH_PARAMS[crs.upper()]
 
     def s_yn(env):
-        return env["__in_y"] / F.lit(r)
+        return env["__in_y"] / X.lit(r)
 
     def s_phi0(env):
         return env["__yn"]  # y/R is within ~7% of phi everywhere
@@ -4562,60 +3196,16 @@ def _natearth_to_lonlat_fn(crs: str) -> "StagedTransform":
     def out_x(env):
         phi = env["__phi"]
         p2 = phi * phi
-        return F.degrees(
-            env["__in_x"] / (F.lit(r) * _ne_xfac(p2)))
+        return X.degrees(
+            env["__in_x"] / (X.lit(r) * _ne_xfac(p2)))
 
     def out_y(env):
-        return F.degrees(env["__phi"])
+        return X.degrees(env["__phi"])
 
     stages: list[dict] = [{"__yn": s_yn}, {"__phi": s_phi0}]
     stages += [{"__phi": step} for _ in range(_NE_ITERS)]
     stages += [{"__out_x": out_x, "__out_y": out_y}]
-    return StagedTransform(stages)
-
-
-def natearth_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                              src: str = "tgt") -> str:
-    """The SAME Natural Earth inverse as a chain of CTEs over ``src``
-    (for DuckDB oracles) — identical nesting and iteration count to
-    :func:`_natearth_to_lonlat_fn`.  Emits CTEs ``ne1..`` and finally
-    ``natearth_ll`` = ``src`` columns + ``lon``/``lat``."""
-    r = NATEARTH_PARAMS[crs.upper()]
-    a0, a1, a2, a3, a4 = _NE_A
-    b0, b1, b2, b3, b4 = _NE_B
-    c0, c1, c2, c3, c4 = _NE_C
-
-    def yfac(p2):
-        return (f"({b0!r} + {p2} * ({b1!r} + {p2} * {p2} "
-                f"* ({b2!r} + {b3!r} * {p2} + {b4!r} * {p2} * {p2})))")
-
-    def dy(p2):
-        return (f"({c0!r} + {p2} * ({c1!r} + {p2} * {p2} "
-                f"* ({c2!r} + {c3!r} * {p2} + {c4!r} * {p2} * {p2})))")
-
-    def xfac(p2):
-        return (f"({a0!r} + {p2} * ({a1!r} + {p2} * ({a2!r} "
-                f"+ {p2} * {p2} * {p2} * ({a3!r} + {p2} * {a4!r}))))")
-
-    iters = "".join(f"""), ne{3 + k} AS (
-            SELECT * EXCLUDE (__phi),
-                   (__phi - (__phi * {yfac('(__phi * __phi)')} - __yn)
-                    / {dy('(__phi * __phi)')}) AS __phi
-            FROM ne{2 + k}""" for k in range(_NE_ITERS))
-    n_last = 2 + _NE_ITERS
-    return f"""ne1 AS (
-            SELECT *, (CAST({y_expr} AS DOUBLE) / {r!r}) AS __yn,
-                   CAST({x_expr} AS DOUBLE) AS __xe
-            FROM {src}
-        ), ne2 AS (
-            SELECT *, __yn AS __phi FROM ne1
-        {iters}), natearth_ll AS (
-            SELECT * EXCLUDE (__yn, __xe, __phi),
-                   degrees(__xe / ({r!r}
-                       * {xfac('(__phi * __phi)')})) AS lon,
-                   degrees(__phi) AS lat
-            FROM ne{n_last}
-        )"""
+    return staged(stages)
 
 
 # ---- Eckert IV (World_Eckert_IV, ESRI:54012) --------------------------
@@ -4636,77 +3226,45 @@ _ECK4_CY = 2.0 * math.sqrt(math.pi / (4.0 + math.pi))
 _ECK4_CP = 2.0 + math.pi / 2.0
 
 
-class _Eck4Forward:
-    """lon/lat -> Eckert IV; the Newton solve for t is staged as
-    materialized columns (apply_df), mirroring _MollForward."""
-
-    def __init__(self, crs: str, iterations: int = 10):
-        self.r = ECK4_PARAMS[crs.upper()]
-        self.iterations = iterations
-
-    def _step(self, t: Column, sinphi: Column) -> Column:
-        # Newton on f(t) = t + sin t cos t + 2 sin t - Cp sin phi;
-        # f'(t) = 2 cos t (1 + cos t) vanishes at the poles where
-        # t = phi is already the solution
-        num = t + F.sin(t) * F.cos(t) + F.lit(2.0) * F.sin(t) \
-            - F.lit(_ECK4_CP) * sinphi
-        den = F.lit(2.0) * F.cos(t) * (F.lit(1.0) + F.cos(t))
-        return F.when(F.abs(den) < 1e-12, t).otherwise(t - num / den)
-
-    def _xy(self, lon: Column, t: Column) -> tuple[Column, Column]:
-        x = F.lit(_ECK4_CX * self.r) * F.radians(lon) \
-            * (F.lit(1.0) + F.cos(t))
-        y = F.lit(_ECK4_CY * self.r) * F.sin(t)
-        return x, y
-
-    def __call__(self, lon: Column, lat: Column) -> tuple[Column, Column]:
-        t = F.radians(lat)
-        sinphi = F.sin(F.radians(lat))
-        for _ in range(self.iterations):
-            t = self._step(t, sinphi)
-        return self._xy(lon, t)
-
-    def apply_df(self, df, x_expr: Column, y_expr: Column,
-                 out_x: str, out_y: str):
-        df = df.withColumns({
-            "__e4_lam": x_expr,
-            "__e4_sph": F.sin(F.radians(y_expr)),
-            "__e4_t": F.radians(y_expr),
-        })
-        for _ in range(self.iterations):
-            df = df.withColumn(
-                "__e4_t", self._step(F.col("__e4_t"), F.col("__e4_sph")))
-        x, y = self._xy(F.col("__e4_lam"), F.col("__e4_t"))
-        return df.withColumns({out_x: x, out_y: y}) \
-            .drop("__e4_lam", "__e4_sph", "__e4_t")
+_ECK4_ITERS = 10
 
 
-def _eck4_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_eck4_fn(crs: str) -> Transform:
+    """lon/lat -> Eckert IV; the Newton solve for t is staged,
+    Mollweide-style."""
     r = ECK4_PARAMS[crs.upper()]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        t = F.asin(y / F.lit(_ECK4_CY * r))
-        phi = F.asin(
-            (t + F.sin(t) * F.cos(t) + F.lit(2.0) * F.sin(t))
-            / F.lit(_ECK4_CP))
-        lon = F.degrees(
-            x / (F.lit(_ECK4_CX * r) * (F.lit(1.0) + F.cos(t))))
-        return lon, F.degrees(phi)
+    def step(env):
+        t, sinphi = env["__e4_t"], env["__e4_sph"]
+        num = t + X.sin(t) * X.cos(t) + X.lit(2.0) * X.sin(t) \
+            - X.lit(_ECK4_CP) * sinphi
+        den = X.lit(2.0) * X.cos(t) * (X.lit(1.0) + X.cos(t))
+        return X.when(X.abs(den) < 1e-12, t).otherwise(t - num / den)
 
-    return inv
+    stages = [{"__e4_sph": lambda env: X.sin(X.radians(env["__in_y"])),
+               "__e4_t": lambda env: X.radians(env["__in_y"])}]
+    stages += [{"__e4_t": step}] * _ECK4_ITERS
+    stages.append({
+        "__out_x": lambda env: X.lit(_ECK4_CX * r)
+        * X.radians(env["__in_x"]) * (X.lit(1.0) + X.cos(env["__e4_t"])),
+        "__out_y": lambda env: X.lit(_ECK4_CY * r) * X.sin(env["__e4_t"]),
+    })
+    return staged(stages)
 
 
-def eck4_inverse_sql(x_expr: str, y_expr: str, crs: str) \
-        -> tuple[str, str]:
-    """The SAME Eckert-IV inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_eck4_to_lonlat_fn`."""
+def _eck4_to_lonlat_fn(crs: str) -> Transform:
     r = ECK4_PARAMS[crs.upper()]
-    t = f"asin(CAST({y_expr} AS DOUBLE) / {_ECK4_CY * r!r})"
-    phi = (f"degrees(asin(({t} + sin({t}) * cos({t})"
-           f" + 2.0 * sin({t})) / {_ECK4_CP!r}))")
-    lon = (f"degrees(CAST({x_expr} AS DOUBLE) / ({_ECK4_CX * r!r}"
-           f" * (1.0 + cos({t}))))")
-    return lon, phi
+
+    def inv(x: E, y: E) -> tuple[E, E]:
+        t = X.asin(y / X.lit(_ECK4_CY * r))
+        phi = X.asin(
+            (t + X.sin(t) * X.cos(t) + X.lit(2.0) * X.sin(t))
+            / X.lit(_ECK4_CP))
+        lon = X.degrees(
+            x / (X.lit(_ECK4_CX * r) * (X.lit(1.0) + X.cos(t))))
+        return lon, X.degrees(phi)
+
+    return single(inv)
 
 
 # ---- Miller cylindrical (World_Miller_Cylindrical, ESRI:54003) --------
@@ -4722,40 +3280,30 @@ MILL_PARAMS: dict[str, float] = {
 }
 
 
-def _lonlat_to_mill_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_mill_fn(crs: str) -> Transform:
     r = MILL_PARAMS[crs.upper()]
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        x = F.lit(r) * F.radians(lon)
-        y = F.lit(1.25 * r) * F.log(
-            F.tan(F.lit(math.pi / 4.0)
-                  + F.lit(0.4) * F.radians(lat)))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        x = X.lit(r) * X.radians(lon)
+        y = X.lit(1.25 * r) * X.log(
+            X.tan(X.lit(math.pi / 4.0)
+                  + X.lit(0.4) * X.radians(lat)))
         return x, y
 
-    return fwd
+    return single(fwd)
 
 
-def _mill_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _mill_to_lonlat_fn(crs: str) -> Transform:
     r = MILL_PARAMS[crs.upper()]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lat = F.degrees(F.lit(2.5) * (
-            F.atan(F.exp(F.lit(0.8) * y / F.lit(r)))
-            - F.lit(math.pi / 4.0)))
-        lon = F.degrees(x / F.lit(r))
+    def inv(x: E, y: E) -> tuple[E, E]:
+        lat = X.degrees(X.lit(2.5) * (
+            X.atan(X.exp(X.lit(0.8) * y / X.lit(r)))
+            - X.lit(math.pi / 4.0)))
+        lon = X.degrees(x / X.lit(r))
         return lon, lat
 
-    return inv
-
-
-def mill_inverse_sql(x_expr: str, y_expr: str, crs: str) \
-        -> tuple[str, str]:
-    """The SAME Miller inverse as SQL strings (for DuckDB oracles)."""
-    r = MILL_PARAMS[crs.upper()]
-    lat = (f"degrees(2.5 * (atan(exp(0.8 * CAST({y_expr} AS DOUBLE)"
-           f" / {r!r})) - {math.pi / 4.0!r}))")
-    lon = f"degrees(CAST({x_expr} AS DOUBLE) / {r!r})"
-    return lon, lat
+    return single(inv)
 
 
 # ---- Van der Grinten I (World_Van_der_Grinten_I, ESRI:54029) ----------
@@ -4772,178 +3320,116 @@ VANDG_PARAMS: dict[str, float] = {
 }
 
 
-def _lonlat_to_vandg_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_vandg_fn(crs: str) -> Transform:
     r = VANDG_PARAMS[crs.upper()]
     pr = math.pi * r
 
     stages: list[dict] = [
-        {"__lam": lambda env: F.radians(env["__in_x"]),
-         "__phi": lambda env: F.radians(env["__in_y"])},
+        {"__lam": lambda env: X.radians(env["__in_x"]),
+         "__phi": lambda env: X.radians(env["__in_y"])},
         # theta = asin|2 phi / pi| (33-6); A (33-2); sign carriers
-        {"__th": lambda env: F.asin(
-            F.abs(F.lit(2.0) * env["__phi"] / F.lit(math.pi))),
-         "__A": lambda env: F.lit(0.5) * F.abs(
-             F.lit(math.pi) / env["__lam"]
-             - env["__lam"] / F.lit(math.pi)),
-         "__sx": lambda env: F.signum(env["__lam"]),
-         "__sy": lambda env: F.signum(env["__phi"])},
+        {"__th": lambda env: X.asin(
+            X.abs(X.lit(2.0) * env["__phi"] / X.lit(math.pi))),
+         "__A": lambda env: X.lit(0.5) * X.abs(
+             X.lit(math.pi) / env["__lam"]
+             - env["__lam"] / X.lit(math.pi)),
+         "__sx": lambda env: X.signum(env["__lam"]),
+         "__sy": lambda env: X.signum(env["__phi"])},
         # G (33-3), P (33-4) — guarded at phi = 0 where the general
         # form degenerates (the equator maps linearly, 33-9)
-        {"__G": lambda env: F.cos(env["__th"]) / (
-            F.sin(env["__th"]) + F.cos(env["__th"]) - F.lit(1.0)),
+        {"__G": lambda env: X.cos(env["__th"]) / (
+            X.sin(env["__th"]) + X.cos(env["__th"]) - X.lit(1.0)),
          },
         {"__P": lambda env: env["__G"] * (
-            F.lit(2.0) / F.sin(env["__th"]) - F.lit(1.0))},
+            X.lit(2.0) / X.sin(env["__th"]) - X.lit(1.0))},
         {"__Q": lambda env: env["__A"] * env["__A"] + env["__G"],
          "__P2": lambda env: env["__P"] * env["__P"],
          "__A2": lambda env: env["__A"] * env["__A"]},
         # x (33-7), y (33-8) with the equator / central-meridian /
         # pole special cases (33-9..33-13)
-        {"__out_x": lambda env: F.when(
-            F.abs(env["__phi"]) < F.lit(1e-12),
-            F.lit(r) * env["__lam"]
+        {"__out_x": lambda env: X.when(
+            X.abs(env["__phi"]) < X.lit(1e-12),
+            X.lit(r) * env["__lam"]
         ).when(
-            F.abs(env["__lam"]) < F.lit(1e-12), F.lit(0.0)
+            X.abs(env["__lam"]) < X.lit(1e-12), X.lit(0.0)
         ).otherwise(
-            env["__sx"] * F.lit(pr) * (
-                env["__A"] * (env["__G"] - env["__P2"]) + F.sqrt(
+            env["__sx"] * X.lit(pr) * (
+                env["__A"] * (env["__G"] - env["__P2"]) + X.sqrt(
                     env["__A2"]
                     * (env["__G"] - env["__P2"])
                     * (env["__G"] - env["__P2"])
                     - (env["__P2"] + env["__A2"])
                     * (env["__G"] * env["__G"] - env["__P2"]))
             ) / (env["__P2"] + env["__A2"])),
-         "__out_y": lambda env: F.when(
-            F.abs(env["__phi"]) < F.lit(1e-12), F.lit(0.0)
+         "__out_y": lambda env: X.when(
+            X.abs(env["__phi"]) < X.lit(1e-12), X.lit(0.0)
          ).when(
-            F.abs(env["__lam"]) < F.lit(1e-12),
-            env["__sy"] * F.lit(pr)
-            * F.tan(env["__th"] / F.lit(2.0))
+            X.abs(env["__lam"]) < X.lit(1e-12),
+            env["__sy"] * X.lit(pr)
+            * X.tan(env["__th"] / X.lit(2.0))
          ).otherwise(
-            env["__sy"] * F.lit(pr) * (
-                env["__P"] * env["__Q"] - env["__A"] * F.sqrt(
-                    (env["__A2"] + F.lit(1.0))
+            env["__sy"] * X.lit(pr) * (
+                env["__P"] * env["__Q"] - env["__A"] * X.sqrt(
+                    (env["__A2"] + X.lit(1.0))
                     * (env["__P2"] + env["__A2"])
                     - env["__Q"] * env["__Q"])
             ) / (env["__P2"] + env["__A2"]))},
     ]
-    return StagedTransform(stages)
+    return staged(stages)
 
 
-def _vandg_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _vandg_to_lonlat_fn(crs: str) -> Transform:
     r = VANDG_PARAMS[crs.upper()]
     pr = math.pi * r
 
     stages: list[dict] = [
-        {"__X": lambda env: env["__in_x"] / F.lit(pr),
-         "__Y": lambda env: env["__in_y"] / F.lit(pr)},
+        {"__X": lambda env: env["__in_x"] / X.lit(pr),
+         "__Y": lambda env: env["__in_y"] / X.lit(pr)},
         {"__X2": lambda env: env["__X"] * env["__X"],
          "__Y2": lambda env: env["__Y"] * env["__Y"]},
         # c1..c3 (33-16..33-18)
-        {"__c1": lambda env: F.lit(-1.0) * F.abs(env["__Y"]) * (
-            F.lit(1.0) + env["__X2"] + env["__Y2"])},
-        {"__c2": lambda env: env["__c1"] - F.lit(2.0) * env["__Y2"]
+        {"__c1": lambda env: X.lit(-1.0) * X.abs(env["__Y"]) * (
+            X.lit(1.0) + env["__X2"] + env["__Y2"])},
+        {"__c2": lambda env: env["__c1"] - X.lit(2.0) * env["__Y2"]
             + env["__X2"]},
-        {"__c3": lambda env: F.lit(-2.0) * env["__c1"] + F.lit(1.0)
-            + F.lit(2.0) * env["__Y2"]
+        {"__c3": lambda env: X.lit(-2.0) * env["__c1"] + X.lit(1.0)
+            + X.lit(2.0) * env["__Y2"]
             + (env["__X2"] + env["__Y2"])
             * (env["__X2"] + env["__Y2"])},
         # d (33-19), a1 (33-20), m1 (33-21), theta1 (33-22)
         {"__d": lambda env: env["__Y2"] / env["__c3"] + (
-            F.lit(2.0) * env["__c2"] * env["__c2"] * env["__c2"]
+            X.lit(2.0) * env["__c2"] * env["__c2"] * env["__c2"]
             / (env["__c3"] * env["__c3"] * env["__c3"])
-            - F.lit(9.0) * env["__c1"] * env["__c2"]
-            / (env["__c3"] * env["__c3"])) / F.lit(27.0),
+            - X.lit(9.0) * env["__c1"] * env["__c2"]
+            / (env["__c3"] * env["__c3"])) / X.lit(27.0),
          "__a1": lambda env: (env["__c1"] - env["__c2"] * env["__c2"]
-                              / (F.lit(3.0) * env["__c3"]))
+                              / (X.lit(3.0) * env["__c3"]))
             / env["__c3"]},
-        {"__m1": lambda env: F.lit(2.0) * F.sqrt(
-            F.lit(-1.0) * env["__a1"] / F.lit(3.0))},
-        {"__t1": lambda env: F.acos(
-            F.lit(3.0) * env["__d"]
-            / (env["__a1"] * env["__m1"])) / F.lit(3.0)},
+        {"__m1": lambda env: X.lit(2.0) * X.sqrt(
+            X.lit(-1.0) * env["__a1"] / X.lit(3.0))},
+        {"__t1": lambda env: X.acos(
+            X.lit(3.0) * env["__d"]
+            / (env["__a1"] * env["__m1"])) / X.lit(3.0)},
         # phi (33-23) guarded at Y = 0; lam (33-15) guarded at X = 0
-        {"__out_y": lambda env: F.when(
-            F.abs(env["__Y"]) < F.lit(1e-12), F.lit(0.0)
-        ).otherwise(F.degrees(
-            F.signum(env["__Y"]) * F.lit(math.pi) * (
-                F.lit(-1.0) * env["__m1"] * F.cos(
-                    env["__t1"] + F.lit(math.pi / 3.0))
-                - env["__c2"] / (F.lit(3.0) * env["__c3"])))),
-         "__out_x": lambda env: F.when(
-            F.abs(env["__X"]) < F.lit(1e-12), F.lit(0.0)
-         ).otherwise(F.degrees(
-            F.lit(math.pi) * (
-                env["__X2"] + env["__Y2"] - F.lit(1.0) + F.sqrt(
-                    F.lit(1.0)
-                    + F.lit(2.0) * (env["__X2"] - env["__Y2"])
+        {"__out_y": lambda env: X.when(
+            X.abs(env["__Y"]) < X.lit(1e-12), X.lit(0.0)
+        ).otherwise(X.degrees(
+            X.signum(env["__Y"]) * X.lit(math.pi) * (
+                X.lit(-1.0) * env["__m1"] * X.cos(
+                    env["__t1"] + X.lit(math.pi / 3.0))
+                - env["__c2"] / (X.lit(3.0) * env["__c3"])))),
+         "__out_x": lambda env: X.when(
+            X.abs(env["__X"]) < X.lit(1e-12), X.lit(0.0)
+         ).otherwise(X.degrees(
+            X.lit(math.pi) * (
+                env["__X2"] + env["__Y2"] - X.lit(1.0) + X.sqrt(
+                    X.lit(1.0)
+                    + X.lit(2.0) * (env["__X2"] - env["__Y2"])
                     + (env["__X2"] + env["__Y2"])
                     * (env["__X2"] + env["__Y2"])))
-            / (F.lit(2.0) * env["__X"])))},
+            / (X.lit(2.0) * env["__X"])))},
     ]
-    return StagedTransform(stages)
-
-
-def vandg_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                           src: str = "tgt") -> str:
-    """The SAME Van der Grinten inverse as a chain of CTEs over
-    ``src`` (for DuckDB oracles) — identical arithmetic to
-    :func:`_vandg_to_lonlat_fn`.  Emits CTEs ``vg1..`` and finally
-    ``vandg_ll`` = ``src`` columns + ``lon``/``lat``."""
-    r = VANDG_PARAMS[crs.upper()]
-    pr = math.pi * r
-    return f"""vg1 AS (
-            SELECT *, (({x_expr}) / {pr!r}) AS __X,
-                   (({y_expr}) / {pr!r}) AS __Y
-            FROM {src}
-        ), vg2 AS (
-            SELECT *, (__X * __X) AS __X2, (__Y * __Y) AS __Y2
-            FROM vg1
-        ), vg3 AS (
-            SELECT *, (-1.0 * abs(__Y)
-                       * (1.0 + __X2 + __Y2)) AS __c1
-            FROM vg2
-        ), vg4 AS (
-            SELECT *, (__c1 - 2.0 * __Y2 + __X2) AS __c2
-            FROM vg3
-        ), vg5 AS (
-            SELECT *, (-2.0 * __c1 + 1.0 + 2.0 * __Y2
-                       + (__X2 + __Y2) * (__X2 + __Y2)) AS __c3
-            FROM vg4
-        ), vg6 AS (
-            SELECT *,
-                   (__Y2 / __c3 + (2.0 * __c2 * __c2 * __c2
-                                   / (__c3 * __c3 * __c3)
-                                   - 9.0 * __c1 * __c2
-                                   / (__c3 * __c3)) / 27.0) AS __d,
-                   ((__c1 - __c2 * __c2 / (3.0 * __c3))
-                    / __c3) AS __a1
-            FROM vg5
-        ), vg7 AS (
-            SELECT *, (2.0 * sqrt(-1.0 * __a1 / 3.0)) AS __m1
-            FROM vg6
-        ), vg8 AS (
-            SELECT *, (acos(3.0 * __d / (__a1 * __m1))
-                       / 3.0) AS __t1
-            FROM vg7
-        ), vandg_ll AS (
-            SELECT * EXCLUDE (__X, __Y, __X2, __Y2, __c1, __c2,
-                              __c3, __d, __a1, __m1, __t1),
-                   CASE WHEN abs(__X) < 1e-12 THEN 0.0
-                        ELSE degrees({math.pi!r} * (
-                            __X2 + __Y2 - 1.0 + sqrt(
-                                1.0 + 2.0 * (__X2 - __Y2)
-                                + (__X2 + __Y2) * (__X2 + __Y2)))
-                            / (2.0 * __X))
-                   END AS lon,
-                   CASE WHEN abs(__Y) < 1e-12 THEN 0.0
-                        ELSE degrees(sign(__Y) * {math.pi!r} * (
-                            -1.0 * __m1 * cos(__t1
-                                + {math.pi / 3.0!r})
-                            - __c2 / (3.0 * __c3)))
-                   END AS lat
-            FROM vg8
-        )"""
+    return staged(stages)
 
 
 # ---- sinusoidal (MODIS grid, ESRI:54008) ------------------------------
@@ -4958,32 +3444,24 @@ SINU_PARAMS: dict[str, float] = {
 }
 
 
-def _lonlat_to_sinu_fn(crs: str) -> ColumnTransform:
+def _lonlat_to_sinu_fn(crs: str) -> Transform:
     r = SINU_PARAMS[crs.upper()]
 
-    def fwd(lon: Column, lat: Column) -> tuple[Column, Column]:
-        return (F.lit(r) * F.radians(lon) * F.cos(F.radians(lat)),
-                F.lit(r) * F.radians(lat))
+    def fwd(lon: E, lat: E) -> tuple[E, E]:
+        return (X.lit(r) * X.radians(lon) * X.cos(X.radians(lat)),
+                X.lit(r) * X.radians(lat))
 
-    return fwd
+    return single(fwd)
 
 
-def _sinu_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _sinu_to_lonlat_fn(crs: str) -> Transform:
     r = SINU_PARAMS[crs.upper()]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        phi = y / F.lit(r)
-        return F.degrees(x / (F.lit(r) * F.cos(phi))), F.degrees(phi)
+    def inv(x: E, y: E) -> tuple[E, E]:
+        phi = y / X.lit(r)
+        return X.degrees(x / (X.lit(r) * X.cos(phi))), X.degrees(phi)
 
-    return inv
-
-
-def sinu_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME sinusoidal inverse as SQL strings (for DuckDB oracles)."""
-    r = SINU_PARAMS[crs.upper()]
-    phi = f"(CAST({y_expr} AS DOUBLE) / {r!r})"
-    lon = f"degrees(CAST({x_expr} AS DOUBLE) / ({r!r} * cos({phi})))"
-    return lon, f"degrees({phi})"
+    return single(inv)
 
 
 # ---- Robinson (+proj=robin; ESRI:54030) ---------------------------------
@@ -4995,7 +3473,7 @@ def sinu_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
 # y = 1.3523 R Y(|lat|) sign(lat).  This implementation interpolates
 # with the natural cubic spline through the 19 published nodes
 # (coefficients solved once at import by a pure-Python tridiagonal
-# pass and embedded identically in the Column math and the SQL twin);
+# pass and embedded as literals in the stages);
 # the inverse solves the monotone Y cubic per interval with a
 # fixed-count Newton (4 iterations — the sterea/somerc discipline:
 # both engines run the SAME count).
@@ -5049,32 +3527,26 @@ ROBIN_PARAMS: dict[str, float] = {
 }
 
 
-def _robin_pick(i: Column, vals: list[float]) -> Column:
+def _robin_pick(i: E, vals: list[float]) -> E:
     """CASE ladder selecting a per-interval spline constant."""
-    expr = F.lit(vals[-1])
+    expr = X.lit(vals[-1])
     for j in range(len(vals) - 2, -1, -1):
-        expr = F.when(i == j, F.lit(vals[j])).otherwise(expr)
+        expr = X.when(i == j, X.lit(vals[j])).otherwise(expr)
     return expr
 
 
-def _robin_pick_sql(i: str, vals: list[float]) -> str:
-    arms = " ".join(f"WHEN {j} THEN {vals[j]!r}"
-                    for j in range(len(vals) - 1))
-    return f"(CASE {i} {arms} ELSE {vals[-1]!r} END)"
-
-
-def _lonlat_to_robin_fn(crs: str) -> "StagedTransform":
+def _lonlat_to_robin_fn(crs: str) -> Transform:
     r = ROBIN_PARAMS[crs.upper()]
     xk, yk = _ROBIN_XK * r, _ROBIN_YK * r
     xa, xb, xc, xd = (list(t) for t in zip(*_ROBIN_XC))
     ya, yb, yc, yd = (list(t) for t in zip(*_ROBIN_YC))
 
     def c_ad(env):
-        return F.least(F.abs(env["__in_y"]) / F.lit(5.0),
-                       F.lit(17.999999))
+        return X.least(X.abs(env["__in_y"]) / X.lit(5.0),
+                       X.lit(17.999999))
 
     def c_i(env):
-        return F.floor(env["__ad"]).cast("int")
+        return X.floor(env["__ad"]).cast("int")
 
     def c_s(env):
         return env["__ad"] - env["__i"].cast("double")
@@ -5092,13 +3564,13 @@ def _lonlat_to_robin_fn(crs: str) -> "StagedTransform":
                 + _robin_pick(i, yd) * s * s * s)
 
     def c_out_x(env):
-        return F.lit(xk) * env["__xf"] * F.radians(env["__in_x"])
+        return X.lit(xk) * env["__xf"] * X.radians(env["__in_x"])
 
     def c_out_y(env):
-        return (F.lit(yk) * env["__yf"]
-                * F.signum(env["__in_y"] + F.lit(0.0)))
+        return (X.lit(yk) * env["__yf"]
+                * X.signum(env["__in_y"] + X.lit(0.0)))
 
-    return StagedTransform([
+    return staged([
         {"__ad": c_ad},
         {"__i": c_i},
         {"__s": c_s},
@@ -5107,7 +3579,7 @@ def _lonlat_to_robin_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _robin_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _robin_to_lonlat_fn(crs: str) -> Transform:
     r = ROBIN_PARAMS[crs.upper()]
     xk, yk = _ROBIN_XK * r, _ROBIN_YK * r
     xa, xb, xc, xd = (list(t) for t in zip(*_ROBIN_XC))
@@ -5115,15 +3587,15 @@ def _robin_to_lonlat_fn(crs: str) -> "StagedTransform":
     nodes = list(_ROBIN_Y)
 
     def c_ay(env):
-        return F.least(F.abs(env["__in_y"]) / F.lit(yk), F.lit(1.0))
+        return X.least(X.abs(env["__in_y"]) / X.lit(yk), X.lit(1.0))
 
     def c_i(env):
         # largest interval whose lower node <= ay (17 comparisons),
         # capped at the last interval
         ay = env["__ay"]
-        i = F.lit(0)
+        i = X.lit(0)
         for j in range(1, len(nodes) - 1):
-            i = i + F.when(ay >= F.lit(nodes[j]), 1).otherwise(0)
+            i = i + X.when(ay >= X.lit(nodes[j]), 1).otherwise(0)
         return i.cast("int")
 
     def c_s(env):
@@ -5138,261 +3610,100 @@ def _robin_to_lonlat_fn(crs: str) -> "StagedTransform":
         f = (_robin_pick(i, ya) + _robin_pick(i, yb) * s
              + _robin_pick(i, yc) * s * s
              + _robin_pick(i, yd) * s * s * s) - ay
-        fp = (_robin_pick(i, yb) + F.lit(2.0) * _robin_pick(i, yc) * s
-              + F.lit(3.0) * _robin_pick(i, yd) * s * s)
+        fp = (_robin_pick(i, yb) + X.lit(2.0) * _robin_pick(i, yc) * s
+              + X.lit(3.0) * _robin_pick(i, yd) * s * s)
         return s - f / fp
 
     def c_lat(env):
-        return (F.lit(5.0) * (env["__i"].cast("double") + env["__s"])
-                * F.signum(env["__in_y"] + F.lit(0.0)))
+        return (X.lit(5.0) * (env["__i"].cast("double") + env["__s"])
+                * X.signum(env["__in_y"] + X.lit(0.0)))
 
     def c_lon(env):
         i, s = env["__i"], env["__s"]
         xf = (_robin_pick(i, xa) + _robin_pick(i, xb) * s
               + _robin_pick(i, xc) * s * s
               + _robin_pick(i, xd) * s * s * s)
-        return F.degrees(env["__in_x"] / (F.lit(xk) * xf))
+        return X.degrees(env["__in_x"] / (X.lit(xk) * xf))
 
     stages = [{"__ay": c_ay}, {"__i": c_i}, {"__s": c_s}]
     for _ in range(_ROBIN_ITERS):
         stages.append({"__s": mk_step})
     stages.append({"__out_x": c_lon, "__out_y": c_lat})
-    return StagedTransform(stages)
+    return staged(stages)
 
 
-def robin_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                           src: str = "tgt") -> str:
-    """The SAME Robinson inverse as a chain of CTEs over ``src`` (for
-    DuckDB oracles) — identical arithmetic and Newton count to
-    :func:`_robin_to_lonlat_fn`.  Emits CTEs ``rb1..`` and finally
-    ``robin_ll`` = ``src`` columns + ``lon``/``lat``."""
-    r = ROBIN_PARAMS[crs.upper()]
-    xk, yk = _ROBIN_XK * r, _ROBIN_YK * r
-    xa, xb, xc, xd = (list(t) for t in zip(*_ROBIN_XC))
-    ya, yb, yc, yd = (list(t) for t in zip(*_ROBIN_YC))
-    nodes = list(_ROBIN_Y)
-    isum = " + ".join(
-        f"(CASE WHEN __ay >= {nodes[j]!r} THEN 1 ELSE 0 END)"
-        for j in range(1, len(nodes) - 1))
-    steps = []
-    for t in range(_ROBIN_ITERS):
-        cur, nxt = f"__s{t}", f"__s{t + 1}"
-        f = (f"({_robin_pick_sql('__i', list(ya))} "
-             f"+ {_robin_pick_sql('__i', list(yb))} * {cur} "
-             f"+ {_robin_pick_sql('__i', list(yc))} * {cur} * {cur} "
-             f"+ {_robin_pick_sql('__i', list(yd))} * {cur} * {cur}"
-             f" * {cur}) - __ay")
-        fp = (f"({_robin_pick_sql('__i', list(yb))} "
-              f"+ 2.0 * {_robin_pick_sql('__i', list(yc))} * {cur} "
-              f"+ 3.0 * {_robin_pick_sql('__i', list(yd))} * {cur}"
-              f" * {cur})")
-        steps.append(f"""rb{4 + t} AS (
-            SELECT *, ({cur} - ({f}) / {fp}) AS {nxt}
-            FROM rb{3 + t}
-        )""")
-    last = f"__s{_ROBIN_ITERS}"
-    xf = (f"({_robin_pick_sql('__i', list(xa))} "
-          f"+ {_robin_pick_sql('__i', list(xb))} * {last} "
-          f"+ {_robin_pick_sql('__i', list(xc))} * {last} * {last} "
-          f"+ {_robin_pick_sql('__i', list(xd))} * {last} * {last}"
-          f" * {last})")
-    lo = _robin_pick_sql("__i", nodes[:-1])
-    hi = _robin_pick_sql("__i", nodes[1:])
-    chain = ", ".join(steps)
-    return f"""rb1 AS (
-            SELECT *, LEAST(abs({y_expr}) / {yk!r}, 1.0) AS __ay,
-                   ({x_expr}) AS __rx, ({y_expr}) AS __ry
-            FROM {src}
-        ), rb2 AS (
-            SELECT *, CAST(({isum}) AS INT) AS __i FROM rb1
-        ), rb3 AS (
-            SELECT *, ((__ay - {lo}) / ({hi} - {lo})) AS __s0
-            FROM rb2
-        ), {chain}, robin_ll AS (
-            SELECT * EXCLUDE (__ay, __rx, __ry, __i,
-                              {", ".join(f"__s{t}" for t in
-                                         range(_ROBIN_ITERS + 1))}),
-                   degrees(__rx / ({xk!r} * {xf})) AS lon,
-                   (5.0 * (CAST(__i AS DOUBLE) + {last})
-                    * CASE WHEN (__ry + 0.0) > 0.0 THEN 1.0
-                           WHEN (__ry + 0.0) < 0.0 THEN -1.0
-                           ELSE 0.0 END) AS lat
-            FROM rb{3 + _ROBIN_ITERS}
-        )"""
+#: (parameter table, from-lon/lat function, to-lon/lat function) per
+#: parameterized family; EPSG:3857, EPSG:27700 and the UTM zones are
+#: matched by code below
+_FAMILIES: list[tuple[dict, Callable[[str], Transform],
+                      Callable[[str], Transform]]] = [
+    (MERC_PARAMS, _lonlat_to_merc_fn, _merc_to_lonlat_fn),
+    (GEOS_PARAMS, _lonlat_to_geos_fn, _geos_to_lonlat_fn),
+    (ROTPOLE_PARAMS, _lonlat_to_rotpole_fn, _rotpole_to_lonlat_fn),
+    (STEREA_PARAMS, _lonlat_to_sterea_fn, _sterea_to_lonlat_fn),
+    (SOMERC_PARAMS, _lonlat_to_somerc_fn, _somerc_to_lonlat_fn),
+    (KROVAK_PARAMS, _lonlat_to_krovak_fn, _krovak_to_lonlat_fn),
+    (EQEARTH_PARAMS, _lonlat_to_eqearth_fn, _eqearth_to_lonlat_fn),
+    (CASS_PARAMS, _lonlat_to_cass_fn, _cass_to_lonlat_fn),
+    (POLY_PARAMS, _lonlat_to_poly_fn, _poly_to_lonlat_fn),
+    (PS_PARAMS, _lonlat_to_ps_fn, _ps_to_lonlat_fn),
+    (CEA_PARAMS, _lonlat_to_cea_fn, _cea_to_lonlat_fn),
+    (AEQD_PARAMS, _lonlat_to_aeqd_fn, _aeqd_to_lonlat_fn),
+    (ORTHO_PARAMS, _lonlat_to_ortho_fn, _ortho_to_lonlat_fn),
+    (NSPER_PARAMS, _lonlat_to_nsper_fn, _nsper_to_lonlat_fn),
+    (STEREG_PARAMS, _lonlat_to_stereg_fn, _stereg_to_lonlat_fn),
+    (OMERC_PARAMS, _lonlat_to_omerc_fn, _omerc_to_lonlat_fn),
+    (EQC_PARAMS, _lonlat_to_eqc_fn, _eqc_to_lonlat_fn),
+    (EQDC_PARAMS, _lonlat_to_eqdc_fn, _eqdc_to_lonlat_fn),
+    (LAEA_PARAMS, _lonlat_to_laea_fn, _laea_to_lonlat_fn),
+    (LCC_PARAMS, _lonlat_to_lcc_fn, _lcc_to_lonlat_fn),
+    (AEA_PARAMS, _lonlat_to_aea_fn, _aea_to_lonlat_fn),
+    (SINU_PARAMS, _lonlat_to_sinu_fn, _sinu_to_lonlat_fn),
+    (MOLL_PARAMS, _lonlat_to_moll_fn, _moll_to_lonlat_fn),
+    (ECK4_PARAMS, _lonlat_to_eck4_fn, _eck4_to_lonlat_fn),
+    (NATEARTH_PARAMS, _lonlat_to_natearth_fn, _natearth_to_lonlat_fn),
+    (GNOM_PARAMS, _lonlat_to_gnom_fn, _gnom_to_lonlat_fn),
+    (MILL_PARAMS, _lonlat_to_mill_fn, _mill_to_lonlat_fn),
+    (VANDG_PARAMS, _lonlat_to_vandg_fn, _vandg_to_lonlat_fn),
+    (ROBIN_PARAMS, _lonlat_to_robin_fn, _robin_to_lonlat_fn),
+    (HAMMER_PARAMS, _lonlat_to_hammer_fn, _hammer_to_lonlat_fn),
+    (IGH_PARAMS, _lonlat_to_igh_fn, _igh_to_lonlat_fn),
+    (WINTRI_PARAMS, _lonlat_to_wintri_fn, _wintri_to_lonlat_fn),
+    (TM_PARAMS, _lonlat_to_tm_fn, _tm_to_lonlat_fn),
+]
 
 
-#: registry of pure-Column CRS transforms (target CRS -> source CRS)
-COLUMN_TRANSFORMS: dict[tuple[str, str], ColumnTransform] = {
-    ("EPSG:4326", "EPSG:4326"): _identity,
-    ("EPSG:3857", "EPSG:3857"): _identity,
-    ("EPSG:3857", "EPSG:4326"): _mercator_to_lonlat,
-    ("EPSG:4326", "EPSG:3857"): _lonlat_to_mercator,
-}
-
-
-def _to_lonlat_fn(crs: str) -> ColumnTransform | None:
+def _to_lonlat_fn(crs: str) -> Transform | None:
     """Closed-form transform from ``crs`` into EPSG:4326, if known."""
     up = crs.upper()
     if up == "EPSG:4326":
-        return _identity
+        return _IDENTITY
     if up == "EPSG:3857":
-        return _mercator_to_lonlat
-    if up in MERC_PARAMS:
-        return _merc_to_lonlat_fn(up)
-    if up in GEOS_PARAMS:
-        return _geos_to_lonlat_fn(up)
-    if up in ROTPOLE_PARAMS:
-        return _rotpole_to_lonlat_fn(up)
-    if up in STEREA_PARAMS:
-        return _sterea_to_lonlat_fn(up)
-    if up in SOMERC_PARAMS:
-        return _somerc_to_lonlat_fn(up)
-    if up in KROVAK_PARAMS:
-        return _krovak_to_lonlat_fn(up)
-    if up in EQEARTH_PARAMS:
-        return _eqearth_to_lonlat_fn(up)
-    if up in CASS_PARAMS:
-        return _cass_to_lonlat_fn(up)
-    if up in POLY_PARAMS:
-        return _poly_to_lonlat_fn(up)
-    if up in PS_PARAMS:
-        return _ps_to_lonlat_fn(up)
-    if up in CEA_PARAMS:
-        return _cea_to_lonlat_fn(up)
-    if up in AEQD_PARAMS:
-        return _aeqd_to_lonlat_fn(up)
-    if up in ORTHO_PARAMS:
-        return _ortho_to_lonlat_fn(up)
-    if up in NSPER_PARAMS:
-        return _nsper_to_lonlat_fn(up)
-    if up in STEREG_PARAMS:
-        return _stereg_to_lonlat_fn(up)
-    if up in OMERC_PARAMS:
-        return _omerc_to_lonlat_fn(up)
-    if up in EQC_PARAMS:
-        return _eqc_to_lonlat_fn(up)
-    if up in EQDC_PARAMS:
-        return _eqdc_to_lonlat_fn(up)
-    if up in LAEA_PARAMS:
-        return _laea_to_lonlat_fn(up)
-    if up in LCC_PARAMS:
-        return _lcc_to_lonlat_fn(up)
-    if up in AEA_PARAMS:
-        return _aea_to_lonlat_fn(up)
-    if up in SINU_PARAMS:
-        return _sinu_to_lonlat_fn(up)
-    if up in MOLL_PARAMS:
-        return _moll_to_lonlat_fn(up)
-    if up in ECK4_PARAMS:
-        return _eck4_to_lonlat_fn(up)
-    if up in NATEARTH_PARAMS:
-        return _natearth_to_lonlat_fn(up)
-    if up in GNOM_PARAMS:
-        return _gnom_to_lonlat_fn(up)
-    if up in MILL_PARAMS:
-        return _mill_to_lonlat_fn(up)
-    if up in VANDG_PARAMS:
-        return _vandg_to_lonlat_fn(up)
-    if up in ROBIN_PARAMS:
-        return _robin_to_lonlat_fn(up)
-    if up in HAMMER_PARAMS:
-        return _hammer_to_lonlat_fn(up)
-    if up in IGH_PARAMS:
-        return _igh_to_lonlat_fn(up)
-    if up in WINTRI_PARAMS:
-        return _wintri_to_lonlat_fn(up)
+        return single(_mercator_to_lonlat)
+    for table, _, inv in _FAMILIES:
+        if up in table:
+            return inv(up)
     if up == "EPSG:27700":
         return _osgb_to_lonlat_fn()
-    if up in TM_PARAMS:
-        return _tm_to_lonlat_fn(up)
-    utm = parse_utm_crs(up)
-    if utm:
-        return _utm_to_lonlat_fn(*utm)
-    return None
+    return _tm_to_lonlat_fn(up) if parse_utm_crs(up) else None
 
 
-def _from_lonlat_fn(crs: str) -> ColumnTransform | None:
+def _from_lonlat_fn(crs: str) -> Transform | None:
     """Closed-form transform from EPSG:4326 into ``crs``, if known."""
     up = crs.upper()
     if up == "EPSG:4326":
-        return _identity
+        return _IDENTITY
     if up == "EPSG:3857":
-        return _lonlat_to_mercator
-    if up in MERC_PARAMS:
-        return _lonlat_to_merc_fn(up)
-    if up in GEOS_PARAMS:
-        return _lonlat_to_geos_fn(up)
-    if up in ROTPOLE_PARAMS:
-        return _lonlat_to_rotpole_fn(up)
-    if up in STEREA_PARAMS:
-        return _lonlat_to_sterea_fn(up)
-    if up in SOMERC_PARAMS:
-        return _lonlat_to_somerc_fn(up)
-    if up in KROVAK_PARAMS:
-        return _lonlat_to_krovak_fn(up)
-    if up in EQEARTH_PARAMS:
-        return _lonlat_to_eqearth_fn(up)
-    if up in CASS_PARAMS:
-        return _lonlat_to_cass_fn(up)
-    if up in POLY_PARAMS:
-        return _lonlat_to_poly_fn(up)
-    if up in PS_PARAMS:
-        return _lonlat_to_ps_fn(up)
-    if up in CEA_PARAMS:
-        return _lonlat_to_cea_fn(up)
-    if up in AEQD_PARAMS:
-        return _lonlat_to_aeqd_fn(up)
-    if up in ORTHO_PARAMS:
-        return _lonlat_to_ortho_fn(up)
-    if up in NSPER_PARAMS:
-        return _lonlat_to_nsper_fn(up)
-    if up in STEREG_PARAMS:
-        return _lonlat_to_stereg_fn(up)
-    if up in OMERC_PARAMS:
-        return _lonlat_to_omerc_fn(up)
-    if up in EQC_PARAMS:
-        return _lonlat_to_eqc_fn(up)
-    if up in EQDC_PARAMS:
-        return _lonlat_to_eqdc_fn(up)
-    if up in LAEA_PARAMS:
-        return _lonlat_to_laea_fn(up)
-    if up in LCC_PARAMS:
-        return _lonlat_to_lcc_fn(up)
-    if up in AEA_PARAMS:
-        return _lonlat_to_aea_fn(up)
-    if up in SINU_PARAMS:
-        return _lonlat_to_sinu_fn(up)
-    if up in MOLL_PARAMS:
-        return _MollForward(up)
-    if up in ECK4_PARAMS:
-        return _Eck4Forward(up)
-    if up in NATEARTH_PARAMS:
-        return _lonlat_to_natearth_fn(up)
-    if up in GNOM_PARAMS:
-        return _lonlat_to_gnom_fn(up)
-    if up in MILL_PARAMS:
-        return _lonlat_to_mill_fn(up)
-    if up in VANDG_PARAMS:
-        return _lonlat_to_vandg_fn(up)
-    if up in ROBIN_PARAMS:
-        return _lonlat_to_robin_fn(up)
-    if up in HAMMER_PARAMS:
-        return _lonlat_to_hammer_fn(up)
-    if up in IGH_PARAMS:
-        return _IghForward(up)
-    if up in WINTRI_PARAMS:
-        return _lonlat_to_wintri_fn(up)
+        return single(_lonlat_to_mercator)
+    for table, fwd, _ in _FAMILIES:
+        if up in table:
+            return fwd(up)
     if up == "EPSG:27700":
         return _lonlat_to_osgb_fn()
-    if up in TM_PARAMS:
-        return _lonlat_to_tm_fn(up)
-    utm = parse_utm_crs(up)
-    if utm:
-        return _lonlat_to_utm_fn(*utm)
-    return None
+    return _lonlat_to_tm_fn(up) if parse_utm_crs(up) else None
 
 
-def get_transform(src_crs, dst_crs) -> ColumnTransform:
+def get_transform(src_crs, dst_crs) -> Transform:
     """Transform from ``src_crs`` coords into ``dst_crs`` coords.
 
     Each CRS may be an authority string (``EPSG:32633``), a PROJ.4
@@ -5403,36 +3714,23 @@ def get_transform(src_crs, dst_crs) -> ColumnTransform:
     `pyproj.CRS.from_cf` / arbitrary-CRS transforms at
     `xcube/core/gridmapping/cfconv.py:211`, `transform.py`).
 
-    Prefers the pure-Column registry; falls back to a pyproj-backed
-    pandas_udf when the package is available (it is not baked into this
-    container — the fallback raises with a clear message otherwise)."""
+    A pair the families do not cover falls back to pyproj in a
+    ``pandas_udf`` when the package is installed, and raises otherwise."""
     from xcube_spark.operators.resampling.crsparse import resolve_crs
 
     src_crs = resolve_crs(src_crs)
     dst_crs = resolve_crs(dst_crs)
-    key = (src_crs, dst_crs)
-    if key in COLUMN_TRANSFORMS:
-        return COLUMN_TRANSFORMS[key]
-    # any pair that closed-form-resolves through lon/lat chains via a
-    # 4326 hop (UTM zones and polar stereographics have no per-CRS
-    # registry entries — they parse/lookup here)
-    to_ll = _to_lonlat_fn(src_crs)
-    from_ll = _from_lonlat_fn(dst_crs)
+    src, dst = src_crs.upper(), dst_crs.upper()
+    if src == dst == "EPSG:3857":  # like 4326 -> 4326 below: identity
+        return _IDENTITY
+    to_ll, from_ll = _to_lonlat_fn(src), _from_lonlat_fn(dst)
     if to_ll is not None and from_ll is not None:
-        if dst_crs.upper() == "EPSG:4326":
+        if dst == "EPSG:4326":
             return to_ll
-        if src_crs.upper() == "EPSG:4326":
+        if src == "EPSG:4326":
             return from_ll
-
-        if hasattr(to_ll, "apply_df") or hasattr(from_ll, "apply_df"):
-            return _ChainedTransform(to_ll, from_ll)
-
-        def chain(x: Column, y: Column) -> tuple[Column, Column]:
-            return from_ll(*to_ll(x, y))
-
-        return chain
+        return to_ll.then(from_ll)
     try:  # pragma: no cover - pyproj absent in the build container
-        import numpy as np  # noqa: F401
         import pandas as pd
         import pyproj
         from pyspark.sql.functions import pandas_udf
@@ -5450,17 +3748,46 @@ def get_transform(src_crs, dst_crs) -> ColumnTransform:
             xx, yy = tf.transform(x.to_numpy(), y.to_numpy())
             return pd.DataFrame({"x": xx, "y": yy})
 
-        def transform(cx: Column, cy: Column) -> tuple[Column, Column]:
-            s = _proj(cx, cy)
-            return s.getField("x"), s.getField("y")
-
-        return transform
+        return Transform((), udf=_proj)
     except ImportError as exc:
         raise NotImplementedError(
-            f"no Column transform registered for {src_crs} -> {dst_crs} "
-            "and pyproj is not installed; register one in "
-            "COLUMN_TRANSFORMS or install pyproj"
+            f"no closed-form transform for {src_crs} -> {dst_crs} and "
+            "pyproj is not installed; add a family (see the module "
+            "docstring) or install pyproj"
         ) from exc
+
+
+def apply_transform_df(df: DataFrame, transform: Transform, x: str, y: str,
+                       out_x: str, out_y: str) -> DataFrame:
+    """Add columns ``out_x``/``out_y`` = ``transform`` of the Spark-SQL
+    expressions ``x``/``y`` (column names or any expression over
+    ``df``): one ``withColumns`` per stage, intermediates dropped.  A
+    single-stage transform is one projection with the inputs inlined."""
+    if transform.udf is not None:
+        s = transform.udf(F.expr(x), F.expr(y))
+        return df.withColumns({out_x: s.getField("x"),
+                               out_y: s.getField("y")})
+    names = {"__in_x": f"({x})", "__in_y": f"({y})"}
+    *head, last = transform.stages
+    for stage in head:
+        df = df.withColumns({n: F.expr(X.spark_sql(e, names))
+                             for n, e in stage.items()})
+    df = df.withColumns({
+        out_x: F.expr(X.spark_sql(last["__out_x"], names)),
+        out_y: F.expr(X.spark_sql(last["__out_y"], names)),
+    })
+    tmp = list(dict.fromkeys(n for stage in head for n in stage))
+    return df.drop(*tmp) if tmp else df
+
+
+def lonlat_sql(crs, x_sql: str, y_sql: str, src: str = "tgt",
+               name: str = "ll") -> str:
+    """DuckDB CTEs putting EPSG:4326 ``lon``/``lat`` of the ``crs``
+    coordinates ``x_sql``/``y_sql`` beside ``src``'s columns, as CTE
+    ``name`` — the same stages ``reproject_dataset`` runs on Spark,
+    for the oracles."""
+    return X.duckdb_ctes(get_transform(crs, "EPSG:4326").stages,
+                         x_sql, y_sql, src, name, ("lon", "lat"))
 
 
 def reproject_dataset(
@@ -5484,27 +3811,13 @@ def reproject_dataset(
         ((F.col("id") % plane) / target.width).cast("int").alias("y_i"),
         (F.col("id") % target.width).cast("int").alias("x_i"),
     )
-    tx = target.x_center_expr(F.col("x_i"))
-    ty = target.y_center_expr(F.col("y_i"))
-    if hasattr(transform, "sql_fn"):
-        # string-built transform (UTM family): the whole series tree
-        # arrives as one parsed SQL expression per output instead of
-        # hundreds of Column-API py4j round trips per plan build; the
-        # parsed tree is the identical expression (r12)
-        sx_sql, sy_sql = transform.sql_fn(
-            target.x_center_sql("x_i"), target.y_center_sql("y_i"))
-        tgt = tgt.withColumns(
-            {"__tsx": F.expr(sx_sql), "__tsy": F.expr(sy_sql)})
-    else:
-        # staged transforms (datum-hop CRSs) materialize intermediates
-        # as aliased columns — one Column tree would be exponentially
-        # large
-        tgt = apply_transform_df(tgt, transform, tx, ty, "__tsx", "__tsy")
+    tgt = apply_transform_df(tgt, transform, target.x_center_sql("x_i"),
+                             target.y_center_sql("y_i"), "__tsx", "__tsy")
     tgt = tgt.select(
         "t_i", "y_i", "x_i",
         target.time_center_expr(F.col("t_i")).alias("time"),
-        ty.alias("y"),
-        tx.alias("x"),
+        target.y_center_expr(F.col("y_i")).alias("y"),
+        target.x_center_expr(F.col("x_i")).alias("x"),
         source.x_index_expr(F.col("__tsx")).alias("__sx"),
         source.y_index_expr(F.col("__tsy")).alias("__sy"),
     )
@@ -5515,7 +3828,7 @@ def reproject_dataset(
         F.col("x_i").alias("__ssx"),
         *vars_,
     )
-    if hasattr(transform, "apply_df"):
+    if transform.deep:
         # staged transforms (datum hops, fixed-count Newton solves)
         # are deep alias chains; Dynamic Partition Pruning's join-key
         # lineage walk (PartitionPruning.findExpressionAndTrackLineageDown)

@@ -54,6 +54,27 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _cosine_topk(cand, cos, ids, k: int):
+    """One query's lossless local top-k by (score desc, id asc): any
+    candidate in the global top-k survives, boundary ties kept, so the
+    id tie-break downstream is exact whatever the batch layout.
+
+    Zero-norm contract: a zero-norm query or corpus vector has a NaN
+    cosine here and a NULL score in the output; it stays a candidate
+    and ranks after every non-NULL score, ties by id ascending
+    (Spark's ``desc`` and DuckDB's ``DESC`` both order NULLs last).
+    Returns the kept candidate indices and their scores, in order."""
+    import numpy as np
+
+    key = np.where(np.isnan(cos), -np.inf, cos)
+    if cand.size > k:
+        thr = -np.partition(-key, k - 1)[k - 1]
+        keep = key >= thr
+        cand, cos, key = cand[keep], cos[keep], key[keep]
+    order = np.lexsort((ids[cand], -key))[:k]
+    return cand[order], cos[order]
+
+
 def knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -112,29 +133,26 @@ def knn_bruteforce(
             ids = np.asarray(ids_col.to_numpy(zero_copy_only=False))
             cos_all = v @ qvecs.T
             if metric == "cosine":
-                cos_all = cos_all / (
-                    np.linalg.norm(v, axis=1)[:, None] * qnorm[None, :])
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    cos_all = cos_all / (np.linalg.norm(v, axis=1)[:, None]
+                                         * qnorm[None, :])
             out_q, out_i, out_c = [], [], []
             for qi in range(len(qarr)):
                 cand = np.nonzero(ids != qarr[qi])[0]  # self-exclusion
                 if not cand.size:
                     continue
-                cos = cos_all[cand, qi]
-                if cand.size > k:
-                    thr = -np.partition(-cos, k - 1)[k - 1]
-                    keep = cos >= thr  # boundary ties kept so the
-                    cand, cos = cand[keep], cos[keep]  # id tie-break
-                order = np.lexsort((ids[cand], -cos))[:k]  # is exact
-                out_q.append(np.full(order.size, qarr[qi]))
-                out_i.append(cand[order])
-                out_c.append(cos[order])
+                cand, cos = _cosine_topk(cand, cos_all[cand, qi], ids, k)
+                out_q.append(np.full(cand.size, qarr[qi]))
+                out_i.append(cand)
+                out_c.append(cos)
             if not out_i:
                 continue
             take = pa.array(np.concatenate(out_i), type=pa.int64())
             yield pa.RecordBatch.from_arrays(
                 [pa.array(np.concatenate(out_q), type=q_pa),
                  ids_col.take(take),
-                 pa.array(np.concatenate(out_c), type=pa.float64())],
+                 pa.array(np.concatenate(out_c), type=pa.float64(),
+                          from_pandas=True)],  # NaN -> NULL
                 names=[query_id_col, id_col, score_col])
 
     if metric not in ("cosine", "dot"):
@@ -280,22 +298,20 @@ def knn_lsh(
                 cand = np.nonzero(mask)[0]
                 if not cand.size:
                     continue
-                cos = (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
-                if cand.size > k:
-                    thr = -np.partition(-cos, k - 1)[k - 1]
-                    keep = cos >= thr  # boundary ties kept
-                    cand, cos = cand[keep], cos[keep]
-                order = np.lexsort((ids[cand], -cos))[:k]
-                out_q.append(np.full(order.size, qarr[qi]))
-                out_i.append(cand[order])
-                out_c.append(cos[order])
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    cos = (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
+                cand, cos = _cosine_topk(cand, cos, ids, k)
+                out_q.append(np.full(cand.size, qarr[qi]))
+                out_i.append(cand)
+                out_c.append(cos)
             if not out_i:
                 continue
             take = pa.array(np.concatenate(out_i), type=pa.int64())
             yield pa.RecordBatch.from_arrays(
                 [pa.array(np.concatenate(out_q), type=q_pa),
                  ids_col.take(take),
-                 pa.array(np.concatenate(out_c), type=pa.float64())],
+                 pa.array(np.concatenate(out_c), type=pa.float64(),
+                          from_pandas=True)],  # NaN -> NULL
                 names=[query_id_col, id_col, "cosine"])
 
     id_t = dict(corpus.dtypes)[id_col]
@@ -631,22 +647,20 @@ def knn_ivf(
                 cand = np.nonzero(mask)[0]
                 if not cand.size:
                     continue
-                cos = (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
-                if cand.size > k:
-                    thr = -np.partition(-cos, k - 1)[k - 1]
-                    keep = cos >= thr  # boundary ties kept
-                    cand, cos = cand[keep], cos[keep]
-                order = np.lexsort((ids[cand], -cos))[:k]
-                out_q.append(np.full(order.size, qarr[qi]))
-                out_i.append(cand[order])
-                out_c.append(cos[order])
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    cos = (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
+                cand, cos = _cosine_topk(cand, cos, ids, k)
+                out_q.append(np.full(cand.size, qarr[qi]))
+                out_i.append(cand)
+                out_c.append(cos)
             if not out_i:
                 continue
             take = pa.array(np.concatenate(out_i), type=pa.int64())
             yield pa.RecordBatch.from_arrays(
                 [pa.array(np.concatenate(out_q), type=q_pa),
                  ids_col.take(take),
-                 pa.array(np.concatenate(out_c), type=pa.float64())],
+                 pa.array(np.concatenate(out_c), type=pa.float64(),
+                          from_pandas=True)],  # NaN -> NULL
                 names=[query_id_col, id_col, "cosine"])
 
     id_t = dict(corpus.dtypes)[id_col]

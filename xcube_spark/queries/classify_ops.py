@@ -102,7 +102,7 @@ def doc_nb_classify(spark, sf_dir):
         ), ranked AS (
             SELECT query_id, label,
                    ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
+                                      ORDER BY cos DESC NULLS LAST, vec_id) AS rank
             FROM scored
         ), votes AS (
             SELECT query_id, label, CAST(COUNT(*) AS BIGINT) AS votes

@@ -241,7 +241,7 @@ def _bucket_sql(vec: str) -> str:
         ), ranked AS (
             SELECT query_id, vec_id, cos,
                    ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
+                                      ORDER BY cos DESC NULLS LAST, vec_id) AS rank
             FROM scored
         )
         SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, rank
@@ -706,7 +706,7 @@ def emb_kmeans(spark, sf_dir):
         ), ranked AS (
             SELECT query_id, vec_id, cos,
                    ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
+                                      ORDER BY cos DESC NULLS LAST, vec_id) AS rank
             FROM scored
         )
         SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, rank
@@ -951,7 +951,7 @@ def doc_audio_features(spark, sf_dir):
         ), ranked AS (
             SELECT query_id, vec_id, cos,
                    ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
+                                      ORDER BY cos DESC NULLS LAST, vec_id) AS rank
             FROM scored
         )
         SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, rank

@@ -26,6 +26,7 @@ from xcube_spark.operators.resampling import (
     rectify_dataset,
     reproject_dataset,
 )
+from xcube_spark.operators.resampling.reproject import lonlat_sql
 from xcube_spark.queries import query
 from xcube_spark.queries.cube_ops import CUBE_CTE, GRID, SPARK_VARS
 
@@ -122,7 +123,6 @@ def cube_affine_bilinear(spark, sf_dir):
 
 # ---- rectify: constant-shift swath ------------------------------------
 
-
 @query(
     "cube_rectify_swath",
     sql=f"""
@@ -171,6 +171,11 @@ _MERC = CubeGrid(width=36, height=20, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:3857")
 
+_MERC_LL = lonlat_sql(
+    "EPSG:3857",
+    "-2000000.0 + (x_i + 0.5) * 200000.0",
+    "-2000000.0 + (y_i + 0.5) * 200000.0")
+
 
 @query(
     "cube_reproject_mercator",
@@ -181,17 +186,7 @@ _MERC = CubeGrid(width=36, height=20, time_periods=GRID.time_periods,
                    CAST((range % 720) // 36 AS INT) AS y_i,
                    CAST(range % 36 AS INT) AS x_i
             FROM range({_MERC.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   (-2000000.0 + (x_i + 0.5) * 200000.0)
-                       / 111319.49079327358 AS lon,
-                   degrees(atan((exp((-2000000.0 + (y_i + 0.5) * 200000.0)
-                                     / 6378137.0)
-                                 - exp(-((-2000000.0 + (y_i + 0.5)
-                                          * 200000.0) / 6378137.0))) / 2))
-                       AS lat
-            FROM tgt
-        ), f AS (
+        ), {_MERC_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -204,10 +199,10 @@ _MERC = CubeGrid(width=36, height=20, time_periods=GRID.time_periods,
 )
 def cube_reproject_mercator(spark, sf_dir):
     """reproject_dataset (reproject.py:27-507): EPSG:3857 target grid
-    over the EPSG:4326 source; the oracle applies the closed-form
-    Web-Mercator inverse (sinh written as (e^z - e^-z)/2) and re-derives
-    the nearest gather.  Index math is ulp-robust: target centers land
-    well inside source cells."""
+    over the EPSG:4326 source; the oracle takes the same Web-Mercator
+    inverse from lonlat_sql and re-derives the nearest gather.  Index
+    math is ulp-robust: target centers land well inside source
+    cells."""
     out = reproject_dataset(_cube_a(spark), GRID, _MERC)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -248,17 +243,16 @@ def cube_rectify_idw(spark, sf_dir):
 
 # ---- reproject: UTM (transverse Mercator) target ----------------------
 
-from xcube_spark.operators.resampling.reproject import utm_inverse_sql
-
 _UTM = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 x_start=200_000.0, y_start=3_800_000.0,
                 x_res=20_000.0, y_res=20_000.0,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:32633")
 
-_UTM_LON, _UTM_LAT = utm_inverse_sql(
+_UTM_LL = lonlat_sql(
+    "EPSG:32633",
     "(200000.0 + (x_i + 0.5) * 20000.0)",
-    "(3800000.0 + (y_i + 0.5) * 20000.0)", zone=33)
+    "(3800000.0 + (y_i + 0.5) * 20000.0)")
 
 
 @query(
@@ -270,12 +264,7 @@ _UTM_LON, _UTM_LAT = utm_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_UTM.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_UTM_LON} AS lon,
-                   {_UTM_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_UTM_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -290,9 +279,9 @@ def cube_reproject_utm(spark, sf_dir):
     """reproject_dataset onto a UTM zone-33 grid — the reference's most
     common real reprojection (core/gridmapping/transform.py, pyproj
     CRS).  The closed-form Krueger-series transverse-Mercator inverse
-    (reproject.py:_utm_to_lonlat_fn; public geodesy math, 3rd order in
-    the third flattening) runs as pure Column arithmetic; the oracle
-    states the identical series in SQL (utm_inverse_sql) and re-derives
+    (reproject.py:_tm_inv; public geodesy math, 3rd order in
+    the third flattening) runs as one Spark-SQL projection; the oracle
+    states the identical series in SQL (lonlat_sql) and re-derives
     the nearest gather.  Target centers land well inside 1-degree
     source cells, so sub-ulp libm differences between engines cannot
     flip an index."""
@@ -302,17 +291,16 @@ def cube_reproject_utm(spark, sf_dir):
 
 # ---- reproject: polar stereographic (EPSG:3413) target ----------------
 
-from xcube_spark.operators.resampling.reproject import ps_inverse_sql
-
 _PS = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                x_start=-800_000.0, y_start=-3_300_000.0,
                x_res=40_000.0, y_res=40_000.0,
                t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                crs="EPSG:3413")
 
-_PS_LON, _PS_LAT = ps_inverse_sql(
+_PS_LL = lonlat_sql(
+    "EPSG:3413",
     "(-800000.0 + (x_i + 0.5) * 40000.0)",
-    "(-3300000.0 + (y_i + 0.5) * 40000.0)", crs="EPSG:3413")
+    "(-3300000.0 + (y_i + 0.5) * 40000.0)")
 
 
 @query(
@@ -324,12 +312,7 @@ _PS_LON, _PS_LAT = ps_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_PS.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_PS_LON} AS lon,
-                   {_PS_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_PS_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -345,7 +328,7 @@ def cube_reproject_polar(spark, sf_dir):
     (EPSG:3413, Snyder ellipsoidal closed form — reproject.py
     _ps_to_lonlat_fn): the polar satellite CRS the reference handles
     through pyproj.  Pure Column inverse inside codegen; the oracle
-    states the identical chi -> phi series in SQL (ps_inverse_sql).
+    states the identical chi -> phi series in SQL (lonlat_sql).
     Target centers (lat 59-75N over Greenland) land well inside
     1-degree source cells, so sub-ulp libm differences cannot flip a
     gather index."""
@@ -355,17 +338,16 @@ def cube_reproject_polar(spark, sf_dir):
 
 # ---- reproject: ETRS89-LAEA (EPSG:3035) target ------------------------
 
-from xcube_spark.operators.resampling.reproject import laea_inverse_sql
-
 _LAEA = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=3_200_000.0, y_start=2_200_000.0,
                  x_res=50_000.0, y_res=50_000.0,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:3035")
 
-_LAEA_LON, _LAEA_LAT = laea_inverse_sql(
+_LAEA_LL = lonlat_sql(
+    "EPSG:3035",
     "(3200000.0 + (x_i + 0.5) * 50000.0)",
-    "(2200000.0 + (y_i + 0.5) * 50000.0)", crs="EPSG:3035")
+    "(2200000.0 + (y_i + 0.5) * 50000.0)")
 
 
 @query(
@@ -377,12 +359,7 @@ _LAEA_LON, _LAEA_LAT = laea_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_LAEA.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_LAEA_LON} AS lon,
-                   {_LAEA_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_LAEA_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -401,7 +378,7 @@ def cube_reproject_laea(spark, sf_dir):
     1987 (authalic-latitude q, eq. 24-2..31 + the beta -> phi 3-18
     series) as pure Column arithmetic inside codegen — no pyproj, no
     UDF; the oracle states the identical inverse in SQL
-    (laea_inverse_sql).  The 50 km target centers (lon -9.5..25.3,
+    (lonlat_sql).  The 50 km target centers (lon -9.5..25.3,
     lat 42.3..60.7) sit >= 3.9e-4 deg from any 1-degree source cell
     edge, so sub-ulp libm differences cannot flip a gather index."""
     out = reproject_dataset(_cube_a(spark), GRID, _LAEA)
@@ -410,17 +387,16 @@ def cube_reproject_laea(spark, sf_dir):
 
 # ---- reproject: RGF93 / Lambert-93 (EPSG:2154) target ------------------
 
-from xcube_spark.operators.resampling.reproject import lcc_inverse_sql
-
 _LCC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 x_start=200_000.0, y_start=6_100_000.0,
                 x_res=25_000.0, y_res=25_000.0,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:2154")
 
-_LCC_LON, _LCC_LAT = lcc_inverse_sql(
+_LCC_LL = lonlat_sql(
+    "EPSG:2154",
     "(200000.0 + (x_i + 0.5) * 25000.0)",
-    "(6100000.0 + (y_i + 0.5) * 25000.0)", crs="EPSG:2154")
+    "(6100000.0 + (y_i + 0.5) * 25000.0)")
 
 
 @query(
@@ -432,12 +408,7 @@ _LCC_LON, _LCC_LAT = lcc_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_LCC.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_LCC_LON} AS lon,
-                   {_LCC_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_LCC_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -455,7 +426,7 @@ def cube_reproject_lcc(spark, sf_dir):
     (core/gridmapping/transform.py:8-9).  Ellipsoidal LCC-2SP from
     Snyder 1987 (eqs. 15-1..15-11 + the chi -> phi 3-5 series) as
     pure Column arithmetic inside codegen; the oracle states the
-    identical inverse in SQL (lcc_inverse_sql).  The 25 km target
+    identical inverse in SQL (lonlat_sql).  The 25 km target
     centers sit well away from any 1-degree source cell edge, so
     sub-ulp libm differences cannot flip a gather index."""
     out = reproject_dataset(_cube_a(spark), GRID, _LCC)
@@ -463,8 +434,6 @@ def cube_reproject_lcc(spark, sf_dir):
 
 
 # ---- reproject: NAD83 / Conus Albers (EPSG:5070) target ----------------
-
-from xcube_spark.operators.resampling.reproject import aea_inverse_sql
 
 _AEA = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 x_start=-1_973_000.0, y_start=307_000.0,
@@ -474,9 +443,10 @@ _AEA = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
 
 #: off-round grid origin/steps: keeps every re-projected center
 #: >= 1.9e-4 deg from any 1-degree source cell edge
-_AEA_LON, _AEA_LAT = aea_inverse_sql(
+_AEA_LL = lonlat_sql(
+    "EPSG:5070",
     "(-1973000.0 + (x_i + 0.5) * 99000.0)",
-    "(307000.0 + (y_i + 0.5) * 61000.0)", crs="EPSG:5070")
+    "(307000.0 + (y_i + 0.5) * 61000.0)")
 
 
 @query(
@@ -488,12 +458,7 @@ _AEA_LON, _AEA_LAT = aea_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_AEA.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_AEA_LON} AS lon,
-                   {_AEA_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_AEA_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -509,14 +474,12 @@ def cube_reproject_albers(spark, sf_dir):
     Albers, EPSG:5070) — ellipsoidal Albers equal-area conic from
     Snyder 1987 (eqs. 14-3..14-11 + the authalic beta -> phi 3-18
     series, shared with the LAEA path) as pure Column arithmetic; the
-    oracle states the identical inverse in SQL (aea_inverse_sql)."""
+    oracle states the identical inverse in SQL (lonlat_sql)."""
     out = reproject_dataset(_cube_a(spark), GRID, _AEA)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: OSGB National Grid (EPSG:27700) target ------------------
-
-from xcube_spark.operators.resampling.reproject import osgb_inverse_sql_ctes
 
 _OSGB = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=137_000.0, y_start=23_000.0,
@@ -527,9 +490,9 @@ _OSGB = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
 #: off-round origin/steps keep every re-projected center >= 6.4e-5 deg
 #: from any 1-degree source cell edge (checked with DuckDB); the
 #: inverse is a staged CTE chain — the monolithic expression form is
-#: megabytes of SQL (same blowup the Column side avoids via
-#: StagedTransform)
-_OSGB_CTES = osgb_inverse_sql_ctes(
+#: megabytes of SQL (the blowup the Spark side avoids by staging)
+_OSGB_LL = lonlat_sql(
+    "EPSG:27700",
     "(137000.0 + (x_i + 0.5) * 13700.0)",
     "(23000.0 + (y_i + 0.5) * 24300.0)")
 
@@ -543,11 +506,11 @@ _OSGB_CTES = osgb_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_OSGB.size})
-        ), {_OSGB_CTES}, f AS (
+        ), {_OSGB_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM osgb_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -563,7 +526,7 @@ def cube_reproject_osgb(spark, sf_dir):
     flattening + the published 7-parameter Helmert datum hop
     (WGS84 <-> OSGB36) with Bowring's XYZ->geodetic, all pure Column
     arithmetic inside codegen; the oracle states the identical inverse
-    in SQL (osgb_inverse_sql).  Target centers sit >= 6.4e-5 deg from
+    in SQL (lonlat_sql).  Target centers sit >= 6.4e-5 deg from
     any source cell edge, so sub-ulp libm differences cannot flip a
     gather index."""
     out = reproject_dataset(_cube_a(spark), GRID, _OSGB)
@@ -571,8 +534,6 @@ def cube_reproject_osgb(spark, sf_dir):
 
 
 # ---- reproject: NZTM 2000 (EPSG:2193) target ----------------------------
-
-from xcube_spark.operators.resampling.reproject import tm_inverse_sql
 
 _NZTM = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=1_123_000.0, y_start=4_753_000.0,
@@ -582,9 +543,10 @@ _NZTM = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
 
 #: off-round origin/steps keep every re-projected center >= 3.5e-4 deg
 #: from any 1-degree source cell edge (checked with DuckDB)
-_NZTM_LON, _NZTM_LAT = tm_inverse_sql(
+_NZTM_LL = lonlat_sql(
+    "EPSG:2193",
     "(1123000.0 + (x_i + 0.5) * 21700.0)",
-    "(4753000.0 + (y_i + 0.5) * 35300.0)", "EPSG:2193")
+    "(4753000.0 + (y_i + 0.5) * 35300.0)")
 
 
 @query(
@@ -596,12 +558,7 @@ _NZTM_LON, _NZTM_LAT = tm_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_NZTM.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_NZTM_LON} AS lon,
-                   {_NZTM_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_NZTM_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -618,7 +575,7 @@ def cube_reproject_nztm(spark, sf_dir):
     registry (TM_PARAMS: the UTM/OSGB Krueger series parameterized by
     ellipsoid + natural origin; GRS80, 173E, k0=0.9996, 1600/10000 km
     false origin; NZGD2000 == WGS84 null transformation).  The oracle
-    states the identical inverse in SQL (tm_inverse_sql)."""
+    states the identical inverse in SQL (lonlat_sql)."""
     out = reproject_dataset(_cube_a(spark), GRID, _NZTM)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -647,12 +604,7 @@ _NZTM_PROJ4 = CubeGrid(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_NZTM.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_NZTM_LON} AS lon,
-                   {_NZTM_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_NZTM_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -670,7 +622,7 @@ def cube_reproject_proj4(spark, sf_dir):
     `xcube/core/gridmapping/cfconv.py:211`).  The string states
     NZTM2000's published parameters, resolving onto the generic TM
     family with bit-identical floats, so the oracle is the EPSG:2193
-    inverse verbatim (tm_inverse_sql)."""
+    inverse verbatim (lonlat_sql)."""
     out = reproject_dataset(_cube_a(spark), GRID, _NZTM_PROJ4)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -678,7 +630,6 @@ def cube_reproject_proj4(spark, sf_dir):
 # ---- reproject: geostationary full-disk grid (round 7) ------------------
 
 from xcube_spark.operators.resampling.crsparse import resolve_proj4
-from xcube_spark.operators.resampling.reproject import geos_inverse_sql
 
 #: MSG-style geostationary CRS (sweep y, 0 deg sub-satellite point);
 #: registered once at import via the PROJ.4 resolver
@@ -696,9 +647,10 @@ _GEOS = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs=_GEOS_CRS)
 
-_GEOS_LON, _GEOS_LAT = geos_inverse_sql(
+_GEOS_LL = lonlat_sql(
+    _GEOS_CRS,
     "(-3487000.0 + (x_i + 0.5) * 174700.0)",
-    "(-3427000.0 + (y_i + 0.5) * 171300.0)", _GEOS_CRS)
+    "(-3427000.0 + (y_i + 0.5) * 171300.0)")
 
 
 @query(
@@ -710,12 +662,7 @@ _GEOS_LON, _GEOS_LAT = geos_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_GEOS.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_GEOS_LON} AS lon,
-                   {_GEOS_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_GEOS_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -732,14 +679,12 @@ def cube_reproject_geos(spark, sf_dir):
     — exercises the +proj=geos family (CGMS normalized geostationary,
     closed-form view-vector/ellipsoid intersection) end-to-end under
     the oracle gate; the oracle states the identical inverse in SQL
-    (geos_inverse_sql, same op order)."""
+    (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _GEOS)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: rotated-pole regional grid (round 8) --------------------
-
-from xcube_spark.operators.resampling.reproject import rotpole_inverse_sql
 
 #: CORDEX EUR-11 rotation (grid pole 39.25N, -162E) via CF attrs —
 #: exercises crs_from_cf + the ob_tran family registration
@@ -756,9 +701,10 @@ _RP = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                crs=_ROTPOLE_CRS)
 
-_RP_LON, _RP_LAT = rotpole_inverse_sql(
+_RP_LL = lonlat_sql(
+    _ROTPOLE_CRS,
     "(-28.093 + (x_i + 0.5) * 1.149)",
-    "(-22.957 + (y_i + 0.5) * 1.097)", _ROTPOLE_CRS)
+    "(-22.957 + (y_i + 0.5) * 1.097)")
 
 
 @query(
@@ -770,12 +716,7 @@ _RP_LON, _RP_LAT = rotpole_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_RP.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_RP_LON} AS lon,
-                   {_RP_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_RP_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -792,7 +733,7 @@ def cube_reproject_rotated_pole(spark, sf_dir):
     `rotated_latitude_longitude` / +proj=ob_tran family (closed-form
     spherical rotation; reference handles it via pyproj,
     `xcube/core/gridmapping/transform.py`).  The oracle states the
-    identical inverse rotation in SQL (rotpole_inverse_sql, same op
+    identical inverse rotation in SQL (lonlat_sql, same op
     order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _RP)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
@@ -800,23 +741,22 @@ def cube_reproject_rotated_pole(spark, sf_dir):
 
 # ---- reproject: Dutch RD New (EPSG:28992, oblique stereographic) --------
 
-from xcube_spark.operators.resampling.reproject import sterea_inverse_sql_ctes
-
 #: RD-coordinate window over the Netherlands with off-round
 #: origin/steps: every re-projected center stays >= 6.4e-4 deg from
 #: any 1-degree source-cell edge (margin asserted in
 #: tests/test_crsparse.py); the inverse (with its fixed-count
 #: conformal-latitude iteration) is a staged CTE chain, the same
-#: blowup-avoidance as the Column side's StagedTransform
+#: stages the Spark side runs
 _RD = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                x_start=11_013.0, y_start=303_017.0,
                x_res=7_219.0, y_res=8_011.0,
                t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                crs="EPSG:28992")
 
-_RD_CTES = sterea_inverse_sql_ctes(
+_RD_LL = lonlat_sql(
+    "EPSG:28992",
     "(11013.0 + (x_i + 0.5) * 7219.0)",
-    "(303017.0 + (y_i + 0.5) * 8011.0)", "EPSG:28992")
+    "(303017.0 + (y_i + 0.5) * 8011.0)")
 
 
 @query(
@@ -828,11 +768,11 @@ _RD_CTES = sterea_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_RD.size})
-        ), {_RD_CTES}, f AS (
+        ), {_RD_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM sterea_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -847,30 +787,29 @@ def cube_reproject_rdnew(spark, sf_dir):
     validated against the EPSG Guidance Note test point; the oracle
     states the identical inverse (incl. the fixed-count
     conformal->geodetic iteration) as a CTE chain in SQL
-    (sterea_inverse_sql_ctes, same op order)."""
+    (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _RD)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Swiss LV95 (EPSG:2056, Swiss oblique Mercator) ----------
 
-from xcube_spark.operators.resampling.reproject import somerc_inverse_sql_ctes
-
 #: LV95 window over Switzerland with off-round origin/steps: every
 #: re-projected center stays >= 5.5e-4 deg from any 1-degree
 #: source-cell edge (margin asserted in tests/test_crsparse.py); the
 #: inverse (fixed-count isometric-latitude solve + the published
-#: CH1903->WGS84 Helmert hop) is a staged CTE chain like the Column
-#: side's StagedTransform
+#: CH1903->WGS84 Helmert hop) is a staged CTE chain, the same stages
+#: the Spark side runs
 _LV95 = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=2_486_297.0, y_start=1_076_876.0,
                  x_res=8_621.0, y_res=5_460.0,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:2056")
 
-_LV95_CTES = somerc_inverse_sql_ctes(
+_LV95_LL = lonlat_sql(
+    "EPSG:2056",
     "(2486297.0 + (x_i + 0.5) * 8621.0)",
-    "(1076876.0 + (y_i + 0.5) * 5460.0)", "EPSG:2056")
+    "(1076876.0 + (y_i + 0.5) * 5460.0)")
 
 
 @query(
@@ -882,11 +821,11 @@ _LV95_CTES = somerc_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_LV95.size})
-        ), {_LV95_CTES}, f AS (
+        ), {_LV95_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM somerc_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -902,14 +841,12 @@ def cube_reproject_lv95(spark, sf_dir):
     (core/gridmapping/transform.py).  Forward validated against the
     swisstopo worked example (<5 cm); the oracle states the identical
     inverse (fixed-count isometric-latitude iteration + datum hop) as
-    a CTE chain (somerc_inverse_sql_ctes, same op order)."""
+    a CTE chain (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _LV95)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: S-JTSK Krovak East North (EPSG:5514) --------------------
-
-from xcube_spark.operators.resampling.reproject import krovak_inverse_sql_ctes
 
 #: Krovak E/N window over Czechia/Slovakia (coordinates NEGATIVE in
 #: the East-North axis convention) with off-round origin/steps: every
@@ -923,10 +860,10 @@ _KROVAK = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="EPSG:5514")
 
-_KROVAK_CTES = krovak_inverse_sql_ctes(
+_KROVAK_LL = lonlat_sql(
+    "EPSG:5514",
     "(CAST(-890893.0 AS DOUBLE) + (x_i + 0.5) * CAST(10447.0 AS DOUBLE))",
-    "(CAST(-1221350.0 AS DOUBLE) + (y_i + 0.5) * CAST(6606.0 AS DOUBLE))",
-    "EPSG:5514")
+    "(CAST(-1221350.0 AS DOUBLE) + (y_i + 0.5) * CAST(6606.0 AS DOUBLE))")
 
 
 @query(
@@ -938,11 +875,11 @@ _KROVAK_CTES = krovak_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_KROVAK.size})
-        ), {_KROVAK_CTES}, f AS (
+        ), {_KROVAK_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM krovak_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -958,15 +895,13 @@ def cube_reproject_krovak(spark, sf_dir):
     (core/gridmapping/transform.py).  Forward validated against the
     EPSG GN7-2 worked example (<2 cm); the oracle states the
     identical inverse (fixed-count conformal-latitude iteration +
-    datum hop) as a CTE chain (krovak_inverse_sql_ctes, same op
+    datum hop) as a CTE chain (lonlat_sql, same op
     order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _KROVAK)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Equal Earth (EPSG:8857) ----------------------------------
-
-from xcube_spark.operators.resampling.reproject import eqearth_inverse_sql_ctes
 
 #: near-global Equal Earth window (inscribed in the map outline so
 #: every corner stays inside +-180 deg) with off-round origin/steps:
@@ -978,10 +913,10 @@ _EQE = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:8857")
 
-_EQE_CTES = eqearth_inverse_sql_ctes(
+_EQE_LL = lonlat_sql(
+    "EPSG:8857",
     "(CAST(-12757701.0 AS DOUBLE) + (x_i + 0.5) * CAST(632731.0 AS DOUBLE))",
-    "(CAST(-5928512.0 AS DOUBLE) + (y_i + 0.5) * CAST(297059.0 AS DOUBLE))",
-    "EPSG:8857")
+    "(CAST(-5928512.0 AS DOUBLE) + (y_i + 0.5) * CAST(297059.0 AS DOUBLE))")
 
 
 @query(
@@ -993,11 +928,11 @@ _EQE_CTES = eqearth_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_EQE.size})
-        ), {_EQE_CTES}, f AS (
+        ), {_EQE_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM eqearth_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -1012,14 +947,12 @@ def cube_reproject_eqearth(spark, sf_dir):
     published EPSG:8857 projected extent (+-17243959.06 x
     +-8392927.60 m); the oracle states the identical inverse
     (fixed-count Newton theta solve + authalic->geodetic series) as
-    a CTE chain (eqearth_inverse_sql_ctes, same op order)."""
+    a CTE chain (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _EQE)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Trinidad Grid (EPSG:30200, Cassini-Soldner) -------------
-
-from xcube_spark.operators.resampling.reproject import cass_inverse_sql
 
 #: Trinidad Grid window in CLARKE'S LINKS with off-round
 #: origin/steps: every re-projected center stays >= 1.4e-2 deg from
@@ -1031,10 +964,10 @@ _TRIN = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:30200")
 
-_TRIN_LON, _TRIN_LAT = cass_inverse_sql(
+_TRIN_LL = lonlat_sql(
+    "EPSG:30200",
     "(CAST(73249.0 AS DOUBLE) + (x_i + 0.5) * CAST(16318.0 AS DOUBLE))",
-    "(CAST(89229.0 AS DOUBLE) + (y_i + 0.5) * CAST(9077.0 AS DOUBLE))",
-    "EPSG:30200")
+    "(CAST(89229.0 AS DOUBLE) + (y_i + 0.5) * CAST(9077.0 AS DOUBLE))")
 
 
 @query(
@@ -1046,12 +979,7 @@ _TRIN_LON, _TRIN_LAT = cass_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_TRIN.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_TRIN_LON} AS lon,
-                   {_TRIN_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_TRIN_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1068,15 +996,13 @@ def cube_reproject_trinidad(spark, sf_dir):
     reference reaches through pyproj (core/gridmapping/transform.py).
     Forward reproduces the EPSG GN7-2 worked example sub-link; the
     oracle states the identical inverse (rectifying-latitude series
-    + transverse D-expansion) in SQL (cass_inverse_sql, same op
+    + transverse D-expansion) in SQL (lonlat_sql, same op
     order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _TRIN)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Brazil Polyconic (EPSG:29101) ---------------------------
-
-from xcube_spark.operators.resampling.reproject import poly_inverse_sql_ctes
 
 #: Brazil Polyconic window (lat -31..-1: clear of the equator row,
 #: where the cone degenerates and both engines take the guarded
@@ -1089,10 +1015,10 @@ _BRPOLY = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="EPSG:29101")
 
-_BRPOLY_CTES = poly_inverse_sql_ctes(
+_BRPOLY_LL = lonlat_sql(
+    "EPSG:29101",
     "(CAST(3146366.0 AS DOUBLE) + (x_i + 0.5) * CAST(94972.0 AS DOUBLE))",
-    "(CAST(6524126.0 AS DOUBLE) + (y_i + 0.5) * CAST(85021.0 AS DOUBLE))",
-    "EPSG:29101")
+    "(CAST(6524126.0 AS DOUBLE) + (y_i + 0.5) * CAST(85021.0 AS DOUBLE))")
 
 
 @query(
@@ -1104,11 +1030,11 @@ _BRPOLY_CTES = poly_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_BRPOLY.size})
-        ), {_BRPOLY_CTES}, f AS (
+        ), {_BRPOLY_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM poly_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -1122,14 +1048,12 @@ def cube_reproject_brazil_poly(spark, sf_dir):
     Forward reproduces Snyder's Clarke-1866 worked example to the
     published 0.1 m; the oracle states the identical inverse (the
     Snyder 18-18 fixed-count Newton on the meridian-arc identity) as
-    a CTE chain (poly_inverse_sql_ctes, same op order)."""
+    a CTE chain (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _BRPOLY)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: EASE-Grid 2.0 global (EPSG:6933) ------------------------
-
-from xcube_spark.operators.resampling.reproject import cea_inverse_sql
 
 #: near-global EASE-2 window with off-round origin/steps: every
 #: re-projected center stays >= 9.4e-4 deg from any 1-degree
@@ -1140,9 +1064,10 @@ _EASE2 = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="EPSG:6933")
 
-_EASE2_LON, _EASE2_LAT = cea_inverse_sql(
+_EASE2_LL = lonlat_sql(
+    "EPSG:6933",
     "(-8641013.0 + (x_i + 0.5) * 432017.0)",
-    "(-6231011.0 + (y_i + 0.5) * 312013.0)", "EPSG:6933")
+    "(-6231011.0 + (y_i + 0.5) * 312013.0)")
 
 
 @query(
@@ -1154,12 +1079,7 @@ _EASE2_LON, _EASE2_LAT = cea_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_EASE2.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_EASE2_LON} AS lon,
-                   {_EASE2_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_EASE2_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1176,7 +1096,7 @@ def cube_reproject_ease2(spark, sf_dir):
     standard parallel 30 — the SMAP/AMSR product grid), EPSG method
     9835 via Snyder's authalic-latitude closed forms; x extent
     reproduces the published ±17367530.445161 m constant.  The oracle
-    states the identical inverse in SQL (cea_inverse_sql, same op
+    states the identical inverse in SQL (lonlat_sql, same op
     order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _EASE2)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
@@ -1195,9 +1115,10 @@ _UPS = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:5041")
 
-_UPS_LON, _UPS_LAT = ps_inverse_sql(
+_UPS_LL = lonlat_sql(
+    "EPSG:5041",
     "(2630638.0 + (x_i + 0.5) * 10961.0)",
-    "(2464090.0 + (y_i + 0.5) * 11419.0)", crs="EPSG:5041")
+    "(2464090.0 + (y_i + 0.5) * 11419.0)")
 
 
 @query(
@@ -1209,12 +1130,7 @@ _UPS_LON, _UPS_LAT = ps_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_UPS.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_UPS_LON} AS lon,
-                   {_UPS_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_UPS_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1234,14 +1150,12 @@ def cube_reproject_ups(spark, sf_dir):
     GN7-2 worked example to the published 0.01 m (control-point
     fixture); the oracle states the identical inverse (variant-A
     rho scaling + the Snyder 3-5 chi->phi series) in SQL
-    (ps_inverse_sql, same op order)."""
+    (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _UPS)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: azimuthal equidistant local grid ------------------------
-
-from xcube_spark.operators.resampling.reproject import aeqd_inverse_sql
 
 #: spherical azimuthal-equidistant grid centered near Munich — the
 #: classic local-area/range-ring projection (CF azimuthal_equidistant)
@@ -1256,9 +1170,10 @@ _AEQD = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs=_AEQD_CRS)
 
-_AEQD_LON, _AEQD_LAT = aeqd_inverse_sql(
+_AEQD_LL = lonlat_sql(
+    _AEQD_CRS,
     "(-2801013.0 + (x_i + 0.5) * 140017.0)",
-    "(-2403011.0 + (y_i + 0.5) * 120013.0)", _AEQD_CRS)
+    "(-2403011.0 + (y_i + 0.5) * 120013.0)")
 
 
 @query(
@@ -1270,12 +1185,7 @@ _AEQD_LON, _AEQD_LAT = aeqd_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_AEQD.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_AEQD_LON} AS lon,
-                   {_AEQD_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_AEQD_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1291,15 +1201,13 @@ def cube_reproject_aeqd(spark, sf_dir):
     grid (Snyder ch. 25; CF azimuthal_equidistant) — distances and
     azimuths from the center are true, the standard choice for
     range-ring / local-area products; reference reaches it via pyproj.
-    The oracle states the identical inverse in SQL (aeqd_inverse_sql,
+    The oracle states the identical inverse in SQL (lonlat_sql,
     same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _AEQD)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Hotine oblique Mercator (RSO Borneo) --------------------
-
-from xcube_spark.operators.resampling.reproject import omerc_inverse_sql_ctes
 
 #: RSO-coordinate window over Borneo with off-round origin/steps:
 #: every re-projected center stays >= 1.7e-3 deg from any 1-degree
@@ -1310,9 +1218,10 @@ _RSO = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:29873")
 
-_RSO_CTES = omerc_inverse_sql_ctes(
+_RSO_LL = lonlat_sql(
+    "EPSG:29873",
     "(291017.0 + (x_i + 0.5) * 15013.0)",
-    "(21013.0 + (y_i + 0.5) * 19507.0)", "EPSG:29873")
+    "(21013.0 + (y_i + 0.5) * 19507.0)")
 
 
 @query(
@@ -1324,11 +1233,11 @@ _RSO_CTES = omerc_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_RSO.size})
-        ), {_RSO_CTES}, f AS (
+        ), {_RSO_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM omerc_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -1342,7 +1251,7 @@ def cube_reproject_omerc(spark, sf_dir):
     methods 9812/9815), forward validated mm-exact against the EPSG
     Guidance Note worked example; reference reaches it via pyproj.
     The oracle states the identical inverse as a CTE chain in SQL
-    (omerc_inverse_sql_ctes, same op order)."""
+    (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _RSO)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -1478,17 +1387,16 @@ def cube_affine_bicubic(spark, sf_dir):
 
 # ---- reproject: World Mollweide (ESRI:54009) target -------------------
 
-from xcube_spark.operators.resampling.reproject import moll_inverse_sql
-
 _MOLL = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=-1_000_000.0, y_start=3_000_000.0,
                  x_res=50_000.0, y_res=50_000.0,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="ESRI:54009")
 
-_MOLL_LON, _MOLL_LAT = moll_inverse_sql(
+_MOLL_LL = lonlat_sql(
+    "ESRI:54009",
     "(-1000000.0 + (x_i + 0.5) * 50000.0)",
-    "(3000000.0 + (y_i + 0.5) * 50000.0)", crs="ESRI:54009")
+    "(3000000.0 + (y_i + 0.5) * 50000.0)")
 
 
 @query(
@@ -1500,12 +1408,7 @@ _MOLL_LON, _MOLL_LAT = moll_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_MOLL.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_MOLL_LON} AS lon,
-                   {_MOLL_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_MOLL_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1523,7 +1426,7 @@ def cube_reproject_mollweide(spark, sf_dir):
     (core/gridmapping/transform.py).  Spherical Mollweide (Snyder
     1987, 31-1..31-8): the inverse is closed-form Column math inside
     codegen and the oracle states the identical inverse in SQL
-    (moll_inverse_sql); the forward Newton solve (_MollForward) is
+    (lonlat_sql); the forward Newton solve is
     exercised by the roundtrip unit test.  The 50 km target centers
     (lon +-11.7, lat 24.8..41.7) sit >= 1.4e-3 deg from any 1-degree
     source cell edge, so sub-ulp libm differences cannot flip a
@@ -1533,8 +1436,6 @@ def cube_reproject_mollweide(spark, sf_dir):
 
 
 # ---- reproject: World Eckert IV (ESRI:54012) ---------------------------
-
-from xcube_spark.operators.resampling.reproject import eck4_inverse_sql
 
 #: mid-latitude Eckert-IV window (inscribed in the map outline) with
 #: off-round origin/steps: every re-projected center stays >= 2.3e-3
@@ -1546,10 +1447,10 @@ _ECK4G = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="ESRI:54012")
 
-_ECK4_LON, _ECK4_LAT = eck4_inverse_sql(
+_ECK4_LL = lonlat_sql(
+    "ESRI:54012",
     "(CAST(-10985858.0 AS DOUBLE) + (x_i + 0.5) * CAST(551237.0 AS DOUBLE))",
-    "(CAST(-4993181.0 AS DOUBLE) + (y_i + 0.5) * CAST(251111.0 AS DOUBLE))",
-    crs="ESRI:54012")
+    "(CAST(-4993181.0 AS DOUBLE) + (y_i + 0.5) * CAST(251111.0 AS DOUBLE))")
 
 
 @query(
@@ -1561,12 +1462,7 @@ _ECK4_LON, _ECK4_LAT = eck4_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_ECK4G.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_ECK4_LON} AS lon,
-                   {_ECK4_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_ECK4_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1583,7 +1479,7 @@ def cube_reproject_eck4(spark, sf_dir):
     the reference (core/gridmapping/transform.py).  The closed-form
     inverse (asin of the auxiliary angle, Album of Map Projections
     p. 60) is Column math inside codegen; the oracle states the
-    identical inverse in SQL (eck4_inverse_sql, same op order).  The
+    identical inverse in SQL (lonlat_sql, same op order).  The
     forward Newton solve (_Eck4Forward) is exercised by the
     roundtrip + equal-area unit tests; anchors: the published
     ESRI:54012 projected extent (+-16921202.92 x +-8460601.46 m)."""
@@ -1592,8 +1488,6 @@ def cube_reproject_eck4(spark, sf_dir):
 
 
 # ---- reproject: World Miller cylindrical (ESRI:54003) ------------------
-
-from xcube_spark.operators.resampling.reproject import mill_inverse_sql
 
 #: wide Miller window with off-round origin/steps: margin >= 6.9e-2
 #: deg (Miller is cylindrical, so lon margins are exact by
@@ -1604,10 +1498,10 @@ _MILLG = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="ESRI:54003")
 
-_MILL_LON, _MILL_LAT = mill_inverse_sql(
+_MILL_LL = lonlat_sql(
+    "ESRI:54003",
     "(CAST(-14996776.0 AS DOUBLE) + (x_i + 0.5) * CAST(751237.0 AS DOUBLE))",
-    "(CAST(-8980545.0 AS DOUBLE) + (y_i + 0.5) * CAST(451111.0 AS DOUBLE))",
-    crs="ESRI:54003")
+    "(CAST(-8980545.0 AS DOUBLE) + (y_i + 0.5) * CAST(451111.0 AS DOUBLE))")
 
 
 @query(
@@ -1619,12 +1513,7 @@ _MILL_LON, _MILL_LAT = mill_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_MILLG.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_MILL_LON} AS lon,
-                   {_MILL_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_MILL_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1640,7 +1529,7 @@ def cube_reproject_miller(spark, sf_dir):
     (ESRI:54003) — Snyder 1987 ch. 11 closed form both directions
     (y = 1.25 R ln tan(pi/4 + 0.4 phi)), reached through pyproj in
     the reference.  Both engines state the identical inverse
-    (mill_inverse_sql); anchored on Snyder's published numerical
+    (lonlat_sql); anchored on Snyder's published numerical
     example (p. 287, scaled to the WGS84 sphere) and the 1.25 x
     compressed-Mercator identity asserted in tests."""
     out = reproject_dataset(_cube_a(spark), GRID, _MILLG)
@@ -1648,10 +1537,6 @@ def cube_reproject_miller(spark, sf_dir):
 
 
 # ---- reproject: World Van der Grinten I (ESRI:54029) -------------------
-
-from xcube_spark.operators.resampling.reproject import (
-    vandg_inverse_sql_ctes,
-)
 
 #: Van der Grinten window inside the boundary circle, clear of the
 #: equator/central-meridian special-case guards (|X|,|Y| >> 1e-12);
@@ -1662,10 +1547,10 @@ _VANDGG = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="ESRI:54029")
 
-_VANDG_CTES = vandg_inverse_sql_ctes(
+_VANDG_LL = lonlat_sql(
+    "ESRI:54029",
     "(CAST(-8995751.0 AS DOUBLE) + (x_i + 0.5) * CAST(451237.0 AS DOUBLE))",
-    "(CAST(-8008684.0 AS DOUBLE) + (y_i + 0.5) * CAST(401111.0 AS DOUBLE))",
-    "ESRI:54029")
+    "(CAST(-8008684.0 AS DOUBLE) + (y_i + 0.5) * CAST(401111.0 AS DOUBLE))")
 
 
 @query(
@@ -1677,11 +1562,11 @@ _VANDG_CTES = vandg_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_VANDGG.size})
-        ), {_VANDG_CTES}, f AS (
+        ), {_VANDG_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM vandg_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -1694,7 +1579,7 @@ def cube_reproject_vandg(spark, sf_dir):
     1987 ch. 33), reached through pyproj in the reference.  The
     inverse is the trigonometric cubic root (33-14..33-23), staged
     as materialized Columns; the oracle states the identical
-    arithmetic as a CTE chain (vandg_inverse_sql_ctes, same op
+    arithmetic as a CTE chain (lonlat_sql, same op
     order).  Anchors: equator maps linearly (x = R lam), poles at
     (0, +-pi R), world boundary = circle of radius pi R."""
     out = reproject_dataset(_cube_a(spark), GRID, _VANDGG)
@@ -1702,10 +1587,6 @@ def cube_reproject_vandg(spark, sf_dir):
 
 
 # ---- reproject: Natural Earth (+proj=natearth) --------------------------
-
-from xcube_spark.operators.resampling.reproject import (
-    natearth_inverse_sql_ctes,
-)
 
 #: near-global Natural Earth window with off-round origin/steps:
 #: margin >= 2.8e-3 deg (asserted in tests/test_crsparse.py)
@@ -1715,10 +1596,10 @@ _NATE = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="PROJ:NATEARTH")
 
-_NATE_CTES = natearth_inverse_sql_ctes(
+_NATE_LL = lonlat_sql(
+    "PROJ:NATEARTH",
     "(CAST(-12995970.0 AS DOUBLE) + (x_i + 0.5) * CAST(641237.0 AS DOUBLE))",
-    "(CAST(-7044268.0 AS DOUBLE) + (y_i + 0.5) * CAST(351111.0 AS DOUBLE))",
-    "PROJ:NATEARTH")
+    "(CAST(-7044268.0 AS DOUBLE) + (y_i + 0.5) * CAST(351111.0 AS DOUBLE))")
 
 
 @query(
@@ -1730,11 +1611,11 @@ _NATE_CTES = natearth_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_NATE.size})
-        ), {_NATE_CTES}, f AS (
+        ), {_NATE_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM natearth_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -1748,7 +1629,7 @@ def cube_reproject_natearth(spark, sf_dir):
     through pyproj's +proj=natearth).  Forward/inverse are pure
     polynomial Column math (fixed 6-iteration Newton on the odd y
     polynomial); the oracle states the identical inverse as a CTE
-    chain (natearth_inverse_sql_ctes, same op order and nesting)."""
+    chain (lonlat_sql, same op order and nesting)."""
     out = reproject_dataset(_cube_a(spark), GRID, _NATE)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -1756,7 +1637,6 @@ def cube_reproject_natearth(spark, sf_dir):
 # ---- reproject: spherical gnomonic local grid ---------------------------
 
 from xcube_spark.operators.resampling.crsparse import resolve_proj4
-from xcube_spark.operators.resampling.reproject import gnom_inverse_sql
 
 _GNOM_CRS = resolve_proj4("+proj=gnom +lat_0=40 +lon_0=-100 +R=6371000")
 
@@ -1769,9 +1649,10 @@ _GNOM = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs=_GNOM_CRS)
 
-_GNOM_LON, _GNOM_LAT = gnom_inverse_sql(
+_GNOM_LL = lonlat_sql(
+    _GNOM_CRS,
     "(-2986209.0 + (x_i + 0.5) * 150017.0)",
-    "(-2472081.0 + (y_i + 0.5) * 125013.0)", _GNOM_CRS)
+    "(-2472081.0 + (y_i + 0.5) * 125013.0)")
 
 
 @query(
@@ -1783,12 +1664,7 @@ _GNOM_LON, _GNOM_LAT = gnom_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_GNOM.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_GNOM_LON} AS lon,
-                   {_GNOM_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_GNOM_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1804,15 +1680,13 @@ def cube_reproject_gnomonic(spark, sf_dir):
     ch. 22) — great circles map to straight lines (the property
     navigation/seismic products use it for; pinned by a collinearity
     test), reference reaches it via pyproj +proj=gnom.  The oracle
-    states the identical inverse in SQL (gnom_inverse_sql, same op
+    states the identical inverse in SQL (lonlat_sql, same op
     order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _GNOM)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: World Mercator (ellipsoidal, EPSG:3395) -----------------
-
-from xcube_spark.operators.resampling.reproject import merc_inverse_sql
 
 #: off-round origin/steps keep every re-projected center >= 4.5e-4 deg
 #: from any 1-degree source-cell edge (margin asserted in
@@ -1823,9 +1697,10 @@ _M3395 = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="EPSG:3395")
 
-_M3395_LON, _M3395_LAT = merc_inverse_sql(
+_M3395_LL = lonlat_sql(
+    "EPSG:3395",
     "(-17011013.0 + (x_i + 0.5) * 850017.0)",
-    "(-10808011.0 + (y_i + 0.5) * 540013.0)", "EPSG:3395")
+    "(-10808011.0 + (y_i + 0.5) * 540013.0)")
 
 
 @query(
@@ -1837,12 +1712,7 @@ _M3395_LON, _M3395_LAT = merc_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_M3395.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_M3395_LON} AS lon,
-                   {_M3395_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_M3395_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1859,14 +1729,12 @@ def cube_reproject_3395(spark, sf_dir):
     web-mercator's spherical convention; charts and global marine
     products use it, the reference reaches it via pyproj.  The oracle
     states the identical inverse (Snyder 7-10 + the chi->phi series)
-    in SQL (merc_inverse_sql, same op order)."""
+    in SQL (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _M3395)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: World Equidistant Cylindrical (EPSG:4087) ---------------
-
-from xcube_spark.operators.resampling.reproject import eqc_inverse_sql
 
 #: generous margins (>= 5e-3 deg; asserted in tests/test_crsparse.py)
 _EQC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
@@ -1875,9 +1743,10 @@ _EQC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:4087")
 
-_EQC_LON, _EQC_LAT = eqc_inverse_sql(
+_EQC_LL = lonlat_sql(
+    "EPSG:4087",
     "(-17013011.0 + (x_i + 0.5) * 850017.0)",
-    "(-8808013.0 + (y_i + 0.5) * 440017.0)", "EPSG:4087")
+    "(-8808013.0 + (y_i + 0.5) * 440017.0)")
 
 
 @query(
@@ -1889,12 +1758,7 @@ _EQC_LON, _EQC_LAT = eqc_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_EQC.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_EQC_LON} AS lon,
-                   {_EQC_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_EQC_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1911,14 +1775,12 @@ def cube_reproject_eqc(spark, sf_dir):
     meridian arc (Krueger rectifying series — the TM family's
     machinery re-used at the central meridian); reference reaches it
     via pyproj.  The oracle states the identical inverse (mu -> chi
-    -> phi series) in SQL (eqc_inverse_sql, same op order)."""
+    -> phi series) in SQL (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _EQC)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: spherical oblique stereographic --------------------------
-
-from xcube_spark.operators.resampling.reproject import stereg_inverse_sql
 
 #: spherical stereographic, oblique aspect centered on central Europe
 #: (CF 'stereographic' with a spherical datum)
@@ -1936,9 +1798,10 @@ _STEREG = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
 
 #: CAST-to-DOUBLE inputs: DuckDB types bare numeric literals as
 #: DECIMAL and the k_0-scaled products overflow DECIMAL(18)
-_STEREG_LON, _STEREG_LAT = stereg_inverse_sql(
+_STEREG_LL = lonlat_sql(
+    _STEREG_CRS,
     "CAST((-2801017.0 + (x_i + 0.5) * 140013.0) AS DOUBLE)",
-    "CAST((-2354013.0 + (y_i + 0.5) * 120017.0) AS DOUBLE)", _STEREG_CRS)
+    "CAST((-2354013.0 + (y_i + 0.5) * 120017.0) AS DOUBLE)")
 
 
 @query(
@@ -1950,12 +1813,7 @@ _STEREG_LON, _STEREG_LAT = stereg_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_STEREG.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_STEREG_LON} AS lon,
-                   {_STEREG_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_STEREG_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -1972,14 +1830,12 @@ def cube_reproject_stereographic(spark, sf_dir):
     'stereographic' grid-mapping name on a spherical datum, the
     conformal azimuthal for mid-latitude regional products; reference
     reaches it via pyproj.  The oracle states the identical inverse
-    in SQL (stereg_inverse_sql, same op order)."""
+    in SQL (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _STEREG)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: world sinusoidal (ESRI:54008, the MODIS family) ---------
-
-from xcube_spark.operators.resampling.reproject import sinu_inverse_sql
 
 #: off-round origin/steps keep every re-projected center >= 4.5e-4 deg
 #: from any 1-degree source-cell edge (margin asserted in
@@ -1990,9 +1846,10 @@ _SINU = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="ESRI:54008")
 
-_SINU_LON, _SINU_LAT = sinu_inverse_sql(
+_SINU_LL = lonlat_sql(
+    "ESRI:54008",
     "(-8508011.0 + (x_i + 0.5) * 425017.0)",
-    "(-6206013.0 + (y_i + 0.5) * 310017.0)", "ESRI:54008")
+    "(-6206013.0 + (y_i + 0.5) * 310017.0)")
 
 
 @query(
@@ -2004,12 +1861,7 @@ _SINU_LON, _SINU_LAT = sinu_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_SINU.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_SINU_LON} AS lon,
-                   {_SINU_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_SINU_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -2025,15 +1877,13 @@ def cube_reproject_sinusoidal(spark, sf_dir):
     the MODIS land-product tiling family SR-ORG:6974 shares the
     sphere) — the classic equal-area pseudocylindrical; reference
     reaches it via pyproj.  The oracle states the identical inverse
-    (phi = y/R, lon = x/(R cos phi)) in SQL (sinu_inverse_sql, same
+    (phi = y/R, lon = x/(R cos phi)) in SQL (lonlat_sql, same
     op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _SINU)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: spherical orthographic -----------------------------------
-
-from xcube_spark.operators.resampling.reproject import ortho_inverse_sql
 
 #: the satellite-view (infinite-distance) azimuthal centered on the
 #: eastern Mediterranean; grid stays well inside the visible disk
@@ -2048,9 +1898,10 @@ _ORTHO = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs=_ORTHO_CRS)
 
-_ORTHO_LON, _ORTHO_LAT = ortho_inverse_sql(
+_ORTHO_LL = lonlat_sql(
+    _ORTHO_CRS,
     "(-2801011.0 + (x_i + 0.5) * 140017.0)",
-    "(-2403017.0 + (y_i + 0.5) * 120011.0)", _ORTHO_CRS)
+    "(-2403017.0 + (y_i + 0.5) * 120011.0)")
 
 
 @query(
@@ -2062,12 +1913,7 @@ _ORTHO_LON, _ORTHO_LAT = ortho_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_ORTHO.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_ORTHO_LON} AS lon,
-                   {_ORTHO_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_ORTHO_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -2083,14 +1929,12 @@ def cube_reproject_ortho(spark, sf_dir):
     ch. 20; CF 'orthographic') — the view-from-infinity globe
     rendering every viewer product offers; reference reaches it via
     pyproj.  The oracle states the identical inverse (c = asin(rho/R))
-    in SQL (ortho_inverse_sql, same op order)."""
+    in SQL (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _ORTHO)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: near-sided vertical perspective ---------------------------
-
-from xcube_spark.operators.resampling.reproject import nsper_inverse_sql
 
 #: a geostationary-height viewpoint over the Americas (the CF
 #: 'vertical_perspective' grid mapping); grid stays well inside the
@@ -2107,9 +1951,10 @@ _NSPER = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs=_NSPER_CRS)
 
-_NSPER_LON, _NSPER_LAT = nsper_inverse_sql(
+_NSPER_LL = lonlat_sql(
+    _NSPER_CRS,
     "(-2803011.0 + (x_i + 0.5) * 140013.0)",
-    "(-2394013.0 + (y_i + 0.5) * 120019.0)", _NSPER_CRS)
+    "(-2394013.0 + (y_i + 0.5) * 120019.0)")
 
 
 @query(
@@ -2121,12 +1966,7 @@ _NSPER_LON, _NSPER_LAT = nsper_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_NSPER.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_NSPER_LON} AS lon,
-                   {_NSPER_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_NSPER_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -2143,14 +1983,12 @@ def cube_reproject_nsper(spark, sf_dir):
     height — the finite-distance satellite view, the spherical
     sibling of +proj=geos; reference reaches it via pyproj.  The
     oracle states the identical inverse (Snyder 23-19/20) in SQL
-    (nsper_inverse_sql, same op order)."""
+    (lonlat_sql, same op order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _NSPER)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: equidistant conic (ellipsoidal, GRS80) -------------------
-
-from xcube_spark.operators.resampling.reproject import eqdc_inverse_sql
 
 #: the regional mid-latitude conic with true meridian scale (Snyder
 #: ch. 16, ellipsoidal 16-12..16-15 via the Krueger rectifying series)
@@ -2166,9 +2004,10 @@ _EQDC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs=_EQDC_CRS)
 
-_EQDC_LON, _EQDC_LAT = eqdc_inverse_sql(
+_EQDC_LL = lonlat_sql(
+    _EQDC_CRS,
     "CAST((-2724013.0 + (x_i + 0.5) * 140017.0) AS DOUBLE)",
-    "CAST((-2326011.0 + (y_i + 0.5) * 120013.0) AS DOUBLE)", _EQDC_CRS)
+    "CAST((-2326011.0 + (y_i + 0.5) * 120013.0) AS DOUBLE)")
 
 
 @query(
@@ -2180,12 +2019,7 @@ _EQDC_LON, _EQDC_LAT = eqdc_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_EQDC.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_EQDC_LON} AS lon,
-                   {_EQDC_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_EQDC_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -2203,15 +2037,13 @@ def cube_reproject_eqdc(spark, sf_dir):
     meridian arc via the Krueger rectifying series — the same
     machinery as ellipsoidal eqc/TM); reference reaches it via
     pyproj.  The oracle states the identical inverse (rho -> M ->
-    mu -> chi -> phi series) in SQL (eqdc_inverse_sql, same op
+    mu -> chi -> phi series) in SQL (lonlat_sql, same op
     order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _EQDC)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Robinson world grid (ESRI:54030) --------------------------
-
-from xcube_spark.operators.resampling.reproject import robin_inverse_sql_ctes
 
 #: off-round origin/steps keep every re-projected center >= 1.1e-3 deg
 #: from any 1-degree source-cell edge, and the whole window inside the
@@ -2222,10 +2054,10 @@ _ROBIN = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="ESRI:54030")
 
-_ROBIN_CTES = robin_inverse_sql_ctes(
+_ROBIN_LL = lonlat_sql(
+    "ESRI:54030",
     "CAST((-10866011.0 + (x_i + 0.5) * 540017.0) AS DOUBLE)",
-    "CAST((-7808013.0 + (y_i + 0.5) * 390013.0) AS DOUBLE)",
-    "ESRI:54030")
+    "CAST((-7808013.0 + (y_i + 0.5) * 390013.0) AS DOUBLE)")
 
 
 @query(
@@ -2237,11 +2069,11 @@ _ROBIN_CTES = robin_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_ROBIN.size})
-        ), {_ROBIN_CTES}, f AS (
+        ), {_ROBIN_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM robin_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -2256,15 +2088,13 @@ def cube_reproject_robinson(spark, sf_dir):
     and embedded identically in both engines).  The inverse solves
     the monotone Y cubic with a fixed 4-iteration Newton per the
     sterea discipline; the oracle states the identical staged chain
-    in SQL (robin_inverse_sql_ctes, same op order, same iteration
+    in SQL (lonlat_sql, same op order, same iteration
     count).  Reference reaches it via pyproj."""
     out = reproject_dataset(_cube_a(spark), GRID, _ROBIN)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Hammer equal-area world grid ------------------------------
-
-from xcube_spark.operators.resampling.reproject import hammer_inverse_sql
 
 #: off-round origin/steps keep every re-projected center >= 4.8e-4 deg
 #: from any 1-degree source-cell edge and inside the elliptical
@@ -2275,9 +2105,10 @@ _HAMMER = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="PROJ:HAMMER")
 
-_HAMMER_LON, _HAMMER_LAT = hammer_inverse_sql(
+_HAMMER_LL = lonlat_sql(
+    "PROJ:HAMMER",
     "(-10500011.0 + (x_i + 0.5) * 540017.0)",
-    "(-7020013.0 + (y_i + 0.5) * 360013.0)", "PROJ:HAMMER")
+    "(-7020013.0 + (y_i + 0.5) * 360013.0)")
 
 
 @query(
@@ -2289,12 +2120,7 @@ _HAMMER_LON, _HAMMER_LAT = hammer_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_HAMMER.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_HAMMER_LON} AS lon,
-                   {_HAMMER_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_HAMMER_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -2311,7 +2137,7 @@ def cube_reproject_hammer(spark, sf_dir):
     azimuthal equatorial aspect at halved longitudes stretched 2x in
     x, closed form BOTH directions (z = sqrt(1 - (x/4)^2 - (y/2)^2));
     reference reaches it via pyproj +proj=hammer.  The oracle states
-    the identical inverse in SQL (hammer_inverse_sql, same op
+    the identical inverse in SQL (lonlat_sql, same op
     order)."""
     out = reproject_dataset(_cube_a(spark), GRID, _HAMMER)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
@@ -2319,8 +2145,6 @@ def cube_reproject_hammer(spark, sf_dir):
 
 
 # ---- reproject: Winkel Tripel world grid (ESRI:54042) ---------------------
-
-from xcube_spark.operators.resampling.reproject import wintri_inverse_sql_ctes
 
 #: off-round origin/steps keep every re-projected center >= 8.5e-4 deg
 #: from any 1-degree source-cell edge, and the whole window inside the
@@ -2331,10 +2155,10 @@ _WINTRI = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="ESRI:54042")
 
-_WINTRI_CTES = wintri_inverse_sql_ctes(
+_WINTRI_LL = lonlat_sql(
+    "ESRI:54042",
     "CAST((-10869011.0 + (x_i + 0.5) * 540017.0) AS DOUBLE)",
-    "CAST((-7799013.0 + (y_i + 0.5) * 390313.0) AS DOUBLE)",
-    "ESRI:54042")
+    "CAST((-7799013.0 + (y_i + 0.5) * 390313.0) AS DOUBLE)")
 
 
 @query(
@@ -2346,11 +2170,11 @@ _WINTRI_CTES = wintri_inverse_sql_ctes(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_WINTRI.size})
-        ), {_WINTRI_CTES}, f AS (
+        ), {_WINTRI_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM wintri_ll
+            FROM ll
         )
         SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
         FROM f LEFT JOIN cube c
@@ -2366,7 +2190,7 @@ def cube_reproject_wintri(spark, sf_dir):
     fixed 6-step 2-D Newton solve with the analytic Jacobian (the
     published approach for this projection: Ipbuker & Bildirici 2002)
     as staged Column arithmetic, and the oracle states the IDENTICAL
-    iteration in SQL (wintri_inverse_sql_ctes, same op order, same
+    iteration in SQL (lonlat_sql, same op order, same
     guards, same count).  Reference reaches wintri only via pyproj
     (core/gridmapping/transform.py)."""
     out = reproject_dataset(_cube_a(spark), GRID, _WINTRI)
@@ -2374,8 +2198,6 @@ def cube_reproject_wintri(spark, sf_dir):
 
 
 # ---- reproject: interrupted Goode homolosine world grid (PROJ:IGH) ------
-
-from xcube_spark.operators.resampling.reproject import igh_inverse_sql
 
 #: off-round origin/steps keep every re-projected center >= 1.7e-3 deg
 #: from any 1-degree source-cell edge, >= 3e-3 rad from the Goode
@@ -2387,9 +2209,10 @@ _IGH = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="PROJ:IGH")
 
-_IGH_LON, _IGH_LAT = igh_inverse_sql(
+_IGH_LL = lonlat_sql(
+    "PROJ:IGH",
     "(-19947013.0 + (x_i + 0.5) * 997313.0)",
-    "(-8579013.0 + (y_i + 0.5) * 429313.0)", "PROJ:IGH")
+    "(-8579013.0 + (y_i + 0.5) * 429313.0)")
 
 
 @query(
@@ -2401,12 +2224,7 @@ _IGH_LON, _IGH_LAT = igh_inverse_sql(
                    CAST((range % 1600) // 40 AS INT) AS y_i,
                    CAST(range % 40 AS INT) AS x_i
             FROM range({_IGH.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_IGH_LON} AS lon,
-                   {_IGH_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_IGH_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -2427,7 +2245,7 @@ def cube_reproject_goode(spark, sf_dir):
     EXACT Mollweide continuity offset at import (GCTP's
     0.0528035274542) and the whole inverse is closed form; the oracle
     states the identical zone tests and op order in SQL
-    (igh_inverse_sql).  Reference reaches igh only via pyproj
+    (lonlat_sql).  Reference reaches igh only via pyproj
     (core/gridmapping/transform.py).  Cells in the interruption gaps
     resolve deterministically (PROJ's inverse convention: classify by
     projected x against the interruption meridians) on BOTH engines;
@@ -2547,12 +2365,7 @@ _RU_MUL = 7919         # prime, coprime with 64800: bijective scramble
                    CAST(range % 40 AS INT) AS x_i
             FROM range(102400)
             WHERE range < (SELECT t FROM dims) * 1600
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_UTM_LON} AS lon,
-                   {_UTM_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {_UTM_LL}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -2574,7 +2387,7 @@ def events_reproject_utm(spark, sf_dir):
     extended to the derived time-step count.  The source side — the
     sf-scaled part — never shuffles: the target table is bounded and
     broadcast (reproject.py:5072).  The oracle restates the identical
-    Krueger-series inverse (utm_inverse_sql) and gather."""
+    Krueger-series inverse (lonlat_sql) and gather."""
     ev = tbl(spark, sf_dir, "events")
     t = -(-_events_n(spark, sf_dir) // _RU_PLANE)
     src_grid = CubeGrid(width=360, height=180, time_periods=t)

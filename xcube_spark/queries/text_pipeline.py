@@ -290,7 +290,7 @@ def doc_fingerprint(spark, sf_dir):
         ), ranked AS (
             SELECT query_id, vec_id, cos,
                    ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
+                                      ORDER BY cos DESC NULLS LAST, vec_id) AS rank
             FROM scored
         )
         SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, rank

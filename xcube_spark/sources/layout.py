@@ -82,11 +82,21 @@ def write_cube_layout(
             .drop("__z")
         )
     else:
+        # exact bands: the ordered (t_part, y_i) key cut into n equal
+        # runs computed from the grid.  Range-partitioning the band id
+        # into 2n partitions gives every band its own partition however
+        # the sampler (seeded by the RDD id, so by session history)
+        # misjudges the weights: a sampled bound lands mid-band, never
+        # between two bands, and the surplus partitions stay empty.
+        n = max(1, files_per_partition)
+        n_keys = -(-grid.time_periods // k) * grid.height
+        band = ((F.col("t_part") * grid.height + F.col("y_i")) * n
+                / n_keys).cast("int")
         arranged = (
-            keyed.repartitionByRange(
-                max(1, files_per_partition), "t_part", F.col("y_i")
-            )
+            keyed.withColumn("__band", band)
+            .repartitionByRange(2 * n, "__band")
             .sortWithinPartitions("t_part", "y_i", "x_i")
+            .drop("__band")
         )
     arranged.write.mode(mode).partitionBy("t_part").parquet(path)
 
